@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 import graft.streaming.{FileTransport, HttpKinesisTransport, KinesisTransport, RetryingTransport, StreamPipeline}
@@ -23,6 +24,16 @@ import graft.streaming.{FileTransport, HttpKinesisTransport, KinesisTransport, R
   * `AWS_SESSION_TOKEN`) are present — the same static-credential leg of
   * the SDK default chain the reference relies on (main.go:77-97);
   * unsigned otherwise (kinesalite dev mode).
+  *
+  * The dedup state store, and the per-partition pack + `PutRecords` that
+  * run on its partitions, get one partition per core: at a query's first
+  * start `spark.sql.shuffle.partitions` is set to the cluster's
+  * `defaultParallelism` (`spark.default.parallelism` if set, else the
+  * cores registered when the session comes up). Spark then records the
+  * count in the checkpoint's offset metadata and restores it on every
+  * restart, so an existing checkpoint keeps the count it was written
+  * with. An explicit `--conf spark.sql.shuffle.partitions=N` overrides
+  * the derived count.
   */
 object Main {
 
@@ -55,8 +66,9 @@ object Main {
     val spark = SparkSession.builder()
       .appName("graft")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", 32)
       .getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+      statePartitions(spark.sparkContext.getConf, spark.sparkContext.defaultParallelism))
 
     val transport: KinesisTransport = opts.get("kinesis-endpoint") match {
       case Some(endpoint) =>
@@ -92,6 +104,11 @@ object Main {
     sys.addShutdownHook(query.stop()) // graceful drain, main.go:128-140
     query.awaitTermination()
   }
+
+  /** Shuffle partitions for the dedup state: an explicit
+    * `spark.sql.shuffle.partitions` wins, otherwise one per core. */
+  private[graft] def statePartitions(conf: SparkConf, defaultParallelism: Int): Int =
+    conf.getOption("spark.sql.shuffle.partitions").fold(defaultParallelism)(_.toInt)
 
   @annotation.tailrec
   private[graft] def parse(args: List[String], acc: Map[String, String]): Map[String, String] =

@@ -66,7 +66,7 @@ final class NsqClient(
               throw new java.io.IOException(s"nsq fatal error: $msg")
             else System.err.println(s"[nsq] non-fatal error frame: $msg")
           case other =>
-            throw new java.io.IOException(s"unknown frame type $other")
+            throw new NsqProtocolException(s"unknown frame type $other")
         }
       }
     } catch {

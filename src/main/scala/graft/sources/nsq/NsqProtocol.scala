@@ -14,6 +14,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object NsqProtocol {
 
+  /** Malformed bytes from the broker. [[NsqClient]]'s reader treats it like
+    * any broken session: it closes the socket, so nsqd requeues the
+    * connection's in-flight messages, and the owner rebuilds the client. */
+  final class NsqProtocolException(msg: String) extends java.io.IOException(msg)
+
   val Magic: Array[Byte] = "  V2".getBytes(UTF_8)
 
   val FrameResponse = 0
@@ -38,12 +43,24 @@ object NsqProtocol {
     out.flush()
   }
 
+  /** Header bytes of a message payload: ns-timestamp, attempts, id. */
+  val MessageHeaderBytes: Int = 8 + 2 + 16
+
+  /** Reads one frame. A clean end of stream before the size field surfaces
+    * as `EOFException`; a size under the 4-byte frame type, or a stream
+    * that ends inside the frame, throws [[NsqProtocolException]]. */
   def readFrame(in: DataInputStream): Frame = {
     val size = in.readInt()
-    val frameType = in.readInt()
-    val data = new Array[Byte](size - 4)
-    in.readFully(data)
-    Frame(frameType, data)
+    if (size < 4) throw new NsqProtocolException(s"frame size $size is under the 4-byte frame type")
+    try {
+      val frameType = in.readInt()
+      val data = new Array[Byte](size - 4)
+      in.readFully(data)
+      Frame(frameType, data)
+    } catch {
+      case _: java.io.EOFException =>
+        throw new NsqProtocolException(s"stream ended inside a $size-byte frame")
+    }
   }
 
   def writeFrame(out: DataOutputStream, frameType: Int, data: Array[Byte]): Unit = {
@@ -54,6 +71,9 @@ object NsqProtocol {
   }
 
   def decodeMessage(data: Array[Byte]): NsqMessage = {
+    if (data.length < MessageHeaderBytes)
+      throw new NsqProtocolException(
+        s"message payload of ${data.length} bytes is under the $MessageHeaderBytes-byte header")
     val buf = java.nio.ByteBuffer.wrap(data)
     val ts = buf.getLong()
     val attempts = buf.getShort() & 0xffff
@@ -67,7 +87,7 @@ object NsqProtocol {
   def encodeMessage(m: NsqMessage): Array[Byte] = {
     val id = m.id.getBytes(UTF_8)
     require(id.length == 16, s"NSQ message id must be 16 bytes, got ${id.length}")
-    val buf = java.nio.ByteBuffer.allocate(8 + 2 + 16 + m.body.length)
+    val buf = java.nio.ByteBuffer.allocate(MessageHeaderBytes + m.body.length)
     buf.putLong(m.timestampNs)
     buf.putShort(m.attempts.toShort)
     buf.put(id)

@@ -59,8 +59,9 @@ object StreamPipeline {
   }
 
   /** Sink one micro-batch: fold each partition through a BatchWriter and
-    * push requests via the transport. Total per-batch counts are returned
-    * for observability. */
+    * push its requests via the transport, retrying failed slots. A slot
+    * still failing after the retries fails the task, so Spark re-runs it
+    * (at-least-once). */
   def deliverBatch(batch: Dataset[org.apache.spark.sql.Row],
                    transport: KinesisTransport,
                    streamName: String): Unit = {

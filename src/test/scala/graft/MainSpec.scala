@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.scalatest.funsuite.AnyFunSuite
 
 class MainSpec extends AnyFunSuite {
@@ -23,5 +24,13 @@ class MainSpec extends AnyFunSuite {
   test("bare trailing flag parses as boolean") {
     val opts = Main.parse(List("--topic", "t", "--test", "--stream", "s"), Map.empty)
     assert(opts.contains("test") && opts("stream") === "s")
+  }
+
+  test("state partitions default to the cluster's cores; an explicit conf wins") {
+    val bare = new SparkConf(loadDefaults = false)
+    assert(Main.statePartitions(bare, 4) === 4)
+    assert(Main.statePartitions(bare, 32) === 32)
+    val pinned = new SparkConf(loadDefaults = false).set("spark.sql.shuffle.partitions", "12")
+    assert(Main.statePartitions(pinned, 4) === 12)
   }
 }

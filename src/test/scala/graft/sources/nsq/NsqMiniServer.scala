@@ -90,6 +90,11 @@ final class NsqMiniServer {
     c.writeLock.synchronized(writeFrame(c.out, FrameError, msg.getBytes("UTF-8")))
   }
 
+  /** Write arbitrary bytes to the first connection (malformed-frame tests). */
+  def sendRaw(bytes: Array[Byte]): Unit = conns.asScala.headOption.foreach { c =>
+    c.writeLock.synchronized { c.out.write(bytes); c.out.flush() }
+  }
+
   /** Deliver queued messages to connections with spare in-flight capacity,
     * round-robin — nsqd's messagePump picks any eligible client.
     *

@@ -286,32 +286,43 @@ class NsqSourceSpec extends SparkSuite {
   }
 
   test("a dead consumer connection is detected and rebuilt; messages redeliver") {
-    val server = new NsqMiniServer
-    val stream = mkStream(server, numShards = 1)
-    try {
-      (0 until 3).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
-      val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
-      val ids1 = readAll(stream, stream.planInputPartitions(NsqOffset(0), o1))
-      assert(ids1.size === 3)
-      val consumer1 = NsqShardConsumers.get(stream.sessionId, 0).get
-      assert(consumer1.isAlive)
-      // a fatal protocol error kills the reader thread -> dead session; the
-      // client closes its socket, so the broker requeues the un-FINned
-      // in-flight immediately (no msg_timeout stall)
-      server.sendError("E_INVALID bad frame")
-      eventually() { assert(!consumer1.isAlive) }
-      eventually() { assert(server.outstanding === 3) }
-      // the next epoch's read must rebuild the connection (round-6 advice:
-      // previously take() silently returned empty forever) and serve the
-      // broker's redeliveries
-      val o2 = stream.latestOffset().asInstanceOf[NsqOffset]
-      assert(o2.epoch === o1.epoch + 1, "outstanding redeliveries must admit an epoch")
-      val ids2 = readAll(stream, stream.planInputPartitions(o1, o2))
-      val consumer2 = NsqShardConsumers.get(stream.sessionId, 0).get
-      assert(consumer2 ne consumer1, "dead consumer must be replaced, not reused")
-      assert(consumer2.isAlive)
-      assert(ids2.toSet === (0 until 3).map(msgId).toSet)
-    } finally { stream.stop(); server.close() }
+    def frame(size: Int, rest: Array[Byte]): Array[Byte] =
+      java.nio.ByteBuffer.allocate(4 + rest.length).putInt(size).put(rest).array()
+    // a fatal protocol error, or malformed bytes (NsqProtocolException),
+    // kills the reader thread -> dead session; the client closes its
+    // socket, so the broker requeues the un-FINned in-flight immediately
+    // (no msg_timeout stall)
+    val killers = Seq[(String, NsqMiniServer => Unit)](
+      "fatal error frame" -> (_.sendError("E_INVALID bad frame")),
+      "size field under 4" -> (_.sendRaw(frame(2, Array[Byte](0, 0)))),
+      "negative size field" -> (_.sendRaw(frame(-7, Array.emptyByteArray))),
+      "message under its 26-byte header" ->
+        (_.sendRaw(frame(4 + 10, Array[Byte](0, 0, 0, NsqProtocol.FrameMessage.toByte) ++ new Array[Byte](10)))))
+    killers.foreach { case (name, kill) =>
+      val server = new NsqMiniServer
+      val stream = mkStream(server, numShards = 1)
+      try {
+        (0 until 3).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
+        val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
+        val ids1 = readAll(stream, stream.planInputPartitions(NsqOffset(0), o1))
+        assert(ids1.size === 3, name)
+        val consumer1 = NsqShardConsumers.get(stream.sessionId, 0).get
+        assert(consumer1.isAlive, name)
+        kill(server)
+        eventually() { assert(!consumer1.isAlive, name) }
+        eventually() { assert(server.outstanding === 3, name) }
+        // the next epoch's read must rebuild the connection (round-6 advice:
+        // previously take() silently returned empty forever) and serve the
+        // broker's redeliveries
+        val o2 = stream.latestOffset().asInstanceOf[NsqOffset]
+        assert(o2.epoch === o1.epoch + 1, s"$name: outstanding redeliveries must admit an epoch")
+        val ids2 = readAll(stream, stream.planInputPartitions(o1, o2))
+        val consumer2 = NsqShardConsumers.get(stream.sessionId, 0).get
+        assert(consumer2 ne consumer1, s"$name: dead consumer must be replaced, not reused")
+        assert(consumer2.isAlive, name)
+        assert(ids2.toSet === (0 until 3).map(msgId).toSet, name)
+      } finally { stream.stop(); server.close() }
+    }
   }
 
   test("idle-TTL reaper closes orphaned consumers so the broker requeues promptly") {

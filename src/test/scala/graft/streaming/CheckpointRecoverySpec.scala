@@ -118,6 +118,10 @@ class CheckpointRecoverySpec extends SparkSuite {
     // NSQ crash posture redelivers un-FINed messages after MsgTimeout
     // (main.go:66), and those redeliveries can land AFTER a restart — a
     // forgotten dedup state would double-deliver everything in flight.
+    // q1 writes the checkpoint at 32 shuffle partitions and q2 restarts it
+    // from a session set to 4: the checkpoint's count must win, so a
+    // graft.Main checkpoint keeps the state-partition count it started with
+    // when the cluster's core count changes.
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val input = MemoryStream[Msg]
@@ -139,28 +143,40 @@ class CheckpointRecoverySpec extends SparkSuite {
       }
       .start()
 
-    val q1 = start()
-    val preRestartMax =
-      try {
-        input.addData(wave1)
-        await(() => captured.asScala.values.map(_.length).sum == 2, "first wave emitted")
-        settle()
-        maxBatch(captured)
-      } finally q1.stop()
-
-    val q2 = start()
+    def statePartitions(q: StreamingQuery): Seq[Int] =
+      q.recentProgress.toSeq.flatMap(_.stateOperators).map(_.numShufflePartitions.toInt)
+    val shufflePartitions = "spark.sql.shuffle.partitions"
+    val sessionPartitions = spark.conf.get(shufflePartitions)
     try {
-      input.addData(wave1 :+ fresh) // post-restart redelivery + one new body
-      await(() => captured.asScala.exists { case (id, rows) =>
-        id > preRestartMax && rows.exists(_.getAs[String]("id") == fresh.id) },
-        "fresh body emitted post-restart")
-      settle()
-      val postRestart = captured.asScala.collect {
-        case (id, rows) if id > preRestartMax => rows.map(_.getAs[String]("id")).toSeq
-      }.flatten.toSeq
-      assert(postRestart === Seq(fresh.id),
-        s"replayed bodies must stay suppressed by the RECOVERED dedup state, got $postRestart")
-    } finally q2.stop()
+      spark.conf.set(shufflePartitions, 32L)
+      val q1 = start()
+      val preRestartMax =
+        try {
+          input.addData(wave1)
+          await(() => captured.asScala.values.map(_.length).sum == 2, "first wave emitted")
+          settle()
+          assert(statePartitions(q1).toSet === Set(32))
+          maxBatch(captured)
+        } finally q1.stop()
+
+      spark.conf.set(shufflePartitions, 4L)
+      val q2 = start()
+      try {
+        input.addData(wave1 :+ fresh) // post-restart redelivery + one new body
+        await(() => captured.asScala.exists { case (id, rows) =>
+          id > preRestartMax && rows.exists(_.getAs[String]("id") == fresh.id) },
+          "fresh body emitted post-restart")
+        settle()
+        val postRestart = captured.asScala.collect {
+          case (id, rows) if id > preRestartMax => rows.map(_.getAs[String]("id")).toSeq
+        }.flatten.toSeq
+        assert(postRestart === Seq(fresh.id),
+          s"replayed bodies must stay suppressed by the RECOVERED dedup state, got $postRestart")
+        val restored = statePartitions(q2)
+        assert(restored.nonEmpty && restored.forall(_ == 32),
+          s"the restart must keep the checkpoint's 32 state partitions, got $restored")
+      } finally q2.stop()
+    } finally spark.conf.set(shufflePartitions, sessionPartitions)
   }
 
   test("StreamingNearDup: bucket residents survive restart — a post-restart probe still hits") {
