@@ -34,6 +34,17 @@ import graft.streaming.{FileTransport, HttpKinesisTransport, KinesisTransport, R
   * restart, so an existing checkpoint keeps the count it was written
   * with. An explicit `--conf spark.sql.shuffle.partitions=N` overrides
   * the derived count.
+  *
+  * Intake is bounded by the broker's in-flight window, as in the
+  * reference (MaxInFlight, main.go:62), not by a per-trigger row cap: each
+  * trigger admits everything the source's shard consumers hold, and each
+  * shard's connection holds at most RDY = 2,500 un-FINned messages (nsqd's
+  * default `--max-rdy-count`, lowered to whatever the broker negotiates).
+  * The executors therefore buffer at most `numShards × RDY × body size` of
+  * message bodies: 4 × 2,500 × 1 kB = 10 MB. Messages are FINned only after
+  * their batch commits, so a window must be delivered and committed within
+  * the `msg_timeout` the source requests (10 s), or the broker redelivers
+  * it.
   */
 object Main {
 

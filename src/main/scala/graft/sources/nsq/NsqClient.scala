@@ -2,6 +2,7 @@ package graft.sources.nsq
 
 import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicBoolean
 
 import NsqProtocol._
@@ -11,6 +12,12 @@ import NsqProtocol._
   * NOP. `fin`/`requeue` provide the per-message ack surface the pipeline's
   * commit path uses (reference semantics: handler.go:19, kinesis_writer.go:
   * 114-127). Tuning mirrors main.go:62-68 (maxInFlight etc.).
+  *
+  * IDENTIFY asks for feature negotiation and its one response is read
+  * before SUB: nsqd answers with its limits as JSON, and the requested
+  * window is clamped to `max_rdy_count` (nsqd rejects a larger RDY with
+  * `E_INVALID`, which would kill the session). A plain `OK` (a broker that
+  * does not negotiate) keeps the requested window.
   */
 final class NsqClient(
     host: String,
@@ -43,9 +50,26 @@ final class NsqClient(
   // on a cluster it tells the broker operator WHICH executor JVM holds each
   // connection, and the multi-JVM spec asserts distributed ingest from it
   writeIdentify(out,
-    s"""{"client_id":"graft-${ProcessHandle.current().pid()}","msg_timeout":$msgTimeoutMs,"output_buffer_timeout":$outputBufferTimeoutMs}""")
+    s"""{"client_id":"graft-${ProcessHandle.current().pid()}","feature_negotiation":true,"msg_timeout":$msgTimeoutMs,"output_buffer_timeout":$outputBufferTimeoutMs}""")
+
+  /** The in-flight window this connection runs with: `maxInFlight`, clamped
+    * to the broker's negotiated `max_rdy_count`. */
+  val rdy: Int =
+    try {
+      socket.setSoTimeout(msgTimeoutMs.toInt) // a silent broker must not hang the read task
+      val reply = readFrame(in)
+      socket.setSoTimeout(0)
+      val text = new String(reply.data, UTF_8)
+      if (reply.frameType != FrameResponse)
+        throw new java.io.IOException(s"nsq IDENTIFY to $host:$port rejected: $text")
+      if (text == "OK") maxInFlight
+      else math.min(maxInFlight, new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(text).path("max_rdy_count").asInt(maxInFlight))
+    } catch {
+      case e: Throwable => try socket.close() catch { case _: Throwable => () }; throw e
+    }
   writeCommand(out, s"SUB $topic $channel")
-  writeCommand(out, s"RDY $maxInFlight")
+  writeCommand(out, s"RDY $rdy")
 
   private val reader = new Thread(() => {
     try {

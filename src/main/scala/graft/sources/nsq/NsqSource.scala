@@ -33,8 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     owns a standing [[ShardConsumer]] (JVM-cached across batches, keyed
   *     by checkpoint+shard) whose connection consumes concurrently with
   *     every other shard — ingest parallelism = numShards before the first
-  *     shuffle, spread across the cluster, bounded per epoch by
-  *     `maxPerTrigger / numShards` per shard. NSQ channel semantics
+  *     shuffle, spread across the cluster. A shard's epoch takes everything
+  *     its consumer holds, bounded only by the connection's in-flight
+  *     window (RDY), the backpressure the reference uses (MaxInFlight,
+  *     main.go:62); a caller-set `maxPerTrigger` instead caps each shard at
+  *     `maxPerTrigger / numShards` rows per epoch. NSQ channel semantics
   *     load-balance a channel across connections, so shards (and extra
   *     pipeline instances) never double-read. The reference fans 20
   *     concurrent handlers inside ONE process (main.go:122); this fans
@@ -50,10 +53,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Schema: id STRING, ts TIMESTAMP, attempts INT, body BINARY (FIXTURES A4).
   *
-  * Consumer tuning (mirrors main.go:62-68): `maxPerTrigger`,
-  * `msgTimeoutMs`, `outputBufferTimeoutMs` flow into IDENTIFY; RDY is sized
-  * 3× a shard's epoch budget so un-FINned epochs awaiting commit never
-  * stall delivery. `statsEndpoints` overrides the nsqd HTTP ports (default:
+  * Consumer tuning (mirrors main.go:62-68): `msgTimeoutMs` and
+  * `outputBufferTimeoutMs` flow into IDENTIFY. RDY defaults to
+  * [[NsqSource.DefaultRdy]] (nsqd's default `--max-rdy-count`), clamped to
+  * whatever `max_rdy_count` the broker grants in its IDENTIFY reply. FIN
+  * after commit keeps about two epochs in flight, so the window sustains
+  * about `numShards × RDY / (2 × trigger)` msgs/s, and an executor buffers
+  * at most `RDY × body size` per shard. Messages must be FINned within
+  * `msgTimeoutMs` of delivery, or nsqd redelivers them. With
+  * `maxPerTrigger` set, RDY is 3× a shard's epoch budget instead, so
+  * un-FINned epochs awaiting commit never stall delivery.
+  * `statsEndpoints` overrides the nsqd HTTP ports (default:
   * tcp port + 1, the nsqd convention; lookupd discovery uses each
   * producer's advertised http_port).
   *
@@ -75,6 +85,10 @@ object NsqSource {
     StructField("ts", TimestampType),
     StructField("attempts", IntegerType),
     StructField("body", BinaryType)))
+
+  /** In-flight window per shard connection when `maxPerTrigger` is unset:
+    * nsqd's default `--max-rdy-count`, the largest a stock broker grants. */
+  val DefaultRdy = 2500
 }
 
 class NsqTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -106,8 +120,7 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
 
   private val topic = Option(options.get("topic")).getOrElse("events")
   private val channel = Option(options.get("channel")).getOrElse("graft")
-  private val maxPerTrigger =
-    Option(options.get("maxPerTrigger")).map(_.toLong).getOrElse(1000L)
+  private val maxPerTrigger = Option(options.get("maxPerTrigger")).map(_.toLong)
   private val msgTimeoutMs =
     Option(options.get("msgTimeoutMs")).map(_.toLong).getOrElse(10000L)
   private val outputBufferTimeoutMs =
@@ -174,7 +187,14 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
     Option(options.get("numShards")).orElse(Option(options.get("numPartitions")))
       .map(_.toInt).getOrElse(4),
     brokers.size)
-  private lazy val maxPerShard = math.max(1L, maxPerTrigger / numShards).toInt
+  // (rows per shard per epoch, RDY): unset, an epoch takes what the window
+  // holds; a caller's cap splits across shards with 3× headroom in flight
+  private lazy val (maxPerShard, rdy) = maxPerTrigger match {
+    case Some(m) =>
+      val perShard = math.max(1L, m / numShards).toInt
+      (perShard, math.max(1, perShard * 3))
+    case None => (NsqSource.DefaultRdy, NsqSource.DefaultRdy)
+  }
 
   private var epoch = 0L
   private val committed = new AtomicLong(-1L)
@@ -243,7 +263,7 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
       NsqShardPartition(sessionId, i, host, port, topic, channel,
         epoch = e, committedEpoch = c,
         maxPerShard = maxPerShard, pollMs = pollMs,
-        rdy = math.max(1, maxPerShard * 3),
+        rdy = rdy,
         msgTimeoutMs = msgTimeoutMs, outputBufferTimeoutMs = outputBufferTimeoutMs,
         idleTtlMs = idleTtlMs,
         preferredHost = if (hosts.isEmpty) "" else hosts(i % hosts.size))

@@ -30,7 +30,6 @@ object NsqIngestBench {
       .option("statsEndpoints", servers.map(s => s"127.0.0.1:${s.httpPort}").mkString(","))
       .option("topic", "t").option("channel", "ch")
       .option("numShards", numShards.toString)
-      .option("maxPerTrigger", "100000")
       .option("pollMs", "250")
       .load()
     val t0 = System.nanoTime()

@@ -25,9 +25,13 @@ import NsqProtocol._
   *  - REQ puts the message back on the queue for redelivery;
   *  - a connection dying requeues its un-FINned in-flight messages;
   *  - `/stats?format=json` on [[httpPort]] reports channel depth +
-  *    in_flight_count in nsqd's JSON shape (what [[NsqStats]] polls).
+  *    in_flight_count in nsqd's JSON shape (what [[NsqStats]] polls);
+  *  - with `maxRdyCount` set, IDENTIFY with feature negotiation is answered
+  *    with JSON carrying `max_rdy_count`, and a larger RDY is a fatal
+  *    `E_INVALID` that closes the connection, like nsqd's
+  *    `--max-rdy-count`; unset, IDENTIFY is answered `OK`.
   */
-final class NsqMiniServer {
+final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
   private val server = new ServerSocket(0)
   val port: Int = server.getLocalPort
 
@@ -74,6 +78,8 @@ final class NsqMiniServer {
   @volatile private var subbedChannel = "ch"
 
   def inFlightCount: Int = conns.asScala.map(_.inFlight.size).sum
+  /** The RDY each live connection last set. */
+  def readyCounts: Seq[Long] = conns.asScala.toVector.map(_.ready)
   def outstanding: Int = pending.size + inFlightCount
   def activeConns: Int = conns.size
 
@@ -185,10 +191,16 @@ final class NsqMiniServer {
               val size = in.readInt()
               val body = new Array[Byte](size)
               in.readFully(body)
+              val identify = new String(body, "UTF-8")
               """"client_id"\s*:\s*"([^"]+)"""".r
-                .findFirstMatchIn(new String(body, "UTF-8"))
+                .findFirstMatchIn(identify)
                 .foreach(m => identities.add(m.group(1)))
-              conn.writeLock.synchronized(writeFrame(conn.out, FrameResponse, "OK".getBytes("UTF-8")))
+              val reply = maxRdyCount match {
+                case Some(max) if identify.contains(""""feature_negotiation":true""") =>
+                  s"""{"max_rdy_count":$max,"version":"mini"}"""
+                case _ => "OK"
+              }
+              conn.writeLock.synchronized(writeFrame(conn.out, FrameResponse, reply.getBytes("UTF-8")))
             case "SUB" =>
               if (parts.length > 2) subbedChannel = parts(2)
               conns.add(conn)
@@ -196,7 +208,13 @@ final class NsqMiniServer {
               conn.writeLock.synchronized(writeFrame(conn.out, FrameResponse, "OK".getBytes("UTF-8")))
               subscribed.countDown()
             case "RDY" =>
-              conn.ready = parts(1).toLong
+              val n = parts(1).toLong
+              if (maxRdyCount.exists(n > _)) {
+                conn.writeLock.synchronized(writeFrame(conn.out, FrameError,
+                  s"E_INVALID RDY count $n out of range 0-${maxRdyCount.get}".getBytes("UTF-8")))
+                dropConn(conn); maybeDeliver(); return
+              }
+              conn.ready = n
               maybeDeliver()
             case "FIN" =>
               finned.add(parts(1))

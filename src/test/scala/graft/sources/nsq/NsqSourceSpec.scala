@@ -36,6 +36,14 @@ class NsqSourceSpec extends SparkSuite {
     }.toSeq
   }
 
+  /** Opens each shard's standing consumer ahead of a read and waits until
+    * the broker has `inFlight` messages out to them, so the read's single
+    * poll window finds them delivered even on a slow host. */
+  private def warm(server: NsqMiniServer, parts: Array[InputPartition], inFlight: Int): Unit = {
+    parts.foreach(p => NsqShardConsumers.getOrCreate(p.asInstanceOf[NsqShardPartition]))
+    eventually() { assert(server.inFlightCount === inFlight) }
+  }
+
   test("protocol codec round-trips messages") {
     val m = NsqProtocol.NsqMessage(msgId(7), 123456789L, 3, "hello".getBytes)
     val decoded = NsqProtocol.decodeMessage(NsqProtocol.encodeMessage(m))
@@ -52,6 +60,7 @@ class NsqSourceSpec extends SparkSuite {
       maxInFlight = 100, onMessage = m => got.add(new String(m.body)))
     try {
       server.awaitSubscribe()
+      assert(client.rdy === 100, "a plain OK to IDENTIFY keeps the requested window")
       (0 until 5).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
       eventually() { assert(got.size === 5) }
       server.sendHeartbeat() // must be answered with NOP, not break the stream
@@ -81,6 +90,58 @@ class NsqSourceSpec extends SparkSuite {
     } finally { client.close(); server.close() }
   }
 
+  test("IDENTIFY negotiates the window: RDY is clamped to the broker's max_rdy_count") {
+    // a broker started with a lower --max-rdy-count than the source's
+    // default window rejects a larger RDY with E_INVALID and closes the
+    // connection; unclamped, every epoch would rebuild a session that dies
+    val server = new NsqMiniServer(maxRdyCount = Some(50))
+    val stream = mkStream(server, numShards = 1)
+    try {
+      (0 until 120).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
+      val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
+      val parts = stream.planInputPartitions(NsqOffset(0), o1)
+      assert(parts.head.asInstanceOf[NsqShardPartition].rdy === NsqSource.DefaultRdy)
+      warm(server, parts, 50)
+      assert(server.readyCounts === Seq(50L))
+      val ids1 = readAll(stream, parts)
+      assert(ids1.size === 50)
+      stream.commit(o1)
+      val o2 = stream.latestOffset().asInstanceOf[NsqOffset]
+      val ids2 = readAll(stream, stream.planInputPartitions(o1, o2))
+      assert(ids2.nonEmpty, "FINning epoch 1 must free the window for more deliveries")
+      assert(NsqShardConsumers.get(stream.sessionId, 0).exists(_.isAlive))
+      assert(server.connections.get() === 1, "the negotiated session must never be rebuilt")
+    } finally { stream.stop(); server.close() }
+  }
+
+  test("without maxPerTrigger one epoch admits everything the shard's window holds") {
+    val server = new NsqMiniServer
+    val stream = mkStream(server, numShards = 1)
+    try {
+      (0 until 1500).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
+      val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
+      val parts = stream.planInputPartitions(NsqOffset(0), o1)
+      warm(server, parts, 1500)
+      val ids = readAll(stream, parts)
+      assert(ids.size === 1500, "no fixed per-trigger row budget may cut the epoch")
+      assert(ids.toSet === (0 until 1500).map(msgId).toSet)
+    } finally { stream.stop(); server.close() }
+  }
+
+  test("an explicit maxPerTrigger splits across shards with a 3x in-flight window") {
+    val server = new NsqMiniServer
+    val stream = mkStream(server, numShards = 2, extra = Map("maxPerTrigger" -> "100"))
+    try {
+      (0 until 400).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
+      val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
+      val parts = stream.planInputPartitions(NsqOffset(0), o1)
+      warm(server, parts, 300)
+      assert(server.readyCounts === Seq(150L, 150L))
+      val perShard = parts.toSeq.map(p => readAll(stream, Array(p)).size)
+      assert(perShard.forall(n => n > 0 && n <= 50), s"per-shard takes $perShard")
+    } finally { stream.stop(); server.close() }
+  }
+
   test("driver-API drive: epochs admit on depth, FIN lands only after commit") {
     val server = new NsqMiniServer
     val stream = mkStream(server, numShards = 2)
@@ -95,8 +156,9 @@ class NsqSourceSpec extends SparkSuite {
 
       val parts = stream.planInputPartitions(NsqOffset(0), o1)
       assert(parts.length === 2, "one InputPartition per shard")
+      warm(server, parts, 10)
       val ids1 = readAll(stream, parts)
-      eventually() { assert(ids1.toSet === (0 until 10).map(msgId).toSet) }
+      assert(ids1.toSet === (0 until 10).map(msgId).toSet)
       assert(server.finned.isEmpty, "nothing may be FINned before commit")
 
       stream.commit(o1)
@@ -304,7 +366,9 @@ class NsqSourceSpec extends SparkSuite {
       try {
         (0 until 3).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
         val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
-        val ids1 = readAll(stream, stream.planInputPartitions(NsqOffset(0), o1))
+        val parts = stream.planInputPartitions(NsqOffset(0), o1)
+        warm(server, parts, 3)
+        val ids1 = readAll(stream, parts)
         assert(ids1.size === 3, name)
         val consumer1 = NsqShardConsumers.get(stream.sessionId, 0).get
         assert(consumer1.isAlive, name)
@@ -331,7 +395,9 @@ class NsqSourceSpec extends SparkSuite {
     try {
       (0 until 2).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
       val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
-      val ids1 = readAll(stream, stream.planInputPartitions(NsqOffset(0), o1))
+      val parts = stream.planInputPartitions(NsqOffset(0), o1)
+      warm(server, parts, 2)
+      val ids1 = readAll(stream, parts)
       assert(ids1.size === 2)
       // NOTE: no isDefined assertion here — with a 1 ms TTL the JVM-wide
       // background reaper (5 s cadence, shared across the whole suite) may
