@@ -41,10 +41,15 @@ import graft.streaming.{FileTransport, HttpKinesisTransport, KinesisTransport, R
   * shard's connection holds at most RDY = 2,500 un-FINned messages (nsqd's
   * default `--max-rdy-count`, lowered to whatever the broker negotiates).
   * The executors therefore buffer at most `numShards × RDY × body size` of
-  * message bodies: 4 × 2,500 × 1 kB = 10 MB. Messages are FINned only after
-  * their batch commits, so a window must be delivered and committed within
-  * the `msg_timeout` the source requests (10 s), or the broker redelivers
-  * it.
+  * message bodies: 4 × 2,500 × 1 kB = 10 MB. Micro-batches run back to
+  * back: the next starts as soon as the last has committed and the brokers
+  * report outstanding work, so a message waits about one batch duration
+  * for its batch, not a fixed tick. A message is FINned about one batch
+  * after its delivery (the shard's next read, once its batch has
+  * committed), which keeps about two epochs in flight: the window sustains
+  * about `numShards × RDY / (2 × batch duration)` msgs/s. A window must be
+  * delivered and committed within the `msg_timeout` the source requests
+  * (10 s), or the broker redelivers it.
   */
 object Main {
 

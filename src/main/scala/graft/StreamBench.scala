@@ -257,10 +257,10 @@ object StreamBench {
     // exchange (the measured bottleneck, see BASELINE.md) — a streaming
     // micro-batch pays per-partition task + state-store-commit overhead
     // every trigger, so the default is one per core, as graft.Main derives
-    // it: driving graft.Main on local[4] (4-vCPU VM) with ~1,000 rows per
-    // 1 s trigger (perfbench stream_paced), 4 partitions instead of 32 cut
-    // the batch p50 from 1.46 s to 0.37 s and the median latency p50 over
-    // 12 runs from 1.69 s to 0.73 s
+    // it: driving graft.Main on local[4] (4-vCPU VM) at ~1,000 msgs/s
+    // (perfbench stream_paced, then on a 1 s trigger), 4 partitions instead
+    // of 32 cut the batch p50 from 1.46 s to 0.37 s and the median latency
+    // p50 over 12 runs from 1.69 s to 0.73 s
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -350,7 +350,7 @@ object StreamBench {
         StreamPipeline.build(
           input.toDF(),
           new HttpKinesisTransport(httpSink.get.endpoint, credentials = creds),
-          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt, triggerMs = 10L))
+          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt))
       case "http_chaos" =>
         // sustained throttle storm (1-in-5 requests rejected whole) absorbed
         // by the retry/backoff path — the chaos-soak row's delivery stage;
@@ -359,13 +359,13 @@ object StreamBench {
           input.toDF(),
           new graft.streaming.RetryingTransport(
             new HttpKinesisTransport(httpSink.get.endpoint), maxRetries = 6),
-          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt, triggerMs = 10L))
+          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt))
       case _ =>
         StreamPipeline.build(
           input.toDF(), new CountingTransport,
-          // 10 ms trigger: measure pipeline capacity, not trigger idle time
-          // (production keeps the reference's 1 s MaxDelay default)
-          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt, triggerMs = 10L))
+          // batches run back to back, so this measures pipeline capacity,
+          // not trigger idle time
+          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt))
     }).start()
 
     // warm-up epoch: absorbs state-store/codegen init

@@ -3,7 +3,11 @@ package graft.sources.nsq
 import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.MissingNode
 
 import NsqProtocol._
 
@@ -16,8 +20,15 @@ import NsqProtocol._
   * IDENTIFY asks for feature negotiation and its one response is read
   * before SUB: nsqd answers with its limits as JSON, and the requested
   * window is clamped to `max_rdy_count` (nsqd rejects a larger RDY with
-  * `E_INVALID`, which would kill the session). A plain `OK` (a broker that
-  * does not negotiate) keeps the requested window.
+  * `E_INVALID`, which would kill the session). The same JSON's
+  * `max_msg_size` bounds every frame the reader accepts. A plain `OK` (a
+  * broker that does not negotiate) keeps the requested window and nsqd's
+  * default max message size.
+  *
+  * Closing is two-phase so a caller can pause several connections before
+  * dropping any: [[startClose]] stops deliveries, [[awaitCloseWait]] waits
+  * for the broker's acknowledgement, [[close]] drops the socket (the broker
+  * then requeues whatever is still in flight here).
   */
 final class NsqClient(
     host: String,
@@ -52,9 +63,8 @@ final class NsqClient(
   writeIdentify(out,
     s"""{"client_id":"graft-${ProcessHandle.current().pid()}","feature_negotiation":true,"msg_timeout":$msgTimeoutMs,"output_buffer_timeout":$outputBufferTimeoutMs}""")
 
-  /** The in-flight window this connection runs with: `maxInFlight`, clamped
-    * to the broker's negotiated `max_rdy_count`. */
-  val rdy: Int =
+  // the IDENTIFY reply: the broker's limits, or a missing node for `OK`
+  private val negotiated: JsonNode =
     try {
       socket.setSoTimeout(msgTimeoutMs.toInt) // a silent broker must not hang the read task
       val reply = readFrame(in)
@@ -62,23 +72,37 @@ final class NsqClient(
       val text = new String(reply.data, UTF_8)
       if (reply.frameType != FrameResponse)
         throw new java.io.IOException(s"nsq IDENTIFY to $host:$port rejected: $text")
-      if (text == "OK") maxInFlight
-      else math.min(maxInFlight, new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(text).path("max_rdy_count").asInt(maxInFlight))
+      if (text == "OK") MissingNode.getInstance()
+      else new ObjectMapper().readTree(text)
     } catch {
       case e: Throwable => try socket.close() catch { case _: Throwable => () }; throw e
     }
+
+  /** The in-flight window this connection runs with: `maxInFlight`, clamped
+    * to the broker's negotiated `max_rdy_count`. */
+  val rdy: Int = math.min(maxInFlight, negotiated.path("max_rdy_count").asInt(maxInFlight))
+
+  /** The largest message body the broker sends: its `max_msg_size`, or
+    * nsqd's default. A larger frame kills the session before allocating. */
+  val maxMsgSize: Long = negotiated.path("max_msg_size").asLong(DefaultMaxMsgSize)
+
   writeCommand(out, s"SUB $topic $channel")
   writeCommand(out, s"RDY $rdy")
+
+  // released by the broker's CLOSE_WAIT, or when the reader stops
+  private val closeWait = new CountDownLatch(1)
 
   private val reader = new Thread(() => {
     try {
       while (running.get()) {
-        val frame = readFrame(in)
+        val frame = readFrame(in, maxMsgSize)
         frame.frameType match {
           case FrameResponse =>
-            if (new String(frame.data, "UTF-8") == "_heartbeat_")
-              writeLock.synchronized(writeCommand(out, "NOP"))
+            new String(frame.data, UTF_8) match {
+              case "_heartbeat_" => writeLock.synchronized(writeCommand(out, "NOP"))
+              case "CLOSE_WAIT" => closeWait.countDown()
+              case _ => ()
+            }
           case FrameMessage =>
             onMessage(decodeMessage(frame.data))
           case FrameError =>
@@ -101,7 +125,7 @@ final class NsqClient(
         // close the socket NOW so nsqd requeues this connection's un-FINned
         // in-flight immediately instead of waiting out msg_timeout
         try socket.close() catch { case _: Throwable => () }
-    }
+    } finally closeWait.countDown()
   }, s"nsq-reader-$topic")
   reader.setDaemon(true)
   reader.start()
@@ -123,9 +147,21 @@ final class NsqClient(
         try socket.close() catch { case _: Throwable => () }
     }
 
+  /** Stops deliveries: `RDY 0` pauses the connection on any broker, and
+    * `CLS` (which makes nsqd force RDY 0 itself) is answered `CLOSE_WAIT`
+    * once the broker has handled both, as it handles a connection's
+    * commands in order. Messages in flight stay here until [[close]]. */
+  def startClose(): Unit =
+    try writeLock.synchronized { writeCommand(out, "RDY 0"); writeCommand(out, "CLS") }
+    catch { case _: Throwable => () }
+
+  /** Waits until the broker has answered [[startClose]], the session has
+    * died, or `deadlineNs` (`System.nanoTime`) has passed. */
+  def awaitCloseWait(deadlineNs: Long): Unit =
+    closeWait.await(deadlineNs - System.nanoTime(), TimeUnit.NANOSECONDS)
+
   def close(): Unit = {
     running.set(false)
-    try writeLock.synchronized(writeCommand(out, "CLS")) catch { case _: Throwable => () }
     try socket.close() catch { case _: Throwable => () }
   }
 }

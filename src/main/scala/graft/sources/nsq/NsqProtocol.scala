@@ -46,12 +46,20 @@ object NsqProtocol {
   /** Header bytes of a message payload: ns-timestamp, attempts, id. */
   val MessageHeaderBytes: Int = 8 + 2 + 16
 
+  /** nsqd's default `--max-msg-size`, assumed for a broker whose IDENTIFY
+    * reply does not state `max_msg_size`. */
+  val DefaultMaxMsgSize: Long = 1048576L
+
   /** Reads one frame. A clean end of stream before the size field surfaces
-    * as `EOFException`; a size under the 4-byte frame type, or a stream
-    * that ends inside the frame, throws [[NsqProtocolException]]. */
-  def readFrame(in: DataInputStream): Frame = {
+    * as `EOFException`; a size under the 4-byte frame type, a size past
+    * what a `maxMsgSize` body plus the frame type and message header can
+    * fill (checked before allocating), or a stream that ends inside the
+    * frame, throws [[NsqProtocolException]]. */
+  def readFrame(in: DataInputStream, maxMsgSize: Long = DefaultMaxMsgSize): Frame = {
     val size = in.readInt()
     if (size < 4) throw new NsqProtocolException(s"frame size $size is under the 4-byte frame type")
+    if (size > 4 + MessageHeaderBytes + maxMsgSize)
+      throw new NsqProtocolException(s"frame size $size exceeds the $maxMsgSize-byte max message size")
     try {
       val frameType = in.readInt()
       val data = new Array[Byte](size - 4)

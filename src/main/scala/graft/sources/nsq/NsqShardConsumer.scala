@@ -88,14 +88,30 @@ object NsqShardConsumers {
         k.substring(k.lastIndexOf('#') + 1).toInt -> c.takeThreads
     }.toMap
 
-  /** Close every consumer belonging to `sessionId`. Effective in local mode
-    * and tests (same JVM); on a cluster, consumers in OTHER executor JVMs
-    * are closed by the idle-TTL reaper once the stopped query stops sending
-    * them read tasks (see class doc) — executors outlive queries, so JVM
-    * shutdown cannot be relied on for this. */
-  def closeSession(sessionId: String): Unit =
-    consumers.keySet.asScala.filter(_.startsWith(sessionId + "#")).toVector
-      .foreach(k => Option(consumers.remove(k)).foreach(_.close()))
+  /** Bound on how long [[closeSession]] waits for the brokers to
+    * acknowledge its pauses, across all of the session's connections. */
+  private val CloseWaitMs = 1000L
+
+  /** Close every consumer belonging to `sessionId`. Every connection is
+    * paused first ([[NsqClient.startClose]]) and none is closed until the
+    * brokers have acknowledged all pauses (or [[CloseWaitMs]] has passed):
+    * each close makes the broker requeue that connection's un-FINned
+    * messages, and a shard still open would otherwise take them, only to
+    * have them requeued again by its own close.
+    *
+    * Effective in local mode and tests (same JVM); on a cluster, consumers
+    * in OTHER executor JVMs are closed by the idle-TTL reaper once the
+    * stopped query stops sending them read tasks (see class doc) —
+    * executors outlive queries, so JVM shutdown cannot be relied on for
+    * this. */
+  def closeSession(sessionId: String): Unit = {
+    val closing = consumers.keySet.asScala.filter(_.startsWith(sessionId + "#")).toVector
+      .flatMap(k => Option(consumers.remove(k)))
+    closing.foreach(_.client.startClose())
+    val deadlineNs = System.nanoTime() + CloseWaitMs * 1000000L
+    closing.foreach(_.client.awaitCloseWait(deadlineNs))
+    closing.foreach(_.close())
+  }
 }
 
 /** A standing consumer connection for one shard: the [[NsqClient]] reader
@@ -113,7 +129,7 @@ final class ShardConsumer(
   @volatile private[nsq] var taken = 0L // messages delivered to readers
   @volatile private[nsq] var lastTouchedNanos = System.nanoTime()
 
-  private val client = new NsqClient(host, port, topic, channel,
+  private[nsq] val client = new NsqClient(host, port, topic, channel,
     maxInFlight = rdy, msgTimeoutMs = msgTimeoutMs,
     outputBufferTimeoutMs = outputBufferTimeoutMs,
     onMessage = queue.put)

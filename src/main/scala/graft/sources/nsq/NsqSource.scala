@@ -56,9 +56,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Consumer tuning (mirrors main.go:62-68): `msgTimeoutMs` and
   * `outputBufferTimeoutMs` flow into IDENTIFY. RDY defaults to
   * [[NsqSource.DefaultRdy]] (nsqd's default `--max-rdy-count`), clamped to
-  * whatever `max_rdy_count` the broker grants in its IDENTIFY reply. FIN
-  * after commit keeps about two epochs in flight, so the window sustains
-  * about `numShards × RDY / (2 × trigger)` msgs/s, and an executor buffers
+  * whatever `max_rdy_count` the broker grants in its IDENTIFY reply. With
+  * batches running back to back, a message is FINned about one batch after
+  * its delivery (its epoch's batch, then the next read), so about two
+  * epochs are in flight: the window sustains about
+  * `numShards × RDY / (2 × batch duration)` msgs/s, and an executor buffers
   * at most `RDY × body size` per shard. Messages must be FINned within
   * `msgTimeoutMs` of delivery, or nsqd redelivers them. With
   * `maxPerTrigger` set, RDY is 3× a shard's epoch budget instead, so
@@ -204,6 +206,8 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
   // (exponential backoff, capped) and then probe again; a success resets.
   private var statsFailStreak = 0
   private var statsSkipUntilEpoch = 0L
+  // when /stats last reported zero outstanding (System.nanoTime)
+  private var idleAtNs: Option[Long] = None
 
   override def initialOffset(): Offset = NsqOffset(0L)
 
@@ -226,12 +230,18 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
     * in-flight) > 0 at any broker, or stats are (currently) unavailable.
     * In-flight covers messages buffered executor-side awaiting FIN, so
     * outstanding=0 ⇒ everything published was delivered AND committed —
-    * quiescent. */
+    * quiescent. A zero answer is trusted for `pollMs`: an idle query asks
+    * again every few ms (`spark.sql.streaming.pollingDelay`), and each
+    * broker sees at most one `/stats` request per `pollMs`. */
   override def latestOffset(): Offset = synchronized {
     val advance =
       if (epoch < statsSkipUntilEpoch) true // backing off; availability first
+      else if (idleAtNs.exists(System.nanoTime() - _ < pollMs * 1000000L)) false
       else NsqStats.outstanding(brokers.map(b => (b._1, b._3)), topic, channel) match {
-        case Some(n) => statsFailStreak = 0; n > 0
+        case Some(n) =>
+          statsFailStreak = 0
+          idleAtNs = if (n == 0) Some(System.nanoTime()) else None
+          n > 0
         case None =>
           statsFailStreak += 1
           statsSkipUntilEpoch = epoch + math.min(1L << math.min(statsFailStreak, 5), 32L)

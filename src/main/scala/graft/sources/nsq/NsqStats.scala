@@ -21,9 +21,12 @@ object NsqStats {
 
   private val mapper = new ObjectMapper()
 
+  // one client for every poll (each HttpClient starts its own selector
+  // thread); each request still carries its own timeout
+  private val client = HttpClient.newBuilder()
+    .connectTimeout(Duration.ofMillis(2000)).build()
+
   private def get(url: String, timeoutMs: Long): String = {
-    val client = HttpClient.newBuilder()
-      .connectTimeout(Duration.ofMillis(timeoutMs)).build()
     val req = HttpRequest.newBuilder(URI.create(url))
       .timeout(Duration.ofMillis(timeoutMs)).GET().build()
     val resp = client.send(req, HttpResponse.BodyHandlers.ofString())

@@ -13,7 +13,7 @@ import graft.functions.GraftFunctions
   *   → fnv64a(body)                         // O9 identity hash
   *   → withWatermark + dropDuplicatesWithinWatermark   // O3/O4 dedup, state-store
   *   → filter(octet_length(body) ≤ 1 MiB)   // O6 oversize drop
-  *   → foreachBatch:                        // O7 micro-batch = time trigger
+  *   → foreachBatch:                        // O7 micro-batch, run back to back
   *       per partition: BatchWriter         // O8/O10/O11/O12 pack + chunk
   *       → transport.putRecords (retry)     // O13/O14 send + per-entry routing
   * }}}
@@ -24,6 +24,12 @@ import graft.functions.GraftFunctions
   * window maps the reference's 2×120 s generation rotation onto a watermark
   * TTL (deduper.go:42-47 ↔ state-store eviction).
   *
+  * Cadence: the reference flushes a batch when it fills or when its 1 s
+  * `MaxDelay` runs out (kinesis_writer.go:42-59), so 1 s bounds a record's
+  * wait. Here the next micro-batch starts as soon as the previous one has
+  * committed and the source reports new work (Spark's default trigger), so
+  * a record waits about one batch duration, not a fixed tick.
+  *
   * Scale: dedup state is hash-partitioned across executors (the Go original
   * was one mutex-guarded map); packing is per-partition sequential with no
   * shuffle after the dedup exchange.
@@ -33,7 +39,6 @@ object StreamPipeline {
   final case class Options(
       streamName: String = "graft",
       dedupWindow: String = "4 minutes",   // 2 × 120 s generations, main.go:113
-      triggerMs: Long = 1000L,             // MaxDelay default, kinesis_writer.go:42-44
       checkpoint: String = "/tmp/graft-checkpoint",
       // Trigger.AvailableNow: drain everything available, then STOP — the
       // backfill/catch-up mode (reprocess a backlog with streaming
@@ -90,17 +95,16 @@ object StreamPipeline {
     }
   }
 
-  /** Full assembly: transform + foreachBatch sink, 1 s processing-time
-    * trigger. Caller starts the returned writer. */
+  /** Full assembly: transform + foreachBatch sink, micro-batches back to
+    * back (or `AvailableNow`). Caller starts the returned writer. */
   def build(stream: DataFrame, transport: KinesisTransport,
-            opts: Options = Options()): DataStreamWriter[org.apache.spark.sql.Row] =
-    transform(stream, opts.dedupWindow).writeStream
+            opts: Options = Options()): DataStreamWriter[org.apache.spark.sql.Row] = {
+    val writer = transform(stream, opts.dedupWindow).writeStream
       .queryName(s"graft-${opts.streamName}")
-      .trigger(
-        if (opts.availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime(opts.triggerMs))
       .option("checkpointLocation", opts.checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         deliverBatch(batch, transport, opts.streamName)
       }
+    if (opts.availableNow) writer.trigger(Trigger.AvailableNow()) else writer
+  }
 }

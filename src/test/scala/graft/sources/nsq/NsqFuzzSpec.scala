@@ -12,10 +12,11 @@ import NsqProtocol._
   * (a size field under 4 once allocated `size - 4` bytes) or
   * `BufferUnderflowException` (a message payload under its 26-byte header).
   * The only other outcome is `EOFException` when the stream ends before a
-  * whole size field. Size fields stay under 64 here: the upper bound on a
-  * frame needs the negotiated max message size, which the client does not
-  * know yet. `NsqSourceSpec`'s dead-consumer test drives malformed frames
-  * through a live session: the consumer is rebuilt and nsqd redelivers.
+  * whole size field. A size field past the max message size plus the frame
+  * type and message header is rejected before anything is allocated, up to
+  * `Int.MaxValue`. `NsqSourceSpec`'s dead-consumer test drives malformed
+  * frames through a live session: the consumer is rebuilt and nsqd
+  * redelivers.
   */
 class NsqFuzzSpec extends AnyFunSuite {
 
@@ -25,8 +26,11 @@ class NsqFuzzSpec extends AnyFunSuite {
   private def frameBytes(size: Int, rest: Array[Byte]): Array[Byte] =
     java.nio.ByteBuffer.allocate(4 + rest.length).putInt(size).put(rest).array()
 
-  private def read(bytes: Array[Byte]): Either[Throwable, Frame] =
-    outcome(readFrame(new DataInputStream(new ByteArrayInputStream(bytes))))
+  private def read(bytes: Array[Byte], maxMsgSize: Long = DefaultMaxMsgSize): Either[Throwable, Frame] =
+    outcome(readFrame(new DataInputStream(new ByteArrayInputStream(bytes)), maxMsgSize))
+
+  // the largest size field a max-size message frame carries
+  private val bound = (4 + MessageHeaderBytes + DefaultMaxMsgSize).toInt
 
   private val valid: Array[Byte] = {
     val bytes = new ByteArrayOutputStream()
@@ -55,6 +59,35 @@ class NsqFuzzSpec extends AnyFunSuite {
           assert(size < 4 || rest.length < size, s"iteration $i: a whole frame was rejected")
       }
     }
+  }
+
+  test("10k seeded size fields from 64 bytes to Int.MaxValue: past the bound, rejected before allocating") {
+    val rnd = new scala.util.Random(0x4E5352L)
+    (1 to 10000).foreach { i =>
+      val size =
+        if (rnd.nextInt(4) == 0) 64 + rnd.nextInt(bound - 63) // up to the bound, truncated
+        else bound + 1 + rnd.nextInt(Int.MaxValue - bound) // past it
+      val rest = new Array[Byte](rnd.nextInt(64))
+      rnd.nextBytes(rest)
+      read(frameBytes(size, rest)) match {
+        case Left(t: NsqProtocolException) if size > bound =>
+          assert(t.getMessage.contains("max message size"), s"iteration $i: size $size: ${t.getMessage}")
+        case Left(t: NsqProtocolException) =>
+          assert(t.getMessage.contains("ended inside"), s"iteration $i: size $size: ${t.getMessage}")
+        case other => fail(s"iteration $i: size $size gave $other")
+      }
+    }
+  }
+
+  test("the frame bound follows the negotiated max message size") {
+    val body = new Array[Byte](4 + MessageHeaderBytes + 100)
+    assert(read(frameBytes(body.length, body), maxMsgSize = 100).map(_.data.length) ===
+      Right(MessageHeaderBytes + 100))
+    read(frameBytes(body.length + 1, body :+ 0.toByte), maxMsgSize = 100) match {
+      case Left(t: NsqProtocolException) => assert(t.getMessage.contains("max message size"))
+      case other => fail(s"a frame one byte past the bound gave $other")
+    }
+    assert(read(frameBytes(bound, new Array[Byte](bound))).isRight, "nsqd's default bound admits a full message")
   }
 
   test("every truncation of a valid message frame is rejected with a typed error") {

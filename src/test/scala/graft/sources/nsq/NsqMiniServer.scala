@@ -27,11 +27,15 @@ import NsqProtocol._
   *  - `/stats?format=json` on [[httpPort]] reports channel depth +
   *    in_flight_count in nsqd's JSON shape (what [[NsqStats]] polls);
   *  - with `maxRdyCount` set, IDENTIFY with feature negotiation is answered
-  *    with JSON carrying `max_rdy_count`, and a larger RDY is a fatal
-  *    `E_INVALID` that closes the connection, like nsqd's
-  *    `--max-rdy-count`; unset, IDENTIFY is answered `OK`.
+  *    with JSON carrying `max_rdy_count` and `maxMsgSize` as
+  *    `max_msg_size`, and a larger RDY is a fatal `E_INVALID` that closes
+  *    the connection, like nsqd's `--max-rdy-count`; unset, IDENTIFY is
+  *    answered `OK`;
+  *  - `CLS` forces the connection to RDY 0 before answering `CLOSE_WAIT`,
+  *    as nsqd's `StartClose` does.
   */
-final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
+final class NsqMiniServer(maxRdyCount: Option[Int] = None,
+                          maxMsgSize: Long = NsqProtocol.DefaultMaxMsgSize) {
   private val server = new ServerSocket(0)
   val port: Int = server.getLocalPort
 
@@ -41,6 +45,8 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
   private val running = new AtomicBoolean(true)
   private val subscribed = new CountDownLatch(1)
   val connections = new AtomicInteger(0) // total SUBs seen (parallelism evidence)
+  val delivered = new AtomicInteger(0) // message frames written to consumers
+  val statsRequests = new AtomicInteger(0)
   // client_ids from IDENTIFY bodies (graft-<pid>): which JVMs ever connected
   val identities = new ConcurrentLinkedQueue[String]()
 
@@ -58,6 +64,7 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
   private val http = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
   val httpPort: Int = http.getAddress.getPort
   http.createContext("/stats", (ex: HttpExchange) => {
+    statsRequests.incrementAndGet()
     val body =
       s"""{"version":"mini","topics":[{"topic_name":"t","depth":0,"channels":[
          |{"channel_name":"ch","depth":${pending.size},
@@ -78,6 +85,8 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
   @volatile private var subbedChannel = "ch"
 
   def inFlightCount: Int = conns.asScala.map(_.inFlight.size).sum
+  /** Un-FINned messages on each live connection. */
+  def inFlightCounts: Seq[Int] = conns.asScala.toVector.map(_.inFlight.size)
   /** The RDY each live connection last set. */
   def readyCounts: Seq[Long] = conns.asScala.toVector.map(_.ready)
   def outstanding: Int = pending.size + inFlightCount
@@ -127,6 +136,7 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
             c.inFlight.put(m.id, m)
             try {
               c.writeLock.synchronized(writeFrame(c.out, FrameMessage, encodeMessage(m)))
+              delivered.incrementAndGet()
               progress = true
             } catch { case _: java.io.IOException => dropConn(c) }
           }
@@ -197,7 +207,7 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
                 .foreach(m => identities.add(m.group(1)))
               val reply = maxRdyCount match {
                 case Some(max) if identify.contains(""""feature_negotiation":true""") =>
-                  s"""{"max_rdy_count":$max,"version":"mini"}"""
+                  s"""{"max_rdy_count":$max,"max_msg_size":$maxMsgSize,"version":"mini"}"""
                 case _ => "OK"
               }
               conn.writeLock.synchronized(writeFrame(conn.out, FrameResponse, reply.getBytes("UTF-8")))
@@ -227,6 +237,7 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None) {
               maybeDeliver()
             case "NOP" => ()
             case "CLS" =>
+              conn.ready = 0
               conn.writeLock.synchronized(writeFrame(conn.out, FrameResponse, "CLOSE_WAIT".getBytes("UTF-8")))
             case _ => ()
           }

@@ -10,6 +10,9 @@ class NsqSourceSpec extends SparkSuite {
 
   private def msgId(i: Int): String = f"$i%016d"
 
+  // the read window, and how long the source trusts a zero /stats answer
+  private val PollMs = 300L
+
   private def mkStream(server: NsqMiniServer, numShards: Int = 2,
                        extra: Map[String, String] = Map.empty): NsqMicroBatchStream = {
     val opts = new java.util.HashMap[String, String]()
@@ -19,7 +22,7 @@ class NsqSourceSpec extends SparkSuite {
     opts.put("topic", "t")
     opts.put("channel", "ch")
     opts.put("numShards", numShards.toString)
-    opts.put("pollMs", "300")
+    opts.put("pollMs", PollMs.toString)
     extra.foreach { case (k, v) => opts.put(k, v) }
     new NsqMicroBatchStream(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts),
@@ -151,6 +154,7 @@ class NsqSourceSpec extends SparkSuite {
       assert(stream.latestOffset().asInstanceOf[NsqOffset].epoch === 0L)
 
       (0 until 10).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
+      Thread.sleep(PollMs) // the zero answer above stands for one pollMs
       val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
       assert(o1.epoch === 1L, "published depth must admit a new epoch")
 
@@ -309,7 +313,7 @@ class NsqSourceSpec extends SparkSuite {
       opts.put("lookupd", s"127.0.0.1:${lookupd.getAddress.getPort}")
       opts.put("topic", "t")
       opts.put("channel", "ch")
-      opts.put("pollMs", "300")
+      opts.put("pollMs", PollMs.toString)
       val stream = new NsqMicroBatchStream(
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts),
         java.nio.file.Files.createTempDirectory("nsq-lkp").toString)
@@ -318,6 +322,7 @@ class NsqSourceSpec extends SparkSuite {
         assert(stream.latestOffset().asInstanceOf[NsqOffset].epoch === 0L)
         s1.publish(msgId(1), "from-1".getBytes)
         s2.publish(msgId(2), "from-2".getBytes)
+        Thread.sleep(PollMs) // the zero answer above stands for one pollMs
         val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
         assert(o1.epoch === 1L)
         // shards cover both discovered brokers; both messages arrive
@@ -416,6 +421,66 @@ class NsqSourceSpec extends SparkSuite {
       val ids2 = readAll(stream, stream.planInputPartitions(o1, o2))
       assert(ids2.toSet === (0 until 2).map(msgId).toSet)
     } finally { stream.stop(); server.close() }
+  }
+
+  test("an idle source asks each broker for /stats at most once per pollMs") {
+    // batches run back to back, so an idle query asks for the next offset
+    // every few ms; each ask used to be a /stats request
+    val server = new NsqMiniServer
+    val stream = mkStream(server, numShards = 1, extra = Map("pollMs" -> "5000"))
+    try {
+      val epochs = (0 until 50).map(_ => stream.latestOffset().asInstanceOf[NsqOffset].epoch)
+      assert(epochs.toSet === Set(0L))
+      assert(server.statsRequests.get() <= 2, s"${server.statsRequests.get()} /stats requests")
+    } finally { stream.stop(); server.close() }
+  }
+
+  test("closeSession pauses every connection before closing any: no requeue reaches the session") {
+    // closing shard 0 makes the broker requeue its in-flight messages; were
+    // shard 1 still taking deliveries, they would bounce to it and be
+    // requeued again by its own close. The broker handles each connection
+    // on its own thread, so a bounce is a race: three rounds
+    (1 to 3).foreach { round =>
+      val server = new NsqMiniServer
+      val stream = mkStream(server, numShards = 2)
+      try {
+        // both connections ready before publishing, so both get a share
+        warm(server, stream.planInputPartitions(NsqOffset(0), NsqOffset(1)), 0)
+        eventually() { assert(server.readyCounts === Seq.fill(2)(NsqSource.DefaultRdy.toLong)) }
+        (0 until 40).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
+        eventually() { assert(server.inFlightCount === 40) }
+        assert(server.inFlightCounts.size === 2 && server.inFlightCounts.forall(_ > 0),
+          s"round $round: in flight per connection: ${server.inFlightCounts}")
+        val sent = server.delivered.get()
+        NsqShardConsumers.closeSession(stream.sessionId)
+        eventually() { assert(server.activeConns === 0) }
+        assert(server.outstanding === 40, s"round $round: every in-flight message must be requeued")
+        assert(server.delivered.get() === sent,
+          s"round $round: a closing connection's requeues reached another of the session's connections")
+        assert(server.connRequeued.get() === 40, s"round $round: each message must be requeued once")
+      } finally { stream.stop(); server.close() }
+    }
+  }
+
+  test("the negotiated max_msg_size bounds frames: a larger one kills the session") {
+    val server = new NsqMiniServer(maxRdyCount = Some(100), maxMsgSize = 64)
+    val plain = new NsqMiniServer
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val client = new NsqClient("127.0.0.1", server.port, "t", "ch",
+      maxInFlight = 10, onMessage = m => got.add(m.id))
+    val plainClient = new NsqClient("127.0.0.1", plain.port, "t", "ch",
+      maxInFlight = 10, onMessage = _ => ())
+    try {
+      assert(client.maxMsgSize === 64L)
+      assert(plainClient.maxMsgSize === NsqProtocol.DefaultMaxMsgSize, "a plain OK keeps nsqd's default")
+      server.awaitSubscribe()
+      server.publish(msgId(0), new Array[Byte](64))
+      eventually() { assert(got.size === 1) }
+      server.publish(msgId(1), new Array[Byte](65))
+      eventually() { assert(!client.isAlive) }
+      eventually() { assert(server.outstanding === 2) } // the broker requeues on the drop
+      assert(got.size === 1)
+    } finally { client.close(); plainClient.close(); server.close(); plain.close() }
   }
 
   test("transient stats failure backs off, then quiescence detection recovers") {

@@ -42,6 +42,35 @@ class StreamPipelineSpec extends SparkSuite {
       distinct.map(m => new String(m.body, "UTF-8")).toSet)
   }
 
+  test("micro-batches run back to back, not on a 1 s clock") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    InMemoryTransport.clear()
+    val input = MemoryStream[Msg]
+    val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
+      StreamPipeline.Options(streamName = "cadence",
+        checkpoint = java.nio.file.Files.createTempDirectory("cadence-ckpt").toString)).start()
+    val feeding = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val feeder = new Thread(() => {
+      var i = 0
+      while (feeding.get()) { input.addData(msg(i, s"cadence-$i")); i += 1; Thread.sleep(20) }
+    })
+    feeder.start()
+    // a 1 s processing-time trigger starts each batch at or after the next
+    // 1 s tick past the previous start (later only when a batch overruns),
+    // so any three of its batches span more than 1,000 ms
+    def threeBatchSpansMs: Seq[Long] =
+      q.recentProgress.toSeq.filter(_.numInputRows > 0)
+        .map(p => java.time.Instant.parse(p.timestamp).toEpochMilli)
+        .sliding(3).collect { case Seq(a, _, c) => c - a }.toSeq
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      while (!threeBatchSpansMs.exists(_ < 900) && System.currentTimeMillis() < deadline) Thread.sleep(200)
+      assert(threeBatchSpansMs.exists(_ < 900),
+        s"spans (ms) of three consecutive data batches: $threeBatchSpansMs")
+    } finally { feeding.set(false); feeder.join(); q.stop() }
+  }
+
   test("Trigger.AvailableNow drains the backlog then terminates on its own") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
