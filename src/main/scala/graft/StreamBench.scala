@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.kernel.{KinesisEntry, KplProtobuf}
-import graft.streaming.{HttpKinesisTransport, KinesisTransport, SigV4, StreamPipeline}
+import graft.streaming.{HttpKinesisTransport, KinesisTransport, NoForkLocalFs, SigV4, StreamPipeline}
 
 /** Streaming throughput benchmark: N synthetic NSQ-envelope messages
   * (1 kB bodies, 10 % duplicates) through the full pipeline — fnv64a →
@@ -268,6 +268,7 @@ object StreamBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(NoForkLocalFs.SessionConf) // graft.Main's checkpoint filesystem
     // SPARK_GRAFT_STATE=rocksdb: the at-scale state store (off-heap, no
     // per-batch JVM map copies) — the right provider for large dedup key
     // cardinality; default HDFS-backed store for comparability

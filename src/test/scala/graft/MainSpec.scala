@@ -33,4 +33,11 @@ class MainSpec extends AnyFunSuite {
     val pinned = new SparkConf(loadDefaults = false).set("spark.sql.shuffle.partitions", "12")
     assert(Main.statePartitions(pinned, 4) === 12)
   }
+
+  test("local checkpoints go through NoForkLocalFs; an explicit conf wins") {
+    val key = "spark.hadoop.fs.AbstractFileSystem.file.impl"
+    assert(Main.checkpointFs(new SparkConf(loadDefaults = false)) ===
+      Map(key -> classOf[graft.streaming.NoForkLocalFs].getName))
+    assert(Main.checkpointFs(new SparkConf(loadDefaults = false).set(key, "x.Fs")) === Map.empty)
+  }
 }

@@ -15,6 +15,7 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(graft.streaming.NoForkLocalFs.SessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.registerAll(s)

@@ -150,14 +150,21 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None,
   val connRequeued = new AtomicInteger(0)
 
   /** A dead connection's in-flight messages requeue (nsqd does this on
-    * client disconnect) — redelivery to surviving consumers is immediate. */
+    * client disconnect) — redelivery to surviving consumers is immediate.
+    * The requeue lands before the connection leaves `conns`, so once
+    * [[activeConns]] no longer counts it, [[outstanding]] counts its
+    * messages; the delivery lock keeps a message from being delivered to
+    * it in between. */
   private def dropConn(c: Conn): Unit = {
-    conns.remove(c)
-    c.inFlight.values.asScala.foreach { m =>
-      pending.add(m.copy(attempts = m.attempts + 1))
-      connRequeued.incrementAndGet()
+    deliverLock.synchronized {
+      val requeue = c.inFlight.values.asScala.toVector
+      c.inFlight.clear()
+      requeue.foreach { m =>
+        pending.add(m.copy(attempts = m.attempts + 1))
+        connRequeued.incrementAndGet()
+      }
+      conns.remove(c)
     }
-    c.inFlight.clear()
     try c.socket.close() catch { case _: Throwable => () }
   }
 

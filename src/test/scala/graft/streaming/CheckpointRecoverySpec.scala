@@ -5,6 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.local.LocalFs
+import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -122,6 +124,18 @@ class CheckpointRecoverySpec extends SparkSuite {
     // from a session set to 4: the checkpoint's count must win, so a
     // graft.Main checkpoint keeps the state-partition count it started with
     // when the cluster's core count changes.
+    // It runs twice: a checkpoint written through Hadoop's stock LocalFs
+    // restarts through NoForkLocalFs, and the other way round. ChecksumFs
+    // verifies every .crc sidecar it reads, so a sidecar one filesystem
+    // wrote and the other cannot read fails the restart.
+    val stock = classOf[LocalFs].getName
+    val nofork = classOf[NoForkLocalFs].getName
+    Seq(stock -> nofork, nofork -> stock).foreach { case (before, after) =>
+      pipelineRestart(before, after)
+    }
+  }
+
+  private def pipelineRestart(q1Fs: String, q2Fs: String): Unit = {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val input = MemoryStream[Msg]
@@ -145,12 +159,24 @@ class CheckpointRecoverySpec extends SparkSuite {
 
     def statePartitions(q: StreamingQuery): Seq[Int] =
       q.recentProgress.toSeq.flatMap(_.stateOperators).map(_.numShufflePartitions.toInt)
+    // the session's Hadoop conf, which the checkpoint's logs and the state
+    // store tasks are built from, takes every session conf key verbatim
+    val fileFs = "fs.AbstractFileSystem.file.impl"
+    // the offset log goes through FileContext whichever state store runs
+    // (a twin earlier in this suite leaves the session on RocksDB, whose
+    // SST uploads use Hadoop's FileSystem API, not FileContext)
+    def forks(starts: Seq[ProcessStarts.Start]): Seq[String] =
+      ProcessStarts.forksOn(s"$checkpoint/offsets", starts)
+    def checkFs(fs: String, starts: Seq[ProcessStarts.Start]): Unit =
+      if (fs == classOf[NoForkLocalFs].getName) assert(forks(starts).isEmpty, s"$fs forked")
+      else assert(NativeIO.isAvailable || forks(starts).nonEmpty, s"$fs did not run")
     val shufflePartitions = "spark.sql.shuffle.partitions"
     val sessionPartitions = spark.conf.get(shufflePartitions)
     try {
       spark.conf.set(shufflePartitions, 32L)
-      val q1 = start()
-      val preRestartMax =
+      spark.conf.set(fileFs, q1Fs)
+      val (preRestartMax, q1Starts) = ProcessStarts.during {
+        val q1 = start()
         try {
           input.addData(wave1)
           await(() => captured.asScala.values.map(_.length).sum == 2, "first wave emitted")
@@ -158,25 +184,34 @@ class CheckpointRecoverySpec extends SparkSuite {
           assert(statePartitions(q1).toSet === Set(32))
           maxBatch(captured)
         } finally q1.stop()
+      }
+      checkFs(q1Fs, q1Starts)
 
       spark.conf.set(shufflePartitions, 4L)
-      val q2 = start()
-      try {
-        input.addData(wave1 :+ fresh) // post-restart redelivery + one new body
-        await(() => captured.asScala.exists { case (id, rows) =>
-          id > preRestartMax && rows.exists(_.getAs[String]("id") == fresh.id) },
-          "fresh body emitted post-restart")
-        settle()
-        val postRestart = captured.asScala.collect {
-          case (id, rows) if id > preRestartMax => rows.map(_.getAs[String]("id")).toSeq
-        }.flatten.toSeq
-        assert(postRestart === Seq(fresh.id),
-          s"replayed bodies must stay suppressed by the RECOVERED dedup state, got $postRestart")
-        val restored = statePartitions(q2)
-        assert(restored.nonEmpty && restored.forall(_ == 32),
-          s"the restart must keep the checkpoint's 32 state partitions, got $restored")
-      } finally q2.stop()
-    } finally spark.conf.set(shufflePartitions, sessionPartitions)
+      spark.conf.set(fileFs, q2Fs)
+      val (_, q2Starts) = ProcessStarts.during {
+        val q2 = start()
+        try {
+          input.addData(wave1 :+ fresh) // post-restart redelivery + one new body
+          await(() => captured.asScala.exists { case (id, rows) =>
+            id > preRestartMax && rows.exists(_.getAs[String]("id") == fresh.id) },
+            "fresh body emitted post-restart")
+          settle()
+          val postRestart = captured.asScala.collect {
+            case (id, rows) if id > preRestartMax => rows.map(_.getAs[String]("id")).toSeq
+          }.flatten.toSeq
+          assert(postRestart === Seq(fresh.id),
+            s"replayed bodies must stay suppressed by the RECOVERED dedup state, got $postRestart")
+          val restored = statePartitions(q2)
+          assert(restored.nonEmpty && restored.forall(_ == 32),
+            s"the restart must keep the checkpoint's 32 state partitions, got $restored")
+        } finally q2.stop()
+      }
+      checkFs(q2Fs, q2Starts)
+    } finally {
+      spark.conf.set(shufflePartitions, sessionPartitions)
+      spark.conf.unset(fileFs)
+    }
   }
 
   test("StreamingNearDup: bucket residents survive restart — a post-restart probe still hits") {

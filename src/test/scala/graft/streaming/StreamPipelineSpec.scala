@@ -71,6 +71,35 @@ class StreamPipelineSpec extends SparkSuite {
     } finally { feeding.set(false); feeder.join(); q.stop() }
   }
 
+  test("checkpointed micro-batches fork no chmod or readlink") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    InMemoryTransport.clear()
+    val input = MemoryStream[Msg]
+    val checkpoint = java.nio.file.Files.createTempDirectory("nofork-ckpt").toString
+    // graft.Main's state store, the HDFS-backed default: a twin suite may
+    // have left the session on RocksDB, whose SST uploads go through
+    // Hadoop's FileSystem API rather than FileContext
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val sessionProvider = spark.conf.getOption(provider)
+    spark.conf.set(provider, "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    val (_, starts) = try ProcessStarts.during {
+      val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
+        StreamPipeline.Options(streamName = "nofork", checkpoint = checkpoint)).start()
+      try {
+        for (b <- 0 until 3) {
+          input.addData((0 until 10).map(i => msg(10 * b + i, s"nofork-$b-$i")))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    } finally sessionProvider.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+    assert(InMemoryTransport.drain().map { case (_, e) =>
+      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.size else 1
+    }.sum === 30)
+    val forks = ProcessStarts.forksOn(checkpoint, starts)
+    assert(forks.isEmpty, s"${forks.size} forks, e.g. ${forks.take(3)}")
+  }
+
   test("Trigger.AvailableNow drains the backlog then terminates on its own") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
