@@ -328,13 +328,7 @@ object StreamBench {
       else None
     val query = (stage match {
       case "nodedup" =>
-        import org.apache.spark.sql.functions._
-        val transformed = input.toDF()
-          .withColumn("body_hash", graft.functions.GraftFunctions.fnv64a(col("body")))
-          .filter(octet_length(col("body")) <= graft.streaming.BatchWriter.MaxMessageSize)
-          .withColumn("partition_key",
-            graft.functions.GraftFunctions.partitionKey(col("body"), lit(null).cast("string")))
-        transformed.writeStream
+        input.toDF().writeStream
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10L))
           .option("checkpointLocation", ckpt)
           .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>

@@ -20,7 +20,8 @@ object GraftFunctions {
   def fnv64aHex(c: Column): Column = lower(hex(fnv64a(c)))
 
   /** Reference partition-key rule (aggregator.go:124-130): caller key when
-    * 1–255 chars, else body-hash hex. */
+    * 1–255 chars, else body-hash hex. The batch form; the streaming
+    * pipeline leaves the key to `KplPacker.put`, which applies the same rule. */
   def partitionKey(body: Column, key: Column): Column =
     when(key.isNotNull && length(key).between(1, 255), key).otherwise(fnv64aHex(body))
 

@@ -12,11 +12,15 @@ import graft.functions.GraftFunctions
   * source (NSQ / MemoryStream / rate)
   *   → fnv64a(body)                         // O9 identity hash
   *   → withWatermark + dropDuplicatesWithinWatermark   // O3/O4 dedup, state-store
-  *   → filter(octet_length(body) ≤ 1 MiB)   // O6 oversize drop
   *   → foreachBatch:                        // O7 micro-batch, run back to back
-  *       per partition: BatchWriter         // O8/O10/O11/O12 pack + chunk
+  *       per partition: BatchWriter         // O6 oversize drop, O8 request bounds
+  *         → KplPacker                      // O9 partition key, O10 pack
   *       → transport.putRecords (retry)     // O13/O14 send + per-entry routing
   * }}}
+  *
+  * As in the reference (kinesis_writer.go:167-170, aggregator.go:124-130),
+  * the writer drops bodies over 1 MiB and the packer keys each record on
+  * the `%x` of its body's FNV-64a; the SQL plan ends at the dedup.
   *
   * Delivery semantics: at-least-once — offsets commit only after the batch
   * sink returns, a failed task re-runs whole (the reference requeues
@@ -45,37 +49,31 @@ object StreamPipeline {
       // semantics and exactly the same code path, without a standing job)
       availableNow: Boolean = false)
 
-  /** Expects columns: id STRING, ts TIMESTAMP, attempts INT, body BINARY,
-    * and optionally key STRING (invalid/missing keys fall back to the body
-    * hash, aggregator.go:124-130). `dedupWindow` is the dedup horizon
-    * (default = 2 × the reference's 120 s generation, main.go:113). */
+  /** Expects columns: id STRING, ts TIMESTAMP, attempts INT, body BINARY;
+    * adds `body_hash` (FNV-64a of the body) and drops the bodies seen within
+    * `dedupWindow` (default = 2 × the reference's 120 s generation,
+    * main.go:113). The dedup state is keyed on `body_hash` alone. */
   def transform(stream: DataFrame, dedupWindow: String = "4 minutes"): DataFrame = {
-    val spark = stream.sparkSession
-    GraftFunctions.registerAll(spark)
-    val keyed =
-      if (stream.columns.contains("key")) stream
-      else stream.withColumn("key", lit(null).cast("string"))
-    keyed
+    GraftFunctions.registerAll(stream.sparkSession)
+    stream
       .withColumn("body_hash", GraftFunctions.fnv64a(col("body")))
       .withWatermark("ts", dedupWindow)
       .dropDuplicatesWithinWatermark("body_hash")
-      .filter(octet_length(col("body")) <= BatchWriter.MaxMessageSize)
-      .withColumn("partition_key", GraftFunctions.partitionKey(col("body"), col("key")))
   }
 
-  /** Sink one micro-batch: fold each partition through a BatchWriter and
-    * push its requests via the transport, retrying failed slots. A slot
-    * still failing after the retries fails the task, so Spark re-runs it
-    * (at-least-once). */
+  /** Sink one micro-batch: fold each partition's bodies through a
+    * BatchWriter, which drops oversize bodies and lets the packer key each
+    * record, and push its requests via the transport, retrying failed
+    * slots. A slot still failing after the retries fails the task, so Spark
+    * re-runs it (at-least-once). */
   def deliverBatch(batch: Dataset[org.apache.spark.sql.Row],
                    transport: KinesisTransport,
                    streamName: String): Unit = {
-    val sent = batch.selectExpr("body", "partition_key")
-    sent.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+    batch.select("body").foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       val writer = new BatchWriter()
       var i = 0L
       rows.foreach { r =>
-        writer.add(i, r.getAs[Array[Byte]]("body"), r.getAs[String]("partition_key"))
+        writer.add(i, r.getAs[Array[Byte]](0))
         i += 1
       }
       val retrying = transport match {

@@ -1,7 +1,7 @@
 package graft.sources.nsq
 
 import graft.streaming.{InMemoryTransport, StreamPipeline}
-import graft.kernel.KplProtobuf
+import graft.functions.KplFunctions
 
 /** Manual drive: mini nsqd -> readStream("nsq") -> dedup/pack -> transport.
   * Run: sbt "Test/runMain graft.sources.nsq.NsqDemo" */
@@ -28,9 +28,8 @@ object NsqDemo {
     server.sendHeartbeat() // probe: heartbeat mid-stream
     (30 until 35).foreach(i => server.publish(f"$i%016d", s"msg-$i".getBytes))
     q.processAllAvailable(); q.processAllAvailable()
-    val user = InMemoryTransport.drain().flatMap { case (_, e) =>
-      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data) else Vector(e.data)
-    }.map(new String(_))
+    val user = InMemoryTransport.drain()
+      .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }.map(new String(_))
     println(s"[demo] delivered=${user.size} distinct=${user.toSet.size} (expect 35/35: 10 dupes dropped)")
     Thread.sleep(500)
     println(s"[demo] server FINs=${server.finned.size} requeues=${server.requeued.size}")

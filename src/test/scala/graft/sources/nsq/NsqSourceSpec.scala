@@ -4,7 +4,7 @@ import org.apache.spark.sql.connector.read.InputPartition
 
 import graft.SparkSuite
 import graft.streaming.{InMemoryTransport, StreamPipeline}
-import graft.kernel.KplProtobuf
+import graft.functions.KplFunctions
 
 class NsqSourceSpec extends SparkSuite {
 
@@ -226,10 +226,8 @@ class NsqSourceSpec extends SparkSuite {
       var user = Vector.empty[String]
       eventually(timeoutMs = 30000) {
         q.processAllAvailable()
-        user ++= InMemoryTransport.drain().flatMap { case (_, e) =>
-          if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data)
-          else Vector(e.data)
-        }.map(new String(_))
+        user ++= InMemoryTransport.drain()
+          .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }.map(new String(_))
         assert(user.toSet === (0 until 20).map(i => s"payload-$i").toSet)
       }
       // offsets commit after the sink epoch -> server must see FINs
@@ -262,10 +260,8 @@ class NsqSourceSpec extends SparkSuite {
       var user = Vector.empty[String]
       eventually(timeoutMs = 30000) {
         q.processAllAvailable()
-        user ++= InMemoryTransport.drain().flatMap { case (_, e) =>
-          if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data)
-          else Vector(e.data)
-        }.map(new String(_))
+        user ++= InMemoryTransport.drain()
+          .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }.map(new String(_))
         assert(user.toSet ===
           ((0 until 10).map(i => s"b1-$i") ++ (0 until 10).map(i => s"b2-$i")).toSet)
       }
@@ -532,10 +528,8 @@ class NsqSourceSpec extends SparkSuite {
       new InMemoryTransport,
       StreamPipeline.Options(streamName = "nsq-restart", checkpoint = ckpt)).start()
     def drainPayloads(): Vector[String] =
-      InMemoryTransport.drain().flatMap { case (_, e) =>
-        if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data)
-        else Vector(e.data)
-      }.map(new String(_)).toVector
+      InMemoryTransport.drain()
+        .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }.map(new String(_)).toVector
     var seen = Vector.empty[String]
     val q1 = startQuery()
     try {

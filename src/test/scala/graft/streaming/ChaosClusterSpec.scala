@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.kernel.KplProtobuf
+import graft.functions.KplFunctions
 import graft.sources.nsq.NsqMiniServer
 
 /** Round-19 verdict item 5: compose the chaos soak with the CLUSTER
@@ -44,10 +44,8 @@ class ChaosClusterSpec extends AnyFunSuite {
   }
 
   private def deagg(stored: Vector[(String, Array[Byte])]): Vector[String] =
-    stored.flatMap { case (_, data) =>
-      if (KplProtobuf.isAggregated(data)) KplProtobuf.deframe(data).records.map(_.data)
-      else Vector(data)
-    }.map(new String(_, "UTF-8"))
+    stored.flatMap { case (_, data) => KplFunctions.deaggregate(data).map(_.data) }
+      .map(new String(_, "UTF-8"))
 
   test("executor kill mid-backlog on local-cluster: ack/dedup accounting holds through task re-schedule") {
     assume(new File("/opt/spark/jars").isDirectory, "needs a Spark distribution")

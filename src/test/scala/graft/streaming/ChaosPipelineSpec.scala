@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSuite
-import graft.kernel.KplProtobuf
+import graft.functions.KplFunctions
 import graft.sources.nsq.NsqMiniServer
 
 /** The FIFTEENTH twin: the reference's whole identity (main.go:38-141 —
@@ -57,10 +57,8 @@ class ChaosPipelineSpec extends SparkSuite {
   }
 
   private def deagg(stored: Vector[(String, Array[Byte])]): Vector[String] =
-    stored.flatMap { case (_, data) =>
-      if (KplProtobuf.isAggregated(data)) KplProtobuf.deframe(data).records.map(_.data)
-      else Vector(data)
-    }.map(new String(_, "UTF-8"))
+    stored.flatMap { case (_, data) => KplFunctions.deaggregate(data).map(_.data) }
+      .map(new String(_, "UTF-8"))
 
   test("chaos soak: throttle storms + connection kill + checkpoint restart keep at-least-once accounting end-to-end") {
     val throttled = new AtomicLong(0)

@@ -26,7 +26,7 @@ import graft.SparkSuite
   * that forgets across a restart would silently re-admit, re-emit, or
   * under-count everything in flight at the crash.
   *
-  * Mechanics shared by all seven tests:
+  * Mechanics shared by all the tests:
   *  - ONE `MemoryStream` spans both query incarnations; the restarted query
   *    reads the checkpointed offset log and resumes exactly after the last
   *    committed batch (an uncommitted final batch re-runs under its original
@@ -212,6 +212,54 @@ class CheckpointRecoverySpec extends SparkSuite {
       spark.conf.set(shufflePartitions, sessionPartitions)
       spark.conf.unset(fileFs)
     }
+  }
+
+  test("StreamPipeline dedup state written with a key column restarts without it — replays stay suppressed") {
+    // existing graft.Main checkpoints were written by a plan that carried a
+    // null `key STRING` column through the dedup, and must restart on the
+    // plan without it: the dedup state is keyed on body_hash alone, so the
+    // column changes no state schema
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val input = MemoryStream[Msg]
+    val wave1 = Seq(
+      Msg("0000000000000001", new Timestamp(1700000000001L), 1, "ka".getBytes("UTF-8")),
+      Msg("0000000000000002", new Timestamp(1700000000002L), 1, "kb".getBytes("UTF-8")))
+    val fresh = Msg("0000000000000003", new Timestamp(1700000000003L), 1, "kc".getBytes("UTF-8"))
+    val captured = new ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
+    val checkpoint = ckpt("recover-keycol")
+    def start(source: org.apache.spark.sql.DataFrame): StreamingQuery =
+      StreamPipeline.transform(source).writeStream
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.ProcessingTime(200L))
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(capture(captured) _)
+        .start()
+    def ids(rows: Array[org.apache.spark.sql.Row]): Seq[String] = rows.map(_.getAs[String]("id")).toSeq
+
+    val keyed = input.toDF().withColumn("key", org.apache.spark.sql.functions.lit(null).cast("string"))
+    val q1 = start(keyed)
+    val preRestartMax =
+      try {
+        input.addData(wave1)
+        await(() => captured.asScala.values.map(_.length).sum == 2, "first wave emitted")
+        settle()
+        assert(captured.asScala.values.forall(_.head.schema.fieldNames.contains("key")))
+        maxBatch(captured)
+      } finally q1.stop()
+
+    val q2 = start(input.toDF())
+    try {
+      input.addData(wave1 :+ fresh) // post-restart redelivery + one new body
+      await(() => captured.asScala.exists { case (id, rows) =>
+        id > preRestartMax && ids(rows).contains(fresh.id) }, "fresh body emitted post-restart")
+      settle()
+      val postRestart = captured.asScala.toSeq.collect {
+        case (id, rows) if id > preRestartMax => ids(rows)
+      }.flatten
+      assert(postRestart === Seq(fresh.id),
+        s"replayed bodies must stay suppressed by the key-column run's dedup state, got $postRestart")
+    } finally q2.stop()
   }
 
   test("StreamingNearDup: bucket residents survive restart — a post-restart probe still hits") {

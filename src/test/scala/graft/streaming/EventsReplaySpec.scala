@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, SparkSuite}
-import graft.kernel.KplProtobuf
+import graft.functions.KplFunctions
 
 /** SURVEY §7 M4: replay the driver's `events` table through the real
   * streaming pipeline (dedup → pack → entries) and reconcile with the batch
@@ -39,10 +39,8 @@ class EventsReplaySpec extends SparkSuite {
       .start()
     try q.processAllAvailable() finally q.stop()
 
-    val delivered = InMemoryTransport.drain().flatMap { case (_, e) =>
-      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data)
-      else Vector(e.data)
-    }.map(new String(_, "UTF-8"))
+    val delivered = InMemoryTransport.drain()
+      .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }.map(new String(_, "UTF-8"))
 
     assert(delivered.length === events.length, "each body delivered exactly once")
     assert(delivered.toSet === events.map(_.getString(1)).toSet)

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSuite
+import graft.functions.KplFunctions
 import graft.kernel.{KinesisEntry, KplProtobuf}
 
 /** End-to-end over the wire: pipeline → HTTP PutRecords (kinesalite-style
@@ -14,10 +15,8 @@ import graft.kernel.{KinesisEntry, KplProtobuf}
 class HttpKinesisTransportSpec extends SparkSuite {
 
   private def deagg(stored: Vector[(String, Array[Byte])]): Vector[String] =
-    stored.flatMap { case (_, data) =>
-      if (KplProtobuf.isAggregated(data)) KplProtobuf.deframe(data).records.map(_.data)
-      else Vector(data)
-    }.map(new String(_, "UTF-8"))
+    stored.flatMap { case (_, data) => KplFunctions.deaggregate(data).map(_.data) }
+      .map(new String(_, "UTF-8"))
 
   test("createStream is idempotent; putRecords round-trips framed entries") {
     val stub = new KinesisStubServer()

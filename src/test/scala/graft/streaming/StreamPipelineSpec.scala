@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, SparkSuite}
+import graft.functions.{GraftFunctions, KplFunctions}
 import graft.kernel.KplProtobuf
 
 case class Msg(id: String, ts: Timestamp, attempts: Int, body: Array[Byte])
@@ -33,10 +34,8 @@ class StreamPipelineSpec extends SparkSuite {
     try { q.processAllAvailable() } finally { q.stop() }
 
     val delivered = InMemoryTransport.drain()
-    val userRecords = delivered.flatMap { case (_, e) =>
-      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data)
-      else Vector(e.data)
-    }
+    val userRecords = delivered
+      .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }
     assert(userRecords.length === 100) // 50 duplicate bodies removed
     assert(userRecords.map(b => new String(b, "UTF-8")).toSet ===
       distinct.map(m => new String(m.body, "UTF-8")).toSet)
@@ -93,9 +92,8 @@ class StreamPipelineSpec extends SparkSuite {
         }
       } finally q.stop()
     } finally sessionProvider.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
-    assert(InMemoryTransport.drain().map { case (_, e) =>
-      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.size else 1
-    }.sum === 30)
+    assert(InMemoryTransport.drain()
+      .map { case (_, e) => KplFunctions.deaggregate(e.data).size }.sum === 30)
     val forks = ProcessStarts.forksOn(checkpoint, starts)
     assert(forks.isEmpty, s"${forks.size} forks, e.g. ${forks.take(3)}")
   }
@@ -114,16 +112,15 @@ class StreamPipelineSpec extends SparkSuite {
       // the backfill mode must finish WITHOUT stop(): the trigger drains
       // what was available at start and terminates the query itself
       assert(q.awaitTermination(60000), "AvailableNow query did not self-terminate")
-      val bodies = InMemoryTransport.drain().flatMap { case (_, e) =>
-        if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data)
-        else Vector(e.data)
-      }.map(new String(_)).toSet
+      val bodies = InMemoryTransport.drain()
+        .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }
+        .map(new String(_)).toSet
       assert(bodies === (0 until 40).map(i => s"backlog-$i").toSet,
         "backfill drain lost or duplicated bodies")
     } finally q.stop()
   }
 
-  test("oversize bodies are dropped by the stream filter") {
+  test("oversize bodies are dropped by the writer") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     InMemoryTransport.clear()
@@ -136,12 +133,82 @@ class StreamPipelineSpec extends SparkSuite {
       input.toDF(), new InMemoryTransport,
       StreamPipeline.Options(streamName = "t2", checkpoint = ckpt)).start()
     try { q.processAllAvailable() } finally { q.stop() }
-    val userRecords = InMemoryTransport.drain().flatMap { case (_, e) =>
-      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.map(_.data)
-      else Vector(e.data)
-    }
+    val userRecords = InMemoryTransport.drain()
+      .flatMap { case (_, e) => KplFunctions.deaggregate(e.data).map(_.data) }
     assert(userRecords.length === 1)
     assert(new String(userRecords.head, "UTF-8") === "small")
+  }
+
+  test("file transport: framed per-partition files hold every body") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("kfile").toString
+    val input = MemoryStream[Msg]
+    val sent = (0 until 60).map(i => msg(i, s"file-$i"))
+    input.addData(sent)
+    val q = StreamPipeline.build(input.toDF(), new FileTransport(dir),
+      StreamPipeline.Options(streamName = "fstream",
+        checkpoint = java.nio.file.Files.createTempDirectory("kfile-ckpt").toString)).start()
+    try q.processAllAvailable() finally q.stop()
+
+    val files = new java.io.File(dir).listFiles().toSeq
+    assert(files.nonEmpty)
+    assert(files.forall(_.getName.matches("""fstream-p\d+\.bin""")), files.map(_.getName))
+    // [keyLen][dataLen][key][data], back to back; a torn frame underflows
+    val entries = files.flatMap { f =>
+      val buf = java.nio.ByteBuffer.wrap(java.nio.file.Files.readAllBytes(f.toPath))
+      Iterator.continually(buf).takeWhile(_.hasRemaining).map { b =>
+        val key = new Array[Byte](b.getInt())
+        val data = new Array[Byte](b.getInt())
+        b.get(key).get(data)
+        (new String(key, "UTF-8"), data)
+      }.toVector
+    }
+    assert(entries.forall(_._1.nonEmpty))
+    val bodies = entries.flatMap { case (_, data) => KplFunctions.deaggregate(data).map(_.data) }
+      .map(new String(_, "UTF-8"))
+    assert(bodies.sorted === sent.map(m => new String(m.body, "UTF-8")).sorted)
+  }
+
+  test("partition keys on the wire equal Spark's fnv64aHex of each body") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    InMemoryTransport.clear()
+    // > KplPacker.DefaultTargetSize: travels as a standalone entry
+    val big = Array.tabulate[Byte](30000)(i => (i % 251).toByte)
+    // the suffix spreads the hash's top nibble: 8 of these keys are shorter
+    val bodies = (0 until 200).map(i => s"pin-$i-${"x" * 40}".getBytes("UTF-8")) :+ big
+    def id(body: Array[Byte]): String = new String(body, "ISO-8859-1")
+    val expected = bodies.toDF("body")
+      .select(col("body"), GraftFunctions.fnv64aHex(col("body")))
+      .collect().map(r => id(r.getAs[Array[Byte]](0)) -> r.getString(1)).toMap
+    assert(expected.size === bodies.size)
+    // Go's %x drops leading zeros: some key must be shorter than 16 digits
+    assert(expected.values.exists(_.length < 16), expected.values.map(_.length).toSet)
+
+    val input = MemoryStream[Msg]
+    input.addData(bodies.zipWithIndex.map { case (b, i) =>
+      Msg(f"$i%016d", new Timestamp(1000000000L + i), 1, b) })
+    val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
+      StreamPipeline.Options(streamName = "pin",
+        checkpoint = java.nio.file.Files.createTempDirectory("pin-ckpt").toString)).start()
+    try q.processAllAvailable() finally q.stop()
+
+    val entries = InMemoryTransport.drain().map(_._2)
+    val standalone = entries.filterNot(e => KplProtobuf.isAggregated(e.data))
+    assert(standalone.map(e => id(e.data)) === Vector(id(big)))
+    standalone.foreach(e => assert(e.partitionKey === expected(id(e.data))))
+    entries.filter(e => KplProtobuf.isAggregated(e.data)).foreach { e =>
+      val agg = KplProtobuf.deframe(e.data)
+      val keys = agg.records.map(r => expected(id(r.data)))
+      // the entry ships on its first record's key (aggregator.go:58), and
+      // the table holds each record's key once, in order of first use
+      assert(e.partitionKey === keys.head)
+      assert(agg.partitionKeys === keys.distinct)
+      assert(agg.records.map(r => agg.partitionKeys(r.partitionKeyIndex.toInt)) === keys)
+    }
+    val delivered = entries.flatMap(e => KplFunctions.deaggregate(e.data).map(r => id(r.data)))
+    assert(delivered.sorted === bodies.map(id).sorted)
   }
 
   test("BatchWriter request bounds: 600 records split at 500") {
@@ -149,9 +216,7 @@ class StreamPipelineSpec extends SparkSuite {
     (0 until 600).foreach(i => w.add(i.toLong, s"rec-$i".getBytes, "k"))
     val reqs = w.flush()
     assert(reqs.length === 2)
-    def userCount(r: PutRequest) = r.entries.map { e =>
-      if (KplProtobuf.isAggregated(e.data)) KplProtobuf.deframe(e.data).records.length else 1
-    }.sum
+    def userCount(r: PutRequest) = r.entries.map(e => KplFunctions.deaggregate(e.data).size).sum
     assert(userCount(reqs(0)) === 500)
     assert(userCount(reqs(1)) === 100)
   }
