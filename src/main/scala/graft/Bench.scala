@@ -37,23 +37,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default = all cores (the target config is local[32]); round-3 driver
-    // runs were ~2× the recorded baseline largely because the unset env var
-    // fell back to local[4]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // SPARK_GRAFT_MASTER: run the SAME bench on local-cluster[n,c,mem]
-    // (multi-JVM executors) — with SPARK_GRAFT_MATERIALIZE=reliable this
-    // times the 100 TB deployment shape, not just its correctness
-    // (round-19 verdict item 3). Same wiring recipe as graft.Verify.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = ClusterLaunch.wire(SparkSession.builder().master(master), master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] runs the same bench on
+    // multi-JVM executors; with SPARK_GRAFT_MATERIALIZE=reliable this times
+    // the 100 TB deployment shape, not just its correctness
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
 
     // noop-write the full result, then release any localCheckpoint blocks
@@ -66,16 +53,7 @@ object Bench {
 
     // optional comma-separated filter for focused perf iteration
     // (SPARK_GRAFT_QUERIES=h_neardup_minhash,...); the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(',').toSet)
-    // a misspelled name would otherwise silently select zero queries and
-    // produce an empty-but-successful bench run
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"[bench] WARNING: unknown query names in SPARK_GRAFT_QUERIES: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
 
     // warm-up: one full pass absorbs JVM/codegen/footer costs and one-time
     // side effects (bucketed-table writes, roundtrip dirs) so the timed pass

@@ -31,4 +31,18 @@ object SparkEntry {
       Multimodal.oracle ++ FormatOps.oracle ++ ScaleOps.oracle ++
       TrainingOps.oracle ++ AnalyticsOps.oracleSql ++ GovernanceOps.oracleSql ++
       CorpusOps.oracle ++ ProfileOps.oracle
+
+  /** The queries a comma-separated name filter selects, all of them when
+    * there is none. Unknown names are reported once on stderr: a
+    * misspelled name would otherwise select nothing and make an empty run
+    * look successful. */
+  def select(filter: Option[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    filter.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet).fold(all) { names =>
+      val unknown = names -- all.keySet
+      if (unknown.nonEmpty)
+        Console.err.println(s"[graft] WARNING: unknown query names: ${unknown.toSeq.sorted.mkString(",")}")
+      all.filter { case (n, _) => names.contains(n) }
+    }
+  }
 }

@@ -251,8 +251,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_N", "200000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.cpus()
     // SPARK_GRAFT_SHUFFLE: shuffle-partition override for the dedup
     // exchange (the measured bottleneck, see BASELINE.md) — a streaming
     // micro-batch pays per-partition task + state-store-commit overhead
@@ -262,29 +261,27 @@ object StreamBench {
     // of 32 cut the batch p50 from 1.46 s to 0.37 s and the median latency
     // p50 over 12 runs from 1.69 s to 0.73 s
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .config(NoForkLocalFs.SessionConf) // graft.Main's checkpoint filesystem
     // SPARK_GRAFT_STATE=rocksdb: the at-scale state store (off-heap, no
     // per-batch JVM map copies) — the right provider for large dedup key
     // cardinality; default HDFS-backed store for comparability
-    if (sys.env.get("SPARK_GRAFT_STATE").contains("rocksdb"))
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val rocksdb =
+      if (sys.env.get("SPARK_GRAFT_STATE").contains("rocksdb"))
+        Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil
     // SPARK_GRAFT_ROCKSDB_CHANGELOG=true: commit per-batch CHANGELOGS
     // instead of full SST snapshots (snapshots then amortize in the
     // background every minDeltasForSnapshot batches) — the first knob to
     // try when the soak attribution shows stateCommit dominating (see
     // BASELINE.md's standing-index soak: 11,042‰ of wall). Opt-in so the
     // recorded baselines stay comparable.
-    if (sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").contains("true"))
-      builder.config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    val spark = builder.getOrCreate()
+    val changelog =
+      if (sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").contains("true"))
+        Seq("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+      else Nil
+    // NoForkLocalFs: graft.Main's checkpoint filesystem
+    val spark = GraftSession(s"local[$cpus]", shuffle,
+      NoForkLocalFs.SessionConf.toSeq ++ rocksdb ++ changelog: _*)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -31,8 +31,8 @@ object Tables {
     "lineitem" -> Seq("l_shipdate"))
 
   /** Canonical instant as a Spark TIMESTAMP, whatever the physical type.
-    * The NTZ and nanos branches rely on the session running in UTC (all
-    * graft entrypoints set `spark.sql.session.timeZone=UTC`), making the
+    * The NTZ and nanos branches rely on the session running in UTC (set by
+    * [[GraftSession]], `spark.sql.session.timeZone=UTC`), making the
     * reinterpretation exact and matching DuckDB's reading of the same
     * file. Purely a projection — scan pushdown and pruning are unaffected,
     * and when the physical type is already TIMESTAMP the column passes
@@ -72,7 +72,7 @@ object Tables {
     * and a regeneration broke all eleven at once; this helper is the single
     * place that knows the encoding, so every event-time query binds to
     * `tus` and survives the next drift. The NTZ branch relies on the
-    * session running in UTC (all graft entrypoints set
+    * session running in UTC (set by [[GraftSession]],
     * `spark.sql.session.timeZone=UTC`), making the naive-wall-time →
     * instant reinterpretation exact and matching DuckDB's `epoch_us(ts)`
     * on the same file. Purely a projection: pushdown/pruning on the scan

@@ -1,44 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated query names, for fast iteration
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // SPARK_GRAFT_MASTER lets the cluster-posture audit run the same dump
     // on local-cluster[n,c,mem] (multi-JVM executors) — combined with
     // SPARK_GRAFT_MATERIALIZE=reliable this is the 100 TB deployment shape;
     // results feed the identical DuckDB hash-compare (BASELINE.md r19).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = ClusterLaunch.wire(SparkSession.builder().master(master), master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet's physical ts encoding has drifted across data
-      // generations (INT64 nanos / TIMESTAMP_MICROS / TIMESTAMP_NTZ);
-      // nanosAsLong keeps the nanos generation readable, and
-      // Tables.eventsCanonical normalizes whatever arrives to `tus`
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // a misspelled filter name would otherwise silently select zero queries
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"[verify] WARNING: unknown query names in filter: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    // optional third arg: comma-separated query names, for fast iteration
+    SparkEntry.select(args.lift(2)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -47,22 +24,13 @@ object Verify {
       // release any localCheckpoint blocks the query registered
       finally graft.operators.Checkpoints.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     graft.operators.Checkpoints.releaseShared() // shared tables only release explicitly
     spark.stop()
   }
+
+  /** oracle_sql.json's body: one JSON object, query name → DuckDB SQL,
+    * keys sorted. */
+  def oracleJson(sql: Map[String, String]): String =
+    new ObjectMapper().writeValueAsString(new java.util.TreeMap[String, String](sql.asJava))
 }

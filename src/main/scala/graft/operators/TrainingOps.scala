@@ -2192,8 +2192,8 @@ object TrainingOps {
     * At today's scale factors the derived m is exactly the previous
     * constant 100.
     *
-    * K=40 stress adjudication (round 14, BASELINE.md): phase-profiled
-    * via [[graft.tools.MinhashProfile]] — every term is at-most-linear
+    * K=40 stress adjudication (round 14, BASELINE.md): phase-profiled,
+    * every term is at-most-linear
     * (sig 8.05× wall for exactly 40× md5 work; inter 6.40× for ~33–40×
     * matches); the measured 5±1× full-query ratio reflects a K=1
     * baseline that is ~90 % real work, not a super-linear term. A
@@ -2556,6 +2556,60 @@ object TrainingOps {
 
   private val bdRungs = Seq((1, 8), (2, 4), (4, 2), (8, 1))
 
+  /** The shingle table alone (the [[hMinhashCalibration]] `cal_sh`
+    * convention). The checkpoint is not only multi-consumer hygiene but a
+    * MEASURED optimizer barrier: fed to the signature aggregate as a live
+    * CTE, Spark infers `isnotnull(shingles) AND size(shingles) > 0` from
+    * the explode and pushes the WHOLE quadratic array_distinct(transform)
+    * shingle expression into the scan's data filter — computing it twice
+    * per doc, single-threaded on the one sf-scale parquet split (6.0 s at
+    * sf0.1; 0.9 s this way). The REPARTITION spreads the per-doc work
+    * across the session's defaultParallelism (an unsized hint AQE-
+    * coalesces right back to one partition — tiny bytes, big CPU). */
+  private def bandShingles(s: SparkSession, dir: String): DataFrame = {
+    docs(s, dir)
+    val width = s.sparkContext.defaultParallelism
+    val sh = Checkpoints.track(s.sql(
+      s"""WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, regexp_replace(text, '^\\\\S+\\\\s+', '')
+        |  FROM documents),
+        |corpr AS (SELECT /*+ REPARTITION($width) */ doc_id, text FROM corpus),
+        |tok AS (SELECT doc_id, split(text, ' ') AS tokens FROM corpr)
+        |SELECT doc_id,
+        |  array_distinct(transform(sequence(1, size(tokens) - 2),
+        |    i -> concat(element_at(tokens, i), '|', element_at(tokens, i + 1),
+        |                '|', element_at(tokens, i + 2)))) AS shingles
+        |FROM tok WHERE size(tokens) >= 3""".stripMargin)
+      .graftCheckpoint())
+    sh.createOrReplaceTempView("band_sh")
+    sh
+  }
+
+  /** The MinHash signatures (checkpointed + registered as `band_sig`). */
+  private def bandSignatures(s: SparkSession, dir: String): DataFrame = {
+    bandShingles(s, dir)
+    val sig = Checkpoints.track(
+      s.sql("""WITH g AS (
+          |  SELECT doc_id,
+          |    md5(concat('0|', s)) AS m0, md5(concat('1|', s)) AS m1,
+          |    md5(concat('2|', s)) AS m2, md5(concat('3|', s)) AS m3
+          |  FROM band_sh LATERAL VIEW explode(shingles) t AS s)
+          |SELECT doc_id,
+          |  min(CAST(conv(substring(m0, 1, 15), 16, 10) AS BIGINT)) AS h0,
+          |  min(CAST(conv(substring(m0, 17, 15), 16, 10) AS BIGINT)) AS h1,
+          |  min(CAST(conv(substring(m1, 1, 15), 16, 10) AS BIGINT)) AS h2,
+          |  min(CAST(conv(substring(m1, 17, 15), 16, 10) AS BIGINT)) AS h3,
+          |  min(CAST(conv(substring(m2, 1, 15), 16, 10) AS BIGINT)) AS h4,
+          |  min(CAST(conv(substring(m2, 17, 15), 16, 10) AS BIGINT)) AS h5,
+          |  min(CAST(conv(substring(m3, 1, 15), 16, 10) AS BIGINT)) AS h6,
+          |  min(CAST(conv(substring(m3, 17, 15), 16, 10) AS BIGINT)) AS h7
+          |FROM g GROUP BY doc_id""".stripMargin).graftCheckpoint())
+    sig.createOrReplaceTempView("band_sig")
+    sig
+  }
+
   /** MINHASH BANDING DESIGN table — the (bands × rows-per-band) decision
     * every LSH dedup job makes BEFORE committing a 10⁹-document run, with
     * both sides of the trade measured on the corpus instead of guessed:
@@ -2580,96 +2634,6 @@ object TrainingOps {
     * (rung, key) rows; the planted probe is ONE equi-join on the
     * +1 000 000 id offset with all four rung verdicts decided scan-local
     * from the same 8 equality bits. */
-  /** The signature build alone (checkpointed + registered as `band_sig`) —
-    * split out so BandDesignProfile can time each phase of the declared
-    * query separately. */
-  /** The shingle table alone (the [[hMinhashCalibration]] `cal_sh`
-    * convention). The checkpoint is not only multi-consumer hygiene but a
-    * MEASURED optimizer barrier: fed to the signature aggregate as a live
-    * CTE, Spark infers `isnotnull(shingles) AND size(shingles) > 0` from
-    * the explode and pushes the WHOLE quadratic array_distinct(transform)
-    * shingle expression into the scan's data filter — computing it twice
-    * per doc, single-threaded on the one sf-scale parquet split (6.0 s at
-    * sf0.1; 0.9 s this way). The REPARTITION spreads the per-doc work
-    * across the session's defaultParallelism (an unsized hint AQE-
-    * coalesces right back to one partition — tiny bytes, big CPU). */
-  private[graft] def bandShingles(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
-    val width = s.sparkContext.defaultParallelism
-    val sh = Checkpoints.track(s.sql(
-      s"""WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, regexp_replace(text, '^\\\\S+\\\\s+', '')
-        |  FROM documents),
-        |corpr AS (SELECT /*+ REPARTITION($width) */ doc_id, text FROM corpus),
-        |tok AS (SELECT doc_id, split(text, ' ') AS tokens FROM corpr)
-        |SELECT doc_id,
-        |  array_distinct(transform(sequence(1, size(tokens) - 2),
-        |    i -> concat(element_at(tokens, i), '|', element_at(tokens, i + 1),
-        |                '|', element_at(tokens, i + 2)))) AS shingles
-        |FROM tok WHERE size(tokens) >= 3""".stripMargin)
-      .graftCheckpoint())
-    sh.createOrReplaceTempView("band_sh")
-    sh
-  }
-
-  private[graft] def bandSignaturesSql(shView: String): String =
-    s"""WITH g AS (
-        |  SELECT doc_id,
-        |    md5(concat('0|', s)) AS m0, md5(concat('1|', s)) AS m1,
-        |    md5(concat('2|', s)) AS m2, md5(concat('3|', s)) AS m3
-        |  FROM $shView LATERAL VIEW explode(shingles) t AS s)
-        |SELECT doc_id,
-        |  min(CAST(conv(substring(m0, 1, 15), 16, 10) AS BIGINT)) AS h0,
-        |  min(CAST(conv(substring(m0, 17, 15), 16, 10) AS BIGINT)) AS h1,
-        |  min(CAST(conv(substring(m1, 1, 15), 16, 10) AS BIGINT)) AS h2,
-        |  min(CAST(conv(substring(m1, 17, 15), 16, 10) AS BIGINT)) AS h3,
-        |  min(CAST(conv(substring(m2, 1, 15), 16, 10) AS BIGINT)) AS h4,
-        |  min(CAST(conv(substring(m2, 17, 15), 16, 10) AS BIGINT)) AS h5,
-        |  min(CAST(conv(substring(m3, 1, 15), 16, 10) AS BIGINT)) AS h6,
-        |  min(CAST(conv(substring(m3, 17, 15), 16, 10) AS BIGINT)) AS h7
-        |FROM g GROUP BY doc_id""".stripMargin
-
-  private[graft] def bandSignatures(s: SparkSession, dir: String): DataFrame = {
-    bandShingles(s, dir)
-    val sig = Checkpoints.track(
-      s.sql(bandSignaturesSql("band_sh")).graftCheckpoint())
-    sig.createOrReplaceTempView("band_sig")
-    sig
-  }
-
-  /** The bucket census + candidate rollup off a signature view. */
-  private[graft] def bandDesignCensusSql(sig: String): String = {
-    val hs = (0 until 8).map(i => s"h$i")
-    val bandSelects = bdRungs.flatMap { case (b, r) =>
-      (0 until b).map { band =>
-        val cols = hs.slice(band * r, (band + 1) * r).mkString(", ")
-        s"SELECT '${b}x$r' AS rung, concat_ws('|', '$band', $cols) AS key FROM s0"
-      }
-    }.mkString("\n  UNION ALL ")
-    s"""WITH s0 AS (SELECT * FROM $sig),
-       |bands AS (
-       |  $bandSelects),
-       |cens AS (SELECT rung, key, count(*) AS c FROM bands GROUP BY rung, key)
-       |SELECT rung, sum(c * (c - 1) DIV 2) AS cand_pairs
-       |FROM cens GROUP BY rung""".stripMargin
-  }
-
-  /** The planted +10⁶-offset probe off a signature view. */
-  private[graft] def bandDesignProbeSql(sig: String): String =
-    s"""WITH pl AS (
-       |  SELECT ${(0 until 8).map(i =>
-            s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END) AS e$i").mkString(", ")}
-       |  FROM $sig a JOIN $sig b ON b.doc_id = a.doc_id + 1000000)
-       |SELECT count(*) AS n_planted,
-       |  sum(CASE WHEN e0+e1+e2+e3+e4+e5+e6+e7 = 8 THEN 1 ELSE 0 END) AS hit_1x8,
-       |  sum(CASE WHEN e0+e1+e2+e3 = 4 OR e4+e5+e6+e7 = 4 THEN 1 ELSE 0 END) AS hit_2x4,
-       |  sum(CASE WHEN e0+e1 = 2 OR e2+e3 = 2 OR e4+e5 = 2 OR e6+e7 = 2
-       |           THEN 1 ELSE 0 END) AS hit_4x2,
-       |  sum(CASE WHEN e0+e1+e2+e3+e4+e5+e6+e7 >= 1 THEN 1 ELSE 0 END) AS hit_8x1
-       |FROM pl""".stripMargin
-
   def hMinhashBandDesign(s: SparkSession, dir: String): DataFrame = {
     bandSignatures(s, dir)
     s.sql(bandDesignBody("band_sig", idiv = "DIV"))

@@ -186,8 +186,7 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
   // every broker gets at least one consumer, else its messages would wait
   // for a rebalance that never comes
   private lazy val numShards = math.max(
-    Option(options.get("numShards")).orElse(Option(options.get("numPartitions")))
-      .map(_.toInt).getOrElse(4),
+    Option(options.get("numShards")).map(_.toInt).getOrElse(4),
     brokers.size)
   // (rows per shard per epoch, RDY): unset, an epoch takes what the window
   // holds; a caller's cap splits across shards with 3× headroom in flight

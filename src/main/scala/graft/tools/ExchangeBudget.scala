@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Shuffle-exchange census: `sbt "runMain graft.tools.ExchangeBudget [sfDir]"`
   * prints one `BUDGET name count` line per declared query — the number of
   * SHUFFLE exchanges (hash/range/single-partition/round-robin; broadcasts
@@ -33,14 +31,8 @@ object ExchangeBudget {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[4] with 4 shuffle partitions: the shape the census is pinned at
+    val spark = graft.GraftSession("local[4]", "4")
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
       try {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `sbt "runMain graft.tools.Explain <query|ALL> [sfDir]"`
   * prints explain("formatted") for SparkEntry queries — the loop used to
   * iterate on physical plans (broadcasts, pushed filters, codegen spans)
@@ -11,20 +9,11 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("ALL")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[4]: the shape the checked-in exchange census is pinned at
+    val spark = graft.GraftSession("local[4]", "4")
     spark.sparkContext.setLogLevel("ERROR")
-    val qs = if (name == "ALL") graft.SparkEntry.queries
-             else { // comma-separated names also accepted
-               val want = name.split(',').toSet
-               graft.SparkEntry.queries.filter(kv => want.contains(kv._1))
-             }
+    // ALL, or comma-separated names
+    val qs = graft.SparkEntry.select(Some(name).filter(_ != "ALL"))
     qs.toSeq.sortBy(_._1).foreach { case (n, fn) =>
       println(s"\n===== $n =====")
       try fn(spark, sfDir).explain("formatted")

@@ -368,22 +368,12 @@ object ScaleStressBench {
   def main(args: Array[String]): Unit = {
     val ks = args.headOption.getOrElse("1,10").split(',').map(_.trim.toInt).toSeq
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
 
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(',').toSet)
-    val names = (defaultQueries ++ profileQueries ++ tpchQueries)
-      .filter(n => only.forall(_.contains(n)))
-    val qs = names.map(n => n -> graft.SparkEntry.queries(n))
+    val selected = graft.SparkEntry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
+    val names = (defaultQueries ++ profileQueries ++ tpchQueries).filter(selected.contains)
+    val qs = names.map(n => n -> selected(n))
 
     def materialize(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                     dir: String): Unit =

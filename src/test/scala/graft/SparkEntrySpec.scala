@@ -17,4 +17,13 @@ class SparkEntrySpec extends SparkSuite {
     // non-SQL-expressible op breaks this, document it here and relax
     assert((qs -- os).isEmpty, s"queries without oracles: ${(qs -- os).toSeq.sorted}")
   }
+
+  test("select keeps the known names and warns once about the misspelled one") {
+    val err = new java.io.ByteArrayOutputStream
+    val picked = Console.withErr(err)(SparkEntry.select(Some("q1_pricing,q1_pricnig")))
+    assert(picked.keySet == Set("q1_pricing"))
+    val warnings = err.toString("UTF-8").linesIterator.toList
+    assert(warnings == List("[graft] WARNING: unknown query names: q1_pricnig"))
+    assert(SparkEntry.select(None).keySet == SparkEntry.queries.keySet)
+  }
 }

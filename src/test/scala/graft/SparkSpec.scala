@@ -7,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * startup is ~4 s, so suites must not create their own). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .config(graft.streaming.NoForkLocalFs.SessionConf)
-      .getOrCreate()
+    val s = GraftSession("local[4]", "4", graft.streaming.NoForkLocalFs.SessionConf.toSeq: _*)
     s.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.registerAll(s)
     s

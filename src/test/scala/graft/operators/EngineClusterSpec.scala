@@ -2,7 +2,6 @@ package graft.operators
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-process proof for the QUERY engine (complement of
@@ -41,22 +40,9 @@ class EngineClusterSpec extends AnyFunSuite {
   test("declared queries return identical results under multi-process execution") {
     assume(new File("/opt/spark/jars").isDirectory, "needs a Spark distribution")
     sys.props("spark.test.home") = "/opt/spark"
-    val addOpens = graft.ClusterLaunch.addOpens
-    val classesDir = new File("target/scala-2.13/classes").getAbsolutePath
 
     def run(master: String): Map[String, Seq[String]] = {
-      val spark = SparkSession.builder()
-        .master(master)
-        .appName(s"graft-engine-$master")
-        .config("spark.executor.memory", "768m")
-        .config("spark.executor.extraClassPath", classesDir)
-        .config("spark.executor.extraJavaOptions", addOpens)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.GraftSession(master, "4", "spark.executor.memory" -> "768m")
       try {
         spark.sparkContext.setLogLevel("WARN")
         probes.map { name =>
@@ -97,22 +83,9 @@ class EngineClusterSpec extends AnyFunSuite {
       "h_simjoin_prefix", "h_rank_convergence", "h_doc_repetition",
       "h_minhash_calibration", "h_dup_ngrams", "h_pq_recall",
       "h_split_leakage", "a_column_stats", "h_ivfpq_search", "h_dedup_spans")
-    val addOpens = graft.ClusterLaunch.addOpens
-    val classesDir = new File("target/scala-2.13/classes").getAbsolutePath
 
     def run(master: String, mode: Option[String]): Map[String, Seq[String]] = {
-      val spark = SparkSession.builder()
-        .master(master)
-        .appName(s"graft-heavy-$master")
-        .config("spark.executor.memory", "768m")
-        .config("spark.executor.extraClassPath", classesDir)
-        .config("spark.executor.extraJavaOptions", addOpens)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.GraftSession(master, "4", "spark.executor.memory" -> "768m")
       Checkpoints.modeOverride = mode
       try {
         spark.sparkContext.setLogLevel("WARN")

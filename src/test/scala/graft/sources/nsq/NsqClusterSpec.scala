@@ -2,7 +2,6 @@ package graft.sources.nsq
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-JVM proof of the connector's cluster-mode contract (round-7
@@ -50,20 +49,11 @@ class NsqClusterSpec extends AnyFunSuite {
 
     // the in-JVM standalone Worker resolves sparkHome for executor launch
     sys.props("spark.test.home") = "/opt/spark"
-    val addOpens = graft.ClusterLaunch.addOpens
-    val classesDir = new File("target/scala-2.13/classes").getAbsolutePath
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .appName("graft-nsq-cluster")
-      .config("spark.executor.memory", "768m")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession("local-cluster[2,1,1024]", "4",
+      "spark.executor.memory" -> "768m",
       // host-level locality can't pin between two same-host executors, so
       // shards WILL move — exactly the migration surface under test
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
+      "spark.locality.wait" -> "0")
     try {
       val sc = spark.sparkContext
       sc.setLogLevel("WARN")

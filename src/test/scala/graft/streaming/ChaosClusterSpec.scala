@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.KplFunctions
@@ -61,18 +60,9 @@ class ChaosClusterSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-chaos-cluster-ckpt").toString
 
     sys.props("spark.test.home") = "/opt/spark"
-    val addOpens = graft.ClusterLaunch.addOpens
-    val classesDir = new File("target/scala-2.13/classes").getAbsolutePath
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,1,1024]")
-      .appName("graft-chaos-cluster")
-      .config("spark.executor.memory", "768m")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.locality.wait", "0")
-      .getOrCreate()
+    val spark = graft.GraftSession("local-cluster[2,1,1024]", "4",
+      "spark.executor.memory" -> "768m",
+      "spark.locality.wait" -> "0")
     try {
       val sc = spark.sparkContext
       sc.setLogLevel("WARN")
