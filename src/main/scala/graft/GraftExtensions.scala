@@ -6,12 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Expression
 import org.apache.spark.sql.graft.{ArrayDotProduct, Fnv64aExpr, KplDeaggregateExpr, MinhashSignatureExpr}
 
 /** SparkSessionExtensions entry point: enables the engine's native
-  * expressions cluster-wide with
+  * expressions (simhash64 among them) cluster-wide with
   * `--conf spark.sql.extensions=graft.GraftExtensions` — no driver-side
-  * `registerAll` call needed. (The UDF/UDAF surface — kpl_aggregate,
-  * simhash64, … — still registers per-session via
+  * `registerAll` call needed. Only the `kpl_aggregate` UDAF still
+  * registers per session, via
   * [[graft.functions.GraftFunctions.registerAll]], since UDF registration
-  * requires a live session.)
+  * requires a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
+import graft.functions.GraftFunctions
 import graft.operators.{AnalyticsOps, CorpusOps, FormatOps, GovernanceOps, LlmOps, Multimodal, PipelineQueries, ProfileOps, RelationalQueries, ScaleOps, TrainingOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -17,12 +19,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.q1Pricing(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each runs in
+    * its own [[querySession]] of the caller's session. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ PipelineQueries.queries ++ LlmOps.queries ++
+    (RelationalQueries.queries ++ PipelineQueries.queries ++ LlmOps.queries ++
       Multimodal.queries ++ FormatOps.queries ++ ScaleOps.queries ++
       TrainingOps.queries ++ AnalyticsOps.queries ++ GovernanceOps.queries ++
-      CorpusOps.queries ++ ProfileOps.queries
+      CorpusOps.queries ++ ProfileOps.queries).map { case (name, f) =>
+      name -> ((s: SparkSession, dir: String) => f(querySession(s), dir))
+    }
+
+  /** The session one query is built in: a clone of `s`, after the engine's
+    * functions are registered in `s` (once per session). The query's temp
+    * views stay in the clone, so queries sharing `s` (two threads, two
+    * scale dirs) cannot bind each other's tables; the clone keeps `s`'s
+    * runtime conf, functions and query-execution listeners. */
+  def querySession(s: SparkSession): SparkSession = {
+    GraftFunctions.registerAll(s)
+    Bridge.cloneSession(s)
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -6,17 +6,13 @@ import org.apache.spark.sql.types.{DateType, LongType, TimestampNTZType, Timesta
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
-  * Every table is registered as a temp view so queries can be expressed
-  * either through the DataFrame API or `spark.sql`. Reads are plain
+  * DataFrame-API queries [[load]] a table; SQL queries [[bind]] the tables
+  * they read as temp views of the session they run in. Reads are plain
   * parquet scans — Catalyst handles column pruning / predicate pushdown,
   * and at 100 TB the same code path picks up partition pruning for
   * directory-partitioned layouts with zero changes here.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Logical-instant columns per table: fact-date columns that queries
     * compare against day-granularity literals, group on, or output. Their
     * PHYSICAL parquet encoding is owned by the data generator and may
@@ -93,11 +89,14 @@ object Tables {
     raw.withColumn("tus", tusColumn(raw).cast(LongType))
   }
 
-  /** Register the canonical events view (raw columns + `tus`). */
-  def registerEvents(spark: SparkSession, sfDir: String): Unit =
-    eventsCanonical(spark, sfDir).createOrReplaceTempView("events")
-
-  /** Register all tables of a scale-factor directory as temp views. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n => load(spark, sfDir, n).createOrReplaceTempView(n) }
+  /** Register each named table as a temp view of `spark`: `events` as
+    * [[eventsCanonical]] (raw columns plus `tus`), the others as [[load]]
+    * gives them. A query binds the tables its SQL reads, in the session it
+    * is built in, so two queries in two sessions never see each other's
+    * views. */
+  def bind(spark: SparkSession, sfDir: String, names: String*): Unit =
+    names.foreach { n =>
+      val df = if (n == "events") eventsCanonical(spark, sfDir) else load(spark, sfDir, n)
+      df.createOrReplaceTempView(n)
+    }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.graft.{ArrayDotProduct, Bridge, Fnv64aExpr, MinhashS
 /** Column-API facade + SQL registration for the engine's custom functions.
   *
   * Scala callers use the typed functions; SQL callers get the same names via
-  * [[registerAll]] (idempotent, safe to call per-session).
+  * [[registerAll]] (idempotent, safe to call per-session), which
+  * `SparkEntry.querySession` calls before cloning a query's session.
   */
 object GraftFunctions {
 
@@ -55,13 +56,5 @@ object GraftFunctions {
         name, builder, "scala_udf")
     }
     spark.udf.register("kpl_aggregate", udaf(KplFunctions.KplAggregateAgg))
-    // simhash64 / hamming64 were Scala UDFs through round 16; they are
-    // native codegen expressions now (SimHashExprs.scala) and register
-    // through GraftBuilders.all above like every other expression.
-    // The kpl_pack_ordered / kpl_deaggregate / kpl_is_aggregated scalar
-    // udfs were retired in round 18: every SQL path packs through the
-    // kpl_aggregate UDAF and unpacks through the native
-    // kpl_deaggregate_rows Generator; the Scala-level codecs remain on
-    // [[KplFunctions]] for direct callers.
   }
 }

@@ -70,8 +70,9 @@ final class KplPacker(
       // NOTE: deliberate deviation — the Go original returns
       // len(completedRecs) here (one past the entry's index,
       // aggregator.go:142), which its own tests never pin and which would
-      // misroute per-entry ack/requeue in BatchWriter.slotSources. Return
-      // the entry's actual slot.
+      // misroute a caller that maps slots back to source records for
+      // per-entry ack/requeue (kinesis_writer.go:69-73). Return the
+      // entry's actual slot.
       return completed.length - 1
     }
 

@@ -38,14 +38,6 @@ import graft.Tables
   */
 object AnalyticsOps {
 
-  // Canonical events view: `tus` BIGINT epoch-micros, physical-encoding
-  // agnostic (Tables.registerEvents owns the ts-type dispatch).
-  private def events(s: SparkSession, dir: String): Unit =
-    Tables.registerEvents(s, dir)
-
-  private def docs(s: SparkSession, dir: String): Unit =
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-
   // ======================================================== event funnel
 
   /** Conversion funnel with STRICT event ordering: a user converts at a
@@ -57,7 +49,7 @@ object AnalyticsOps {
     * tiny-side broadcastable at any corpus size where the funnel is
     * selective — and co-partitioned merge joins when it is not. */
   def gEventFunnel(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(funnelBody("SELECT user_id, event_type, tus FROM events"))
   }
 
@@ -94,7 +86,7 @@ object AnalyticsOps {
     * both key on `user_id`. The week offset stays in exact integer
     * arithmetic (`floor(days/7)` over a non-negative day diff). */
   def gCohortRetention(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH e AS (
         |  SELECT user_id, timestamp_micros(tus) AS t FROM events),
@@ -155,7 +147,7 @@ object AnalyticsOps {
     * combinable. All arithmetic integer-exact: floor-cents BIGINT spend,
     * day counts, DIV means. */
   def gRfmSegments(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     // three checkpoints, all domain-or-smaller: the per-customer base is
     // consumed by four chains and the 5-row quintile-target table by
     // three — as CTEs Spark re-inlines each consumer into its own
@@ -271,7 +263,7 @@ object AnalyticsOps {
     * go through DECIMAL(18,2), double out — the established exact
     * contract. */
   def gGapFill(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH e AS (
         |  SELECT timestamp_micros(tus) AS t, event_type, value FROM events),
@@ -359,7 +351,7 @@ object AnalyticsOps {
     * read that one materialization, so events is scanned exactly once
     * no matter how the calendar-sized tail re-derives. */
   def gDaySimilarity(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     val c = Checkpoints.track(s.sql(
       """SELECT tus DIV 86400000000 AS day, (tus DIV 3600000000) % 24 AS hod,
         |  count(*) AS n
@@ -460,7 +452,7 @@ object AnalyticsOps {
     * engines agree on NULL instead. Map-side partial aggregation means
     * only 6 longs per group cross the shuffle regardless of corpus size. */
   def dRegression(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     s.sql(
       """WITH m AS (
         |  SELECT l_returnflag,
@@ -522,7 +514,7 @@ object AnalyticsOps {
     * `floor(cum/65536)` bin id is EXACT in binary floating point — no
     * engine disagreement at bin boundaries. */
   def aCompactionBins(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     s.sql(
       """WITH files AS (
         |  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
@@ -560,7 +552,7 @@ object AnalyticsOps {
     * parquet bytes vary with encoding, the MODEL is the contract). */
   def executeCompactionMonth(s: SparkSession, dir: String, month: String,
                              outDir: String): Long = {
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     val binned = s.sql(
       s"""WITH files AS (
         |  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
@@ -623,7 +615,7 @@ object AnalyticsOps {
     * position-weighted checksum pins the full posting content without
     * materializing lists. */
   def hInvertedIndex(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT doc_id, split(text, ' ') AS t FROM documents),
         |pos AS (
@@ -672,7 +664,7 @@ object AnalyticsOps {
     * per-lang rollup. At 100 TB this is exactly the index-build shuffle
     * itself, with byte accounting riding along for free. */
   def hIndexCompression(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH dt AS (
         |  SELECT DISTINCT lang, t AS term, doc_id
@@ -733,7 +725,7 @@ object AnalyticsOps {
     * action resolved scan-local; per-lang action counts plus post-merge
     * corpus stats make every row's fate observable. */
   def hCorpusMerge(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH delta AS (
         |  SELECT doc_id, lang, CAST(NULL AS STRING) AS text, 'd' AS op
@@ -805,7 +797,7 @@ object AnalyticsOps {
     * appended so the flag path is EXERCISED on any input (z ~ sqrt(n) > 3
     * for the spike), never vacuously false on uniform data. */
   def gAnomaly(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH daily AS (
         |  SELECT CAST(timestamp_micros(tus) AS DATE) AS day,
@@ -891,7 +883,7 @@ object AnalyticsOps {
     * table; every moment after is algebra on ≤ days rows (the dow
     * moments table is ≤ 7 rows, broadcast back). */
   def gAnomalySeasonal(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     // the daily table is referenced by the spike append, both moment
     // tables and the final join — left as a CTE Spark re-inlines the
     // EVENTS scan into every reference (measured: 12 exchanges / 6 corpus
@@ -1037,7 +1029,7 @@ object AnalyticsOps {
     * time, same delta) share one cumulative value, so the max is
     * order-independent — the determinism the spec relies on. */
   def gConcurrency(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(concurrencyBody(
       "SELECT event_id, tus FROM events",
       "CAST(to_date(timestamp_micros(start_us)) AS DATE)"))
@@ -1095,7 +1087,7 @@ object AnalyticsOps {
     * [[hGraphTriangles]] and [[hRankConvergence]], each of which used to
     * re-run the full fact-table chain (orders-1996 filter → lineitem
     * join → per-order supplier self-join → distinct → HAVING ≥ 2).
-    * [[Checkpoints.sharedTable]] materializes it once per (session, dir)
+    * [[Checkpoints.sharedTable]] materializes it once per (context, dir)
     * — at cluster scale this is the written-once graph artifact every
     * downstream graph job scans (the componentLabels precedent). The
     * checkpoint also stops [[hRankConvergence]]'s union-of-two-selects
@@ -1332,7 +1324,7 @@ object AnalyticsOps {
     * day-keyed aggregate over purchase rows only; all arithmetic is exact
     * BIGINT micros (day = tus DIV 86.4e9, window = 604.8e9 µs). */
   def gAttribution(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH clk AS (
         |  SELECT user_id, tus, 0 AS kind, event_id AS c_id, tus AS c_tus
@@ -1403,7 +1395,7 @@ object AnalyticsOps {
     * 4). At 100 TB the only corpus-sized exchange is the per-user
     * repartition the window needs. */
   def gMarkovTransitions(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH seq AS (
         |  SELECT event_type AS curr,
@@ -1455,7 +1447,7 @@ object AnalyticsOps {
     * |event_types|⁴ regardless of corpus size; the final top-20 is a
     * TakeOrderedAndProject over that census. */
   def gTopPaths(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH seq AS (
         |  SELECT user_id, event_type,
@@ -1526,7 +1518,7 @@ object AnalyticsOps {
     * partitions by probe over the 20×users score table — never the
     * corpus. */
   def hTrajectorySearch(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH seq AS (
         |  SELECT user_id, substr(event_type, 1, 1) AS c,
@@ -1605,7 +1597,7 @@ object AnalyticsOps {
     * the HLL sketch (d_hll_union's path) when approximate is
     * acceptable. */
   def gActiveUsers(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH ud AS (
         |  SELECT DISTINCT user_id, tus DIV 86400000000L AS day FROM events),
@@ -1662,7 +1654,7 @@ object AnalyticsOps {
     * carry the ±5 % verdict per range ([[FormatOps.dAggApprox]]'s
     * contract). */
   def gActiveUsersApprox(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH ud AS (
         |  SELECT DISTINCT user_id, tus DIV 86400000000L AS day FROM events),
@@ -1742,7 +1734,7 @@ object AnalyticsOps {
     * (cumulative, totals, argmax rank) runs over that domain-bounded
     * table, the skew-proof selection form. */
   def gChangepoint(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH hist AS (
         |  SELECT event_type, tus DIV 86400000000L AS day, count(*) AS cnt
@@ -1825,7 +1817,7 @@ object AnalyticsOps {
     * rank window would sort the whole pair table on one task).
     * Skew-free: orderkey is the natural high-cardinality key. */
   def gMarketBasket(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     Checkpoints.track(s.sql(
       """SELECT l_orderkey AS ok, array_sort(collect_set(l_partkey)) AS ps
         |FROM lineitem GROUP BY l_orderkey""".stripMargin)
@@ -1922,7 +1914,7 @@ object AnalyticsOps {
     * builds, the returned plan reading zero parquet — plan-pinned).
     * The per-arm report is a 2-row aggregate; the gap join 2×2. */
   def gFunnelAb(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     Checkpoints.track(s.sql(
       """SELECT user_id,
         |  CASE WHEN substr(md5(CAST(user_id AS STRING)), 1, 1) < '8'
@@ -2040,7 +2032,7 @@ object AnalyticsOps {
     * partition windows are fine on domain-bounded tables, never on the
     * corpus). One exchange carries the whole thing. */
   def gDecayedPopularity(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(decayBody(idiv = "DIV",
       shift = "shiftleft(1L, CAST(least((ad - day) DIV 7, 62L) AS INT))"))
   }
@@ -2101,7 +2093,7 @@ object AnalyticsOps {
     * total); user_id is the natural skew-free key. Everything after the
     * per-session aggregate is a ≤|event_types|-row census. */
   def gSessionize(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH seq AS (
         |  SELECT user_id, event_id, tus, event_type,
@@ -2205,7 +2197,7 @@ object AnalyticsOps {
     * would otherwise re-inline into three corpus scans (plan-pinned:
     * exactly one events scan). */
   def gSeasonality(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     Checkpoints.track(s.sql(
       """SELECT event_type, (tus DIV 3600000000L) % 168 AS how,
         |  count(*) AS hcnt
@@ -2311,7 +2303,7 @@ object AnalyticsOps {
     * joins, and everything after the histogram aggregate is
     * domain-sized. */
   def gFunnelTiming(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH v AS (
         |  SELECT user_id, min(tus) AS t0 FROM events
@@ -2406,7 +2398,7 @@ object AnalyticsOps {
     * per-user repartition the window needs — same posture as
     * [[gMarkovTransitions]]. */
   def gBotRegularity(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH seq AS (
         |  SELECT user_id, tus,
@@ -2480,7 +2472,7 @@ object AnalyticsOps {
     * state beyond the window frame; skew-free on the natural
     * high-cardinality key. */
   def gScd2State(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH seq AS (
         |  SELECT user_id, event_type, tus, event_id,
@@ -2556,7 +2548,7 @@ object AnalyticsOps {
     * the same arrays; everything downstream is a ≤|types|²-row census.
     * user_id is the natural skew-free key. */
   def gAudienceOverlap(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     Checkpoints.track(s.sql(
       """SELECT user_id, array_sort(collect_set(event_type)) AS ts
         |FROM events GROUP BY user_id""".stripMargin)
@@ -2635,7 +2627,7 @@ object AnalyticsOps {
     * plan reads zero parquet (plan-pinned) — one map-reduce and change
     * at 100 TB. */
   def gForecastBaseline(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.bind(s, dir, "events")
     Checkpoints.track(s.sql(
       """SELECT event_type, tus DIV 86400000000L AS day, count(*) AS cnt
         |FROM events GROUP BY event_type, tus DIV 86400000000L""".stripMargin)
@@ -2726,8 +2718,7 @@ object AnalyticsOps {
     * idiom — BIGINT overflowed at the K=40 stress scale); every exchanged
     * number is still exact. */
   def gRevenueConcentration(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
-    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "orders", "customer")
     s.sql(revConcBody(idiv = "DIV", big = "DECIMAL(38, 0)"))
   }
 
@@ -2785,8 +2776,7 @@ object AnalyticsOps {
     * Gaps explode SCAN-LOCALLY from the array; every downstream table is
     * histogram- or segment-sized. */
   def gRepeatPurchase(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
-    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "orders", "customer")
     Checkpoints.track(s.sql(
       """SELECT c.c_mktsegment AS segment, o.o_custkey AS ck,
         |  array_sort(collect_list(unix_micros(o.o_orderdate) DIV 86400000000L))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -157,21 +158,33 @@ object Checkpoints {
     if (df.rdd.getNumPartitions * 2 >= p) df else df.repartition(p)
   }
 
+  /** Bind base table `name` and its [[widen]]ed scan `<name>_w` as temp
+    * views of `s`, for CPU-heavy per-row chains (tokenize/md5 over
+    * documents; dot products, PQ encodes, plane hashes over embeddings)
+    * whose first aggregate keys on the row id or a bounded domain — the
+    * contract [[widen]] states. */
+  def bindWide(s: SparkSession, dir: String, name: String): Unit = {
+    graft.Tables.bind(s, dir, name)
+    widen(s.table(name)).createOrReplaceTempView(s"${name}_w")
+  }
+
   // ------------------------------------------------------------- shared
 
-  /** Write-once index tables cached per (session, key). Plain strong map
-    * with an EXPLICIT lifecycle: a WeakHashMap keyed by SparkSession cannot
-    * collect here anyway, because the cached DataFrame VALUES strongly
-    * reference their session (`Dataset.sparkSession`), so every entry kept
-    * its key reachable and the "released on session GC" claim was false
-    * (round-18 advice). Long-lived mains (Bench, Verify, StreamBench,
-    * ScaleStressBench) call [[releaseShared]] before stopping; tests do the
-    * same in afterAll. */
+  /** Write-once index tables cached per (SparkContext, key). Keyed by
+    * context, not session: every query runs in its own clone of the
+    * caller's session (`SparkEntry.querySession`), and the clones of one
+    * context share its block manager, so a table one query materialized
+    * serves the next. Plain strong map with an EXPLICIT lifecycle: a
+    * WeakHashMap could not collect here, because the cached DataFrame
+    * VALUES strongly reference their session and so its context.
+    * Long-lived mains (Bench, Verify, StreamBench, ScaleStressBench) call
+    * [[releaseShared]] before stopping; tests do the same in afterAll. */
   private val shared =
-    new java.util.HashMap[org.apache.spark.sql.SparkSession,
+    new java.util.HashMap[org.apache.spark.SparkContext,
       scala.collection.mutable.Map[String, DataFrame]]
 
-  /** Get-or-build a SHARED materialized table, cached per (session, key).
+  /** Get-or-build a SHARED materialized table, cached per (context, key),
+    * as a frame of the calling session `s`.
     *
     * Several declared queries read the same expensive derived table (the
     * dup-cluster label assignment feeds h_dup_clusters, h_dedup_survivors
@@ -184,23 +197,24 @@ object Checkpoints {
     * a lineage-truncated checkpoint a later consumer still reads would be
     * unrecoverable) and release ONLY via an explicit [[releaseShared]].
     * Key by derivation + source dir: one session can serve several scale
-    * dirs (ScaleStressBench). */
-  def sharedTable(s: org.apache.spark.sql.SparkSession, key: String)
-                 (build: => DataFrame): DataFrame = {
+    * dirs (ScaleStressBench). The cached frame belongs to the session that
+    * built it, so it is rebound to `s`: a consumer's temp view of it then
+    * lands in the consumer's session. */
+  def sharedTable(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val m = synchronized {
-      Option(shared.get(s)).getOrElse {
+      Option(shared.get(s.sparkContext)).getOrElse {
         val nm = scala.collection.mutable.Map.empty[String, DataFrame]
-        shared.put(s, nm); nm
+        shared.put(s.sparkContext, nm); nm
       }
     }
-    m.synchronized(m.getOrElseUpdate(key, {
+    Bridge.rebind(s, m.synchronized(m.getOrElseUpdate(key, {
       val t0 = System.nanoTime()
       val df = build
       buildTimes.synchronized {
         buildTimes(key) = buildTimes.getOrElse(key, 0.0) + (System.nanoTime() - t0) / 1e9
       }
       df
-    }))
+    })))
   }
 
   /** Wall seconds spent building each shared table this JVM (cumulative
@@ -219,7 +233,7 @@ object Checkpoints {
   def sharedBuildSeconds: Map[String, Double] =
     buildTimes.synchronized(buildTimes.toMap)
 
-  /** Release every shared table of every live session (test hygiene). */
+  /** Release every shared table of every context (test hygiene). */
   def releaseShared(): Unit = synchronized {
     import scala.jdk.CollectionConverters._
     shared.values.asScala.foreach(_.values.foreach { df =>

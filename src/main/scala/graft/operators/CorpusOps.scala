@@ -24,11 +24,6 @@ import graft.functions.GraftFunctions
   */
 object CorpusOps {
 
-  private def docs(s: SparkSession, dir: String): Unit = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-  }
-
   // ======================================================== BM25 retrieval
 
   /** BM25 scoring — the retrieval-quality complement to [[LlmOps.hTfidf]]
@@ -59,7 +54,7 @@ object CorpusOps {
     * consumers (df and the score join) — two explode passes, each a pure
     * map-side-combined aggregate; nothing is ever pairwise. */
   def hBm25(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH x AS (
         |  SELECT doc_id, lang, size(t) AS dl, tk
@@ -182,9 +177,7 @@ object CorpusOps {
     * the IVF path ([[LlmOps.hAnnIvf]]) — the fusion algebra is rank-only
     * and does not change. */
   def hRrfFusion(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-    Tables.load(s, dir, "embeddings").createOrReplaceTempView("embeddings")
+    Tables.bind(s, dir, "documents", "embeddings")
     // Round 20: the paired-corpus projection `pc` had SIX consumers and
     // Catalyst re-inlines CTEs — six documents⋈embeddings rebuilds and
     // THREE full explodes per audit. The two reduced intermediates are
@@ -360,8 +353,7 @@ object CorpusOps {
     * scan once per round (the h_bpe_train lesson). State never touches
     * the driver. */
   def hMmrDiversify(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "embeddings").createOrReplaceTempView("embeddings")
+    Tables.bind(s, dir, "embeddings")
     Checkpoints.track(s.sql(
       """WITH normed AS (
         |  SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM (
@@ -566,9 +558,7 @@ object CorpusOps {
     * report run on ≤20 rows per query. Token counts fold scan-locally
     * into the candidate row (`size(split(text))` before the rank cut). */
   def hRagContextPack(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-    Tables.load(s, dir, "embeddings").createOrReplaceTempView("embeddings")
+    Tables.bind(s, dir, "documents", "embeddings")
     s.sql(
       """WITH pc AS (
         |  SELECT d.doc_id, size(split(d.text, ' ')) AS ntok,
@@ -675,7 +665,7 @@ object CorpusOps {
     * equi-joins on (lang, word); and the `rn <= 15` window plans as
     * WindowGroupLimit, so the final exchange carries 15·langs rows. */
   def hPmiCollocations(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT lang, split(text, ' ') AS t FROM documents),
         |uni AS (
@@ -767,7 +757,7 @@ object CorpusOps {
     * with map-side partials. 100 TB: a pure map-reduce with a ≤
     * 5·langs-row result. */
   def hQualityEnsemble(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH sig AS (
         |  SELECT lang,
@@ -842,7 +832,7 @@ object CorpusOps {
     * re-expand into repeat corpus scans; everything after runs on the
     * langs-sized table. The 100 TB cost is the single scan. */
   def hRepeatEpochs(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """SELECT lang, CAST(sum(size(split(text, ' '))) AS BIGINT) AS uniq
         |FROM documents GROUP BY lang""".stripMargin)
@@ -929,7 +919,7 @@ object CorpusOps {
     * doc; the per-shard rollup is 8 rows. Both argmaxes (s<8 and s<9)
     * ride the SAME aggregate — the corpus is scanned and exploded once. */
   def hShardRebalance(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH w AS (
         |  SELECT doc_id,
@@ -990,7 +980,7 @@ object CorpusOps {
     * candidate side pre-filters through [[LlmOps.hAnnLsh]]'s bucket join
     * when brute force stops paying. */
   def hHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    LlmOps.embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH base AS (
         |  SELECT vec_id, label, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -1070,7 +1060,7 @@ object CorpusOps {
     * the checkpoint is unigram-vocabulary-sized (~10⁸ rows worst case) —
     * the same class as [[TrainingOps]]' checkpointed band/gram indexes. */
   def hTokenizerCompat(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """SELECT lang, tk, count(*) AS f_all,
         |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS f_new
@@ -1194,7 +1184,7 @@ object CorpusOps {
     * doubles, so every partial sum is exact and the result is
     * order-independent. */
   def hCosineCalibration(s: SparkSession, dir: String): DataFrame = {
-    LlmOps.embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     // 32 constant plane literals: sign(p, i) = +1 iff the first hex char of
     // md5("p|i") is < '8' — exactly the SQL rule the DuckDB twin evaluates
     // (hex char '0'..'7' ⇔ high nibble of byte 0 < 8, md5 hex is lowercase)
@@ -1351,7 +1341,7 @@ object CorpusOps {
     * corpus chain four times — 4 Generates in the plan) and the final
     * top-20 reshape is a 3-way self-join on domain-sized rows. */
   def hSourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """WITH tok AS (SELECT source, split(text, ' ') AS t FROM documents),
         |gr0 AS (
@@ -1439,7 +1429,6 @@ object CorpusOps {
     * probe loop. */
   def hBloomCalibration(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    GraftFunctions.registerAll(s)
     val d = Tables.load(s, dir, "documents")
     val members = d.select(GraftFunctions.fnv64a(col("text")).as("k")).distinct()
     val probes = d.select(
@@ -1585,7 +1574,7 @@ object CorpusOps {
       |  GROUP BY t.doc_id, t.lang)""".stripMargin
 
   def hQualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     registerQcWeights(s, dir)
     s.sql(qcScoreCtes +
       """,
@@ -1631,7 +1620,7 @@ object CorpusOps {
     * with map-side partials — the sweep adds one domain-bounded exchange
     * to the classifier, never a second corpus pass. */
   def hQualityCalibration(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     registerQcWeights(s, dir)
     s.sql(qcScoreCtes +
       """,
@@ -1784,7 +1773,7 @@ object CorpusOps {
     * anyway) + the score histogram census; the 1-row threshold
     * broadcasts back. Everything else is ≤|langs| rows. */
   def hPercentileNorm(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH scored AS (
         |  SELECT lang, CAST(size(split(text, ' ')) AS BIGINT) AS toks
@@ -1869,7 +1858,7 @@ object CorpusOps {
     * clustering); the moment aggregate is ≤64 rows per lang. At 100 TB:
     * one map-reduce over tokens, everything after vocabulary-sized. */
   def hZipfAudit(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tf AS (
         |  SELECT lang, t AS term, count(*) AS cnt
@@ -1965,7 +1954,7 @@ object CorpusOps {
     * exchange). At 100 TB: one map-reduce over tokens, then control-
     * table algebra. */
   /** The (source, term) class-vocabulary table, materialized ONCE per
-    * (session, dir) via [[Checkpoints.sharedTable]] and registered as
+    * (context, dir) via [[Checkpoints.sharedTable]] and registered as
     * `ctfidf_ctf` — [[hCtfidfTopics]] and [[hTopicCoherence]] both read
     * it (the shared componentLabels discipline: a write-once index table,
     * not a per-query rebuild). */
@@ -1977,7 +1966,7 @@ object CorpusOps {
       .graftCheckpoint()).createOrReplaceTempView("ctfidf_ctf")
 
   def hCtfidfTopics(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     classVocab(s, dir)
     s.sql(
       """WITH ctf AS (SELECT source, term, ctf FROM ctfidf_ctf),
@@ -2045,13 +2034,13 @@ object CorpusOps {
     * than swallowed.
     *
     * Scale shape: the class-vocab table comes from the SHARED
-    * `ctfidf_ctf` checkpoint ([[classVocab]] — built once per session,
+    * `ctfidf_ctf` checkpoint ([[classVocab]] — built once per context,
     * also serving hCtfidfTopics); the corpus explode for co-occurrence
     * is filtered by the broadcast 3-terms-per-class panel BEFORE the
     * distinct, so the flags aggregate sees only panel hits (≤ 3 rows per
     * (doc, class)); everything downstream is classes-sized. */
   def hTopicCoherence(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     classVocab(s, dir)
     s.sql(
       """WITH top3 AS (
@@ -2177,7 +2166,7 @@ object CorpusOps {
     * blocks per doc) into a per-doc top-1 window on doc_id, then ONE
     * source-keyed aggregate — token-linear, one exchange pair. */
   def hBoilerplateStrip(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH wrapped AS (
         |  SELECT doc_id, source, text,
@@ -2257,7 +2246,7 @@ object CorpusOps {
     * then a langs×3 aggregate — token-linear, nothing corpus-squared
     * anywhere. */
   def hCompressionScreen(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH probes AS (
         |  SELECT DISTINCT lang,
@@ -2379,7 +2368,7 @@ object CorpusOps {
     * with [[graft.streaming.StreamingDomainRollup]]'s twin spec, which
     * streams exactly these rows through the ingest-time rollup. */
   private[graft] def domainRawUrls(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH seed AS (
         |  SELECT doc_id, lang, source,
@@ -2460,7 +2449,7 @@ object CorpusOps {
   /** Round 20: the synthesized-and-canonicalized crawl log — scan-local
     * but regex-HEAVY string algebra — is consumed by [[hDomainRollup]]
     * and (twice, via CTE re-inlining) by [[hLicenseCompliance]]. One
-    * [[Checkpoints.sharedTable]] materialization per (session, dir); at
+    * [[Checkpoints.sharedTable]] materialization per (context, dir); at
     * cluster scale this is the canonical-URL column a crawl frontier
     * writes once and every domain-keyed job reads. */
   private def domainCurl(s: SparkSession, dir: String): DataFrame =
@@ -2468,7 +2457,7 @@ object CorpusOps {
       canonicalizeUrls(domainRawUrls(s, dir)).graftCheckpoint())
 
   def hDomainRollup(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     domainCurl(s, dir).createOrReplaceTempView("domain_curl")
     s.sql(
       """SELECT etld1,
@@ -2595,7 +2584,7 @@ object CorpusOps {
     * No corpus² anywhere; the one data-sized exchange is keyed on
     * doc_id. */
   def hLicenseCompliance(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     domainCurl(s, dir).createOrReplaceTempView("lic_curl")
     s.sql(
       """WITH dd AS (
@@ -2692,7 +2681,7 @@ object CorpusOps {
     * the streaming twin consumes the corrupted crawl the way
     * [[graft.streaming.StreamingPiiCensus]] consumes the planted one. */
   private[graft] def encPlanted(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH p AS (
         |  SELECT doc_id, lang, source, text,

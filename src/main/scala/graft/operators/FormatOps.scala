@@ -258,7 +258,7 @@ object FormatOps {
     * ≤(files×years)-row broadcast cross. Nothing corpus-sized crosses an
     * exchange after the two aggregates. */
   def aZonemapSkip(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     s.sql(
       """WITH base AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
@@ -329,7 +329,6 @@ object FormatOps {
       |ORDER BY p.layout, yr""".stripMargin
 
   def aZorderLayout(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     Tables.load(s, dir, "lineitem")
       .select(col("l_partkey").cast("long").as("pk"), col("l_suppkey").cast("long").as("sk"))
       .createOrReplaceTempView("zorder_keys")
@@ -421,7 +420,7 @@ object FormatOps {
     * same ±5 % contract [[dAggApprox]] pins; DuckDB supplies the exact
     * side, the boolean carries the sketch-union verdict. */
   def dHllUnion(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     s.sql(
       """WITH shard AS (
         |  SELECT o_orderstatus, o_orderkey % 8 AS shard,
@@ -535,7 +534,7 @@ object FormatOps {
     * HLL this engine also ships (`d_agg_approx`/`d_hll_union`) for the
     * high-cardinality columns — same plan shape, sketch-sized exchange. */
   def aColumnStats(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     Checkpoints.widen(Tables.load(s, dir, "orders").select(
       "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"))
       .createOrReplaceTempView("orders_w")
@@ -618,7 +617,7 @@ object FormatOps {
     * counts the SAME floor-cents cast — the tolerance boolean then
     * measures pure HLL error, not representation mismatch. */
   def aColumnStatsApprox(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     s.sql(
       """WITH sk AS (
         |  SELECT

@@ -32,9 +32,6 @@ import graft.operators.Checkpoints
   */
 object GovernanceOps {
 
-  private def docs(s: SparkSession, dir: String): Unit =
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-
   // ======================================================== k-anonymity
 
   /** k-anonymity profile over the quasi-identifier (lang, source,
@@ -43,7 +40,7 @@ object GovernanceOps {
     * release, how many documents they strand, and the k actually
     * achieved by the surviving groups. */
   def hKAnonymity(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(kAnonymityBody("DIV"))
   }
 
@@ -74,7 +71,7 @@ object GovernanceOps {
     * Σ|n1·N2 − n2·N1| and reported in millis via one integer division —
     * partitioning-independent, bit-identical cross-engine. */
   def hDistDrift(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(distDriftBody("DIV", "'^\\\\S+\\\\s+'"))
   }
 
@@ -116,7 +113,7 @@ object GovernanceOps {
     * collisions (d=0), fuzzy matches (1 ≤ d ≤ 5), and the summed
     * distance of the fuzzy band. */
   def hFuzzyMatch(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(fuzzyBody("DIV"))
   }
 
@@ -162,7 +159,7 @@ object GovernanceOps {
     * Scale shape: one scan collapses to |langs|×2 rows; everything after
     * is control-plane algebra on that dimension-sized table. */
   def hDpRelease(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(dpReleaseBody(
       div = "DIV",
       draw = "CAST(conv(substring(md5(concat(metric, '|', lang)), 1, 6), 16, 10) AS BIGINT)",
@@ -227,7 +224,7 @@ object GovernanceOps {
     * planted crawl stream the way StreamingDomainRollup consumes the
     * fetch log. */
   private[graft] def piiPlanted(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH p AS (
         |  SELECT doc_id, lang, text,

@@ -32,29 +32,6 @@ import graft.functions.GraftFunctions
   */
 object LlmOps {
 
-  private def docs(s: SparkSession, dir: String): Unit = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-  }
-
-  private[operators] def embeds(s: SparkSession, dir: String): Unit = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "embeddings").createOrReplaceTempView("embeddings")
-  }
-
-  /** Register `embeddings_w` — the conditionally widened scan
-    * ([[Checkpoints.widen]]) for per-vector CPU-heavy chains (dot
-    * products, PQ encodes, plane hashes) whose first aggregate keys on
-    * vec_id or a bounded domain (c_id / (j, code) / (c_id, dim) / cell):
-    * the sf-scale parquet is one split, so these chains otherwise run
-    * their entire vector math on ONE core. Bounded keys cap the partial
-    * -agg inflation at groups x tasks rows — noise. NOT used where the
-    * first aggregate collapses a high-cardinality cross-vector key. */
-  private def embedsWide(s: SparkSession, dir: String): Unit = {
-    embeds(s, dir)
-    Checkpoints.widen(s.table("embeddings")).createOrReplaceTempView("embeddings_w")
-  }
-
   // ================================================================ dedup
 
   /** Exact dedup: replay-doubled corpus, grouped on the FNV-64a text
@@ -69,7 +46,6 @@ object LlmOps {
     * cross-lang duplicates. min-struct survivor selection keeps the same
     * one-exchange hash-aggregate shape. */
   def hDedupExact(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val d = Tables.load(s, dir, "documents")
     d.union(d) // at-least-once replay
       .withColumn("h", GraftFunctions.fnv64a(col("text")))
@@ -116,7 +92,6 @@ object LlmOps {
     * is a codegen'd filter literal on the batch scan; the exact truth join
     * keys on the 64-bit hash, never the text. */
   def hDedupBloom(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val d = Tables.load(s, dir, "documents")
     val history = d.filter(col("doc_id") % 3 =!= 0)
       .select(col("lang"), GraftFunctions.fnv64a(col("text")).as("k"))
@@ -175,7 +150,6 @@ object LlmOps {
     * as does the DuckDB oracle, which checks the exact counts and
     * expects both booleans true. */
   def hDedupBloomSharded(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val d = Tables.load(s, dir, "documents")
     val nShards = 16
     val history = d.filter(col("doc_id") % 3 =!= 0)
@@ -239,7 +213,7 @@ object LlmOps {
     * count unchanged (exact dupes collapse), and fingerprints never exceed
     * distinct texts. */
   def hSimhashDedup(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH corpus AS (
         |  SELECT * FROM documents UNION ALL SELECT * FROM documents),
@@ -273,7 +247,7 @@ object LlmOps {
     * by writing the shingle/signature table once and joining against it.
     * The checkpoint is registered with [[Checkpoints]] so the harness can
     * unpersist it once the consuming query's action completes. */
-  /** Round 20: shared per (session, dir) — the table is built identically
+  /** Round 20: shared per (context, dir) — the table is built identically
     * by [[hNeardupMinhash]] and by the componentLabels chain (via
     * neardupPairs), which previously each materialized their own copy.
     * At cluster scale this is the persisted per-doc signature table every
@@ -296,7 +270,7 @@ object LlmOps {
     * at that similarity the 16-band detection probability is 1-4e-8, so the
     * LSH result equals the oracle's brute-force pairs. */
   def hNeardupMinhash(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     shingleTable(s, dir)
     s.sql(
       """WITH sig AS (
@@ -373,7 +347,7 @@ object LlmOps {
     * batch×batch pairs end-to-end (planted dups sit at J≈0.95+, where
     * 16×4-band detection probability is 1-4e-8, so LSH equals brute). */
   def hDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """WITH batch AS (
         |  SELECT doc_id + 2000000 AS doc_id, lang,
@@ -486,7 +460,7 @@ object LlmOps {
   /** Brute n-gram Jaccard: each doc's most-similar neighbor within a
     * 50-doc subset (the all-pairs baseline the LSH query avoids). */
   def hJaccardSim(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT doc_id, split(text, ' ') AS tokens FROM documents WHERE doc_id < 50),
@@ -541,7 +515,7 @@ object LlmOps {
     * 16×8, ~427k for 32×4) with all 500 planted pairs found.
     * AnnRecallSpec keeps the exact all-pairs join as the recall yardstick. */
   def hNeardupEmbedding(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     // Round 20: the banded key table is checkpointed once — the LSH
     // projection is 32×12 hyperplane dot products PER VECTOR, and the
     // band self-join's two sides each re-inlined that whole chain (the
@@ -612,7 +586,7 @@ object LlmOps {
     * baseline every ANN variant is judged against. Query side is tiny ⇒
     * broadcast; per-partition ranking, one final shuffle for the window. */
   def hAnnBrute(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -681,7 +655,7 @@ object LlmOps {
     * sweeps configurations and records the recall/latency trade. */
   private[operators] def hAnnLshWith(s: SparkSession, dir: String,
                                      planes: Int = 8, nProbes: Int = 3): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       s"""WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -800,7 +774,7 @@ object LlmOps {
     * quality (mean angular distortion) of seed vs refined. */
   private[operators] def ivfCentroids(s: SparkSession, dir: String, refined: Boolean,
                                       nlist: Int = 16): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       s"""WITH base AS (
          |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -819,7 +793,7 @@ object LlmOps {
     * view), so both searches run the identical plan. */
   private def ivfSearch(s: SparkSession, dir: String, centn: String,
                         queryPred: String, nprobe: Int): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     s.sql(
       s"""WITH base AS (
          |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings_w),
@@ -883,7 +857,7 @@ object LlmOps {
     * does not lose recall vs the stale one on the h_ann_recall panel. */
   def ivfRetrainedCentroids(s: SparkSession, dir: String,
                             flagged: Seq[Long]): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     val flaggedList = if (flagged.isEmpty) "-1" else flagged.mkString(", ")
     s.sql(
@@ -995,7 +969,7 @@ object LlmOps {
     * prunes candidates BEFORE the cosine, so higher selectivity makes
     * the query cheaper, never broader. */
   def hAnnFiltered(s: SparkSession, dir: String): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(
       s"""WITH base AS (
@@ -1113,7 +1087,7 @@ object LlmOps {
     * over the full corpus is the point; a sampled truth set would audit a
     * different index. */
   def hAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(
       s"""WITH base AS (
@@ -1255,7 +1229,7 @@ object LlmOps {
     * corpus-sized exchange; the dominant-label rank and totals are
     * windows over the ≤ clusters×labels row table. */
   def hClusterPurity(s: SparkSession, dir: String): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(
       s"""WITH base AS (
@@ -1370,7 +1344,7 @@ object LlmOps {
       .createOrReplaceTempView("ivfpq_centn")
 
   def hIvfPqCodes(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(
       s"""WITH base AS (
@@ -1531,13 +1505,13 @@ object LlmOps {
     * corpus join (the index-build posture at cluster scale: write the
     * code table once, query it many times). Thin rows — 8 codes + one
     * 64-dim vector. Requires `ivfpq_centn` + `ivfpq_cb` registered.
-    * Round 20: [[Checkpoints.sharedTable]] per (session, dir) — search
+    * Round 20: [[Checkpoints.sharedTable]] per (context, dir) — search
     * and recall each rebuilt the identical code table per invocation; a
     * production IVF-PQ index is encoded once and served to every query,
     * so the shared lifecycle IS the deployment shape (the
     * componentLabels precedent). */
   private def registerIvfPqDb(s: SparkSession, dir: String): Unit = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     Checkpoints.sharedTable(s, s"ivfpq_db:$dir")(s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings_w),
@@ -1620,7 +1594,7 @@ object LlmOps {
          |  WHERE d.vec_id <> l.q_id)""".stripMargin
 
   def hIvfPqSearch(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     registerIvfPqCodebook(s, dir)
     registerIvfPqDb(s, dir)
@@ -1660,7 +1634,7 @@ object LlmOps {
     * rankings are WindowGroupLimit top-3 over the same scored rows —
     * candidate-set-sized, never corpus². */
   def hPqRecall(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     registerIvfPqCodebook(s, dir)
     registerIvfPqDb(s, dir)
@@ -1778,7 +1752,7 @@ object LlmOps {
        |  FROM dots d)""".stripMargin
 
   def hIvfStaleness(s: SparkSession, dir: String): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(ivfStalenessCtes +
       """
@@ -1813,7 +1787,7 @@ object LlmOps {
     * 1/1024-quantized space — cosine at milli precision is insensitive
     * to the quantization, and both engines replay it identically. */
   def hIvfRetrain(s: SparkSession, dir: String): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(ivfStalenessCtes.replace(
       // splice the stale-centroid per-dim join into the audit chain: the
@@ -1871,7 +1845,7 @@ object LlmOps {
     * form's censused 6). At 10⁹ vectors: one pass, KB-sized state, zero
     * joins on the data path. */
   def hIvfInsert(s: SparkSession, dir: String): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(ivfAssignCtes +
       """,
@@ -2177,7 +2151,7 @@ object LlmOps {
     * self-join, whose pair volume is Σ|cluster|² — bounded by k's growth,
     * never corpus². */
   def hSemDedup(s: SparkSession, dir: String): DataFrame = {
-    embedsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "embeddings")
     registerIvfPqCentroids(s, dir)
     s.sql(
       s"""WITH orig AS (
@@ -2273,7 +2247,7 @@ object LlmOps {
     * ratios ship as integer-scaled BIGINTs (`round(1e4*a/b)`), never as
     * `round(double, d)` whose tie handling differs across engines. */
   def hTextStats(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT lang, n_chars, text, split(text, ' ') AS tokens FROM documents)
@@ -2311,7 +2285,7 @@ object LlmOps {
     * once, not once per higher-order function (round-3 bench: 10.4 s for
     * the double-split form). */
   def hLangHeuristic(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT lang, split(text, ' ') AS tokens FROM documents),
@@ -2352,7 +2326,7 @@ object LlmOps {
     * argmax rank rides doc_id — the skew-free high-cardinality key —
     * and the matrix aggregate is ≤ (langs+1)² rows. */
   def hLangidConfusion(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, split(text, ' ') AS t FROM documents),
@@ -2440,7 +2414,7 @@ object LlmOps {
     * every aggregate an exact-integer sum — no order-dependent double
     * summation, no HUGEINT drift (every DuckDB sum cast to BIGINT). */
   def hTokenQuality(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT lang, n_chars,
@@ -2493,7 +2467,7 @@ object LlmOps {
     * shared-substring fingerprints, cross-engine checkable because both
     * engines agree on md5. */
   def hFingerprint(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH grams AS (
         |  SELECT doc_id,
@@ -2525,7 +2499,7 @@ object LlmOps {
     * absorbs the token skew) → per-lang top-k window over the already-tiny
     * (lang, token) counts. */
   def hVocabTopk(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT lang, explode(split(text, ' ')) AS token FROM documents),
@@ -2563,7 +2537,7 @@ object LlmOps {
     * Spark broadcasts, so tokenization itself is scan-local (no exchange
     * carries tokens; only the final per-lang aggregate shuffles). */
   def hTokenizeIds(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT lang, explode(split(text, ' ')) AS token FROM documents),
@@ -2618,7 +2592,7 @@ object LlmOps {
     * both engines share in [[hNeardupEmbedding]]); the only exchange is
     * the (label, bucket) accounting aggregate. */
   def hEmbedTruncate(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH base AS (
         |  SELECT vec_id, label, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2657,7 +2631,7 @@ object LlmOps {
     * bounds, clipped-row counts each side, and the winsorized mean
     * (×1e4, exact integer division). */
   def hWinsorize(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH q AS (
         |  SELECT lang,
@@ -2707,7 +2681,7 @@ object LlmOps {
     * to a model classifier). The per-doc window runs over ≤4 topic rows
     * per doc — aggregation-sized, not corpus-sized. */
   def hTaxonomyClassify(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH kw AS (
         |  SELECT * FROM VALUES
@@ -2766,7 +2740,7 @@ object LlmOps {
     * exact-cosine verification on candidates only. Per-label flagged/clean
     * counts — shuffle scales with candidates, never train×bench. */
   def hContamEmbedding(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH base AS (
         |  SELECT vec_id, label, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -2845,7 +2819,7 @@ object LlmOps {
     * Train/score split by doc_id % 3 — the same deterministic split rule
     * the dedup passes use. */
   def hBigramLm(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT doc_id, lang, split(text, ' ') AS t FROM documents),
         |big AS (
@@ -2909,7 +2883,7 @@ object LlmOps {
       |ORDER BY lang, bucket""".stripMargin
 
   def hBpePairs(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT lang, split(text, ' ') AS t FROM documents),
         |pairs AS (
@@ -3029,7 +3003,7 @@ object LlmOps {
     * corpus plants no true PII: per lang, how many docs were touched and
     * the net char delta. Scan-local regexp + exact-integer agg. */
   def hScrubRedact(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH red AS (
         |  SELECT lang, text,
@@ -3077,7 +3051,7 @@ object LlmOps {
     * build side — then one doc_id-keyed agg. Three exchanges total, all
     * on aggregation keys, no window over the corpus. */
   def hLmQuality(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH x AS (
         |  SELECT doc_id, lang, tk
@@ -3139,7 +3113,7 @@ object LlmOps {
     * tf side before the join. The final top-3 window runs over 50 docs,
     * not the corpus. */
   def hTfidf(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH x AS (
         |  SELECT doc_id, lang, tk
@@ -3194,8 +3168,7 @@ object LlmOps {
     * broadcast when one modality is small), and every output column is an
     * exact integer count. */
   def hModalityJoin(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
-    embeds(s, dir)
+    Tables.bind(s, dir, "documents", "embeddings")
     s.sql(
       """WITH j AS (
         |  SELECT d.doc_id, d.lang, e.vec_id
@@ -3227,7 +3200,7 @@ object LlmOps {
     * data-quality profile that drives min/max-length filters. One
     * scan-local agg; bucket arithmetic in exact integers. */
   def hLenHistogram(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """SELECT least(n_chars div 100, 9) AS bucket,
         |  count(*) AS n_docs,
@@ -3270,7 +3243,7 @@ object LlmOps {
     * assign, one cell-keyed exchange to join, control-table algebra
     * after. */
   def hKnnGraph(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     Checkpoints.track(s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
@@ -3390,7 +3363,7 @@ object LlmOps {
     * corpus-squared; ground truth is the one honest corpus pass per
     * panel ([[hAnnRecall]]'s stated-cost discipline). */
   def hHnswAudit(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     val assigned = Checkpoints.track(s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -3638,7 +3611,7 @@ object LlmOps {
     * costs exactly the vocabulary-sized exchange every term op here
     * pays. */
   def hDedupImpact(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     // replay ids are doc_id + 1e6; a source corpus whose real ids reach 1e6
     // would silently collide replay ids with real ids and corrupt the keeper
     // flags — same defensive require the ScaleStressBench replicator carries
@@ -3764,7 +3737,7 @@ object LlmOps {
     * where the estimate is the point); both collapse to per-lang rows
     * before the final lang-keyed join of two dimension-sized tables. */
   def hDupChao(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH ingest AS (
         |  SELECT doc_id, lang, text FROM documents
@@ -3854,7 +3827,7 @@ object LlmOps {
     * shape); the 3-row rung table cross-joins broadcast. Everything
     * after the explode is vocabulary-sized. */
   def hOovCurve(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH counts AS (
         |  SELECT lang, t AS term, count(*) AS n

@@ -35,7 +35,6 @@ object PipelineQueries {
     * equal keys, flushed at each key change. Memory is bounded by one
     * in-progress aggregate (≤ targetSize), never a whole group. */
   def gKplRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     import s.implicits._
     val packed = t(s, dir, "events")
       .select(col("event_type"), col("event_id").cast("long").as("event_id"),
@@ -144,7 +143,6 @@ object PipelineQueries {
     * Same physical shape as [[gKplRoundtrip]]: one shuffle on event_type,
     * per-partition streaming packer, memory bounded by one aggregate. */
   def gEhkRouting(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     import s.implicits._
     val packed = t(s, dir, "events")
       .select(col("event_type"), col("event_id").cast("long").as("event_id"),
@@ -205,11 +203,11 @@ object PipelineQueries {
     * on user_id and reuses that partitioning for both windows and the final
     * aggregate — the exact layout `session_window()` uses in streaming.
     * Times stay in epoch micros (BIGINT) end-to-end via the canonical
-    * `tus` column (Tables.registerEvents owns the physical-encoding
+    * `tus` column (Tables.tusColumn owns the physical-encoding
     * dispatch); integer micros are the cross-engine-stable
     * representation. */
   def gSessionWindow(s: SparkSession, dir: String): DataFrame = {
-    Tables.registerEvents(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH e AS (
         |  SELECT user_id, event_id, tus FROM events),
@@ -293,7 +291,7 @@ object PipelineQueries {
     * shard-partitioned window, so the replay parallelizes per shard — no
     * global sort. */
   def gLateData(s: SparkSession, dir: String): DataFrame = {
-    Tables.registerEvents(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH e AS (
         |  SELECT event_id, event_id % 4 AS shard, event_type,
@@ -328,7 +326,7 @@ object PipelineQueries {
     * shuffle, never a cross product; the same key layout the watermarked
     * streaming join maintains in its state store. */
   def gIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    Tables.registerEvents(s, dir)
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH e AS (
         |  SELECT event_id, user_id, event_type, tus FROM events),

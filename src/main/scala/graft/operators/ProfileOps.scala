@@ -4,7 +4,6 @@ import graft.operators.Checkpoints.MatOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Corpus- and embedding-space PROFILING operators — the audit tables a
   * training-data pipeline publishes about itself: per-source dataset
@@ -30,16 +29,6 @@ import graft.functions.GraftFunctions
   */
 object ProfileOps {
 
-  private def docs(s: SparkSession, dir: String): Unit = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-  }
-
-  private def embeds(s: SparkSession, dir: String): Unit = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "embeddings").createOrReplaceTempView("embeddings")
-  }
-
   // ============================================================ dataset card
 
   /** Per-source dataset card — the one-row-per-source summary a corpus
@@ -58,7 +47,7 @@ object ProfileOps {
     * no window partitions the corpus itself — at 100 TB the exchanges
     * carry (source)- and (source, lang)-sized rows only. */
   def hDatasetCard(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH base AS (
         |  SELECT source, lang, n_chars, text,
@@ -145,7 +134,7 @@ object ProfileOps {
     * sentinels m2 = −1 and centroid_cos_milli = −2000 (outside the valid
     * [−1000, 1000] range) for such labels instead. */
   def hEmbeddingDrift(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH qv AS (
         |  SELECT vec_id, CAST(label AS BIGINT) AS label, vec_id % 2 AS half,
@@ -256,7 +245,7 @@ object ProfileOps {
     * a scan-local comparison against the broadcast ≤|labels|-row median
     * table. */
   def hEmbedOutliers(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH n2 AS (
         |  SELECT vec_id, CAST(label AS BIGINT) AS label,
@@ -341,7 +330,7 @@ object ProfileOps {
     * (bucket) counts (≤ 256 rows) and a ≤ 64-row class rollup; the
     * corpus crosses one exchange, key-partitioned. */
   def hLshBalance(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     def planeLit(p: Int): String = (0 to 63).map { i =>
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$p|$i".getBytes("UTF-8"))
@@ -420,7 +409,7 @@ object ProfileOps {
     * rows of partials per task. The variance-share window runs over the
     * 64-row dim table. Same posture as [[hEmbeddingDrift]]. */
   def hDimVariance(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH qv AS (
         |  SELECT transform(embedding, x ->
@@ -489,7 +478,7 @@ object ProfileOps {
     * aggregation — domain-sized joins and sums. BIGINT-exact while
     * S·N < 9·10¹⁸ (S is sample-sized, so N can reach ~10¹² docs). */
   def hSamplingBias(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH base AS (
         |  SELECT lang, source,
@@ -599,7 +588,7 @@ object ProfileOps {
     * No window touches corpus-sized data; the two corpus exchanges are
     * the (label, dim) partials and the per-label intra sums. */
   def hClassMargin(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     // the ≤|labels|-row centroid table is consumed three times (intra +
     // both inter sides); checkpointing it keeps the corpus centroid
     // build to ONE pass (the small-intermediates rule)
@@ -708,7 +697,7 @@ object ProfileOps {
     * confusion aggregate. Ranking ties ride the pinned ANN idiom:
     * `round(cos, 4) DESC, seed id ASC` ([[LlmOps.hAnnBrute]]). */
   def hKnnClassify(s: SparkSession, dir: String): DataFrame = {
-    embeds(s, dir)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH base AS (
         |  SELECT vec_id, CAST(label AS BIGINT) AS label,

@@ -132,8 +132,7 @@ object RelationalQueries {
     * comparison in exact DECIMAL arithmetic — an avg would reintroduce
     * float-summation-order sensitivity at the boundary. */
   def bSubquery(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "customer", "orders")
     s.sql(
       """SELECT c_mktsegment, count(*) AS n_rich_active,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
@@ -372,7 +371,7 @@ object RelationalQueries {
     * shuffle/broadcast story is identical to `=`; the final sort pins
     * NULLS FIRST on both engines (DuckDB defaults NULLS LAST). */
   def cJoinNullsafe(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("events")
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH ev AS (
         |  SELECT event_id, nullif(event_type, 'error') AS k, value FROM events),
@@ -448,7 +447,7 @@ object RelationalQueries {
     * the sketch path at scale is `approx_percentile` (same shape as
     * d_agg_approx's tolerance contract). */
   def dPercentile(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     s.sql(
       """SELECT l_returnflag,
         |  CAST(round(1e4 * percentile(l_quantity, 0.25)) AS BIGINT) AS p25_x1e4,
@@ -479,7 +478,7 @@ object RelationalQueries {
     * mergeable partials, no sort — with the exact percentile kept only as
     * the verification yardstick. */
   def dApproxQuantile(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     s.sql(
       """SELECT l_returnflag,
         |  CAST(round(1e4 * percentile(l_quantity, 0.5)) AS BIGINT) AS exact_p50_x1e4,
@@ -540,7 +539,7 @@ object RelationalQueries {
 
   /** D: explicit GROUPING SETS via SQL. */
   def dGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     s.sql(
       """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
         |  COALESCE(o_orderpriority, 'ALL') AS priority,
@@ -618,7 +617,7 @@ object RelationalQueries {
   /** E: NTILE — balance quartiles within each market segment (equi-depth
     * bucketing, the window form of a percentile cut). */
   def eWindowNtile(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "customer")
     s.sql(
       """SELECT c_mktsegment, c_custkey,
         |  CAST(ntile(4) OVER (PARTITION BY c_mktsegment
@@ -641,7 +640,7 @@ object RelationalQueries {
     * integers, so the doubles are bit-identical cross-engine; rounding to
     * 6 dp just keeps the output stable against display formatting. */
   def eWindowDist(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "customer")
     s.sql(
       """SELECT c_mktsegment, c_custkey,
         |  round(percent_rank() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal), 6) AS pr,
@@ -663,7 +662,7 @@ object RelationalQueries {
     * frame is spelled out — the classic window-function footgun, identical
     * in both engines once explicit. */
   def eWindowFirstLast(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "part").createOrReplaceTempView("part")
+    Tables.bind(s, dir, "part")
     s.sql(
       """SELECT p_brand, p_partkey,
         |  first_value(p_partkey) OVER w AS cheapest_key,
@@ -693,7 +692,7 @@ object RelationalQueries {
     * the profile pass a curation pipeline runs before choosing filter
     * thresholds (no sort, no quantile state, partial-agg friendly). */
   def dHistogram(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     s.sql(
       """SELECT CAST(floor(l_extendedprice / 5000.0d) AS BIGINT) AS bucket,
         |  count(*) AS n,
@@ -731,7 +730,7 @@ object RelationalQueries {
     * scan ever touches corpus-sized data. The mean uses DECIMAL(38,0)/
     * HUGEINT products, BIGINT-safe past 100 TB. */
   def dHistogramEqdepth(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     // The cents histogram feeds three consumers (class rollup, within-class
     // cumulative, bucket stats); as a CTE Spark re-inlines it into each —
     // three corpus scans + three corpus-wide aggregates (9 exchanges
@@ -800,7 +799,7 @@ object RelationalQueries {
 
   /** E: top-3 parts by retail price per brand (dense_rank; rank+row_number too). */
   def eWindowRank(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "part").createOrReplaceTempView("part")
+    Tables.bind(s, dir, "part")
     s.sql(
       """SELECT p_brand, p_partkey, CAST(p_retailprice AS DOUBLE) AS price, CAST(rnk AS BIGINT) AS rnk
         |FROM (
@@ -822,7 +821,7 @@ object RelationalQueries {
 
   /** E: lag/lead — order-to-order price delta per customer. */
   def eWindowLag(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     s.sql(
       """SELECT o_custkey, o_orderkey,
         |  o_totalprice - lag(o_totalprice, 1, 0.0) OVER w AS delta_prev,
@@ -844,7 +843,7 @@ object RelationalQueries {
 
   /** E: running-sum frame (ROWS UNBOUNDED PRECEDING). */
   def eWindowFrame(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     s.sql(
       """SELECT o_custkey, o_orderkey,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -871,7 +870,7 @@ object RelationalQueries {
     * unpartitioned form moved all rows to one partition — the textbook
     * global-window scale killer, flagged in VERDICT r4). */
   def eWindowRange(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "part").createOrReplaceTempView("part")
+    Tables.bind(s, dir, "part")
     s.sql(
       """SELECT p_brand, p_partkey, p_size,
         |  count(*) OVER (PARTITION BY p_brand ORDER BY p_size
@@ -918,7 +917,7 @@ object RelationalQueries {
     * pagination should be keyset-based (WHERE key > last_seen ORDER BY
     * key LIMIT n) — which the same plan shape serves with pushdown. */
   def fLimitOffset(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "customer")
     s.sql(
       """SELECT c_custkey, c_mktsegment,
         |  CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal
@@ -950,7 +949,7 @@ object RelationalQueries {
     * row-value `(a,b) > (x,y)` cannot express it — on the EXACT decimal
     * column, never the display-cast double. */
   def fKeysetPage(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "customer")
     s.sql(
       """WITH b AS (
         |  SELECT c_acctbal AS b_bal, c_custkey AS b_key
@@ -976,8 +975,7 @@ object RelationalQueries {
     * exercises; the spec pins all three hints to their operators and
     * their results to each other. */
   def cJoinHints(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
-    t(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "orders", "customer")
     s.sql(
       """SELECT /*+ SHUFFLE_HASH(c) */ c.c_mktsegment,
         |  count(*) AS n_orders,
@@ -1000,8 +998,7 @@ object RelationalQueries {
     * region), which is the discipline listagg needs at scale — an
     * unbounded listagg materializes a group-sized string per group. */
   def dListagg(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "nation").createOrReplaceTempView("nation")
-    t(s, dir, "region").createOrReplaceTempView("region")
+    Tables.bind(s, dir, "nation", "region")
     s.sql(
       """SELECT r.r_name,
         |  count(*) AS n_nations,
@@ -1026,7 +1023,7 @@ object RelationalQueries {
     * order status; DuckDB reproduces the same counts via its own
     * TRY_CAST and guard predicates. */
   def f2Try(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.bind(s, dir, "orders")
     s.sql(
       """SELECT o_orderstatus,
         |  count(*) AS n,
@@ -1252,7 +1249,7 @@ object RelationalQueries {
     * is all plain types — variant never crosses the sink boundary, so any
     * reader (including the DuckDB oracle) consumes it. */
   def f2Variant(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("events")
+    Tables.bind(s, dir, "events")
     s.sql(
       """WITH v AS (
         |  SELECT event_type, parse_json(props) AS pv,
@@ -1347,7 +1344,7 @@ object RelationalQueries {
     * label-propagation in TrainingOps works; this is the declarative form
     * now expressible in pure SQL on both engines. */
   def dRecursiveCte(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "part").createOrReplaceTempView("part")
+    Tables.bind(s, dir, "part")
     s.sql(
       """WITH RECURSIVE h(p_partkey, root, depth) AS (
         |  SELECT p_partkey, p_partkey, 0 FROM part WHERE p_partkey < 8
@@ -1380,8 +1377,7 @@ object RelationalQueries {
     * nationkey — never a per-nation rescan of the table, which is the
     * difference between O(dims·corpus) and O(corpus) at 100 TB. */
   def dLateralTopn(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "nation").createOrReplaceTempView("nation")
-    t(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.bind(s, dir, "nation", "customer")
     s.sql(
       """SELECT n.n_name, l.c_custkey, l.bal
         |FROM nation n JOIN LATERAL (
@@ -1419,9 +1415,7 @@ object RelationalQueries {
     * naive nested-loop translation would do — is O(corpus²) at 100 TB;
     * the decorrelated plan is three co-partitioned passes. */
   def q21Waiting(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "orders", "supplier", "nation").foreach { n =>
-      t(s, dir, n).createOrReplaceTempView(n)
-    }
+    Tables.bind(s, dir, "lineitem", "orders", "supplier", "nation")
     s.sql(q21Body(spark = true))
   }
 
@@ -1590,7 +1584,7 @@ object RelationalQueries {
     * aggregate is 12 rows with map-side partials carrying two decimal
     * sums. */
   def q14Promo(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part")
     s.sql(
       """WITH m AS (
         |  SELECT CAST(month(l_shipdate) AS BIGINT) AS mth,
@@ -1633,7 +1627,7 @@ object RelationalQueries {
     * AQE-shuffled) equi-join plus a 1-row aggregate — a naive plan that
     * treats the OR as a join condition goes cartesian. */
   def q19Disjunct(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part")
     s.sql(q19Body)
   }
 
@@ -1659,7 +1653,7 @@ object RelationalQueries {
     * derivation aggregates the same quarter-pruned scan, never the full
     * corpus; ties return deterministically (ORDER BY supplier key). */
   def q15TopSupplier(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "supplier").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "supplier")
     s.sql(
       """WITH revenue AS (
         |  SELECT l_suppkey AS supplier_no,
@@ -1702,7 +1696,7 @@ object RelationalQueries {
     * (custkey ⋈ o_custkey); the AVG is a 1-row aggregate broadcast into
     * a scan-local filter; the result is ≤5 rows. */
   def q22GlobalSales(s: SparkSession, dir: String): DataFrame = {
-    Seq("customer", "orders").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "customer", "orders")
     s.sql(q22Body(spark = true))
   }
 
@@ -1732,7 +1726,7 @@ object RelationalQueries {
     * is the query whose cost is set entirely by how much the scan skips —
     * the plan pin asserts the pushdown actually happened. */
   def q6Forecast(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.bind(s, dir, "lineitem")
     s.sql(q6Body)
   }
 
@@ -1756,7 +1750,7 @@ object RelationalQueries {
     * columns ride the orders side so the CASE needs no extra join. Exact:
     * the counts are integer CASE sums cast BIGINT on both engines. */
   def q12LateLines(s: SparkSession, dir: String): DataFrame = {
-    Seq("orders", "lineitem").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "orders", "lineitem")
     s.sql(q12Body)
   }
 
@@ -1782,7 +1776,7 @@ object RelationalQueries {
     * join and the custkey aggregate share a partitioning — one shuffle
     * feeds both. */
   def q13CustDist(s: SparkSession, dir: String): DataFrame = {
-    Seq("customer", "orders").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "customer", "orders")
     s.sql(q13Body)
   }
 
@@ -1809,7 +1803,7 @@ object RelationalQueries {
     * the full corpus. avg_yearly divides two identical exact doubles — same
     * result on both engines. */
   def q17SmallQty(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part")
     s.sql(q17Body)
   }
 
@@ -1842,8 +1836,7 @@ object RelationalQueries {
     * same EU-pruned slice (one definition, no drift). Exact DECIMAL min;
     * full ORDER BY so the LIMIT is deterministic under cost ties. */
   def q2MinCost(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part", "supplier", "nation", "region")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part", "supplier", "nation", "region")
     // The offer table has two consumers (the outer join and the correlated
     // min); Spark re-inlines CTEs, so without a checkpoint the EU-pruned
     // lineitem scan + aggregate would run twice. The checkpoint is
@@ -1904,8 +1897,7 @@ object RelationalQueries {
     * cross-multiplied in exact DECIMAL (`val·cnt·2 > total·3`) so the
     * fraction never divides. The supplier⋈nation side broadcasts. */
   def q11ImportantStock(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "supplier", "nation")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "supplier", "nation")
     s.sql(q11Body)
   }
 
@@ -1933,8 +1925,7 @@ object RelationalQueries {
     * is Spark's two-phase partial-distinct aggregate, shuffled once on the
     * (brand, type, size) group key. */
   def q16SupplierCnt(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part", "supplier")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part", "supplier")
     s.sql(q16Body)
   }
 
@@ -1960,8 +1951,7 @@ object RelationalQueries {
     * happens on two already-exact doubles, so both engines divide the
     * same bits. */
   def q8MarketShare(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part", "supplier", "nation", "region", "orders", "customer")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part", "supplier", "nation", "region", "orders", "customer")
     s.sql(q8Body)
   }
 
@@ -2001,8 +1991,7 @@ object RelationalQueries {
     * and nation broadcast; orders joins on orderkey to supply the year.
     * All profit arithmetic is exact DECIMAL until the final cast. */
   def q9Profit(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part", "supplier", "nation", "orders")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part", "supplier", "nation", "orders")
     s.sql(q9Body)
   }
 
@@ -2034,8 +2023,7 @@ object RelationalQueries {
     * fact shuffle is the (part, supplier) aggregate; the window reuses
     * its partitioning modulo the partkey-only re-hash. */
   def q20DominantSupplier(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "part", "supplier")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+    Tables.bind(s, dir, "lineitem", "part", "supplier")
     s.sql(q20Body)
   }
 

@@ -278,10 +278,9 @@ object ScaleOps {
     * an ndv-sized aggregate — the same two-level shape `ANALYZE` runs.
     * The profiles union AFTER aggregation: two tiny 1-row tables. */
   def aSkewProfile(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "events").createOrReplaceTempView("events_raw")
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
+    Tables.bind(s, dir, "events", "documents")
     s.sql(
-      """WITH f1 AS (SELECT user_id AS k, count(*) AS c FROM events_raw GROUP BY user_id),
+      """WITH f1 AS (SELECT user_id AS k, count(*) AS c FROM events GROUP BY user_id),
         |p1 AS (
         |  SELECT 'events.user_id' AS key_name, count(*) AS ndv,
         |    CAST(sum(c) AS BIGINT) AS n_rows, CAST(max(c) AS BIGINT) AS max_mass

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** SURVEY.md §2.2 group H, curation half: the corpus-preparation operators a
   * training-data pipeline runs after dedup — benchmark decontamination,
@@ -36,20 +35,6 @@ import graft.functions.GraftFunctions
   */
 object TrainingOps {
 
-  private def docs(s: SparkSession, dir: String): Unit = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "documents").createOrReplaceTempView("documents")
-  }
-
-  /** Register `documents_w` — the conditionally widened scan
-    * ([[Checkpoints.widen]]) for CPU-heavy doc-local projections whose
-    * first aggregate keys on doc_id or a bounded domain; see the widen
-    * scaladoc for the contract (NOT for gram-frequency chains). */
-  private def docsWide(s: SparkSession, dir: String): Unit = {
-    docs(s, dir)
-    Checkpoints.widen(s.table("documents")).createOrReplaceTempView("documents_w")
-  }
-
   // ==================================================== decontamination
 
   /** Benchmark decontamination: flag training documents sharing any word
@@ -64,7 +49,7 @@ object TrainingOps {
     * in the DISTINCT hash aggregate, where map-side partial agg collapses
     * the within-doc duplicates before the exchange. */
   def hDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT doc_id, lang, split(text, ' ') AS t FROM documents),
         |gr AS (
@@ -113,7 +98,7 @@ object TrainingOps {
     * (original + first-word-dropped mutation) and its word-3-gram LSH
     * candidate pairs at Jaccard ≥ 0.6. Returns (a_id, b_id) edges. */
   private def neardupPairs(s: SparkSession, dir: String): DataFrame = {
-    LlmOps.shingleTable(s, dir) // shared per (session, dir); registered as `sh`
+    LlmOps.shingleTable(s, dir) // shared per (context, dir); registered as `sh`
     s.sql(
       """WITH sig AS (
         |  SELECT doc_id, shingles,
@@ -157,7 +142,7 @@ object TrainingOps {
   /** Converged (n → component-min label) assignment over the LSH candidate
     * graph — the propagation loop shared by [[hDupClusters]] (histogram
     * view), [[hDedupSurvivors]] (action view) and [[hCurationFunnel]]
-    * (stage-1 losers). Cached per (session, dir) via
+    * (stage-1 losers). Cached per (context, dir) via
     * [[Checkpoints.sharedTable]]: three declared queries read this one
     * table, and at cluster scale it is a written-once label table every
     * downstream job scans — rebuilding the LSH + propagation chain per
@@ -209,7 +194,7 @@ object TrainingOps {
   }
 
   def hDupClusters(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     componentLabels(s, dir)
       .groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
@@ -224,7 +209,7 @@ object TrainingOps {
     * Lang resolves through the original document (replay ids are
     * originals + 1e6, same text family ⇒ same lang). */
   def hDedupSurvivors(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     componentLabels(s, dir).createOrReplaceTempView("cc")
     s.sql(
       """SELECT d.lang,
@@ -345,7 +330,7 @@ object TrainingOps {
     * id-equi against the label table plus one broadcast-sized docs probe
     * — nothing beyond the label table's own size crosses an exchange. */
   def hSurvivorProvenance(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     componentLabels(s, dir).createOrReplaceTempView("cc_prov")
     s.sql(
       """WITH gens AS (
@@ -405,7 +390,7 @@ object TrainingOps {
     * already-verified operator's, so the funnel hash-matching DuckDB
     * re-proves the stages COMPOSE, not just that they run alone. */
   def hCurationFunnel(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     // losers = docs another cluster member out-ranks (n <> label); the
     // propagation runs over the replay-doubled corpus, but only original
     // ids (< 1e6) appear in the train funnel
@@ -548,7 +533,7 @@ object TrainingOps {
     * partitioning, or what else is in the corpus. Reported per (lang, split)
     * so stratification skew is visible. */
   def hSampleSplit(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """SELECT lang,
         |  CASE WHEN substr(md5(text), 1, 2) < 'cd' THEN 'train'
@@ -617,7 +602,7 @@ object TrainingOps {
     * hits = Σ per-doc in-train gram counts (0 for clean docs,
     * matching the old LEFT JOIN's coalesce). */
   def hSplitLeakage(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH corpus AS (
         |  SELECT doc_id, lang, text FROM documents
@@ -721,7 +706,7 @@ object TrainingOps {
     * map-reduce; the exchange carries 4×|langs| partial rows per task.
     * All integer arithmetic (`ceil(a/b) = (a + b − 1) DIV b`). */
   def hPaddingWaste(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH d AS (
         |  SELECT lang, CAST(size(split(text, ' ')) AS BIGINT) AS tok
@@ -758,7 +743,7 @@ object TrainingOps {
       |ORDER BY ctx, lang""".stripMargin
 
   def hSeqPacking(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH d AS (
         |  SELECT doc_id, lang, doc_id % 8 AS grp, size(split(text, ' ')) AS tok
@@ -817,7 +802,7 @@ object TrainingOps {
     * 100 TB this is exactly how a sorted loader plans its epochs: one
     * sort-within-language pass, batch ids by position. */
   def hBatchBucketing(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH d AS (
         |  SELECT lang, CAST(size(split(text, ' ')) AS BIGINT) AS tok,
@@ -898,7 +883,7 @@ object TrainingOps {
     * exceed the corpus token count by exactly the re-consumed boundary
     * windows — a cross-engine slice-boundary check. */
   def hChunking(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     chunkingDf(s)
   }
 
@@ -966,7 +951,7 @@ object TrainingOps {
     * is a scan-local CASE over the join output feeding a (lang, status)
     * aggregate with map-side partials. */
   def hCorpusDiff(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH v1 AS (
         |  SELECT doc_id, lang, fnv64a(text) AS h FROM documents),
@@ -1027,7 +1012,7 @@ object TrainingOps {
     * doc_id-keyed max. Both aggregates key on doc_id so AQE coalesces; no
     * all-pairs or per-corpus state. */
   def hRepetition(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT doc_id, lang, split(text, ' ') AS t FROM documents),
         |base AS (
@@ -1076,7 +1061,7 @@ object TrainingOps {
     * could early-prune via a pre-aggregated count join, not needed while
     * per-domain counts fit a partition). */
   def hDomainCap(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(hDomainCapSql)
   }
 
@@ -1107,7 +1092,7 @@ object TrainingOps {
     * (lang, gram) so map-side partial aggs collapse within-partition
     * repeats, and the per-doc rollup reuses the doc_id-keyed layout. */
   def hDupNgrams(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT doc_id, lang, split(text, ' ') AS t FROM documents),
         |gr AS (
@@ -1183,12 +1168,11 @@ object TrainingOps {
     * finish. Pure integer arithmetic (milli via DIV); measured K=40
     * replication: 40× docs → ~3.5× wall. */
   def hDocRepetition(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
     // round 20: the (n, position) md5 explode is the suite's heaviest
     // scan-local CPU and the first aggregate keys on doc_id — widening
     // the single-split local scan spreads the hash work across cores
     // without inflating the exchange (see Checkpoints.widen's contract)
-    Checkpoints.widen(s.table("documents")).createOrReplaceTempView("documents_w")
+    Checkpoints.bindWide(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, split(text, ' ') AS t,
@@ -1285,7 +1269,7 @@ object TrainingOps {
     * shingle table ([[LlmOps.shingleTable]]), token-position grams are
     * cheaper to recompute than to keep. */
   def hDedupSpans(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (SELECT doc_id, lang, split(text, ' ') AS t FROM documents),
         |pos AS (
@@ -1365,7 +1349,7 @@ object TrainingOps {
     * rate table is domains-sized and broadcast; acceptance is scan-local.
     * Nothing shuffles the corpus itself. */
   def hDomainMix(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH counts AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
         |w AS (SELECT lang, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS rw FROM counts),
@@ -1408,8 +1392,7 @@ object TrainingOps {
     * broadcast; assignment is scan-local; only the 128-key histogram
     * aggregate shuffles. */
   def hPqCodes(s: SparkSession, dir: String): DataFrame = {
-    LlmOps.embeds(s, dir)
-    GraftFunctions.registerAll(s)
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -1461,8 +1444,7 @@ object TrainingOps {
     * every element through the expression interpreter. No shuffle before
     * the label aggregate. */
   def hEmbedQuantize(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
-    Tables.load(s, dir, "embeddings").createOrReplaceTempView("embeddings")
+    Tables.bind(s, dir, "embeddings")
     s.sql(
       """WITH q AS (
         |  SELECT label, int8_quant_stats(CAST(embedding AS ARRAY<DOUBLE>)) AS st
@@ -1504,7 +1486,7 @@ object TrainingOps {
     * recomputes the rollup from the FULL corpus; equality proves the
     * maintenance algebra loses nothing. */
   def hRollupIncremental(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH standing AS (
         |  SELECT lang, count(*) AS n_docs,
@@ -1552,7 +1534,7 @@ object TrainingOps {
     * that is the difference between shuffling ~kilobytes and sorting the
     * corpus. */
   def hStratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH r AS (
         |  SELECT lang, source, doc_id, n_chars,
@@ -1612,7 +1594,7 @@ object TrainingOps {
     * both count in one pass). Nothing corpus-sized crosses a second
     * exchange; the result is langs-many rows. */
   def hNgramNovelty(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, split(text, ' ') AS t FROM documents),
@@ -1679,7 +1661,7 @@ object TrainingOps {
     * is the one-time index build, exactly the term the per-run form pays
     * repeatedly. */
   def hNoveltyIncremental(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, split(text, ' ') AS t FROM documents
@@ -1797,7 +1779,7 @@ object TrainingOps {
     * Corpus-sized exchanges: the stats aggregate and the bucket-local
     * window — nothing corpus-sized ever occupies one partition. */
   def hTokenBudgetMix(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     import org.apache.spark.sql.expressions.Window
     val db = s.table("documents").select(
       col("lang"), col("doc_id"),
@@ -1906,7 +1888,7 @@ object TrainingOps {
     * per-lang quota rank windows over score-sized rows (one row per
     * doc, not per gram). */
   def hImportanceSample(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, source IN ('src1', 'src2', 'src3', 'src4') AS tgt,
@@ -2040,7 +2022,7 @@ object TrainingOps {
     //     md5-per-position start-flag array is the chain's CPU wall and
     //     the aggregate keys on the bounded lang domain, so round-robin
     //     widening spreads the hash work without inflating the exchange.
-    docsWide(s, dir)
+    Checkpoints.bindWide(s, dir, "documents")
     s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, split(text, ' ') AS t FROM documents_w),
@@ -2200,7 +2182,7 @@ object TrainingOps {
     * SHUFFLE_HASH gram join is 40 % faster isolated but OOMs at K=40
     * (non-spilling build side) — the sort-merge plan is deliberate. */
   def hMinhashCalibration(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """WITH corpus AS (
         |  SELECT doc_id, lang, text FROM documents
@@ -2372,7 +2354,7 @@ object TrainingOps {
     * shares a gram, so the rewrite is exact — the h_dup_clusters oracle
     * argument). */
   def hSimjoinPrefix(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     Checkpoints.track(s.sql(
       """SELECT doc_id, shingles, CAST(size(shingles) AS BIGINT) AS n
         |FROM (
@@ -2486,7 +2468,7 @@ object TrainingOps {
     * aggregate over that prefix-cardinality-sized table. Two exchanges
     * total at any volume, nothing pairwise. */
   def hPrefixCache(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH p AS (
         |  SELECT lang,
@@ -2567,7 +2549,7 @@ object TrainingOps {
     * across the session's defaultParallelism (an unsized hint AQE-
     * coalesces right back to one partition — tiny bytes, big CPU). */
   private def bandShingles(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     val width = s.sparkContext.defaultParallelism
     val sh = Checkpoints.track(s.sql(
       s"""WITH corpus AS (
@@ -2747,7 +2729,7 @@ object TrainingOps {
     * shard-table-sized, never corpus-sized. At 10⁹ docs: one pass, two
     * bounded exchanges, zero joins, zero sorts over data. */
   def hEpochShuffle(s: SparkSession, dir: String): DataFrame = {
-    docs(s, dir)
+    Tables.bind(s, dir, "documents")
     s.sql(
       """WITH assigned AS (
         |  SELECT d.doc_id, d.source, d.n_chars, e.ep,

@@ -4,11 +4,11 @@ import scala.collection.mutable
 
 import graft.kernel.{KinesisEntry, KplPacker}
 
-/** One flushed `PutRecords` request: the packed entries plus, per entry, the
-  * indices of the source records that landed in it (the reference's
-  * slot-routing map, kinesis_writer.go:34,69-73) so per-entry failures can
-  * be acked/requeued per source record. */
-final case class PutRequest(entries: Vector[KinesisEntry], slotSources: Map[Int, Vector[Long]])
+/** One flushed `PutRecords` request: the packed entries. The reference
+  * also maps each entry to its source records (kinesis_writer.go:34,69-73)
+  * to requeue them one by one; here a failed entry fails the whole task
+  * (`StreamPipeline.deliverBatch`), so nothing needs that map. */
+final case class PutRequest(entries: Vector[KinesisEntry])
 
 /** Request-level batching on top of [[KplPacker]] — the engine's analogue of
   * the reference's `KinesisBatchWriter` (kinesis_writer.go:52-205) minus the
@@ -28,31 +28,29 @@ final class BatchWriter(
     maxBytes: Int = BatchWriter.MaxBatchBytes,
     targetSize: Int = KplPacker.DefaultTargetSize) {
 
-  private var packer = new KplPacker(targetSize)
-  private val sources = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
+  private val packer = new KplPacker(targetSize)
   private val flushed = mutable.ArrayBuffer.empty[PutRequest]
   private var dropped = 0L
 
   def droppedCount: Long = dropped
 
-  /** Add one source record (recordId is caller bookkeeping, e.g. row index
-    * or message id hash). Oversize bodies are dropped, mirroring the
+  /** Add one source record. Oversize bodies are dropped, mirroring the
     * reference's silent `continue`. A non-empty `ehk` threads through to the
     * packer's explicit-hash-key table for shard-targeted routing. */
-  def add(recordId: Long, body: Array[Byte], key: String = "", ehk: String = ""): Unit = {
+  def add(body: Array[Byte], key: String = "", ehk: String = ""): Unit = {
     if (body.length > BatchWriter.MaxMessageSize) { dropped += 1; return }
     if (packer.count >= maxRecords ||
         packer.size + body.length + key.length + ehk.length > maxBytes) flushCurrent()
-    val slot = packer.put(body, key, ehk)
-    sources.getOrElseUpdate(slot, mutable.ArrayBuffer.empty) += recordId
+    packer.put(body, key, ehk)
   }
+
+  /** The former form with a caller record id, which is ignored; the
+    * perfbench harness still calls it. */
+  def add(recordId: Long, body: Array[Byte], key: String): Unit = add(body, key)
 
   private def flushCurrent(): Unit = {
     val entries = packer.drain()
-    if (entries.nonEmpty) {
-      flushed += PutRequest(entries, sources.map { case (k, v) => k -> v.toVector }.toMap)
-    }
-    sources.clear()
+    if (entries.nonEmpty) flushed += PutRequest(entries)
   }
 
   /** Flush the in-progress request and return every completed request. */

@@ -71,11 +71,7 @@ object StreamPipeline {
                    streamName: String): Unit = {
     batch.select("body").foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       val writer = new BatchWriter()
-      var i = 0L
-      rows.foreach { r =>
-        writer.add(i, r.getAs[Array[Byte]](0))
-        i += 1
-      }
+      rows.foreach(r => writer.add(r.getAs[Array[Byte]](0)))
       val retrying = transport match {
         case rt: RetryingTransport => rt
         case other => new RetryingTransport(other)

@@ -2,13 +2,14 @@
   * Catalyst extensions can use `private[sql]` Spark internals
   * (ExpressionUtils, AbstractDataType, …) — the standard pattern for
   * Spark extension libraries. Keep this layer thin: only expression
-  * definitions and Column/Expression plumbing; all engine logic stays in
-  * the `graft.*` packages.
+  * definitions, Column/Expression plumbing and session/plan factories;
+  * all engine logic stays in the `graft.*` packages.
   */
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 object Bridge {
@@ -17,4 +18,14 @@ object Bridge {
 
   /** Unwrap a Column to its Catalyst expression (classic sessions). */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A copy of `s` with its own temp views; runtime conf, functions and
+    * query-execution listeners are copied from `s`. */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df` as a frame of session `s` (same SparkContext). It carries `df`'s
+    * analyzed plan, so nothing in it re-resolves against `s`'s views. */
+  def rebind(s: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -36,7 +34,7 @@ class DateCanonSpec extends SparkSuite {
   private def writeFixture(table: String, c: String, encode: String): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(s"graft-datecanon-$table-$encode").toString
+    val dir = SparkSpec.tempDir(s"graft-datecanon-$table-$encode").toString
     val base = days.zipWithIndex
       .map { case (d, i) => (i.toLong, d) }
       .toDF("k", "day")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
@@ -26,7 +24,7 @@ class EventTimeCanonSpec extends SparkSuite {
   private def writeFixture(encode: String): String = {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory(s"graft-tscanon-$encode").toString
+    val dir = SparkSpec.tempDir(s"graft-tscanon-$encode").toString
     val base = micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us) }
       .toDF("event_id", "us")

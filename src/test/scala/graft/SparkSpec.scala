@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +16,25 @@ object SparkSpec {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  // Hadoop runs shutdown hooks by priority, highest first. Spark stops its
+  // contexts and streaming queries at 40, so at 20 nothing writes to the
+  // dirs any more.
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+    () => tempDirs.forEach { d =>
+      if (Files.exists(d)) scala.util.Using.resource(Files.walk(d)) {
+        _.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      }
+    }, 20)
+
+  /** A new temp dir, deleted with everything in it when the JVM exits. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
 }
 
 abstract class SparkSuite extends AnyFunSuite {

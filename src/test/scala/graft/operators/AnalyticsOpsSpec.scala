@@ -146,7 +146,7 @@ class AnalyticsOpsSpec extends SparkSuite {
       (2160L, day2), (2700L, day2 + 60000000L))
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-concur").toString
+    val dir = graft.SparkSpec.tempDir("graft-concur").toString
     planted.toDF("event_id", "us")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")

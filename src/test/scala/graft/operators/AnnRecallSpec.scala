@@ -76,7 +76,7 @@ class AnnRecallSpec extends SparkSuite {
     // pin the embeddings view to THIS dir before computing the baseline —
     // a previous test may have registered it at another scale factor, and
     // a brute set over the wrong corpus silently zeroes every recall
-    LlmOps.embeds(spark, dir)
+    graft.Tables.bind(spark, dir, "embeddings")
     val brute = topk(spark.sql(
       s"""WITH base AS (
          |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -134,7 +134,7 @@ class AnnRecallSpec extends SparkSuite {
     // as in the quantizer-quality test above.
     val dir = "/root/testdata/sf0.01"
     val pred = "vec_id >= 400"
-    LlmOps.embeds(spark, dir) // pin the view before the baseline (see above)
+    graft.Tables.bind(spark, dir, "embeddings") // pin the view before the baseline (see above)
     val brute = topk(spark.sql(
       s"""WITH base AS (
          |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -193,7 +193,7 @@ class AnnRecallSpec extends SparkSuite {
     // re-measured on the same out-of-sample panel as the quantizer test.
     val dir = "/root/testdata/sf0.01"
     val pred = "vec_id >= 400"
-    LlmOps.embeds(spark, dir) // pin the view before the baseline (see above)
+    graft.Tables.bind(spark, dir, "embeddings") // pin the view before the baseline (see above)
     val brute = topk(spark.sql(
       s"""WITH base AS (
          |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),

@@ -24,7 +24,7 @@ class CompactionExecuteSpec extends SparkSuite {
       .toMap
     assert(monthPlan.size >= 2, s"month $month must need more than one rewrite bin")
 
-    val out = java.nio.file.Files.createTempDirectory("compact-exec").toString
+    val out = graft.SparkSpec.tempDir("compact-exec").toString
     val nBins = AnalyticsOps.executeCompactionMonth(spark, dir, month, out)
     assert(nBins === monthPlan.size.toLong, "executor must produce the planned bin count")
 
@@ -60,7 +60,7 @@ class CompactionExecuteSpec extends SparkSuite {
   }
 
   test("an empty month fails loudly, not with an NPE from a null max(bin)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-compact-empty").toString
+    val out = graft.SparkSpec.tempDir("graft-compact-empty").toString
     val e = intercept[IllegalArgumentException] {
       graft.operators.AnalyticsOps.executeCompactionMonth(
         spark, graft.SparkSpec.sf0001, "1899-01-01", out)

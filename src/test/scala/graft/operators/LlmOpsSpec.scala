@@ -51,7 +51,7 @@ class LlmOpsSpec extends SparkSuite {
       "héllo wörld — ünïcode: ночь, 東京, ™ and some ascii tail to cross 32 bytes",
       "plain ascii body under one frame",
       "πρόβλημα " * 9)
-    val dir = java.nio.file.Files.createTempDirectory("mm-nonascii").toString
+    val dir = graft.SparkSpec.tempDir("mm-nonascii").toString
     texts.zipWithIndex
       .map { case (t, i) => (i.toLong, t, "xx", "fixture", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -106,7 +106,7 @@ class ProfileOpsSpec extends SparkSuite {
   test("h_embedding_drift: a single-parity label emits the documented sentinels, not NULL/zero-div") {
     // one version half empty (all vec_ids even) — there is no drift to
     // measure; the contract is m2 = -1 and centroid_cos_milli = -2000
-    val dir = java.nio.file.Files.createTempDirectory("drift-degenerate").toString
+    val dir = graft.SparkSpec.tempDir("drift-degenerate").toString
     Tables.load(spark, sf, "embeddings")
       .filter("vec_id % 2 = 0")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

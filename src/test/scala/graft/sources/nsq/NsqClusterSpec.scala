@@ -70,7 +70,7 @@ class NsqClusterSpec extends AnyFunSuite {
         assert(execIds.size >= 2, "executor ids not observed")
       }
 
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-nsq-cluster-ckpt").toString
+      val ckpt = graft.SparkSpec.tempDir("graft-nsq-cluster-ckpt").toString
       val stream = spark.readStream
         .format("nsq")
         .option("host", "127.0.0.1")

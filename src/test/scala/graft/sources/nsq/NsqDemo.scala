@@ -13,7 +13,7 @@ object NsqDemo {
     spark.sparkContext.setLogLevel("ERROR")
     val server = new NsqMiniServer
     InMemoryTransport.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("nsq-demo").toString
+    val ckpt = graft.SparkSpec.tempDir("nsq-demo").toString
     val stream = spark.readStream.format("nsq")
       .option("host", "127.0.0.1").option("port", server.port.toString)
       .option("statsEndpoints", s"127.0.0.1:${server.httpPort}")

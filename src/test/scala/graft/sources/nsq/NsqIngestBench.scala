@@ -24,7 +24,7 @@ object NsqIngestBench {
     val body = ("x" * 1000).getBytes("UTF-8")
     (0 until n).foreach(i => servers(i % nBrokers).publish(f"$i%016d", body))
     delivered.set(0)
-    val ckpt = java.nio.file.Files.createTempDirectory(s"nsq-bench-$numShards").toString
+    val ckpt = graft.SparkSpec.tempDir(s"nsq-bench-$numShards").toString
     val stream = spark.readStream.format("nsq")
       .option("hosts", servers.map(s => s"127.0.0.1:${s.port}").mkString(","))
       .option("statsEndpoints", servers.map(s => s"127.0.0.1:${s.httpPort}").mkString(","))

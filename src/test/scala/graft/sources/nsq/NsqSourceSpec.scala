@@ -26,7 +26,7 @@ class NsqSourceSpec extends SparkSuite {
     extra.foreach { case (k, v) => opts.put(k, v) }
     new NsqMicroBatchStream(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts),
-      java.nio.file.Files.createTempDirectory("nsq-drive").toString)
+      graft.SparkSpec.tempDir("nsq-drive").toString)
   }
 
   private def readAll(stream: NsqMicroBatchStream, parts: Array[InputPartition]): Seq[String] = {
@@ -207,7 +207,7 @@ class NsqSourceSpec extends SparkSuite {
   test("end-to-end: nsq source -> dedup/pack pipeline -> kinesis entries, FIN after commit") {
     val server = new NsqMiniServer
     InMemoryTransport.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-nsq-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("graft-nsq-ckpt").toString
     val stream = spark.readStream
       .format("nsq")
       .option("host", "127.0.0.1")
@@ -242,7 +242,7 @@ class NsqSourceSpec extends SparkSuite {
     val s1 = new NsqMiniServer
     val s2 = new NsqMiniServer
     InMemoryTransport.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-nsq2-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("graft-nsq2-ckpt").toString
     val stream = spark.readStream
       .format("nsq")
       .option("hosts", s"127.0.0.1:${s1.port},127.0.0.1:${s2.port}")
@@ -312,7 +312,7 @@ class NsqSourceSpec extends SparkSuite {
       opts.put("pollMs", PollMs.toString)
       val stream = new NsqMicroBatchStream(
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts),
-        java.nio.file.Files.createTempDirectory("nsq-lkp").toString)
+        graft.SparkSpec.tempDir("nsq-lkp").toString)
       try {
         // discovered stats endpoints gate admission: empty brokers -> frozen
         assert(stream.latestOffset().asInstanceOf[NsqOffset].epoch === 0L)
@@ -517,7 +517,7 @@ class NsqSourceSpec extends SparkSuite {
     // (c) never re-emit a payload the first incarnation already committed.
     val server = new NsqMiniServer
     InMemoryTransport.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-nsq-restart").toString
+    val ckpt = graft.SparkSpec.tempDir("graft-nsq-restart").toString
     def startQuery() = StreamPipeline.build(
       spark.readStream.format("nsq")
         .option("host", "127.0.0.1")

@@ -57,7 +57,7 @@ class ChaosClusterSpec extends AnyFunSuite {
       if (attempt % 5 == 1) { throttled.incrementAndGet(); true } else false)
     val server = new NsqMiniServer
     new HttpKinesisTransport(stub.endpoint).createStream("chaoscluster")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-chaos-cluster-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("graft-chaos-cluster-ckpt").toString
 
     sys.props("spark.test.home") = "/opt/spark"
     val spark = graft.GraftSession("local-cluster[2,1,1024]", "4",

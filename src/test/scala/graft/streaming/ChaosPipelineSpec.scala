@@ -69,7 +69,7 @@ class ChaosPipelineSpec extends SparkSuite {
       if (attempt % 5 == 1) { throttled.incrementAndGet(); true } else false)
     val server = new NsqMiniServer
     new HttpKinesisTransport(stub.endpoint).createStream("chaos")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-chaos-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("graft-chaos-ckpt").toString
 
     def startQuery() = {
       val stream = spark.readStream

@@ -42,7 +42,7 @@ import graft.SparkSuite
 class CheckpointRecoverySpec extends SparkSuite {
 
   private def ckpt(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"$tag-ckpt").toString
+    graft.SparkSpec.tempDir(s"$tag-ckpt").toString
 
   private def await(cond: () => Boolean, what: String, timeoutMs: Long = 60000L): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs

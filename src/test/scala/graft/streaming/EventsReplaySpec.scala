@@ -35,7 +35,7 @@ class EventsReplaySpec extends SparkSuite {
 
     val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
       StreamPipeline.Options(streamName = "events-replay",
-        checkpoint = java.nio.file.Files.createTempDirectory("ev-ckpt").toString))
+        checkpoint = graft.SparkSpec.tempDir("ev-ckpt").toString))
       .start()
     try q.processAllAvailable() finally q.stop()
 

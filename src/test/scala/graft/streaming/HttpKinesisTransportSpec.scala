@@ -88,7 +88,7 @@ class HttpKinesisTransportSpec extends SparkSuite {
     try {
       new HttpKinesisTransport(stub.endpoint).createStream("pipe")
       val input = MemoryStream[Msg]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-http-ckpt").toString
+      val ckpt = graft.SparkSpec.tempDir("graft-http-ckpt").toString
       val msgs = (0 until 40).map(i =>
         Msg(f"$i%016d", new Timestamp(1000000000L + i), 1, s"payload-$i".getBytes("UTF-8")))
       input.addData(msgs)

@@ -17,14 +17,14 @@ class LakeMergeSpec extends SparkSuite {
   test("stream MERGE: upsert/delete/conflict semantics, idempotent replay, atomic pointer") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("lake-merge").toString
+    val dir = graft.SparkSpec.tempDir("lake-merge").toString
 
     val input = MemoryStream[(Long, String, String)]
     val q = input.toDF().toDF("doc_id", "text", "op")
       .writeStream
       .foreachBatch(LakeMerge.mergeBatch(dir) _)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("lake-merge-ckpt").toString)
+        graft.SparkSpec.tempDir("lake-merge-ckpt").toString)
       .start()
     try {
       input.addData((1L, "one", "upsert"), (2L, "two", "upsert"),
@@ -66,8 +66,8 @@ class LakeMergeSpec extends SparkSuite {
     // the applied-id check would silently swallow genuinely new batches.
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("lake-merge-restart").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("lake-merge-restart-ckpt").toString
+    val dir = graft.SparkSpec.tempDir("lake-merge-restart").toString
+    val ckpt = graft.SparkSpec.tempDir("lake-merge-restart-ckpt").toString
     val input = MemoryStream[(Long, String, String)]
     def start() = input.toDF().toDF("doc_id", "text", "op")
       .writeStream
@@ -99,7 +99,7 @@ class LakeMergeSpec extends SparkSuite {
     import spark.implicits._
     // deterministic pseudo-random workload (fixed seed — reproducible)
     val rnd = new scala.util.Random(0xC0FFEE)
-    val dir = java.nio.file.Files.createTempDirectory("lake-merge-model").toString
+    val dir = graft.SparkSpec.tempDir("lake-merge-model").toString
     var model = Map.empty[Long, String]
     for (batchId <- 0L until 6L) {
       val ops = (0 until 1 + rnd.nextInt(7)).map { i =>
@@ -121,7 +121,7 @@ class LakeMergeSpec extends SparkSuite {
 
   test("explicit op_seq wins across partitions — the multi-partition ordering contract") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lake-merge-seq").toString
+    val dir = graft.SparkSpec.tempDir("lake-merge-seq").toString
     // two partitions, with the doc's LATER op (delete, op_seq=2) placed in
     // partition 0 and the earlier upsert (op_seq=1) in partition 1 — the
     // partition-major fallback would resurrect the doc; op_seq must not

@@ -40,7 +40,7 @@ object NearDupBench {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(10L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("neardup-bench-ckpt").toString)
+        graft.SparkSpec.tempDir("neardup-bench-ckpt").toString)
       .start()
 
     input.addData(docs.take(1000)) // warm-up: state store + codegen init

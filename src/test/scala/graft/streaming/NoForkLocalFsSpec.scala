@@ -78,7 +78,7 @@ class NoForkLocalFsSpec extends AnyFunSuite {
   }
 
   test("checkpoint writes start no process and leave LocalFs's files, modes and .crc sidecars") {
-    val root = Files.createTempDirectory("nofork-fs")
+    val root = graft.SparkSpec.tempDir("nofork-fs")
     val stock = root.resolve("stock")
     val nofork = root.resolve("nofork")
     val stockListed = checkpointIo(stock, classOf[LocalFs])
@@ -96,7 +96,7 @@ class NoForkLocalFsSpec extends AnyFunSuite {
   }
 
   test("overwrite=false onto an existing file still throws") {
-    val base = new Path(Files.createTempDirectory("nofork-exists").toUri)
+    val base = new Path(graft.SparkSpec.tempDir("nofork-exists").toUri)
     val fm = new FileContextBasedCheckpointFileManager(base, conf(classOf[NoForkLocalFs]))
     def write(overwrite: Boolean): Unit = {
       val out = fm.createAtomic(new Path(base, "0"), overwrite)
@@ -109,7 +109,7 @@ class NoForkLocalFsSpec extends AnyFunSuite {
   }
 
   test("mode bits reach the file exactly; a sticky bit still goes through chmod") {
-    val dir = Files.createTempDirectory("nofork-modes")
+    val dir = graft.SparkSpec.tempDir("nofork-modes")
     val fc = FileContext.getFileContext(dir.toUri, conf(classOf[NoForkLocalFs]))
     def mode(name: String): Int =
       Files.getAttribute(dir.resolve(name), "unix:mode").asInstanceOf[Int] & 0xfff

@@ -18,7 +18,7 @@ class PipelineMetricsSpec extends SparkSuite {
       Msg(f"$i%016d", new Timestamp(1000000000L + i), 1, s"m-$i".getBytes)))
     val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
       StreamPipeline.Options(streamName = "metrics",
-        checkpoint = java.nio.file.Files.createTempDirectory("m-ckpt").toString))
+        checkpoint = graft.SparkSpec.tempDir("m-ckpt").toString))
       .start()
     try { q.processAllAvailable() } finally q.stop()
     spark.streams.removeListener(metrics)
@@ -70,7 +70,7 @@ class PipelineMetricsSpec extends SparkSuite {
       Msg(f"$i%016d", new Timestamp(1000000000L + i), 1, s"r-$i".getBytes)))
     val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
       StreamPipeline.Options(streamName = "reported",
-        checkpoint = java.nio.file.Files.createTempDirectory("rep-ckpt").toString))
+        checkpoint = graft.SparkSpec.tempDir("rep-ckpt").toString))
       .start()
     try { q.processAllAvailable() } finally q.stop()
     spark.streams.removeListener(metrics)

@@ -40,7 +40,7 @@ import graft.SparkSuite
 class RedeliverySpec extends SparkSuite {
 
   private def ckpt(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"$tag-ckpt").toString
+    graft.SparkSpec.tempDir(s"$tag-ckpt").toString
 
   /** Poll until `cond` holds (the TimeMode.ProcessingTime engines never
     * settle under processAllAvailable — see TwoGenDeduperSpec). */

@@ -30,7 +30,7 @@ class SessionWindowSpec extends SparkSuite {
     val q = sessions.writeStream.format("memory").queryName("sessions")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("sess-ckpt").toString)
+        graft.SparkSpec.tempDir("sess-ckpt").toString)
       .start()
     try {
       // burst 1: u1 at 100,104,108 (one session, extends to 118)

@@ -21,7 +21,7 @@ class StreamPipelineSpec extends SparkSuite {
     implicit val sql = spark.sqlContext
     InMemoryTransport.clear()
     val input = MemoryStream[Msg]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("graft-ckpt").toString
 
     val distinct = (0 until 100).map(i => msg(i, s"payload-$i-${"x" * 50}"))
     val dupes = (0 until 50).map(i => msg(1000 + i, s"payload-$i-${"x" * 50}")) // same bodies
@@ -48,7 +48,7 @@ class StreamPipelineSpec extends SparkSuite {
     val input = MemoryStream[Msg]
     val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
       StreamPipeline.Options(streamName = "cadence",
-        checkpoint = java.nio.file.Files.createTempDirectory("cadence-ckpt").toString)).start()
+        checkpoint = graft.SparkSpec.tempDir("cadence-ckpt").toString)).start()
     val feeding = new java.util.concurrent.atomic.AtomicBoolean(true)
     val feeder = new Thread(() => {
       var i = 0
@@ -75,7 +75,7 @@ class StreamPipelineSpec extends SparkSuite {
     implicit val sql = spark.sqlContext
     InMemoryTransport.clear()
     val input = MemoryStream[Msg]
-    val checkpoint = java.nio.file.Files.createTempDirectory("nofork-ckpt").toString
+    val checkpoint = graft.SparkSpec.tempDir("nofork-ckpt").toString
     // graft.Main's state store, the HDFS-backed default: a twin suite may
     // have left the session on RocksDB, whose SST uploads go through
     // Hadoop's FileSystem API rather than FileContext
@@ -106,7 +106,7 @@ class StreamPipelineSpec extends SparkSuite {
     input.addData((0 until 40).map(i => msg(i, s"backlog-$i")))
     val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
       StreamPipeline.Options(streamName = "drain",
-        checkpoint = java.nio.file.Files.createTempDirectory("drain-ckpt").toString,
+        checkpoint = graft.SparkSpec.tempDir("drain-ckpt").toString,
         availableNow = true)).start()
     try {
       // the backfill mode must finish WITHOUT stop(): the trigger drains
@@ -125,7 +125,7 @@ class StreamPipelineSpec extends SparkSuite {
     implicit val sql = spark.sqlContext
     InMemoryTransport.clear()
     val input = MemoryStream[Msg]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("graft-ckpt").toString
     input.addData(Seq(
       msg(1, "small"),
       Msg("big0000000000000", new Timestamp(1000000002L), 1, new Array[Byte](1024 * 1024 + 1))))
@@ -142,13 +142,13 @@ class StreamPipelineSpec extends SparkSuite {
   test("file transport: framed per-partition files hold every body") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("kfile").toString
+    val dir = graft.SparkSpec.tempDir("kfile").toString
     val input = MemoryStream[Msg]
     val sent = (0 until 60).map(i => msg(i, s"file-$i"))
     input.addData(sent)
     val q = StreamPipeline.build(input.toDF(), new FileTransport(dir),
       StreamPipeline.Options(streamName = "fstream",
-        checkpoint = java.nio.file.Files.createTempDirectory("kfile-ckpt").toString)).start()
+        checkpoint = graft.SparkSpec.tempDir("kfile-ckpt").toString)).start()
     try q.processAllAvailable() finally q.stop()
 
     val files = new java.io.File(dir).listFiles().toSeq
@@ -191,7 +191,7 @@ class StreamPipelineSpec extends SparkSuite {
       Msg(f"$i%016d", new Timestamp(1000000000L + i), 1, b) })
     val q = StreamPipeline.build(input.toDF(), new InMemoryTransport,
       StreamPipeline.Options(streamName = "pin",
-        checkpoint = java.nio.file.Files.createTempDirectory("pin-ckpt").toString)).start()
+        checkpoint = graft.SparkSpec.tempDir("pin-ckpt").toString)).start()
     try q.processAllAvailable() finally q.stop()
 
     val entries = InMemoryTransport.drain().map(_._2)
@@ -213,7 +213,7 @@ class StreamPipelineSpec extends SparkSuite {
 
   test("BatchWriter request bounds: 600 records split at 500") {
     val w = new BatchWriter()
-    (0 until 600).foreach(i => w.add(i.toLong, s"rec-$i".getBytes, "k"))
+    (0 until 600).foreach(i => w.add(s"rec-$i".getBytes, "k"))
     val reqs = w.flush()
     assert(reqs.length === 2)
     def userCount(r: PutRequest) = r.entries.map(e => KplFunctions.deaggregate(e.data).size).sum
@@ -224,7 +224,7 @@ class StreamPipelineSpec extends SparkSuite {
   test("BatchWriter byte bound: requests stay under 4.9 MB") {
     val w = new BatchWriter()
     val body = new Array[Byte](500000) // 0.5 MB, 12 per request fit under 4.9MB? 9 fit
-    (0 until 20).foreach(i => w.add(i.toLong, body, "k"))
+    (0 until 20).foreach(_ => w.add(body, "k"))
     val reqs = w.flush()
     assert(reqs.length >= 2)
     reqs.foreach { r =>
@@ -235,8 +235,8 @@ class StreamPipelineSpec extends SparkSuite {
 
   test("BatchWriter drops oversize and counts them") {
     val w = new BatchWriter()
-    w.add(0, new Array[Byte](BatchWriter.MaxMessageSize + 1), "k")
-    w.add(1, "ok".getBytes, "k")
+    w.add(new Array[Byte](BatchWriter.MaxMessageSize + 1), "k")
+    w.add("ok".getBytes, "k")
     assert(w.droppedCount === 1)
     val reqs = w.flush()
     assert(reqs.map(_.entries.size).sum === 1)

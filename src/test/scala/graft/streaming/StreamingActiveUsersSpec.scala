@@ -42,7 +42,7 @@ class StreamingActiveUsersSpec extends SparkSuite {
       .outputMode(OutputMode.Update())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("au-ckpt").toString)
+        graft.SparkSpec.tempDir("au-ckpt").toString)
       .foreachBatch { (df: Dataset[StreamingActiveUsers.ShardSketch], id: Long) =>
         val out = df.collect()
         if (out.nonEmpty) captured.put(id, out)

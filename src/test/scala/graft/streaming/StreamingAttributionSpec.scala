@@ -63,7 +63,7 @@ class StreamingAttributionSpec extends SparkSuite {
   /** Batch per-purchase truth: the same union-and-carry the declared
     * `g_attribution` query rides, keeping each purchase's event_id. */
   private def batchVerdicts(): Set[Attribution] = {
-    Tables.registerEvents(spark, SparkSpec.sf0001)
+    Tables.bind(spark, SparkSpec.sf0001, "events")
     spark.sql(
       """WITH clk AS (
         |  SELECT user_id, tus, 0 AS kind, event_id AS c_id, tus AS c_tus,
@@ -112,7 +112,7 @@ class StreamingAttributionSpec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("attr-ckpt").toString)
+        graft.SparkSpec.tempDir("attr-ckpt").toString)
       .start()
 
     def sinkCount(): Long = spark.sql("SELECT count(*) FROM attr_verdicts").head().getLong(0)
@@ -166,7 +166,7 @@ class StreamingAttributionSpec extends SparkSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
 
-    val ckpt = java.nio.file.Files.createTempDirectory("attr-restart-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("attr-restart-ckpt").toString
     val captured = new ConcurrentHashMap[Long, Array[Attribution]]()
     def start(input: MemoryStream[(Long, Long, Long, String)]) =
       StreamingAttribution(input.toDF().toDF("event_id", "user_id", "tus", "event_type"))

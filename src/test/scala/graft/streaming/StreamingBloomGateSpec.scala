@@ -55,7 +55,7 @@ class StreamingBloomGateSpec extends SparkSuite {
     val captured = new ConcurrentHashMap[Long, Array[StreamingBloomGate.ShardFilter]]()
     val input = MemoryStream[(Long, String)]
     val out = StreamingBloomGate(input.toDF().toDF("doc_id", "text"))
-    val checkpoint = java.nio.file.Files.createTempDirectory("bloomgate-ckpt").toString
+    val checkpoint = graft.SparkSpec.tempDir("bloomgate-ckpt").toString
     def start(): StreamingQuery = out.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.ProcessingTime(200L))

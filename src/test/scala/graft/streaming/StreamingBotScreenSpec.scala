@@ -72,7 +72,7 @@ class StreamingBotScreenSpec extends SparkSuite {
       .outputMode(OutputMode.Update())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("bot-ckpt").toString)
+        graft.SparkSpec.tempDir("bot-ckpt").toString)
       .start()
 
     def latest(): Map[Long, (Long, Long, Long, Long, Long)] =

@@ -51,7 +51,7 @@ class StreamingChaoSpec extends SparkSuite {
     val (w1, w2) = shuffled.splitAt(shuffled.length / 2)
 
     val captured = new ConcurrentHashMap[Long, Array[StreamingChao.ChaoEstimate]]()
-    val ckpt = java.nio.file.Files.createTempDirectory("chao-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("chao-ckpt").toString
     val input = MemoryStream[(Long, String, String)]
 
     def startQuery(in: MemoryStream[(Long, String, String)]) =

@@ -116,7 +116,7 @@ class StreamingCurationSpec extends SparkSuite {
     val captured = new ConcurrentHashMap[Long, Array[CurationLedger]]()
     val input = MemoryStream[(Long, String, String)]
     val out = StreamingCuration(input.toDF().toDF("doc_id", "text", "lang"), budgets)
-    val checkpoint = java.nio.file.Files.createTempDirectory("curation-ckpt").toString
+    val checkpoint = graft.SparkSpec.tempDir("curation-ckpt").toString
     def start(): StreamingQuery = out.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.ProcessingTime(200L))

@@ -60,7 +60,7 @@ class StreamingDomainRollupSpec extends SparkSuite {
     }
 
     val captured = new ConcurrentHashMap[Long, Array[StreamingDomainRollup.DomainStat]]()
-    val ckpt = java.nio.file.Files.createTempDirectory("domroll-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("domroll-ckpt").toString
     val input = MemoryStream[(Long, String)]
 
     def startQuery(in: MemoryStream[(Long, String)]) =
@@ -145,7 +145,7 @@ class StreamingDomainRollupSpec extends SparkSuite {
       "referee sanity: raw/canon/host ledgers must be unmoved by the re-fetch wave")
 
     val captured = new ConcurrentHashMap[Long, Array[StreamingDomainRollup.DomainStat]]()
-    val ckpt = java.nio.file.Files.createTempDirectory("domroll-refetch-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("domroll-refetch-ckpt").toString
     val input = MemoryStream[(Long, String)]
     val q = StreamingDomainRollup(input.toDF().toDF("doc_id", "url")).writeStream
       .outputMode("update")

@@ -55,7 +55,7 @@ class StreamingEncodingAuditSpec extends SparkSuite {
     }
 
     val captured = new ConcurrentHashMap[Long, Array[StreamingEncodingAudit.EncStat]]()
-    val ckpt = java.nio.file.Files.createTempDirectory("encaudit-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("encaudit-ckpt").toString
     val input = MemoryStream[(Long, String, String, String)]
 
     def startQuery(in: MemoryStream[(Long, String, String, String)]) =

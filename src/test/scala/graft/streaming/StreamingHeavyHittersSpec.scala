@@ -55,7 +55,7 @@ class StreamingHeavyHittersSpec extends SparkSuite {
     val captured = new ConcurrentHashMap[Long, Array[StreamingHeavyHitters.ShardSketch]]()
     val input = MemoryStream[Long]
     val out = StreamingHeavyHitters(input.toDF().toDF("key"))
-    val checkpoint = java.nio.file.Files.createTempDirectory("cms-ckpt").toString
+    val checkpoint = graft.SparkSpec.tempDir("cms-ckpt").toString
     def start(): StreamingQuery = out.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.ProcessingTime(200L))

@@ -35,7 +35,7 @@ class StreamingNearDupSpec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("neardup-ckpt").toString)
+        graft.SparkSpec.tempDir("neardup-ckpt").toString)
       .start()
     try {
       // phase 1: 20 distinct originals — residents only, no hits expected

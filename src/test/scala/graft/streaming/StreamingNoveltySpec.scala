@@ -44,7 +44,7 @@ class StreamingNoveltySpec extends SparkSuite {
       .outputMode("update")
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("novelty-ckpt").toString)
+        graft.SparkSpec.tempDir("novelty-ckpt").toString)
       .foreachBatch { (df: org.apache.spark.sql.Dataset[StreamingNovelty.GramVerdict], id: Long) =>
         captured.put(id, df.collect().map(v => (v.lang, v.gram, v.novel)))
         ()

@@ -62,7 +62,7 @@ class StreamingPiiCensusSpec extends SparkSuite {
     }
 
     val captured = new ConcurrentHashMap[Long, Array[StreamingPiiCensus.PiiStat]]()
-    val ckpt = java.nio.file.Files.createTempDirectory("piicensus-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("piicensus-ckpt").toString
     val input = MemoryStream[(Long, String, String)]
 
     def startQuery(in: MemoryStream[(Long, String, String)]) =

@@ -76,7 +76,7 @@ class StreamingScd2Spec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("scd2-ckpt").toString)
+        graft.SparkSpec.tempDir("scd2-ckpt").toString)
       .start()
 
     def sinkCount(): Long = spark.sql("SELECT count(*) FROM scd2_closures").head().getLong(0)
@@ -147,7 +147,7 @@ class StreamingScd2Spec extends SparkSuite {
     val expected = expectedRows(events.toSeq)
     assert(expected.size >= 10, "the prefix must close enough intervals to exercise the merge")
 
-    val lakeDir = java.nio.file.Files.createTempDirectory("scd2-lake").toString
+    val lakeDir = graft.SparkSpec.tempDir("scd2-lake").toString
     val input = MemoryStream[(Long, Long, Long, String)]
     val q = StreamingScd2(input.toDF().toDF("event_id", "user_id", "tus", "event_type"))
       .writeStream
@@ -165,7 +165,7 @@ class StreamingScd2Spec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("scd2-lake-ckpt").toString)
+        graft.SparkSpec.tempDir("scd2-lake-ckpt").toString)
       .start()
     try {
       def corpus(): Set[(Long, String)] =

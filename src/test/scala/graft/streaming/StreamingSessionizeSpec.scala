@@ -108,7 +108,7 @@ class StreamingSessionizeSpec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("sess-ckpt").toString)
+        graft.SparkSpec.tempDir("sess-ckpt").toString)
       .start()
 
     def sinkCount(): Long = spark.sql("SELECT count(*) FROM sess_closures").head().getLong(0)

@@ -42,7 +42,7 @@ class StreamingSimJoinSpec extends SparkSuite {
 
     val input = MemoryStream[(Long, String)]
     val captured = new ConcurrentHashMap[Long, Array[StreamingSimJoin.SimPair]]()
-    val ckpt = java.nio.file.Files.createTempDirectory("simjoin-ckpt").toString
+    val ckpt = graft.SparkSpec.tempDir("simjoin-ckpt").toString
     def start() = StreamingSimJoin(input.toDF().toDF("doc_id", "text"))
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[StreamingSimJoin.SimPair], id: Long) =>
@@ -100,7 +100,7 @@ class StreamingSimJoinSpec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("simjoin-replay-ckpt").toString)
+        graft.SparkSpec.tempDir("simjoin-replay-ckpt").toString)
       .start()
     try {
       def all() = captured.asScala.values.flatten.toSeq
@@ -164,7 +164,7 @@ class StreamingSimJoinSpec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("simjoin-ttl-ckpt").toString)
+        graft.SparkSpec.tempDir("simjoin-ttl-ckpt").toString)
       .start()
     try {
       def all() = captured.asScala.values.flatten.toSeq

@@ -58,7 +58,7 @@ class StreamingStratifiedSamplerSpec extends SparkSuite {
       .outputMode(OutputMode.Update())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("strat-ckpt").toString)
+        graft.SparkSpec.tempDir("strat-ckpt").toString)
       .start()
 
     def latest(): Map[(String, String), (Long, Long, Long, Long)] = {

@@ -68,7 +68,7 @@ class StreamingTokenBudgetSpec extends SparkSuite {
       .outputMode(OutputMode.Update())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("tokbudget-ckpt").toString)
+        graft.SparkSpec.tempDir("tokbudget-ckpt").toString)
       .start()
 
     def latest(): Map[String, (Long, Long, Long, Long, Long)] =

@@ -39,7 +39,7 @@ class TwoGenDeduperSpec extends SparkSuite {
       .outputMode(OutputMode.Append())
       .trigger(Trigger.ProcessingTime(200L))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("twogen-ckpt").toString)
+        graft.SparkSpec.tempDir("twogen-ckpt").toString)
       .start()
     try {
       // batch 1: a, a, b  ->  a, b   (op-string "aa"+"b" semantics)

@@ -20,7 +20,7 @@ class WindowedStatsSpec extends SparkSuite {
       .writeStream.format("memory").queryName("winstats")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("win-ckpt").toString)
+        graft.SparkSpec.tempDir("win-ckpt").toString)
       .start()
     try {
       // window [100,110): 3 rows, one duplicate body
