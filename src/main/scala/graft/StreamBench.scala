@@ -1,63 +1,53 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.kernel.{KinesisEntry, KplProtobuf}
-import graft.streaming.{HttpKinesisTransport, KinesisTransport, NoForkLocalFs, SigV4, StreamPipeline}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming throughput benchmark: N synthetic NSQ-envelope messages
-  * (1 kB bodies, 10 % duplicates) through the full pipeline — fnv64a →
-  * watermark dedup → oversize filter → per-partition KPL pack → chunked
-  * PutRecords against the in-memory transport — and reports end-to-end
-  * user-records/s plus packing stats. One JSON line, same contract as
-  * [[Bench]].
+import graft.kernel.{KinesisEntry, KplProtobuf}
+import graft.streaming.{KinesisTransport, NoForkLocalFs, PipelineMetrics, StreamPipeline, StreamingSimJoin}
+
+/** Streaming soak: one stateful query ([[Twin]]) fed continuously for
+  * `SPARK_GRAFT_SOAK_SEC` (default 300) with a bounded backlog, sampled
+  * every `SPARK_GRAFT_SOAK_SAMPLE_SEC` (default 15), then drained. One JSON
+  * line with the headline rate, the twin's counters, the per-stage
+  * attribution from Spark's progress events and the sample series: the
+  * north star's second number (`STREAM_r21.json`) is the `dedup` twin on
+  * the RocksDB state store. Its other variables are in README's table.
+  *
+  * {{{
+  * SPARK_GRAFT_SOAK_SEC=300 SPARK_GRAFT_CONF="spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider" \
+  *   sbt "runMain graft.StreamBench"
+  * }}}
   *
   * Comparison point (BASELINE.md): the reference's sink-bound ceiling is
   * ~500 user-rec/s and ~4.9 MB/s per pipeline instance (500-record
-  * requests at 1 req/s, kinesis_writer.go:57,42-44). This measures the
-  * engine's pre-sink capacity on one node: how fast the pipeline can
-  * produce correctly framed, deduplicated, packed entries when the sink
-  * isn't the bottleneck.
+  * requests at 1 req/s, kinesis_writer.go:57,42-44). The `dedup` twin
+  * measures the engine's pre-sink capacity on one node.
   */
 object StreamBench {
-
-  /** Print the result line AND write it to a file (round 21, the
-    * graft.Bench contract): the driver tails sbt stdout where the JSON
-    * drowns in log noise, so a streaming round-over-round artifact needs
-    * the structured line on disk — `SPARK_GRAFT_STREAM_OUT`, default
-    * `/tmp/graft_stream_bench.json`. */
-  private def emit(json: String): Unit = {
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT", "/tmp/graft_stream_bench.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[stream-bench] could not write $out: ${e.getMessage}") }
-  }
 
   final case class BenchMsg(id: String, ts: Timestamp, attempts: Int, body: Array[Byte])
 
   /** Sink-unconstrained measurement transport: validates framing and counts
-    * entries / bytes / deaggregated user records without retaining payloads
+    * bytes and deaggregated user records without retaining payloads
     * (retaining 200 MB of delivered entries in one JVM-wide queue, as the
-    * test transport does, turns the bench into a GC measurement). */
-  object CountingTransport {
-    val entries = new AtomicLong(0)
+    * test transport does, turns the bench into a GC measurement). A
+    * serialized object resolves to the one instance, so tasks count here. */
+  object CountingTransport extends KinesisTransport {
     val bytes = new AtomicLong(0)
     val userRecords = new AtomicLong(0)
-    def reset(): Unit = { entries.set(0); bytes.set(0); userRecords.set(0) }
-  }
-
-  final class CountingTransport extends KinesisTransport {
+    def reset(): Unit = { bytes.set(0); userRecords.set(0) }
     override def putRecords(stream: String, es: Seq[KinesisEntry]): Seq[Boolean] = {
       es.foreach { e =>
-        CountingTransport.entries.incrementAndGet()
-        CountingTransport.bytes.addAndGet(e.data.length.toLong)
-        CountingTransport.userRecords.addAndGet(
+        bytes.addAndGet(e.data.length.toLong)
+        userRecords.addAndGet(
           if (KplProtobuf.isAggregated(e.data)) KplProtobuf.decodeFramed(e.data).records.length.toLong
           else 1L)
       }
@@ -65,406 +55,180 @@ object StreamBench {
     }
   }
 
-  /** Minimal in-process `PutRecords` endpoint for the `http`/`http_signed`
-    * stages: counts delivered entries/user records into
-    * [[CountingTransport]]'s counters and — in signed mode — re-derives the
-    * SigV4 signature of EVERY request from the bytes it actually received,
-    * rejecting mismatches with 403. This makes the signed bench row an
-    * end-to-end proof: a wrong canonicalization on either side zeroes the
-    * throughput instead of silently passing. */
-  final class BenchHttpSink(creds: Option[SigV4.Credentials], throttleEvery: Int = 0) {
-    import com.sun.net.httpserver.{HttpExchange, HttpServer}
-    val verified = new AtomicLong(0)
-    val rejected = new AtomicLong(0)
-    /** Chaos mode: every `throttleEvery`-th request loses ALL its records to
-      * `ProvisionedThroughputExceededException` — the sustained-throttle
-      * regime the RetryingTransport must absorb. */
-    val throttledReqs = new AtomicLong(0)
-    private val attempts = new AtomicLong(-1)
-    private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    private val seq = new AtomicLong(0)
-    private val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool { r =>
-      val t = new Thread(r, "bench-http-sink"); t.setDaemon(true); t
-    })
-    server.createContext("/", (ex: HttpExchange) => {
-      val body = ex.getRequestBody.readAllBytes()
-      val h = ex.getRequestHeaders
-      val ok = creds.forall { c =>
-        val amzDate = Option(h.getFirst("X-Amz-Date")).getOrElse("")
-        val signedHeaders = Seq(
-          "content-type" -> Option(h.getFirst("Content-Type")).getOrElse(""),
-          "host" -> Option(h.getFirst("Host")).getOrElse(""),
-          "x-amz-date" -> amzDate,
-          "x-amz-target" -> Option(h.getFirst("X-Amz-Target")).getOrElse(""))
-        amzDate.length == 16 &&
-          SigV4.authorization("POST", "/", "", signedHeaders, body,
-            "us-east-1", "kinesis", c, amzDate) == Option(h.getFirst("Authorization")).getOrElse("")
+  /** A stateful query the soak drives: its metric, the rows fed per chunk,
+    * the default backlog in input rows, and `start`, which starts it in a
+    * checkpoint dir and returns the [[Running]] handle. */
+  final case class Twin(metric: String, unit: String, chunk: Int, backlog: Long,
+                        start: (SparkSession, String, PipelineMetrics) => Running)
+
+  /** A started twin. `feed(from, until)` adds the input rows with ids
+    * `[from, until)`; `processed()` is the input rows processed and
+    * `headline()` the counter the rate is made of, both since the last
+    * `reset()`; `keys(line)` adds the twin's own fields. */
+  final case class Running(query: StreamingQuery, feed: (Long, Long) => Unit,
+                           processed: () => Long, headline: () => Long, reset: () => Unit,
+                           keys: ObjectNode => Unit)
+
+  /** The reference pipeline: 1 kB bodies, every 10th a duplicate of its
+    * predecessor's body 1 ms later, through [[StreamPipeline.build]] into
+    * [[CountingTransport]]; the headline is delivered user records. Rows
+    * count as processed when delivered (9 in 10 are), as each partition
+    * ends: a backlog that waits for the batch's progress event halves
+    * every other batch. */
+  val dedup: Twin = Twin("stream_soak_user_rec_per_sec", "rec/sec", chunk = 10000,
+    // 60,000 delivered records: a 200k backlog let single micro-batches outgrow
+    // what 32 state-store tasks can sort in an 8 GB heap (OOM ~25 s in)
+    backlog = 66667, (spark, ckpt, _) => {
+      import spark.implicits._
+      val filler = "x" * 970
+      def msg(i: Long): BenchMsg = {
+        val of = if (i % 10 == 9) i - 1 else i
+        BenchMsg(f"$i%016d", new Timestamp(1700000000000L + i), 1, s"body-$of-$filler".getBytes("UTF-8"))
       }
-      val (code, resp) =
-        if (!ok) { rejected.incrementAndGet(); 403 ->
-          """{"__type":"AccessDeniedException","message":"signature mismatch"}""" }
-        else if (throttleEvery > 0 && attempts.incrementAndGet() % throttleEvery == 0) {
-          throttledReqs.incrementAndGet()
-          val recs = mapper.readTree(body).path("Records")
-          val out = mapper.createObjectNode()
-          out.put("FailedRecordCount", recs.size())
-          val arr = out.putArray("Records")
-          (0 until recs.size()).foreach { _ =>
-            arr.addObject().put("ErrorCode", "ProvisionedThroughputExceededException")
-              .put("ErrorMessage", "chaos throttle")
-          }
-          200 -> mapper.writeValueAsString(out)
-        }
-        else {
-          verified.incrementAndGet()
-          val recs = mapper.readTree(body).path("Records")
-          val out = mapper.createObjectNode()
-          out.put("FailedRecordCount", 0)
-          val arr = out.putArray("Records")
-          (0 until recs.size()).foreach { i =>
-            val data = java.util.Base64.getDecoder.decode(recs.get(i).path("Data").asText())
-            CountingTransport.entries.incrementAndGet()
-            CountingTransport.bytes.addAndGet(data.length.toLong)
-            CountingTransport.userRecords.addAndGet(
-              if (KplProtobuf.isAggregated(data)) KplProtobuf.decodeFramed(data).records.length.toLong
-              else 1L)
-            arr.addObject().put("SequenceNumber", seq.incrementAndGet().toString)
-              .put("ShardId", "shardId-000000000000")
-          }
-          200 -> mapper.writeValueAsString(out)
-        }
-      val bytes = resp.getBytes("UTF-8")
-      ex.getResponseHeaders.set("Content-Type", "application/x-amz-json-1.1")
-      ex.sendResponseHeaders(code, bytes.length.toLong)
-      ex.getResponseBody.write(bytes)
-      ex.close()
+      val input = MemoryStream[BenchMsg](spark)
+      CountingTransport.reset()
+      val query = StreamPipeline.build(input.toDF(), CountingTransport,
+        StreamPipeline.Options(streamName = "bench", checkpoint = ckpt)).start()
+      Running(query, (from, until) => input.addData((from until until).map(msg)),
+        () => CountingTransport.userRecords.get() * 10 / 9,
+        () => CountingTransport.userRecords.get(), () => CountingTransport.reset(),
+        line => {
+          val provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+          line.put("state", if (provider.contains("RocksDB")) "rocksdb" else "hdfs")
+          line.put("shuffle", spark.conf.get("spark.sql.shuffle.partitions").toInt)
+          line.put("delivered_user_records", CountingTransport.userRecords.get())
+          line.put("mb", CountingTransport.bytes.get() / 1e6)
+        })
     })
-    server.start()
-    def endpoint: String = s"http://127.0.0.1:${server.getAddress.getPort}/"
-    def stop(): Unit = server.stop(0)
+
+  /** [[StreamingSimJoin]], the standing-index twin: ~40-word documents from
+    * a 1,000-word vocabulary, every 20th a one-word edit of its predecessor
+    * so the join emits pairs; deterministic per doc_id. The headline is
+    * documents processed. `retentionMs = 0` keeps every enrollment, so the
+    * state curve shows the O(corpus) growth; `> 0` shows it flatten. */
+  def simjoin(retentionMs: Long): Twin = Twin("simjoin_soak_docs_per_sec", "docs/sec",
+    chunk = 2000, backlog = 20000, (spark, ckpt, metrics) => {
+      import spark.implicits._
+      val vocab = (0 until 1000).map(i => f"w$i%04d")
+      def word(r: scala.util.Random): String = vocab(r.nextInt(vocab.length))
+      def words(seed: Long): Array[String] = { val r = new scala.util.Random(seed); Array.fill(40)(word(r)) }
+      def text(id: Long): String =
+        if (id % 20 == 19) words(id - 1).updated(20, word(new scala.util.Random(id))).mkString(" ")
+        else words(id).mkString(" ")
+      val pairs = new AtomicLong(0)
+      val input = MemoryStream[(Long, String)](spark)
+      val query = StreamingSimJoin(input.toDF().toDF("doc_id", "text"), retentionMs)
+        .writeStream
+        .trigger(Trigger.ProcessingTime(100L)) // transformWithState needs an explicit trigger
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: Dataset[StreamingSimJoin.SimPair], _: Long) =>
+          pairs.addAndGet(b.count()); ()
+        }
+        .start()
+      var docs0 = 0L
+      val docs = () => metrics.totalInputRows - docs0
+      Running(query, (from, until) => input.addData((from until until).map(i => (i, text(i)))),
+        docs, docs, () => { docs0 = metrics.totalInputRows; pairs.set(0) },
+        line => {
+          line.put("retention_ms", retentionMs)
+          line.put("docs", docs())
+          line.put("pairs", pairs.get())
+        })
+    })
+
+  private val Warmup = 1000L
+
+  /** Soak `twin` for `soakSec`: warm up on [[Warmup]] rows, feed `chunk`-row
+    * chunks while fewer than `backlog` fed rows are unprocessed, sample every
+    * `sampleSec`, drain, stop. Progress is polled from the twin's
+    * `processed()` counter, because `processAllAvailable` never settles
+    * under `TimeMode.ProcessingTime`; `drained` in the line says whether
+    * the drain caught up within two minutes. */
+  def run(spark: SparkSession, twin: Twin, soakSec: Int, sampleSec: Int, backlog: Long): ObjectNode = {
+    val metrics = PipelineMetrics.attach(spark)
+    val ckpt = Files.createTempDirectory("graft-soak")
+    try {
+      val running = twin.start(spark, ckpt.toString, metrics)
+      try soak(running, metrics, twin, soakSec, sampleSec, backlog)
+      finally running.query.stop()
+    } finally {
+      spark.streams.removeListener(metrics)
+      if (!FileUtils.deleteQuietly(ckpt.toFile)) System.err.println(s"[stream-bench] could not delete $ckpt")
+    }
   }
 
-  /** Sustained soak through [[graft.streaming.StreamingSimJoin]] — the
-    * standing-index twin (judge: the ONE twin whose state grows O(corpus)
-    * under `retentionMs = 0`). Synthetic ~40-word documents from a fixed
-    * vocabulary, every 20th a near-dup of its predecessor so the join
-    * emits real pairs; deterministic per doc_id, so the feed is
-    * replay-idempotent. Samples docs/s, state rows + bytes (RocksDB
-    * memoryUsedBytes), heap, and closes with the PipelineMetrics
-    * per-stage attribution — rec/s + state growth + where-the-time-goes
-    * in one JSON line. `retentionMs = 0` records the unbounded-mode
-    * residency SLOPE (the bytes-per-M-docs sizing table); `> 0` shows
-    * the TTL'd mode going flat once the window fills.
-    */
-  private def simJoinSoak(spark: SparkSession, soakSec: Int, sampleSec: Int,
-                          retentionMs: Long): Unit = {
-    import spark.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val vocab = (0 until 1000).map(i => f"w$i%04d")
-    def text(id: Long): String = {
-      val r = new scala.util.Random(id)
-      if (id % 20 == 19 && id > 0) {
-        // near-dup of the predecessor: same words, one substitution —
-        // J well above 0.6 on 3-grams of a 40-word text
-        val base = new scala.util.Random(id - 1)
-        val ws = Array.fill(40)(vocab(base.nextInt(vocab.length)))
-        ws(20) = vocab(r.nextInt(vocab.length))
-        ws.mkString(" ")
-      } else Array.fill(40)(vocab(r.nextInt(vocab.length))).mkString(" ")
-    }
-    val pairsEmitted = new AtomicLong(0)
-    val input = MemoryStream[(Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-simjoin-soak").toString
-    val metrics = graft.streaming.PipelineMetrics.attach(spark)
-    val query = graft.streaming.StreamingSimJoin(
-        input.toDF().toDF("doc_id", "text"), retentionMs)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
-      .option("checkpointLocation", ckpt)
-      .foreachBatch {
-        (b: org.apache.spark.sql.Dataset[graft.streaming.StreamingSimJoin.SimPair], _: Long) =>
-          pairsEmitted.addAndGet(b.count())
-          ()
-      }
-      .start()
-
-    // warm-up epoch: state-store + codegen init outside the measurement.
-    // processAllAvailable never settles under TimeMode.ProcessingTime
-    // (the transformWithState trigger keeps the query "busy"), so poll
-    // the listener's input-row count with a deadline — the same
-    // discipline as the twin specs.
-    def awaitDocs(target: Long, timeoutMs: Long): Unit = {
+  private def soak(running: Running, metrics: PipelineMetrics, twin: Twin,
+                   soakSec: Int, sampleSec: Int, backlog: Long): ObjectNode = {
+    var fed = 0L
+    def feed(n: Long): Unit = { running.feed(fed, fed + n); fed += n }
+    def drain(rows: Long, timeoutMs: Long): Boolean = {
       val deadline = System.currentTimeMillis() + timeoutMs
-      while (System.currentTimeMillis() < deadline && metrics.totalInputRows < target)
-        Thread.sleep(200L)
+      while (running.processed() < rows && System.currentTimeMillis() < deadline) Thread.sleep(50L)
+      running.processed() >= rows
     }
-    input.addData((0L until 1000L).map(i => (i, text(i))))
-    awaitDocs(1000L, 60000L)
+    feed(Warmup) // state-store and codegen set-up, outside the measurement
+    if (!drain(Warmup, 60000L)) throw new IllegalStateException(s"${twin.metric}: warm-up did not drain in 60 s")
+    running.reset()
 
     val rt = Runtime.getRuntime
-    var gen = 1000L
-    val chunk = sys.env.getOrElse("SPARK_GRAFT_SOAK_CHUNK", "2000").toLong
-    val backlogCap = sys.env.getOrElse("SPARK_GRAFT_SOAK_BACKLOG", "20000").toLong
-    def processedDocs(): Long =
-      metrics.totalInputRows // MemoryStream rows ARE documents (explode is in-query)
+    val samples = Bench.Json.createArrayNode()
     val t0 = System.nanoTime()
-    val baseDocs = processedDocs()
-    var lastDocs = 0L
+    var lastCount = 0L
     var lastNs = t0
-    val samples = scala.collection.mutable.ArrayBuffer.empty[String]
     def sample(): Unit = {
       val now = System.nanoTime()
-      val docs = processedDocs() - baseDocs
-      val rate = (docs - lastDocs) / ((now - lastNs) / 1e9)
-      lastDocs = docs; lastNs = now
-      val st = Option(query.lastProgress).flatMap(_.stateOperators.headOption)
-      samples += s"""{"t_sec":${((now - t0) / 1e9).round},"docs_per_sec":${rate.round},""" +
-        s""""docs":$docs,"pairs":${pairsEmitted.get()},""" +
-        s""""state_rows":${st.map(_.numRowsTotal).getOrElse(-1L)},""" +
-        s""""state_bytes":${st.map(_.memoryUsedBytes).getOrElse(-1L)},""" +
-        s""""heap_mb":${(rt.totalMemory() - rt.freeMemory()) / 1048576}}"""
+      val count = running.headline()
+      val st = Option(running.query.lastProgress).flatMap(_.stateOperators.headOption)
+      samples.addObject()
+        .put("t_sec", ((now - t0) / 1e9).round)
+        .put("rate", ((count - lastCount) / ((now - lastNs) / 1e9)).round)
+        .put("state_rows", st.map(_.numRowsTotal).getOrElse(-1L))
+        .put("state_bytes", st.map(_.memoryUsedBytes).getOrElse(-1L))
+        .put("heap_mb", (rt.totalMemory() - rt.freeMemory()) / 1048576)
+      lastCount = count; lastNs = now
     }
     var nextSample = t0 + sampleSec * 1000000000L
-    while ((System.nanoTime() - t0) / 1e9 < soakSec) {
-      val backlog = (gen - 1000L) - (processedDocs() - baseDocs)
-      if (backlog < backlogCap) {
-        input.addData((gen until gen + chunk).map(i => (i, text(i))))
-        gen += chunk
-      } else Thread.sleep(20L)
+    while (System.nanoTime() - t0 < soakSec * 1000000000L) {
+      if (fed - Warmup - running.processed() < backlog) feed(twin.chunk) else Thread.sleep(20L)
       if (System.nanoTime() >= nextSample) { sample(); nextSample += sampleSec * 1000000000L }
     }
-    awaitDocs(gen, 120000L) // drain the bounded backlog (poll, see warm-up note)
-    sample()
+    val drained = drain(fed - Warmup, 120000L)
+    sample() // the drain sample closes the series
     val sec = (System.nanoTime() - t0) / 1e9
-    query.stop()
-    val docs = processedDocs() - baseDocs
-    val attribution = metrics.attribution.toSeq.sortBy(-_._2._1)
-      .map { case (k, (ms, share)) => s""""$k":{"ms":$ms,"permille":$share}""" }
-      .mkString("{", ",", "}")
-    emit(
-      s"""{"metric":"simjoin_soak_docs_per_sec","value":${(docs / sec).round},"unit":"docs/sec",""" +
-      s""""retention_ms":$retentionMs,"soak_sec":${sec.round},"docs":$docs,""" +
-      s""""pairs":${pairsEmitted.get()},"attribution":$attribution,""" +
-      s""""samples":${samples.mkString("[", ",", "]")}}""")
+
+    val line = Bench.Json.createObjectNode()
+      .put("metric", twin.metric)
+      .put("value", (running.headline() / sec).round)
+      .put("unit", twin.unit)
+      .put("soak_sec", sec.round)
+      .put("input_msgs", fed - Warmup)
+      .put("drained", drained)
+    running.keys(line)
+    val attribution = line.putObject("attribution")
+    metrics.attribution.toSeq.sortBy(-_._2._1).foreach { case (k, (ms, permille)) =>
+      attribution.putObject(k).put("ms", ms).put("permille", permille)
+    }
+    line.set[ObjectNode]("samples", samples)
+    line
   }
 
   def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_N", "200000").toInt
+    val env = sys.env
+    val twin = env.getOrElse("SPARK_GRAFT_SOAK_TWIN", "dedup") match {
+      case "dedup" => dedup
+      case "simjoin" => simjoin(env.getOrElse("SPARK_GRAFT_SIMJOIN_RETENTION_MS", "0").toLong)
+      case other => throw new IllegalArgumentException(s"unknown SPARK_GRAFT_SOAK_TWIN $other")
+    }
     val cpus = GraftSession.cpus()
-    // SPARK_GRAFT_SHUFFLE: shuffle-partition override for the dedup
-    // exchange (the measured bottleneck, see BASELINE.md) — a streaming
-    // micro-batch pays per-partition task + state-store-commit overhead
-    // every trigger, so the default is one per core, as graft.Main derives
-    // it: driving graft.Main on local[4] (4-vCPU VM) at ~1,000 msgs/s
-    // (perfbench stream_paced, then on a 1 s trigger), 4 partitions instead
-    // of 32 cut the batch p50 from 1.46 s to 0.37 s and the median latency
-    // p50 over 12 runs from 1.69 s to 0.73 s
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // SPARK_GRAFT_STATE=rocksdb: the at-scale state store (off-heap, no
-    // per-batch JVM map copies) — the right provider for large dedup key
-    // cardinality; default HDFS-backed store for comparability
-    val rocksdb =
-      if (sys.env.get("SPARK_GRAFT_STATE").contains("rocksdb"))
-        Seq("spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else Nil
-    // SPARK_GRAFT_ROCKSDB_CHANGELOG=true: commit per-batch CHANGELOGS
-    // instead of full SST snapshots (snapshots then amortize in the
-    // background every minDeltasForSnapshot batches) — the first knob to
-    // try when the soak attribution shows stateCommit dominating (see
-    // BASELINE.md's standing-index soak: 11,042‰ of wall). Opt-in so the
-    // recorded baselines stay comparable.
-    val changelog =
-      if (sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").contains("true"))
-        Seq("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-      else Nil
     // NoForkLocalFs: graft.Main's checkpoint filesystem
-    val spark = GraftSession(s"local[$cpus]", shuffle,
-      NoForkLocalFs.SessionConf.toSeq ++ rocksdb ++ changelog: _*)
+    val spark = GraftSession(s"local[$cpus]", cpus, NoForkLocalFs.SessionConf.toSeq: _*)
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    // SPARK_GRAFT_SOAK_TWIN=simjoin: soak the standing-INDEX twin instead
-    // of the dedup pipeline — the one stateful family whose state is the
-    // product (a prefix inverted index), not a bounded filter. Records the
-    // state-residency series the retention contract is judged against.
-    if (sys.env.get("SPARK_GRAFT_SOAK_TWIN").contains("simjoin")) {
-      simJoinSoak(spark,
-        sys.env.getOrElse("SPARK_GRAFT_SOAK_SEC", "300").toInt,
-        sys.env.getOrElse("SPARK_GRAFT_SOAK_SAMPLE_SEC", "15").toInt,
-        sys.env.getOrElse("SPARK_GRAFT_SIMJOIN_RETENTION_MS", "0").toLong)
-      spark.stop()
-      sys.exit(0)
-    }
-
-    val filler = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILL", "970").toInt match { case k => "x" * k }
-    def msg(i: Int, dupOf: Int): BenchMsg =
-      BenchMsg(f"$i%016d", new Timestamp(1700000000000L + i), 1,
-        s"body-$dupOf-$filler".getBytes("UTF-8"))
-    // 10 % duplicates, interleaved — the dedup stage does real work
-    val msgs = (0 until n).map(i => if (i % 10 == 9) msg(i, i - 1) else msg(i, i))
-
-    CountingTransport.reset()
-    val input = MemoryStream[BenchMsg]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-streambench").toString
-    // SPARK_GRAFT_STREAM_STAGE: full (default) | nodedup (skip the stateful
-    // dedup — isolates state-store cost) | nosink (dedup but discard rows —
-    // isolates pack/deliver cost) | http (full pipeline through the real
-    // HTTP wire transport) | http_signed (same, plus SigV4 on every request,
-    // server-verified) | http_chaos (same wire, but 1-in-5 requests throttle
-    // whole and the retry/backoff path absorbs them — the chaos-soak stage)
-    val stage = sys.env.getOrElse("SPARK_GRAFT_STREAM_STAGE", "full")
-    val creds =
-      if (stage == "http_signed") Some(SigV4.Credentials("AKIDBENCH", "bench-secret-key"))
-      else None
-    val httpSink =
-      if (stage == "http" || stage == "http_signed") Some(new BenchHttpSink(creds))
-      else if (stage == "http_chaos") Some(new BenchHttpSink(None, throttleEvery = 5))
-      else None
-    val query = (stage match {
-      case "nodedup" =>
-        input.toDF().writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10L))
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            StreamPipeline.deliverBatch(b, new CountingTransport, "bench")
-          }
-      case "nosink" =>
-        StreamPipeline.transform(input.toDF()).writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10L))
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            b.write.format("noop").mode("overwrite").save()
-          }
-      case "http" | "http_signed" =>
-        StreamPipeline.build(
-          input.toDF(),
-          new HttpKinesisTransport(httpSink.get.endpoint, credentials = creds),
-          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt))
-      case "http_chaos" =>
-        // sustained throttle storm (1-in-5 requests rejected whole) absorbed
-        // by the retry/backoff path — the chaos-soak row's delivery stage;
-        // real backoff sleeps ARE part of the measured cost
-        StreamPipeline.build(
-          input.toDF(),
-          new graft.streaming.RetryingTransport(
-            new HttpKinesisTransport(httpSink.get.endpoint), maxRetries = 6),
-          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt))
-      case _ =>
-        StreamPipeline.build(
-          input.toDF(), new CountingTransport,
-          // batches run back to back, so this measures pipeline capacity,
-          // not trigger idle time
-          StreamPipeline.Options(streamName = "bench", checkpoint = ckpt))
-    }).start()
-
-    // warm-up epoch: absorbs state-store/codegen init
-    input.addData(msgs.take(1000))
-    query.processAllAvailable()
-    CountingTransport.reset()
-
-    // ---- soak mode (SPARK_GRAFT_SOAK_SEC): sustained multi-minute run.
-    // The fixed-N path measures burst capacity; the soak answers the
-    // operational question — does throughput HOLD and does state stay
-    // BOUNDED when the pipeline runs continuously? A feeder loop
-    // generates fresh messages (10 % duplicates, event time advancing
-    // 1 ms/msg so the dedup watermark keeps moving) and throttles itself
-    // to a bounded backlog, so MemoryStream's committed-batch trimming
-    // keeps the source from becoming the memory story. Every
-    // SPARK_GRAFT_SOAK_SAMPLE_SEC (default 15) it samples: interval
-    // user-rec/s, dedup-state rows + bytes (from the progress's state
-    // operator), and JVM heap. One JSON line with the full time series —
-    // the BASELINE.md soak table reads straight off it.
-    val soak = sys.env.get("SPARK_GRAFT_SOAK_SEC").map(_.toInt)
-    if (soak.isDefined) {
-      val soakSec = soak.get
-      val sampleSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_SAMPLE_SEC", "15").toInt
-      // 60k-row backlog / 10k-row chunks: the production analogue of
-      // maxOffsetsPerTrigger. A 200k backlog let single micro-batches grow
-      // past what 32 concurrent state-store tasks can sort in an 8 GB heap
-      // (measured: heap OOM in the dedup exchange ~25 s in); at 60k the
-      // 30 s probe holds 28k rec/s with a stable ~3.1 GB heap.
-      val chunk = sys.env.getOrElse("SPARK_GRAFT_SOAK_CHUNK", "10000").toInt
-      val backlogCap = sys.env.getOrElse("SPARK_GRAFT_SOAK_BACKLOG", "60000").toLong
-      val rt = Runtime.getRuntime
-      var gen = 1000 // ids continue after the warm-up epoch
-      var lastRecs = 0L
-      val t0Soak = System.nanoTime()
-      var lastNs = t0Soak
-      val samples = scala.collection.mutable.ArrayBuffer.empty[String]
-      def sample(): Unit = {
-        val now = System.nanoTime()
-        val recs = CountingTransport.userRecords.get()
-        val rate = (recs - lastRecs) / ((now - lastNs) / 1e9)
-        lastRecs = recs; lastNs = now
-        val st = Option(query.lastProgress).flatMap(_.stateOperators.headOption)
-        samples += s"""{"t_sec":${((now - t0Soak) / 1e9).round},"rate":${rate.round},""" +
-          s""""state_rows":${st.map(_.numRowsTotal).getOrElse(-1L)},""" +
-          s""""state_bytes":${st.map(_.memoryUsedBytes).getOrElse(-1L)},""" +
-          s""""heap_mb":${(rt.totalMemory() - rt.freeMemory()) / 1048576}}"""
-      }
-      var nextSample = t0Soak + sampleSec * 1000000000L
-      while ((System.nanoTime() - t0Soak) / 1e9 < soakSec) {
-        // delivered ≈ 0.9 × input (dedup drops the planted 10 %)
-        val backlog = (gen - 1000L) * 9 / 10 - CountingTransport.userRecords.get()
-        if (backlog < backlogCap) {
-          input.addData((gen until gen + chunk).map(i =>
-            if (i % 10 == 9) msg(i, i - 1) else msg(i, i)))
-          gen += chunk
-        } else Thread.sleep(20L)
-        if (System.nanoTime() >= nextSample) { sample(); nextSample += sampleSec * 1000000000L }
-      }
-      query.processAllAvailable()
-      sample() // drain sample closes the series
-      val sec = (System.nanoTime() - t0Soak) / 1e9
-      query.stop()
-      val recs = CountingTransport.userRecords.get()
-      val soakHttp = httpSink.map(sk =>
-        s""","http_requests_ok":${sk.verified.get()},"http_throttled":${sk.throttledReqs.get()}""").getOrElse("")
-      emit(
-        s"""{"metric":"stream_soak_user_rec_per_sec","value":${(recs / sec).round},"unit":"rec/sec",""" +
-        s""""stage":"$stage","state":"${sys.env.getOrElse("SPARK_GRAFT_STATE", "hdfs")}",""" +
-        s""""shuffle":$shuffle,"soak_sec":${sec.round},"input_msgs":${gen - 1000},""" +
-        s""""delivered_user_records":$recs,"mb":${CountingTransport.bytes.get() / 1e6}$soakHttp,""" +
-        s""""samples":${samples.mkString("[", ",", "]")}}""")
-      spark.stop()
-      httpSink.foreach(_.stop())
-      sys.exit(0)
-    }
-
-    val work = msgs.drop(1000)
-    val t0 = System.nanoTime()
-    work.grouped(20000).foreach { chunk => input.addData(chunk) }
-    query.processAllAvailable()
-    val sec = (System.nanoTime() - t0) / 1e9
-    query.stop()
-
-    val userRecords = CountingTransport.userRecords.get()
-    val rate = userRecords / sec
-    // duration breakdown of the last few batches (addBatch = sink work,
-    // stateManagement/commitOffsets = streaming machinery) for profiling
-    val prog = query.recentProgress.takeRight(4).map { p =>
-      val d = p.durationMs
-      val st = p.stateOperators.headOption.map { s =>
-        s""","state":{"rowsTotal":${s.numRowsTotal},"updated":${s.numRowsUpdated},""" +
-        s""""updateMs":${s.allUpdatesTimeMs},"removeMs":${s.allRemovalsTimeMs},""" +
-        s""""commitMs":${s.commitTimeMs},"memBytes":${s.memoryUsedBytes}}"""
-      }.getOrElse("")
-      s"""{"rows":${p.numInputRows},"addBatch":${d.getOrDefault("addBatch", -1L)},""" +
-      s""""getBatch":${d.getOrDefault("getBatch", -1L)},"commit":${d.getOrDefault("commitOffsets", -1L)},""" +
-      s""""total":${d.getOrDefault("triggerExecution", -1L)}$st}"""
-    }.mkString("[", ",", "]")
-    val httpStats = httpSink.map(sk =>
-      s""","signed":${creds.isDefined},"http_requests_verified":${sk.verified.get()},""" +
-      s""""http_requests_rejected":${sk.rejected.get()},"http_throttled":${sk.throttledReqs.get()}""").getOrElse("")
-    emit(
-      s"""{"metric":"stream_user_rec_per_sec","value":${rate.round},"unit":"rec/sec",""" +
-      s""""stage":"$stage","shuffle":$shuffle,"input_msgs":${work.length},"delivered_user_records":$userRecords,""" +
-      s""""entries":${CountingTransport.entries.get()},"mb":${CountingTransport.bytes.get() / 1e6},""" +
-      s""""sec":$sec$httpStats,"batches":$prog}""")
-    spark.stop()
-    httpSink.foreach(_.stop())
+    val line =
+      try run(spark, twin,
+        env.getOrElse("SPARK_GRAFT_SOAK_SEC", "300").toInt,
+        env.getOrElse("SPARK_GRAFT_SOAK_SAMPLE_SEC", "15").toInt,
+        env.get("SPARK_GRAFT_SOAK_BACKLOG").map(_.toLong).getOrElse(twin.backlog))
+      finally spark.stop()
+    Bench.emit(line, env.getOrElse("SPARK_GRAFT_STREAM_OUT", "/tmp/graft_stream_bench.json"))
   }
 }

@@ -16,9 +16,9 @@ object GraftFunctions {
   def fnv64a(c: Column): Column = Bridge.column(Fnv64aExpr(Bridge.expression(c)))
 
   /** The reference's partition-key rendering of the hash: lowercase hex,
-    * no leading zeros (Go `%x`, aggregator.go:30). `hex()` on BIGINT gives
-    * uppercase-no-padding, so `lower` completes the match. */
-  def fnv64aHex(c: Column): Column = lower(hex(fnv64a(c)))
+    * no leading zeros (Go `%x`, aggregator.go:30). Java's `%x` prints a
+    * `long` as unsigned, as `Fnv64a.hex` does. */
+  def fnv64aHex(c: Column): Column = format_string("%x", fnv64a(c))
 
   /** Reference partition-key rule (aggregator.go:124-130): caller key when
     * 1–255 chars, else body-hash hex. The batch form; the streaming

@@ -68,9 +68,7 @@ object NsqShardConsumers {
         // requeue anything the dead connection still nominally held
         if (old != null) old.close()
         new ShardConsumer(p.host, p.port, p.topic, p.channel,
-          rdy = p.rdy, msgTimeoutMs = p.msgTimeoutMs,
-          outputBufferTimeoutMs = p.outputBufferTimeoutMs,
-          idleTtlMs = p.idleTtlMs)
+          rdy = p.rdy, idleTtlMs = p.idleTtlMs)
       }
     })
 
@@ -119,8 +117,7 @@ object NsqShardConsumers {
   * the per-epoch ids wait in `pending` for their FIN-after-commit. */
 final class ShardConsumer(
     host: String, port: Int, topic: String, channel: String,
-    rdy: Int, msgTimeoutMs: Long, outputBufferTimeoutMs: Long,
-    val idleTtlMs: Long = 60000L) {
+    rdy: Int, val idleTtlMs: Long = 60000L) {
 
   private val queue = new LinkedBlockingQueue[NsqMessage]()
   // epoch -> message ids delivered to that epoch's reader, not yet FINned
@@ -130,9 +127,7 @@ final class ShardConsumer(
   @volatile private[nsq] var lastTouchedNanos = System.nanoTime()
 
   private[nsq] val client = new NsqClient(host, port, topic, channel,
-    maxInFlight = rdy, msgTimeoutMs = msgTimeoutMs,
-    outputBufferTimeoutMs = outputBufferTimeoutMs,
-    onMessage = queue.put)
+    maxInFlight = rdy, onMessage = queue.put)
 
   /** Standing-session health; false ⇒ the registry must rebuild. */
   def isAlive: Boolean = client.isAlive

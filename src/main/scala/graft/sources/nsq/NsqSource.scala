@@ -53,16 +53,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Schema: id STRING, ts TIMESTAMP, attempts INT, body BINARY (FIXTURES A4).
   *
-  * Consumer tuning (mirrors main.go:62-68): `msgTimeoutMs` and
-  * `outputBufferTimeoutMs` flow into IDENTIFY. RDY defaults to
-  * [[NsqSource.DefaultRdy]] (nsqd's default `--max-rdy-count`), clamped to
-  * whatever `max_rdy_count` the broker grants in its IDENTIFY reply. With
-  * batches running back to back, a message is FINned about one batch after
-  * its delivery (its epoch's batch, then the next read), so about two
-  * epochs are in flight: the window sustains about
+  * Consumer tuning (mirrors main.go:62-68): IDENTIFY asks for
+  * [[NsqClient]]'s 10 s `msg_timeout` and 50 ms `output_buffer_timeout`.
+  * RDY defaults to [[NsqSource.DefaultRdy]] (nsqd's default
+  * `--max-rdy-count`), clamped to whatever `max_rdy_count` the broker
+  * grants in its IDENTIFY reply. With batches running back to back, a
+  * message is FINned about one batch after its delivery (its epoch's
+  * batch, then the next read), so about two epochs are in flight: the
+  * window sustains about
   * `numShards × RDY / (2 × batch duration)` msgs/s, and an executor buffers
   * at most `RDY × body size` per shard. Messages must be FINned within
-  * `msgTimeoutMs` of delivery, or nsqd redelivers them. With
+  * the `msg_timeout` of delivery, or nsqd redelivers them. With
   * `maxPerTrigger` set, RDY is 3× a shard's epoch budget instead, so
   * un-FINned epochs awaiting commit never stall delivery.
   * `statsEndpoints` overrides the nsqd HTTP ports (default:
@@ -123,18 +124,14 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
   private val topic = Option(options.get("topic")).getOrElse("events")
   private val channel = Option(options.get("channel")).getOrElse("graft")
   private val maxPerTrigger = Option(options.get("maxPerTrigger")).map(_.toLong)
-  private val msgTimeoutMs =
-    Option(options.get("msgTimeoutMs")).map(_.toLong).getOrElse(10000L)
-  private val outputBufferTimeoutMs =
-    Option(options.get("outputBufferTimeoutMs")).map(_.toLong).getOrElse(50L)
   private val pollMs =
     Option(options.get("pollMs")).map(_.toLong).getOrElse(100L)
   // how long an executor-side consumer may sit without serving a take before
   // the reaper closes it (orphaned by shard migration or a stopped query);
-  // default several msg_timeouts so a slow trigger cadence never reaps a
-  // healthy consumer
+  // default six of NsqClient's 10 s msg_timeouts, so a slow trigger cadence
+  // never reaps a healthy consumer
   private val idleTtlMs =
-    Option(options.get("idleTtlMs")).map(_.toLong).getOrElse(msgTimeoutMs * 6)
+    Option(options.get("idleTtlMs")).map(_.toLong).getOrElse(60000L)
   // the registry key ties a restarted query (same checkpoint) back to its
   // still-live consumers in local mode; distinct queries never collide
   private[nsq] val sessionId = s"nsq:$topic:$channel:$checkpointLocation"
@@ -272,9 +269,7 @@ class NsqMicroBatchStream(options: CaseInsensitiveStringMap, checkpointLocation:
       NsqShardPartition(sessionId, i, host, port, topic, channel,
         epoch = e, committedEpoch = c,
         maxPerShard = maxPerShard, pollMs = pollMs,
-        rdy = rdy,
-        msgTimeoutMs = msgTimeoutMs, outputBufferTimeoutMs = outputBufferTimeoutMs,
-        idleTtlMs = idleTtlMs,
+        rdy = rdy, idleTtlMs = idleTtlMs,
         preferredHost = if (hosts.isEmpty) "" else hosts(i % hosts.size))
     }.toArray[InputPartition]
   }
@@ -302,7 +297,6 @@ final case class NsqShardPartition(
     host: String, port: Int, topic: String, channel: String,
     epoch: Long, committedEpoch: Long,
     maxPerShard: Int, pollMs: Long, rdy: Int,
-    msgTimeoutMs: Long, outputBufferTimeoutMs: Long,
     idleTtlMs: Long = 60000L, preferredHost: String = "") extends InputPartition {
   override def preferredLocations(): Array[String] =
     if (preferredHost.isEmpty) Array.empty else Array(preferredHost)

@@ -66,9 +66,9 @@ object StreamPipeline {
     * record, and push its requests via the transport, retrying failed
     * slots. A slot still failing after the retries fails the task, so Spark
     * re-runs it (at-least-once). */
-  def deliverBatch(batch: Dataset[org.apache.spark.sql.Row],
-                   transport: KinesisTransport,
-                   streamName: String): Unit = {
+  private def deliverBatch(batch: Dataset[org.apache.spark.sql.Row],
+                           transport: KinesisTransport,
+                           streamName: String): Unit = {
     batch.select("body").foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       val writer = new BatchWriter()
       rows.foreach(r => writer.add(r.getAs[Array[Byte]](0)))

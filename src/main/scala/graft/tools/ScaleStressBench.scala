@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Bench.Json
+
 /** Scale-stress for the heavy curation queries: replicate the sf0.1
   * `documents`/`embeddings` tables K-fold AT RUNTIME and measure how the
   * pipelines scale. sf0.1 is 5,000 docs, so K=10 is the sf1-equivalent
@@ -365,6 +367,10 @@ object ScaleStressBench {
     java.nio.file.Files.write(marker.toPath, markerContent.getBytes("UTF-8"))
   }
 
+  /** `v` with `places` decimals, rounded half up: prints as `f"%.3f"` does. */
+  private def fixed(v: Double, places: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(places, java.math.RoundingMode.HALF_UP)
+
   def main(args: Array[String]): Unit = {
     val ks = args.headOption.getOrElse("1,10").split(',').map(_.trim.toInt).toSeq
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -414,18 +420,21 @@ object ScaleStressBench {
       // table over a 160x corpus must not stay resident while later rungs
       // are timed (round-18 advice)
       graft.operators.Checkpoints.releaseShared()
-      val qjson = times.toSeq.sortBy(_._1)
-        .map { case (n, t) => s""""$n":${f"$t%.3f"}""" }.mkString(",")
-      println(s"""{"bench":"scale_stress","k":$k,"docs":$nDocs,"total":${f"${times.values.sum}%.3f"},"queries":{$qjson}}""")
+      val line = Json.createObjectNode().put("bench", "scale_stress").put("k", k)
+        .put("docs", nDocs).put("total", fixed(times.values.sum, 3))
+      val qjson = line.putObject("queries")
+      times.toSeq.sortBy(_._1).foreach { case (n, t) => qjson.put(n, fixed(t, 3)) }
+      println(Json.writeValueAsString(line))
       k -> times
     }.toMap
 
     if (ks.size > 1) {
       val k1 = perK(ks.min); val kN = perK(ks.max)
-      val ratios = names.flatMap { n =>
-        for (a <- k1.get(n); b <- kN.get(n)) yield s""""$n":${f"${b / a}%.2f"}"""
-      }.mkString(",")
-      println(s"""{"bench":"scale_stress_ratio","k_hi":${ks.max},"k_lo":${ks.min},"ideal":${ks.max.toDouble / ks.min},"ratios":{$ratios}}""")
+      val line = Json.createObjectNode().put("bench", "scale_stress_ratio")
+        .put("k_hi", ks.max).put("k_lo", ks.min).put("ideal", ks.max.toDouble / ks.min)
+      val ratios = line.putObject("ratios")
+      for (n <- names; a <- k1.get(n); b <- kN.get(n)) ratios.put(n, fixed(b / a, 2))
+      println(Json.writeValueAsString(line))
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -10,18 +9,14 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   * as [[graft.Bench]].
   *
   * Run: `sbt "Test/runMain graft.streaming.NearDupBench"`
-  * Env: SPARK_GRAFT_NEARDUP_N (docs, default 20000), SPARK_GRAFT_CPUS.
+  * Env: SPARK_GRAFT_NEARDUP_N (docs, default 20000), SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_CONF (8 shuffle partitions unless it sets them).
   */
 object NearDupBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_NEARDUP_N", "20000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.GraftSession.cpus()
+    val spark = graft.GraftSession(s"local[$cpus]", cpus, "spark.sql.shuffle.partitions" -> "8")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
