@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every SparkEntry query at the driver-provided
   * scale factor and prints ONE JSON line. A full warm-up pass absorbs
@@ -43,18 +42,15 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] runs the same bench on
-    // multi-JVM executors; with SPARK_GRAFT_MATERIALIZE=reliable this times
-    // the 100 TB deployment shape, not just its correctness
+    // multi-JVM executors with reliable checkpoints: it times the 100 TB
+    // deployment shape, not just its correctness
     val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("WARN")
 
-    // noop-write the full result, then release any localCheckpoint blocks
-    // the query registered — without this, a 78-query session accumulates
-    // leaked storage blocks (shingle tables, label-propagation rounds) for
-    // the JVM's lifetime and starves execution memory for later queries
-    def materialize(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      finally graft.operators.Checkpoints.releaseAll()
+    // noop-write the full result; SparkEntry.run then releases the
+    // checkpoints the query registered
+    def materialize(name: String): Unit =
+      SparkEntry.run(spark, name, sfDir)(_.write.format("noop").mode("overwrite").save())
 
     // optional comma-separated filter for focused perf iteration
     // (SPARK_GRAFT_QUERIES=h_neardup_minhash,...); the driver never sets it
@@ -65,8 +61,8 @@ object Bench {
     // measures steady state
     // a warm-up failure is logged (not fatal): a query that fails only once
     // would otherwise silently shift its one-time cost into the timed pass
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try materialize(fn) catch {
+    selected.foreach { name =>
+      try materialize(name) catch {
         case e: Throwable =>
           System.err.println(s"[bench] warm-up $name threw: ${e.getMessage}")
       }
@@ -74,10 +70,10 @@ object Bench {
 
     val loadBefore = loadavg1m()
     var failed = List.empty[String]
-    val results = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val results = selected.flatMap { name =>
       val t0 = System.nanoTime()
       try {
-        materialize(fn)
+        materialize(name)
         Some(name -> (System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
@@ -96,7 +92,7 @@ object Bench {
     val spikes = results.filter(_._2 > SpikeThresholdSec).map { case (name, spike) =>
       val t0 = System.nanoTime()
       try {
-        materialize(selected(name))
+        materialize(name)
         val floor = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] spike $name: $spike%.2fs -> floor $floor%.2fs")
         name -> (spike, Some(floor))
@@ -115,10 +111,10 @@ object Bench {
     results.foreach { case (k, v) => qs.put(k, v) }
     json.set[ObjectNode]("spikes", spikesNode(spikes, identity))
     // shared-table build cost (round 21, additions-only): sharedTable
-    // entries survive releaseAll, so the first consumer builds them in the
-    // warm-up pass and the timed pass reads materialized blocks — without
-    // this field the per-query numbers silently exclude index-build work
-    // (round-20 verdict item 2).
+    // entries survive each query's release, so the first consumer builds
+    // them in the warm-up pass and the timed pass reads materialized
+    // blocks — without this field the per-query numbers silently exclude
+    // index-build work (round-20 verdict item 2).
     val sb = Json.createObjectNode()
     graft.operators.Checkpoints.sharedBuildSeconds.toSeq.sortBy(_._1)
       .foreach { case (k, v) => sb.put(k, ms(v)) }

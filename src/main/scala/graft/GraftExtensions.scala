@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Multiply, Sqrt}
-import org.apache.spark.sql.graft.{ArrayDotProduct, Fnv64aExpr, KplDeaggregateExpr, MinhashSignatureExpr}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: enables the engine's native
   * expressions (simhash64 among them) cluster-wide with

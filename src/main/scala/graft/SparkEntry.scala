@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 
 import graft.functions.GraftFunctions
-import graft.operators.{AnalyticsOps, CorpusOps, FormatOps, GovernanceOps, LlmOps, Multimodal, PipelineQueries, ProfileOps, RelationalQueries, ScaleOps, TrainingOps}
+import graft.operators.{AnalyticsOps, Checkpoints, CorpusOps, FormatOps, GovernanceOps, LlmOps, Multimodal, PipelineQueries, ProfileOps, RelationalQueries, ScaleOps, TrainingOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -19,15 +19,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.q1Pricing(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Each runs in
-    * its own [[querySession]] of the caller's session. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (RelationalQueries.queries ++ PipelineQueries.queries ++ LlmOps.queries ++
+  /** Every declared query, built in the session it is given. */
+  private def declared: Map[String, (SparkSession, String) => DataFrame] =
+    RelationalQueries.queries ++ PipelineQueries.queries ++ LlmOps.queries ++
       Multimodal.queries ++ FormatOps.queries ++ ScaleOps.queries ++
       TrainingOps.queries ++ AnalyticsOps.queries ++ GovernanceOps.queries ++
-      CorpusOps.queries ++ ProfileOps.queries).map { case (name, f) =>
+      CorpusOps.queries ++ ProfileOps.queries
+
+  /** One entry per implemented operator from SURVEY.md §2. Each runs in
+    * its own [[querySession]] of the caller's session; the checkpoints it
+    * registers there stay until `Checkpoints.releaseAll`. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map { case (name, f) =>
       name -> ((s: SparkSession, dir: String) => f(querySession(s), dir))
     }
+
+  /** Build query `name` over `dir` in its own [[querySession]] of `spark`,
+    * run `action` on it, then release the checkpoints that clone
+    * registered — and nothing else, so a query another caller built in
+    * the same session keeps its blocks. Shared tables stay (see
+    * `Checkpoints.sharedTable`). */
+  def run[A](spark: SparkSession, name: String, dir: String)(action: DataFrame => A): A = {
+    val s = querySession(spark)
+    try action(declared(name)(s, dir)) finally Checkpoints.releaseSession(s)
+  }
 
   /** The session one query is built in: a clone of `s`, after the engine's
     * functions are registered in `s` (once per session). The query's temp
@@ -47,17 +62,17 @@ object SparkEntry {
       TrainingOps.oracle ++ AnalyticsOps.oracleSql ++ GovernanceOps.oracleSql ++
       CorpusOps.oracle ++ ProfileOps.oracle
 
-  /** The queries a comma-separated name filter selects, all of them when
-    * there is none. Unknown names are reported once on stderr: a
-    * misspelled name would otherwise select nothing and make an empty run
-    * look successful. */
-  def select(filter: Option[String]): Map[String, (SparkSession, String) => DataFrame] = {
-    val all = queries
+  /** The sorted names of the queries a comma-separated name filter
+    * selects, all of them when there is none. Unknown names are reported
+    * once on stderr: a misspelled name would otherwise select nothing and
+    * make an empty run look successful. */
+  def select(filter: Option[String]): Seq[String] = {
+    val all = declared.keySet
     filter.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet).fold(all) { names =>
-      val unknown = names -- all.keySet
+      val unknown = names -- all
       if (unknown.nonEmpty)
         Console.err.println(s"[graft] WARNING: unknown query names: ${unknown.toSeq.sorted.mkString(",")}")
-      all.filter { case (n, _) => names.contains(n) }
-    }
+      names & all
+    }.toSeq.sorted
   }
 }

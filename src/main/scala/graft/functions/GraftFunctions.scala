@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ArrayDotProduct, Bridge, Fnv64aExpr, MinhashSignatureExpr}
+import org.apache.spark.sql.graft.{Bridge, Fnv64aExpr}
 
 /** Column-API facade + SQL registration for the engine's custom functions.
   *
@@ -25,19 +25,6 @@ object GraftFunctions {
     * pipeline leaves the key to `KplPacker.put`, which applies the same rule. */
   def partitionKey(body: Column, key: Column): Column =
     when(key.isNotNull && length(key).between(1, 255), key).otherwise(fnv64aHex(body))
-
-  /** dot(a, b) over double arrays — codegen'd native expression. */
-  def dotProduct(a: Column, b: Column): Column =
-    Bridge.column(ArrayDotProduct(Bridge.expression(a), Bridge.expression(b)))
-
-  /** k-permutation MinHash signature over pre-hashed shingles. */
-  def minhashSignature(hashes: Column, k: Int): Column =
-    Bridge.column(MinhashSignatureExpr(Bridge.expression(hashes), k))
-
-  /** Cosine similarity over double arrays, composed from the codegen'd
-    * dot product (the SURVEY §7 `cosine_sim` surface). */
-  def cosineSim(a: Column, b: Column): Column =
-    dotProduct(a, b) / (sqrt(dotProduct(a, a)) * sqrt(dotProduct(b, b)))
 
   /** Sessions already registered — re-registration is correct but spams
     * "replaced a previously registered function" warnings from every query

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 
 import graft.kernel.{KplPacker, KplProtobuf}
 

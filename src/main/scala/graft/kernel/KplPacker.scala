@@ -33,9 +33,7 @@ final case class KinesisEntry(
   * scaling out is embarrassingly parallel. Not thread-safe by design: Spark
   * gives each task its own instance, unlike the mutex-guarded Go original.
   */
-final class KplPacker(
-    val targetSize: Int = KplPacker.DefaultTargetSize,
-    partitioner: Array[Byte] => String = Fnv64a.hex) {
+final class KplPacker(val targetSize: Int = KplPacker.DefaultTargetSize) {
 
   private val records = mutable.ArrayBuffer.empty[KplProtobuf.UserRecord]
   private val partIds = mutable.LinkedHashMap.empty[String, Int]
@@ -61,7 +59,7 @@ final class KplPacker(
     * the reference's envelope supports but its pipeline never populated
     * (proto/aggregation.proto:8,18, partitioned.go stub). */
   def put(body: Array[Byte], key: String = "", ehk: String = ""): Int = {
-    val partKey = if (key.isEmpty || key.length > 255) partitioner(body) else key
+    val partKey = if (key.isEmpty || key.length > 255) Fnv64a.hex(body) else key
 
     if (body.length > targetSize) {
       completed += KinesisEntry(body, partKey, Option(ehk).filter(_.nonEmpty))
@@ -126,14 +124,4 @@ final class KplPacker(
 object KplPacker {
   /** 25 kB — one Kinesis PUT payload unit (aggregator.go:76,93). */
   val DefaultTargetSize = 25000
-
-  /** Pack a whole (partition-local) iterator and drain — the shape used from
-    * Spark `mapPartitions` / aggregation buffers. */
-  def packAll(
-      rows: Iterator[(Array[Byte], String)],
-      targetSize: Int = DefaultTargetSize): Vector[KinesisEntry] = {
-    val p = new KplPacker(targetSize)
-    rows.foreach { case (body, key) => p.put(body, key) }
-    p.drain()
-  }
 }

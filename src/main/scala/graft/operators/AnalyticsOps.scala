@@ -152,25 +152,25 @@ object AnalyticsOps {
     // consumed by four chains and the 5-row quintile-target table by
     // three — as CTEs Spark re-inlines each consumer into its own
     // re-derivation (six extra dimension aggregates censused before this)
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT o_custkey AS ck,
         |  max(CAST(o_orderdate AS DATE)) AS last_order,
         |  CAST(count(*) AS BIGINT) AS f_orders,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS m_cents
         |FROM orders GROUP BY o_custkey""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("rfm_cust")
-    Checkpoints.track(s.sql(
+      .graftCheckpoint().createOrReplaceTempView("rfm_cust")
+    s.sql(
       """SELECT c.ck, CAST(datediff(a.ad, c.last_order) AS BIGINT) AS r_days,
         |  c.f_orders, c.m_cents
         |FROM rfm_cust c
         |CROSS JOIN (SELECT max(last_order) AS ad FROM rfm_cust) a""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("rfm_base")
-    Checkpoints.track(s.sql(
+      .graftCheckpoint().createOrReplaceTempView("rfm_base")
+    s.sql(
       """SELECT CAST(k AS BIGINT) AS k,
         |  CAST((CAST(k AS BIGINT) * n + 4) DIV 5 AS BIGINT) AS tgt
         |FROM (SELECT CAST(count(*) AS BIGINT) AS n FROM rfm_base)
         |LATERAL VIEW explode(sequence(1, 5)) t AS k""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("rfm_targets")
+      .graftCheckpoint().createOrReplaceTempView("rfm_targets")
     s.sql(rfmBody(spark = true))
   }
 
@@ -352,12 +352,12 @@ object AnalyticsOps {
     * no matter how the calendar-sized tail re-derives. */
   def gDaySimilarity(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "events")
-    val c = Checkpoints.track(s.sql(
+    val c = s.sql(
       """SELECT tus DIV 86400000000 AS day, (tus DIV 3600000000) % 24 AS hod,
         |  count(*) AS n
         |FROM events
         |GROUP BY tus DIV 86400000000, (tus DIV 3600000000) % 24""".stripMargin)
-      .graftCheckpoint())
+      .graftCheckpoint()
     c.createOrReplaceTempView("day_hour_counts")
     s.sql(
       """WITH tot AS (
@@ -889,10 +889,10 @@ object AnalyticsOps {
     // EVENTS scan into every reference (measured: 12 exchanges / 6 corpus
     // scans); checkpointed it is one corpus aggregate and everything
     // downstream runs on <= days rows
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT tus DIV 86400000000 AS dd, count(*) AS n
         |FROM events GROUP BY 1""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("season_daily")
+      .graftCheckpoint().createOrReplaceTempView("season_daily")
     s.sql(anomalySeasonalBody("daily AS (SELECT dd, n FROM season_daily)", "DIV"))
   }
 
@@ -946,7 +946,7 @@ object AnalyticsOps {
     * random-walk update in EXACT BIGINT arithmetic: integer division and
     * integer sums are order- and partitioning-independent, so both
     * engines agree bit-for-bit where floating-point PageRank never could.
-    * The edge list materializes ONCE (localCheckpoint, released
+    * The edge list materializes ONCE (a checkpoint, released
     * post-action); each iteration is one edge⋈rank equi-join + one
     * dst-keyed aggregate with map-side partials — the frontier-join shape
     * that scales as O(E) per round on any cluster. Output: top-15
@@ -969,7 +969,7 @@ object AnalyticsOps {
     // before the checkpoint — localCheckpoint does not preserve the
     // hash partitioning for the downstream joins here, so the extra
     // exchange costs ~2× and buys nothing.)
-    val edges = Checkpoints.track(und.join(deg, "src").graftCheckpoint())
+    val edges = und.join(deg, "src").graftCheckpoint()
     var rank = edges.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1000000L).as("r"))
     for (_ <- 1 to 3) {
@@ -1146,12 +1146,12 @@ object AnalyticsOps {
     // The oriented edge list materializes ONCE (the build is two shuffles
     // over the corpus); everything downstream — degree table, wedge count,
     // the triangle join — derives from this edge-sized table.
-    val edges = Checkpoints.track(
+    val edges =
       pairs.join(degIn.as("du"), col("u") === col("du.node"))
         .join(degIn.as("dv"), col("v") === col("dv.node"))
         .select(when(fwd, col("u")).otherwise(col("v")).as("src"),
           when(fwd, col("v")).otherwise(col("u")).as("dst"))
-        .graftCheckpoint())
+        .graftCheckpoint()
     val deg = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -1234,23 +1234,23 @@ object AnalyticsOps {
     val und = pairs.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(pairs.select(col("v").as("src"), col("u").as("dst")))
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val out = Checkpoints.track(
+    val out =
       und.join(deg, "src").select(col("src"), col("dst"), col("deg"))
-        .graftCheckpoint())
+        .graftCheckpoint()
     val n = out.select(col("src")).distinct().count()
     require(n > 0, "empty co-supply graph")
     val base = 1000000000000L / n
-    var p = Checkpoints.track(
+    var p =
       out.select(col("src").as("node")).distinct()
-        .select(col("node"), lit(base).as("p")).graftCheckpoint())
+        .select(col("node"), lit(base).as("p")).graftCheckpoint()
     val roundRows = (1 to 8).map { r =>
-      val next = Checkpoints.track(
+      val next =
         out.join(p, col("src") === col("node"))
           .select(col("dst"), expr("p DIV deg").as("c"))
           .groupBy(col("dst")).agg(sum(col("c")).as("m"))
           .select(col("dst").as("node"),
             expr(s"(150 * ${base}L + 850 * m) DIV 1000").as("p"))
-          .graftCheckpoint())
+          .graftCheckpoint()
       // every node keeps degree >= 1 on an undirected edge list, so the
       // round-over-round node sets are identical and the join is total
       val delta = next.as("b")
@@ -1259,7 +1259,7 @@ object AnalyticsOps {
           sum(abs(col("b.p") - col("a.p"))).as("l1_delta"),
           max(abs(col("b.p") - col("a.p"))).as("max_delta"),
           sum(col("b.p")).as("total_mass"))
-      p = next // superseded vectors stay tracked: the delta rows read them
+      p = next // superseded vectors stay registered: the delta rows read them
       delta
     }
     roundRows.reduce(_ unionAll _).orderBy(col("round"))
@@ -1818,10 +1818,10 @@ object AnalyticsOps {
     * Skew-free: orderkey is the natural high-cardinality key. */
   def gMarketBasket(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "lineitem")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT l_orderkey AS ok, array_sort(collect_set(l_partkey)) AS ps
         |FROM lineitem GROUP BY l_orderkey""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("basket_grp")
+      .graftCheckpoint().createOrReplaceTempView("basket_grp")
     s.sql(
       """WITH n AS (SELECT count(*) AS n FROM basket_grp),
         |pc AS (
@@ -1915,23 +1915,23 @@ object AnalyticsOps {
     * The per-arm report is a 2-row aggregate; the gap join 2×2. */
   def gFunnelAb(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "events")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT user_id,
         |  CASE WHEN substr(md5(CAST(user_id AS STRING)), 1, 1) < '8'
         |       THEN 'A' ELSE 'B' END AS arm,
         |  min(tus) AS t0
         |FROM events WHERE event_type = 'view' GROUP BY user_id, 2""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("ab_v")
-    Checkpoints.track(s.sql(
+      .graftCheckpoint().createOrReplaceTempView("ab_v")
+    s.sql(
       """SELECT e.user_id, min(e.tus) AS t1
         |FROM events e JOIN ab_v v ON e.user_id = v.user_id AND e.tus > v.t0
         |WHERE e.event_type = 'click' GROUP BY e.user_id""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("ab_c")
-    Checkpoints.track(s.sql(
+      .graftCheckpoint().createOrReplaceTempView("ab_c")
+    s.sql(
       """SELECT e.user_id, min(e.tus) AS t2
         |FROM events e JOIN ab_c c ON e.user_id = c.user_id AND e.tus > c.t1
         |WHERE e.event_type = 'purchase' GROUP BY e.user_id""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("ab_p")
+      .graftCheckpoint().createOrReplaceTempView("ab_p")
     s.sql(
       """WITH v AS (SELECT * FROM ab_v),
         |c AS (SELECT * FROM ab_c),
@@ -2198,12 +2198,12 @@ object AnalyticsOps {
     * exactly one events scan). */
   def gSeasonality(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "events")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT event_type, (tus DIV 3600000000L) % 168 AS how,
         |  count(*) AS hcnt
         |FROM events
         |GROUP BY event_type, (tus DIV 3600000000L) % 168""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("season_hh")
+      .graftCheckpoint().createOrReplaceTempView("season_hh")
     s.sql(
       """WITH hh AS (SELECT * FROM season_hh),
         |dh AS (SELECT event_type, ((how DIV 24) + 4) % 7 AS dow,
@@ -2549,10 +2549,10 @@ object AnalyticsOps {
     * user_id is the natural skew-free key. */
   def gAudienceOverlap(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "events")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT user_id, array_sort(collect_set(event_type)) AS ts
         |FROM events GROUP BY user_id""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("aud_sets")
+      .graftCheckpoint().createOrReplaceTempView("aud_sets")
     s.sql(
       """WITH singles AS (
         |  SELECT t AS et, count(*) AS n
@@ -2628,10 +2628,10 @@ object AnalyticsOps {
     * at 100 TB. */
   def gForecastBaseline(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "events")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT event_type, tus DIV 86400000000L AS day, count(*) AS cnt
         |FROM events GROUP BY event_type, tus DIV 86400000000L""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("forecast_hist")
+      .graftCheckpoint().createOrReplaceTempView("forecast_hist")
     s.sql(
       """WITH hist AS (SELECT * FROM forecast_hist),
         |scored AS (
@@ -2777,13 +2777,13 @@ object AnalyticsOps {
     * histogram- or segment-sized. */
   def gRepeatPurchase(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "orders", "customer")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT c.c_mktsegment AS segment, o.o_custkey AS ck,
         |  array_sort(collect_list(unix_micros(o.o_orderdate) DIV 86400000000L))
         |    AS ds
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |GROUP BY c.c_mktsegment, o.o_custkey""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("repeat_cust")
+      .graftCheckpoint().createOrReplaceTempView("repeat_cust")
     s.sql(
       """WITH cust AS (SELECT segment, ck, ds FROM repeat_cust),
         |rep AS (

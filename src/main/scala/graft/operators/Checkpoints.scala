@@ -1,98 +1,111 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.Bridge
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
-/** Lifecycle registry for `localCheckpoint()`ed DataFrames.
+/** The one owner of every intermediate a query materializes.
   *
   * Several query pipelines (MinHash shingle table, dup-cluster label
-  * propagation) materialize intermediates via `localCheckpoint` so the
-  * work runs once instead of once per downstream reference. A local
-  * checkpoint pins storage-memory blocks for the JVM's lifetime unless
-  * explicitly unpersisted — and a sequential 78-query bench session that
-  * never releases them steadily starves execution memory (at cluster
-  * scale, an OOM). But the *returned* DataFrame of a query often still
-  * reads those blocks, so the query function itself cannot release them
-  * before the caller's action runs.
+  * propagation, rank loops) materialize intermediates so the work runs
+  * once instead of once per downstream reference. A checkpoint pins
+  * storage blocks (or, reliable, files) until it is explicitly released —
+  * a sequential bench session that never releases them starves execution
+  * memory (at cluster scale, an OOM). But the *returned* DataFrame of a
+  * query often still reads those blocks, so the query function itself
+  * cannot release them before the caller's action runs.
   *
-  * Contract: a query that checkpoints an intermediate its RESULT still
-  * depends on wraps it in [[track]]; harnesses (Bench, Verify, specs)
-  * call [[releaseAll]] after each query's action completes.
-  * Intermediates the result does NOT depend on (superseded loop states,
-  * edge tables consumed before the loop exits) are unpersisted inline at
-  * the point they become dead instead of being tracked here.
+  * Contract:
+  *  - `df.graftCheckpoint()` materializes `df` and registers the RDD behind
+  *    the returned frame under that frame's session — for a declared query,
+  *    the clone `SparkEntry.querySession` built it in;
+  *  - `SparkEntry.run` releases what its clone registered once the caller's
+  *    action is done ([[releaseSession]]), and nothing else, so two queries
+  *    in one session at once cannot free each other's blocks;
+  *  - intermediates the result does NOT depend on (superseded loop states,
+  *    edge tables consumed before the loop exits) may be freed early with
+  *    [[release]], which also drops them from the registry;
+  *  - a [[sharedTable]] claims the RDDs behind its result: they survive the
+  *    building query's release and go only at [[releaseShared]];
+  *  - [[releaseAll]] releases every session's registry (harnesses that build
+  *    through `SparkEntry.queries`, specs that call an operator directly).
   */
 object Checkpoints {
-  private val tracked = ArrayBuffer.empty[DataFrame]
+  /** The checkpoint RDDs each session registered and has not released. */
+  private val owned = mutable.Map.empty[SparkSession, mutable.Set[RDD[_]]]
 
-  /** Register a checkpointed DataFrame for post-action release. */
-  def track(df: DataFrame): DataFrame = synchronized { tracked += df; df }
+  /** The RDDs behind a frame: the `LogicalRDD` leaves of its analyzed plan
+    * (the frame may be a projection or filter OVER a checkpoint). */
+  private def backing(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 
-  /** Materialization backend for every checkpoint site in the engine.
-    *
-    * `SPARK_GRAFT_MATERIALIZE` selects the discipline:
-    *  - `local` (default): `localCheckpoint()` — executor-local,
-    *    unreplicated storage blocks with truncated lineage. Free on
-    *    local[32]; on a real cluster a single executor loss makes the
-    *    blocks unrecoverable-by-design (Spark's own documented caveat),
-    *    which fails the QUERY (retriable at the job layer), never
-    *    corrupts a result.
-    *  - `reliable`: `checkpoint()` to the session's checkpoint dir —
-    *    the cluster deployment mode. Blocks are files on shared storage
-    *    (HDFS/object store on a real cluster), so executor loss
-    *    re-reads instead of failing; lineage truncation semantics are
-    *    identical to localCheckpoint. Costs one write+read of the
-    *    intermediate; measured vs `local` at sf0.1 in BASELINE.md
-    *    (rounds 19–20: full-suite reliable/local = 1.008). Checkpoint
-    *    FILES are deleted by [[release]]/[[releaseAll]]/[[releaseShared]]
-    *    along with the memory blocks (round 20 — ReliableCheckpointCleanupSpec),
-    *    so a long-lived service leaks nothing.
-    *
-    * Both modes return a lineage-truncated, LogicalRDD-backed frame, so
-    * [[release]]/[[releaseAll]] work uniformly. Sites that need
-    * post-action release still wrap the result in [[track]]. */
-  /** Test hook: overrides SPARK_GRAFT_MATERIALIZE within a JVM (specs
-    * can't set env vars; EngineClusterSpec flips modes per phase). */
-  @volatile var modeOverride: Option[String] = None
-
-  def mat(df: DataFrame): DataFrame =
-    modeOverride.getOrElse(sys.env.getOrElse("SPARK_GRAFT_MATERIALIZE", "local")) match {
-      case "reliable" =>
+  /** Materialize `df` with truncated lineage and register it under its
+    * session. The master picks the kind, by the RDD paper's rule:
+    * checkpoint to stable storage only where lineage could be lost.
+    *  - `local[n]` ([[org.apache.spark.SparkContext.isLocal]]):
+    *    `localCheckpoint()`, executor-local blocks. Executors live in the
+    *    driver's JVM, so losing one loses the driver too;
+    *  - any other master, `local-cluster[…]` included: reliable
+    *    `checkpoint()` into `spark.checkpoint.dir` (Spark's own setting,
+    *    which `SPARK_GRAFT_CONF` can set), else [[DefaultReliableDir]]. A
+    *    lost executor then re-reads the files instead of failing the query.
+    *    The files are deleted when the frame is released
+    *    (ReliableCheckpointCleanupSpec).
+    * Both kinds return a `LogicalRDD`-backed frame, so release is uniform. */
+  private[graft] def materialize(df: DataFrame, reliable: Boolean): DataFrame = {
+    val out =
+      if (reliable) {
         val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(
-            sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/graft-reliable-ckpt"))
+        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(DefaultReliableDir)
         df.checkpoint()
-      case _ => df.localCheckpoint()
-    }
+      } else df.localCheckpoint()
+    synchronized(owned.getOrElseUpdate(out.sparkSession, mutable.Set.empty) ++= backing(out))
+    out
+  }
 
-  /** Unpersist every localCheckpoint BACKING an analyzed plan.
-    *
-    * `Dataset.unpersist` only consults the CacheManager, which never saw a
-    * `localCheckpoint` — that path persists the internal RDD directly and
-    * wraps it in a `LogicalRDD`. Releasing the blocks therefore means
-    * walking the analyzed plan for LogicalRDD leaves (the frame may be a
-    * projection/filter OVER the checkpoint, not the checkpoint itself)
-    * and unpersisting their RDDs. Falls back to `Dataset.unpersist` for
-    * plain `cache()`d frames.
-    */
+  /** Where reliable checkpoints go when `spark.checkpoint.dir` is unset. */
+  private val DefaultReliableDir = "/tmp/graft-reliable-ckpt"
+
+  /** `df.graftCheckpoint()` — every checkpoint site in the engine. */
+  implicit class MatOps(private val df: DataFrame) extends AnyVal {
+    def graftCheckpoint(): DataFrame =
+      materialize(df, reliable = !df.sparkSession.sparkContext.isLocal)
+  }
+
+  /** Drop `rdds` from every session's registry: they were freed early or
+    * now belong to a shared table. */
+  private def disown(rdds: Seq[RDD[_]]): Unit = synchronized(owned.values.foreach(_ --= rdds))
+
+  /** Unpersist one checkpoint RDD and delete its reliable files (the
+    * payload, in reliable mode — deterministic, unlike the GC-driven
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`). A stopped
+    * session is not an error. */
+  private def free(rdd: RDD[_]): Unit =
+    try { rdd.unpersist(blocking = false); deleteReliableFiles(rdd) }
+    catch { case _: Throwable => () }
+
+  /** Free the checkpoints BACKING `df` now, and drop them from the
+    * registry. `Dataset.unpersist` only consults the CacheManager, which
+    * never saw a checkpoint, so this walks the plan for its `LogicalRDD`
+    * leaves; a plain `cache()`d frame falls back to `Dataset.unpersist`. */
   def release(df: DataFrame): Unit = {
-    val rdds = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
+    val rdds = backing(df)
     if (rdds.isEmpty) df.unpersist(blocking = false)
-    else rdds.foreach { r =>
-      r.unpersist(blocking = false)
-      // reliable mode: the checkpoint FILES are the payload — delete them
-      // at release, the exact moment the engine already declares the frame
-      // dead (round-19 verdict item 6: they otherwise live until JVM exit,
-      // an unbounded disk leak for a long-lived service). Deterministic,
-      // unlike spark.cleaner.referenceTracking.cleanCheckpoints, which is
-      // GC-driven and must be set before SparkContext creation anyway.
-      deleteReliableFiles(r)
-    }
+    else { disown(rdds); rdds.foreach(free) }
+  }
+
+  /** Free every checkpoint session `s` registered (`SparkEntry.run`). */
+  def releaseSession(s: SparkSession): Unit =
+    synchronized(owned.remove(s)).foreach(_.foreach(free))
+
+  /** Free every session's registered checkpoints (idempotent, non-blocking).
+    * [[sharedTable]] entries survive — see below. */
+  def releaseAll(): Unit = {
+    val all = synchronized { val v = owned.values.toList; owned.clear(); v }
+    all.foreach(_.foreach(free))
   }
 
   /** Reliable-checkpoint directories (as `file:` URIs or plain paths)
@@ -101,18 +114,16 @@ object Checkpoints {
     * depending on how Dataset.checkpoint wrapped it. ONE walk shared by
     * the release path and [[reliableFiles]], so the deletion set and the
     * test-visible set can never drift. */
-  private def reliableDirs(rdd: org.apache.spark.rdd.RDD[_], depth: Int = 0): Seq[String] =
+  private def reliableDirs(rdd: RDD[_], depth: Int = 0): Seq[String] =
     rdd.getCheckpointFile.toSeq ++
       (if (depth < 4) rdd.dependencies.flatMap(d => reliableDirs(d.rdd, depth + 1)) else Nil)
 
   /** The reliable-checkpoint directories backing an analyzed plan's
     * LogicalRDD leaves (empty in local mode). */
   private[graft] def reliableFiles(df: DataFrame): Seq[String] =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.flatMap(reliableDirs(_)).distinct
+    backing(df).flatMap(reliableDirs(_)).distinct
 
-  private def deleteReliableFiles(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+  private def deleteReliableFiles(rdd: RDD[_]): Unit =
     reliableDirs(rdd).foreach { p =>
       try {
         val path = new org.apache.hadoop.fs.Path(p)
@@ -120,22 +131,6 @@ object Checkpoints {
       } catch { case _: Throwable => () } // best-effort on a stopped session
     }
 
-  /** Unpersist every tracked checkpoint (idempotent, non-blocking).
-    * [[sharedTable]] entries deliberately survive — see below. */
-  def releaseAll(): Unit = synchronized {
-    tracked.foreach { df =>
-      try release(df)
-      catch { case _: Throwable => () } // a stopped session is not an error
-    }
-    tracked.clear()
-  }
-
-  /** `df.graftCheckpoint()` — drop-in replacement for the former direct
-    * `df.localCheckpoint()` call sites, routing through [[mat]] so one env
-    * var flips the whole engine between the local and reliable disciplines. */
-  implicit class MatOps(private val df: DataFrame) extends AnyVal {
-    def graftCheckpoint(): DataFrame = mat(df)
-  }
   /** Widen a NARROW local scan before a CPU-heavy, DOC-LOCAL projection
     * (guide §2.5: "input skew — one huge unsplittable file: repartition
     * immediately after the read"). The sf-scale corpora are single
@@ -180,8 +175,7 @@ object Checkpoints {
     * Long-lived mains (Bench, Verify, StreamBench, ScaleStressBench) call
     * [[releaseShared]] before stopping; tests do the same in afterAll. */
   private val shared =
-    new java.util.HashMap[org.apache.spark.SparkContext,
-      scala.collection.mutable.Map[String, DataFrame]]
+    new java.util.HashMap[org.apache.spark.SparkContext, mutable.Map[String, DataFrame]]
 
   /** Get-or-build a SHARED materialized table, cached per (context, key),
     * as a frame of the calling session `s`.
@@ -193,9 +187,11 @@ object Checkpoints {
     * same role is a written-once survivor/label table that every
     * downstream job scans — so the cache IS the 100 TB design, not a
     * bench trick. `build` must return an already-materialized
-    * (localCheckpointed) frame; entries survive [[releaseAll]] (releasing
-    * a lineage-truncated checkpoint a later consumer still reads would be
-    * unrecoverable) and release ONLY via an explicit [[releaseShared]].
+    * (`graftCheckpoint()`ed) frame, or a projection over one; the table
+    * claims the RDDs behind it from the building session's registry, so
+    * they survive that query's release and [[releaseAll]] (releasing a
+    * lineage-truncated checkpoint a later consumer still reads would be
+    * unrecoverable) and go ONLY at an explicit [[releaseShared]].
     * Key by derivation + source dir: one session can serve several scale
     * dirs (ScaleStressBench). The cached frame belongs to the session that
     * built it, so it is rebound to `s`: a consumer's temp view of it then
@@ -203,13 +199,14 @@ object Checkpoints {
   def sharedTable(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val m = synchronized {
       Option(shared.get(s.sparkContext)).getOrElse {
-        val nm = scala.collection.mutable.Map.empty[String, DataFrame]
+        val nm = mutable.Map.empty[String, DataFrame]
         shared.put(s.sparkContext, nm); nm
       }
     }
     Bridge.rebind(s, m.synchronized(m.getOrElseUpdate(key, {
       val t0 = System.nanoTime()
       val df = build
+      disown(backing(df))
       buildTimes.synchronized {
         buildTimes(key) = buildTimes.getOrElse(key, 0.0) + (System.nanoTime() - t0) / 1e9
       }
@@ -227,7 +224,7 @@ object Checkpoints {
     * win (N−1 duplicate builds removed) with a reporting artifact (the
     * remaining build moved out of the timed region). The artifact now
     * carries the build cost itself. */
-  private val buildTimes = scala.collection.mutable.Map.empty[String, Double]
+  private val buildTimes = mutable.Map.empty[String, Double]
 
   /** Snapshot of per-key shared-build seconds (see [[sharedTable]]). */
   def sharedBuildSeconds: Map[String, Double] =
@@ -236,10 +233,7 @@ object Checkpoints {
   /** Release every shared table of every context (test hygiene). */
   def releaseShared(): Unit = synchronized {
     import scala.jdk.CollectionConverters._
-    shared.values.asScala.foreach(_.values.foreach { df =>
-      try release(df)
-      catch { case _: Throwable => () }
-    })
+    shared.values.asScala.foreach(_.values.foreach(release))
     shared.clear()
   }
 }

@@ -184,11 +184,11 @@ object CorpusOps {
     // checkpointed once instead: `rrf_dt` (distinct doc-term pairs — one
     // explode, sized at the distinct posting volume) and `rrf_nv` (per-doc
     // double vector + norm); every arm below derives from them.
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT DISTINCT d.doc_id, tk
         |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
         |LATERAL VIEW explode(split(d.text, ' ')) x AS tk""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("rrf_dt")
+      .graftCheckpoint().createOrReplaceTempView("rrf_dt")
     s.sql(
       """WITH rrf_nv AS (
         |  SELECT d.doc_id, v, sqrt(dot_product(v, v)) AS nrm FROM (
@@ -354,7 +354,7 @@ object CorpusOps {
     * the driver. */
   def hMmrDiversify(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "embeddings")
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH normed AS (
         |  SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM (
         |    SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -372,27 +372,27 @@ object CorpusOps {
         |    ORDER BY rel DESC, d_id) AS rn
         |  FROM scored)
         |WHERE rn <= 20""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("mmr_cand")
-    Checkpoints.track(s.sql(
+      .graftCheckpoint().createOrReplaceTempView("mmr_cand")
+    s.sql(
       """SELECT a.q_id, a.d_id AS a_id, b.d_id AS b_id,
         |  CAST(round(round(dot_product(a.v, b.v) / (a.nrm * b.nrm), 4)
         |    * 10000e0, 0) AS BIGINT) AS sim_t
         |FROM mmr_cand a JOIN mmr_cand b
         |  ON a.q_id = b.q_id AND a.d_id <> b.d_id""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("mmr_psim")
+      .graftCheckpoint().createOrReplaceTempView("mmr_psim")
     // round 1: pure relevance. Rounds 2..5 run as a Scala loop with the
     // accumulated pick set checkpointed each round — the single-statement
     // unrolled form re-inlines the pick chain EXPONENTIALLY (p4 = p3 ∪
     // sel4 = ((p1 ∪ sel2) ∪ sel3) ∪ sel4 ...; measured 362 exchanges);
     // this plans ~5 small dags over the two control tables (the
     // h_bpe_train iterative-rounds pattern).
-    var sel = Checkpoints.track(s.sql(
+    var sel = s.sql(
       """SELECT q_id, d_id, rel_t, CAST(NULL AS BIGINT) AS ms_t, 1 AS rnk
         |FROM (
         |  SELECT q_id, d_id, rel_t, row_number() OVER (PARTITION BY q_id
         |    ORDER BY rel_t DESC, d_id) AS rn
         |  FROM mmr_cand) x
-        |WHERE rn = 1""".stripMargin).graftCheckpoint())
+        |WHERE rn = 1""".stripMargin).graftCheckpoint()
     sel.createOrReplaceTempView("mmr_sel")
     for (k <- 2 to 5) {
       val nxt = s.sql(
@@ -409,7 +409,7 @@ object CorpusOps {
            |    ORDER BY (7 * rel_t - 3 * ms_t) DESC, d_id) AS rn
            |  FROM r) x
            |WHERE rn = 1""".stripMargin)
-      sel = Checkpoints.track(sel.unionAll(nxt).graftCheckpoint())
+      sel = sel.unionAll(nxt).graftCheckpoint()
       sel.createOrReplaceTempView("mmr_sel")
     }
     s.sql(
@@ -833,10 +833,10 @@ object CorpusOps {
     * langs-sized table. The 100 TB cost is the single scan. */
   def hRepeatEpochs(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT lang, CAST(sum(size(split(text, ' '))) AS BIGINT) AS uniq
         |FROM documents GROUP BY lang""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("epoch_u")
+      .graftCheckpoint().createOrReplaceTempView("epoch_u")
     s.sql(
       """WITH w AS (SELECT lang, uniq,
         |        CAST(floor(sqrt(CAST(uniq AS DOUBLE))) AS BIGINT) AS rw FROM epoch_u),
@@ -1061,14 +1061,14 @@ object CorpusOps {
     * the same class as [[TrainingOps]]' checkpointed band/gram indexes. */
   def hTokenizerCompat(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT lang, tk, count(*) AS f_all,
         |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS f_new
         |FROM (SELECT doc_id, lang, tk
         |      FROM (SELECT doc_id, lang, split(text, ' ') AS t FROM documents)
         |      LATERAL VIEW explode(t) e AS tk)
         |GROUP BY lang, tk""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("tokfreq")
+      .graftCheckpoint().createOrReplaceTempView("tokfreq")
     s.sql(
       """WITH v1 AS (
         |  SELECT lang, tk, rn AS id1 FROM (
@@ -1200,7 +1200,7 @@ object CorpusOps {
         s"(CASE WHEN dot_product(qv, ${planeLit(4 * b + j)}) > 0D THEN ${1L << j}L ELSE 0L END)"
       }.mkString("    (", " +\n      ", s") AS k$b")
     }.mkString(",\n")
-    Checkpoints.track(s.sql(
+    s.sql(
       s"""WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings),
@@ -1225,7 +1225,7 @@ object CorpusOps {
         |$keyCols,
         |  qv, dot_product(qv, qv) AS nrm2
         |FROM qarr""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("cos_sig")
+      .graftCheckpoint().createOrReplaceTempView("cos_sig")
     s.sql(
       """WITH cosed AS (
         |  SELECT
@@ -1342,7 +1342,7 @@ object CorpusOps {
     * top-20 reshape is a 3-way self-join on domain-sized rows. */
   def hSourceOverlap(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH tok AS (SELECT source, split(text, ' ') AS t FROM documents),
         |gr0 AS (
         |  SELECT source,
@@ -1359,7 +1359,7 @@ object CorpusOps {
         |LATERAL VIEW explode(srcs) y AS sb
         |WHERE sa <= sb
         |GROUP BY sa, sb""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("overlap_pairs")
+      .graftCheckpoint().createOrReplaceTempView("overlap_pairs")
     s.sql(
       """SELECT p.sa AS src_a, p.sb AS src_b, p.n AS n_shared,
         |  CAST(1000L * p.n DIV least(ta.n, tb.n) AS BIGINT)
@@ -1436,7 +1436,6 @@ object CorpusOps {
     val tagged = members.withColumn("is_member", lit(true))
       .unionAll(probes.withColumn("is_member", lit(false)))
       .graftCheckpoint() // four probe passes; never re-derive the key sets
-    graft.operators.Checkpoints.track(tagged)
     val n = math.max(members.count(), 1L)
     // k = round(b·ln2); micros are (1 − e^(−k/b))^k · 1e6, precomputed
     val rungs = Seq((4L, 146891L), (8L, 21577L), (12L, 3142L), (16L, 458L))
@@ -1530,7 +1529,7 @@ object CorpusOps {
     * componentLabels precedent: at cluster scale the trained model is a
     * written-once table every consumer reads, so rebuilding the corpus
     * explode per consumer is both a bench tax and the wrong shape).
-    * Released by releaseShared, not per-query releaseAll. */
+    * Released by releaseShared, not the per-query release. */
   private def registerQcWeights(s: SparkSession, dir: String): Unit =
     Checkpoints.sharedTable(s, s"qc_weights:$dir")(s.sql(
       """SELECT CAST(conv(substr(md5(tk), 1, 15), 16, 10) AS BIGINT) % 512 AS bk,

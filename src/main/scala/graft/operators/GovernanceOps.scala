@@ -161,12 +161,11 @@ object GovernanceOps {
   def hDpRelease(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
     s.sql(dpReleaseBody(
-      div = "DIV",
       draw = "CAST(conv(substring(md5(concat(metric, '|', lang)), 1, 6), 16, 10) AS BIGINT)",
       ntoks = "size(split(text, ' '))"))
   }
 
-  private def dpReleaseBody(div: String, draw: String, ntoks: String): String =
+  private def dpReleaseBody(draw: String, ntoks: String): String =
     s"""WITH m AS (
       |  SELECT lang, 'docs' AS metric, CAST(count(*) AS BIGINT) AS true_value
       |  FROM documents GROUP BY lang
@@ -190,7 +189,6 @@ object GovernanceOps {
 
   /** DuckDB twin: identical draw, trailing-zeros noise and ledger. */
   val hDpReleaseSql: String = dpReleaseBody(
-    div = "//",
     draw = "CAST(concat('0x', substring(md5(concat(metric, '|', lang)), 1, 6)) AS BIGINT)",
     ntoks = "len(string_split(text, ' '))")
 

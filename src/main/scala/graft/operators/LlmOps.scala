@@ -348,7 +348,7 @@ object LlmOps {
     * 16×4-band detection probability is 1-4e-8, so LSH equals brute). */
   def hDedupIncremental(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH batch AS (
         |  SELECT doc_id + 2000000 AS doc_id, lang,
         |    CASE WHEN doc_id % 5 = 0 THEN regexp_replace(text, '^\\S+\\s+', '')
@@ -363,7 +363,7 @@ object LlmOps {
         |SELECT doc_id, is_batch, array_distinct(transform(sequence(1, size(tokens) - 2),
         |  i -> concat(element_at(tokens, i), '|', element_at(tokens, i + 1), '|', element_at(tokens, i + 2)))) AS shingles
         |FROM tok WHERE size(tokens) >= 3""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("shinc")
+      .graftCheckpoint().createOrReplaceTempView("shinc")
     s.sql(
       """WITH sig AS (
         |  SELECT doc_id, is_batch,
@@ -523,7 +523,7 @@ object LlmOps {
     // table `normed` stays inline: its recompute (scan + cast + norm) is
     // cheaper than materializing doubled vectors (the h_rrf_fusion
     // measurement), and the verify joins shuffle it by vec_id either way.
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
         |pert AS (
@@ -533,7 +533,7 @@ object LlmOps {
         |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert)
         |SELECT vec_id, bk
         |FROM corpus LATERAL VIEW explode(hyperplane_bands(v, 32, 12)) t AS bk""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("ne_keyed")
+      .graftCheckpoint().createOrReplaceTempView("ne_keyed")
     s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -740,7 +740,7 @@ object LlmOps {
     * `base(vec_id, v)` CTE in scope. Shared by the declared query and the
     * spec-level quantizer-quality measurement so both see the exact
     * shipped centroids. */
-  private def ivfCentSql(refined: Boolean, nlist: Int = 16): String =
+  private def ivfCentSql(refined: Boolean, nlist: Int): String =
     if (!refined)
       s"""centn AS (
         |  SELECT vec_id AS c_id, v AS cv, sqrt(dot_product(v, v)) AS cnrm
@@ -1333,7 +1333,7 @@ object LlmOps {
     * `ivfpq_centn` — shared by [[hIvfPqCodes]], [[hIvfPqSearch]] and
     * [[hPqRecall]] so the seeded-Lloyd chain is planned and executed
     * exactly once per SESSION (O(1) storage at any corpus size).
-    * Round 20: promoted from a per-query [[Checkpoints.track]] to the
+    * Round 20: promoted from a per-query checkpoint to the
     * [[Checkpoints.sharedTable]] lifecycle — the three consumers each
     * rebuilt the identical table per invocation, and at cluster scale
     * this is the written-once trained-index artifact every ANN query
@@ -2928,7 +2928,7 @@ object LlmOps {
     * vocabulary², not corpus), a 1-row argmax broadcast into the rewrite,
     * and the rewrite itself is a scan-local `aggregate()` fold per
     * document — no shuffle. The merged corpus materializes once per round
-    * (localCheckpoint via Checkpoints.track, the supplier_rank
+    * (`graftCheckpoint()`, the supplier_rank
     * discipline), so round k+1 reads round k's RDD instead of re-deriving
     * the whole merge chain — linear, not quadratic, in rounds.
     *
@@ -2948,15 +2948,15 @@ object LlmOps {
         .select(explode(expr("sequence(1, size(toks) - 1)")).as("i"), col("toks"))
         .select(expr("element_at(toks, i)").as("a"), expr("element_at(toks, i + 1)").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n"))
-      val top = Checkpoints.track(
-        counts.orderBy(col("n").desc, col("a"), col("b")).limit(1).graftCheckpoint())
+      val top =
+        counts.orderBy(col("n").desc, col("a"), col("b")).limit(1).graftCheckpoint()
       rounds += top.select(lit(k.toLong).as("merge_round"),
         col("a").as("lhs"), col("b").as("rhs"), col("n"))
       if (k < 3)
-        toks = Checkpoints.track(
+        toks =
           toks.crossJoin(broadcast(top))
             .select(split(expr(bpeFold), " ").as("toks"))
-            .graftCheckpoint())
+            .graftCheckpoint()
     }
     rounds.reduce(_ unionAll _).orderBy("merge_round")
   }
@@ -3244,7 +3244,7 @@ object LlmOps {
     * after. */
   def hKnnGraph(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "embeddings")
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
         |    label
@@ -3258,8 +3258,8 @@ object LlmOps {
         |    'neg', -dot_product(v, c.cv) / (sqrt(dot_product(v, v)) * c.cnrm),
         |    'c_id', c.c_id)))[0].c_id AS c_id
         |FROM base CROSS JOIN seedcoll""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("knng_assigned")
-    Checkpoints.track(s.sql(
+      .graftCheckpoint().createOrReplaceTempView("knng_assigned")
+    s.sql(
       """SELECT c_id, a_id, b_id, la, lb FROM (
         |  SELECT x.c_id, x.vec_id AS a_id, y.vec_id AS b_id,
         |    x.label AS la, y.label AS lb,
@@ -3268,7 +3268,7 @@ object LlmOps {
         |  FROM knng_assigned x JOIN knng_assigned y
         |    ON x.c_id = y.c_id AND x.vec_id <> y.vec_id)
         |WHERE rn <= 3""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("knng_edges")
+      .graftCheckpoint().createOrReplaceTempView("knng_edges")
     s.sql(
       """WITH cells AS (
         |  SELECT c_id, count(*) AS n_nodes FROM knng_assigned GROUP BY c_id)
@@ -3364,7 +3364,7 @@ object LlmOps {
     * panel ([[hAnnRecall]]'s stated-cost discipline). */
   def hHnswAudit(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "embeddings")
-    val assigned = Checkpoints.track(s.sql(
+    val assigned = s.sql(
       """WITH base AS (
         |  SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         |  FROM embeddings),
@@ -3379,9 +3379,9 @@ object LlmOps {
         |    'neg', -dot_product(v, c.cv) / (nrm * c.cnrm),
         |    'c_id', c.c_id)))[0].c_id AS c_id
         |FROM normed CROSS JOIN seedcoll""".stripMargin)
-      .graftCheckpoint())
+      .graftCheckpoint()
     assigned.createOrReplaceTempView("hnsw_nodes")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT src, dst FROM (
         |  SELECT x.vec_id AS src, y.vec_id AS dst,
         |    row_number() OVER (PARTITION BY x.vec_id ORDER BY
@@ -3393,13 +3393,13 @@ object LlmOps {
         |SELECT a.vec_id AS src, b.vec_id AS dst
         |FROM hnsw_nodes a JOIN hnsw_nodes b
         |  ON a.vec_id < 16 AND b.vec_id < 16 AND a.vec_id <> b.vec_id""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("hnsw_edges")
+      .graftCheckpoint().createOrReplaceTempView("hnsw_edges")
     s.sql(
       """SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM hnsw_nodes
         |WHERE vec_id >= 100 AND vec_id < 120""".stripMargin)
       .createOrReplaceTempView("hnsw_qset")
     // entry: best non-self seed per query (the layer-1 greedy descent)
-    var frontier = Checkpoints.track(s.sql(
+    var frontier = s.sql(
       """SELECT q_id, n_id FROM (
         |  SELECT q.q_id, s.vec_id AS n_id,
         |    row_number() OVER (PARTITION BY q.q_id ORDER BY
@@ -3407,7 +3407,7 @@ object LlmOps {
         |      s.vec_id) AS rn
         |  FROM hnsw_qset q JOIN hnsw_nodes s
         |    ON s.vec_id < 16 AND s.vec_id <> q.q_id)
-        |WHERE rn = 1""".stripMargin).graftCheckpoint())
+        |WHERE rn = 1""".stripMargin).graftCheckpoint()
     frontier.createOrReplaceTempView("hnsw_f")
     // visited accumulator: everything ever scored (the work census)
     var visited = frontier
@@ -3415,14 +3415,14 @@ object LlmOps {
       // candidates scored this hop = frontier ∪ its out-neighbors (self
       // excluded) — checkpointed once, feeding both the beam window and
       // the work census
-      val cand = Checkpoints.track(s.sql(
+      val cand = s.sql(
         """SELECT DISTINCT q_id, n_id FROM (
           |  SELECT f.q_id, e.dst AS n_id
           |  FROM hnsw_f f JOIN hnsw_edges e ON e.src = f.n_id
           |  UNION ALL SELECT q_id, n_id FROM hnsw_f) c
-          |WHERE n_id <> q_id""".stripMargin).graftCheckpoint())
+          |WHERE n_id <> q_id""".stripMargin).graftCheckpoint()
       cand.createOrReplaceTempView("hnsw_cand")
-      frontier = Checkpoints.track(s.sql(
+      frontier = s.sql(
         """SELECT q_id, n_id FROM (
           |  SELECT c.q_id, c.n_id,
           |    row_number() OVER (PARTITION BY c.q_id ORDER BY
@@ -3431,9 +3431,9 @@ object LlmOps {
           |  FROM hnsw_cand c
           |  JOIN hnsw_nodes n ON n.vec_id = c.n_id
           |  JOIN hnsw_qset q ON q.q_id = c.q_id)
-          |WHERE rn <= 4""".stripMargin).graftCheckpoint())
-      visited = Checkpoints.track(
-        visited.unionAll(cand).distinct().graftCheckpoint())
+          |WHERE rn <= 4""".stripMargin).graftCheckpoint()
+      visited =
+        visited.unionAll(cand).distinct().graftCheckpoint()
       frontier.createOrReplaceTempView("hnsw_f")
     }
     visited.createOrReplaceTempView("hnsw_visited")
@@ -3633,14 +3633,14 @@ object LlmOps {
     // two langs must keep one copy in EACH lang (a global keeper would make
     // the other lang count the doc removed and could fire the vocab alarm
     // on corpus shape alone)
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT d.doc_id, d.lang, d.text,
         |  CASE WHEN d.doc_id = k.keeper THEN 1 ELSE 0 END AS kept
         |FROM dedup_ingest d
         |JOIN (SELECT lang, text, min(doc_id) AS keeper
         |      FROM dedup_ingest GROUP BY lang, text) k
         |  ON d.lang = k.lang AND d.text = k.text""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("dedup_flagged")
+      .graftCheckpoint().createOrReplaceTempView("dedup_flagged")
     s.sql(
       """WITH f AS (
         |  SELECT doc_id, lang, text, kept, size(split(text, ' ')) AS ntoks

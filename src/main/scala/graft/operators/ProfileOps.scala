@@ -592,7 +592,7 @@ object ProfileOps {
     // the ≤|labels|-row centroid table is consumed three times (intra +
     // both inter sides); checkpointing it keeps the corpus centroid
     // build to ONE pass (the small-intermediates rule)
-    graft.operators.Checkpoints.track(s.sql(
+    s.sql(
       """WITH qv AS (
         |  SELECT CAST(label AS BIGINT) AS label,
         |    transform(embedding, x ->
@@ -608,7 +608,7 @@ object ProfileOps {
         |  transform(array_sort(collect_list(named_struct('i', i, 'm', m))),
         |    p -> p.m) AS mv
         |FROM cent GROUP BY label""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("margin_cent")
+      .graftCheckpoint().createOrReplaceTempView("margin_cent")
     s.sql(
       """WITH qv AS (
         |  SELECT vec_id, CAST(label AS BIGINT) AS label,

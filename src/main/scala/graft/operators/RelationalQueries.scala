@@ -736,11 +736,11 @@ object RelationalQueries {
     // three corpus scans + three corpus-wide aggregates (9 exchanges
     // censused). Materialize it once: it is DOMAIN-sized (≤ |distinct
     // cents|), the only thing this query ever checkpoints.
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT v, count(*) AS c
         |FROM (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v FROM orders)
         |GROUP BY v""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("eqd_hist")
+      .graftCheckpoint().createOrReplaceTempView("eqd_hist")
     s.sql(dHistogramEqdepthBody(spark = true))
   }
 
@@ -1841,7 +1841,7 @@ object RelationalQueries {
     // min); Spark re-inlines CTEs, so without a checkpoint the EU-pruned
     // lineitem scan + aggregate would run twice. The checkpoint is
     // (part × EU-supplier)-domain-sized, not corpus-sized.
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT l_partkey AS partkey, l_suppkey AS suppkey,
         |  min(CAST(l_extendedprice AS DECIMAL(18,2))) AS cost
         |FROM lineitem JOIN (
@@ -1850,7 +1850,7 @@ object RelationalQueries {
         |  JOIN region ON n_regionkey = r_regionkey
         |  WHERE r_name = 'EUROPE') ON l_suppkey = s_suppkey
         |GROUP BY l_partkey, l_suppkey""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("offers")
+      .graftCheckpoint().createOrReplaceTempView("offers")
     s.sql(
       """WITH eu AS (
         |  SELECT s_suppkey, s_name, s_acctbal, n_name

@@ -148,7 +148,7 @@ object TrainingOps {
     * downstream job scans — rebuilding the LSH + propagation chain per
     * consumer was the suite's single largest repeated cost (the round-17
     * verdict's h_curation_funnel item). Released via
-    * [[Checkpoints.releaseShared]], not the per-query releaseAll. */
+    * [[Checkpoints.releaseShared]], not the per-query release. */
   private def componentLabels(s: SparkSession, dir: String): DataFrame =
     Checkpoints.sharedTable(s, s"componentLabels:$dir")(buildComponentLabels(s, dir))
 
@@ -186,10 +186,9 @@ object TrainingOps {
     require(changed == 0, s"label propagation did not converge in $rounds rounds")
     // downstream reads only `labels`; the edge table is dead
     Checkpoints.release(edges)
-    // final labels back the returned DataFrame — release post-action
-    // NOT tracked: the frame is a sharedTable entry — releaseAll after the
-    // first consumer must not unpersist the truncated-lineage blocks the
-    // next consumer reads; releaseShared owns the lifecycle
+    // final labels back the returned DataFrame: sharedTable claims their
+    // blocks from this query, so its release leaves them to the next
+    // consumer; releaseShared owns the lifecycle
     labels
   }
 
@@ -407,7 +406,7 @@ object TrainingOps {
     // ONE pass over train. Output values are unchanged (the left-join
     // counts of unique ids equal the membership-flag sums); the DuckDB
     // oracle replays the original nested form.
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH train AS (
         |  SELECT doc_id, lang, text, split(text, ' ') AS t
         |  FROM documents WHERE doc_id % 17 <> 0),
@@ -428,9 +427,9 @@ object TrainingOps {
         |  FROM s1 LATERAL VIEW explode(sequence(1, size(t) - 7)) x AS i
         |  WHERE size(t) >= 8)
         |SELECT DISTINCT g.doc_id FROM s1_grams g JOIN bench_grams b ON g.gram = b.gram""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("funnel_contam")
+      .graftCheckpoint().createOrReplaceTempView("funnel_contam")
     // per-lang mixture weights over s3 survivors (small: one row per lang)
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH train AS (
         |  SELECT doc_id, lang, text, split(text, ' ') AS t
         |  FROM documents WHERE doc_id % 17 <> 0),
@@ -442,7 +441,7 @@ object TrainingOps {
         |counts AS (SELECT lang, count(*) AS n FROM s3 GROUP BY lang)
         |SELECT lang, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS rw
         |FROM counts""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("funnel_w")
+      .graftCheckpoint().createOrReplaceTempView("funnel_w")
     s.sql(
       """WITH train AS (
         |  SELECT doc_id, lang, text, split(text, ' ') AS t
@@ -1647,8 +1646,8 @@ object TrainingOps {
     * ingest never re-derives the standing corpus's gram inventory per
     * run — it maintains a stored (lang, gram) INDEX table, joins each
     * batch against it, and appends the batch's novel grams as the index
-    * update. Here the index is materialized once behind a tracked
-    * localCheckpoint (standing in for the stored table); the report adds
+    * update. Here the index is materialized once behind a
+    * checkpoint (standing in for the stored table); the report adds
     * the index-growth accounting an operator watches: index size before,
     * novel grams arriving, index size after the append.
     *
@@ -1662,7 +1661,7 @@ object TrainingOps {
     * repeatedly. */
   def hNoveltyIncremental(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, split(text, ' ') AS t FROM documents
         |  WHERE doc_id % 3 <> 0)
@@ -1672,7 +1671,7 @@ object TrainingOps {
         |    element_at(t, i + 6), element_at(t, i + 7)) AS gram
         |FROM tok LATERAL VIEW explode(sequence(1, size(t) - 7)) x AS i
         |WHERE size(t) >= 8""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("gram_index")
+      .graftCheckpoint().createOrReplaceTempView("gram_index")
     s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, split(text, ' ') AS t FROM documents
@@ -1869,7 +1868,7 @@ object TrainingOps {
     * Scale shape (round 20): the corpus is scanned ONCE through the
     * scan-local bigram explode (the [[hDecontaminate]] codegen form)
     * into the per-(doc, bucket) count table — a NARROW materialized
-    * intermediate (three longs, a lang, a bool per row; the tracked
+    * intermediate (three longs, a lang, a bool per row; the
     * checkpoint rule for multi-consumer intermediates whose rows are
     * cheaper to store than to recompute, unlike the 8-word-string gram
     * tables [[hDedupSpans]] deliberately re-derives). Both downstream
@@ -1889,7 +1888,7 @@ object TrainingOps {
     * doc, not per gram). */
   def hImportanceSample(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH tok AS (
         |  SELECT doc_id, lang, source IN ('src1', 'src2', 'src3', 'src4') AS tgt,
         |    split(text, ' ') AS t
@@ -1902,7 +1901,7 @@ object TrainingOps {
         |  WHERE size(t) >= 2)
         |SELECT doc_id, lang, tgt, b, count(*) AS c
         |FROM gr GROUP BY doc_id, lang, tgt, b""".stripMargin)
-      .graftCheckpoint()).createOrReplaceTempView("dsir_db")
+      .graftCheckpoint().createOrReplaceTempView("dsir_db")
     s.sql(
       """WITH bs AS (
         |  SELECT b,
@@ -2183,7 +2182,7 @@ object TrainingOps {
     * (non-spilling build side) — the sort-merge plan is deliberate. */
   def hMinhashCalibration(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """WITH corpus AS (
         |  SELECT doc_id, lang, text FROM documents
         |  UNION ALL
@@ -2212,7 +2211,7 @@ object TrainingOps {
       // 2.12 -> 2.53 s: the narrow tokenize+shingle scan stage is cheaper
       // than the extra text exchange at this volume.)
       .repartition(s.sparkContext.defaultParallelism)
-      .graftCheckpoint()).createOrReplaceTempView("cal_sh")
+      .graftCheckpoint().createOrReplaceTempView("cal_sh")
     s.sql(
       """WITH g AS (
         |  SELECT doc_id,
@@ -2355,7 +2354,7 @@ object TrainingOps {
     * argument). */
   def hSimjoinPrefix(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
-    Checkpoints.track(s.sql(
+    s.sql(
       """SELECT doc_id, shingles, CAST(size(shingles) AS BIGINT) AS n
         |FROM (
         |  SELECT doc_id,
@@ -2369,7 +2368,7 @@ object TrainingOps {
       // grams in one global partial-agg hash table before the exchange,
       // which beats 32-way parallelism at sf-scale volumes. A cluster
       // corpus scans wide on its own; nothing to fix here.
-      .graftCheckpoint()).createOrReplaceTempView("pfx_sh")
+      .graftCheckpoint().createOrReplaceTempView("pfx_sh")
     // Round 21 — PPJoin candidate generation (guide §3: cut candidate
     // pairs before verification). Two exact tightenings over the round-14
     // AllPairs form, both candidate-SUPERSET-preserving (verification is
@@ -2551,7 +2550,7 @@ object TrainingOps {
   private def bandShingles(s: SparkSession, dir: String): DataFrame = {
     Tables.bind(s, dir, "documents")
     val width = s.sparkContext.defaultParallelism
-    val sh = Checkpoints.track(s.sql(
+    val sh = s.sql(
       s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -2564,7 +2563,7 @@ object TrainingOps {
         |    i -> concat(element_at(tokens, i), '|', element_at(tokens, i + 1),
         |                '|', element_at(tokens, i + 2)))) AS shingles
         |FROM tok WHERE size(tokens) >= 3""".stripMargin)
-      .graftCheckpoint())
+      .graftCheckpoint()
     sh.createOrReplaceTempView("band_sh")
     sh
   }
@@ -2572,7 +2571,7 @@ object TrainingOps {
   /** The MinHash signatures (checkpointed + registered as `band_sig`). */
   private def bandSignatures(s: SparkSession, dir: String): DataFrame = {
     bandShingles(s, dir)
-    val sig = Checkpoints.track(
+    val sig =
       s.sql("""WITH g AS (
           |  SELECT doc_id,
           |    md5(concat('0|', s)) AS m0, md5(concat('1|', s)) AS m1,
@@ -2587,7 +2586,7 @@ object TrainingOps {
           |  min(CAST(conv(substring(m2, 17, 15), 16, 10) AS BIGINT)) AS h5,
           |  min(CAST(conv(substring(m3, 1, 15), 16, 10) AS BIGINT)) AS h6,
           |  min(CAST(conv(substring(m3, 17, 15), 16, 10) AS BIGINT)) AS h7
-          |FROM g GROUP BY doc_id""".stripMargin).graftCheckpoint())
+          |FROM g GROUP BY doc_id""".stripMargin).graftCheckpoint()
     sig.createOrReplaceTempView("band_sig")
     sig
   }

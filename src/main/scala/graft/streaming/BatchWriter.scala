@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.annotation.unused
 import scala.collection.mutable
 
 import graft.kernel.{KinesisEntry, KplPacker}
@@ -23,30 +24,26 @@ final case class PutRequest(entries: Vector[KinesisEntry])
   *
   * Runs strictly per Spark task/partition — single-threaded by construction.
   */
-final class BatchWriter(
-    maxRecords: Int = BatchWriter.MaxBatchRecords,
-    maxBytes: Int = BatchWriter.MaxBatchBytes,
-    targetSize: Int = KplPacker.DefaultTargetSize) {
+final class BatchWriter {
 
-  private val packer = new KplPacker(targetSize)
+  private val packer = new KplPacker
   private val flushed = mutable.ArrayBuffer.empty[PutRequest]
   private var dropped = 0L
 
   def droppedCount: Long = dropped
 
   /** Add one source record. Oversize bodies are dropped, mirroring the
-    * reference's silent `continue`. A non-empty `ehk` threads through to the
-    * packer's explicit-hash-key table for shard-targeted routing. */
-  def add(body: Array[Byte], key: String = "", ehk: String = ""): Unit = {
+    * reference's silent `continue`. */
+  def add(body: Array[Byte], key: String = ""): Unit = {
     if (body.length > BatchWriter.MaxMessageSize) { dropped += 1; return }
-    if (packer.count >= maxRecords ||
-        packer.size + body.length + key.length + ehk.length > maxBytes) flushCurrent()
-    packer.put(body, key, ehk)
+    if (packer.count >= BatchWriter.MaxBatchRecords ||
+        packer.size + body.length + key.length > BatchWriter.MaxBatchBytes) flushCurrent()
+    packer.put(body, key)
   }
 
   /** The former form with a caller record id, which is ignored; the
     * perfbench harness still calls it. */
-  def add(recordId: Long, body: Array[Byte], key: String): Unit = add(body, key)
+  def add(@unused recordId: Long, body: Array[Byte], key: String): Unit = add(body, key)
 
   private def flushCurrent(): Unit = {
     val entries = packer.drain()

@@ -5,6 +5,7 @@ import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
+import scala.annotation.unused
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -28,9 +29,10 @@ import org.apache.hadoop.fs.permission.FsPermission
   *    paths (`file:/…`), relative names that never exist, so it never does.
   * File names, sizes, modes and `.crc` sidecars are the same as `LocalFs`'s.
   * Bound to `file:` by [[NoForkLocalFs.SessionConf]]; FileContext builds
-  * it through the `(URI, Configuration)` constructor.
+  * it through the `(URI, Configuration)` constructor, so `uri` stays
+  * although `LocalFs` ignores it too.
   */
-final class NoForkLocalFs(uri: URI, conf: Configuration)
+final class NoForkLocalFs(@unused uri: URI, conf: Configuration)
   extends ChecksumFs(new NoForkLocalFs.Raw(conf))
 
 object NoForkLocalFs {

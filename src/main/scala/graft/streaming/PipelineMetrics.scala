@@ -33,15 +33,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   */
 final class PipelineMetrics(reporters: Seq[MetricsReporter] = Nil)
     extends StreamingQueryListener {
-
-  final case class BatchStats(
-      queryName: String, batchId: Long, numInputRows: Long,
-      inputRowsPerSecond: Double, processedRowsPerSecond: Double,
-      stateRows: Long,
-      /** engine segment → ms for this batch (triggerExecution = total) */
-      segments: Map[String, Long],
-      /** state-store segment → ms (updates/removals/commit, summed ops) */
-      stateSegments: Map[String, Long])
+  import PipelineMetrics.BatchStats
 
   val batches = new ConcurrentLinkedQueue[BatchStats]()
 
@@ -117,6 +109,16 @@ final class PipelineMetrics(reporters: Seq[MetricsReporter] = Nil)
 }
 
 object PipelineMetrics {
+  /** One micro-batch's progress, as the listener received it. */
+  final case class BatchStats(
+      queryName: String, batchId: Long, numInputRows: Long,
+      inputRowsPerSecond: Double, processedRowsPerSecond: Double,
+      stateRows: Long,
+      /** engine segment → ms for this batch (triggerExecution = total) */
+      segments: Map[String, Long],
+      /** state-store segment → ms (updates/removals/commit, summed ops) */
+      stateSegments: Map[String, Long])
+
   /** Attach a fresh metrics listener to the session, fanning each
     * batch's stats out to the given reporters (none = collect-only). */
   def attach(spark: SparkSession, reporters: MetricsReporter*): PipelineMetrics = {

@@ -42,22 +42,24 @@ object StreamPipeline {
 
   final case class Options(
       streamName: String = "graft",
-      dedupWindow: String = "4 minutes",   // 2 × 120 s generations, main.go:113
       checkpoint: String = "/tmp/graft-checkpoint",
       // Trigger.AvailableNow: drain everything available, then STOP — the
       // backfill/catch-up mode (reprocess a backlog with streaming
       // semantics and exactly the same code path, without a standing job)
       availableNow: Boolean = false)
 
+  /** How long a body is remembered: 2 × the reference's 120 s generation
+    * (main.go:113). */
+  val DedupWindow = "4 minutes"
+
   /** Expects columns: id STRING, ts TIMESTAMP, attempts INT, body BINARY;
     * adds `body_hash` (FNV-64a of the body) and drops the bodies seen within
-    * `dedupWindow` (default = 2 × the reference's 120 s generation,
-    * main.go:113). The dedup state is keyed on `body_hash` alone. */
-  def transform(stream: DataFrame, dedupWindow: String = "4 minutes"): DataFrame = {
+    * [[DedupWindow]]. The dedup state is keyed on `body_hash` alone. */
+  def transform(stream: DataFrame): DataFrame = {
     GraftFunctions.registerAll(stream.sparkSession)
     stream
       .withColumn("body_hash", GraftFunctions.fnv64a(col("body")))
-      .withWatermark("ts", dedupWindow)
+      .withWatermark("ts", DedupWindow)
       .dropDuplicatesWithinWatermark("body_hash")
   }
 
@@ -93,7 +95,7 @@ object StreamPipeline {
     * back (or `AvailableNow`). Caller starts the returned writer. */
   def build(stream: DataFrame, transport: KinesisTransport,
             opts: Options = Options()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val writer = transform(stream, opts.dedupWindow).writeStream
+    val writer = transform(stream).writeStream
       .queryName(s"graft-${opts.streamName}")
       .option("checkpointLocation", opts.checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.datasketches.hll.{HllSketch, TgtHllType}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** STREAMING active-users sketching — the ingest-time form of the batch

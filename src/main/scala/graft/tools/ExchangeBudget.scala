@@ -34,13 +34,12 @@ object ExchangeBudget {
     // local[4] with 4 shuffle partitions: the shape the census is pinned at
     val spark = graft.GraftSession("local[4]", "4")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
+    graft.SparkEntry.select(None).foreach { n =>
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val plan = graft.SparkEntry.run(spark, n, sfDir)(_.queryExecution.executedPlan.toString)
         println(s"BUDGET $n ${countShuffles(plan)}")
       } catch { case e: Throwable =>
         println(s"BUDGET $n ERR ${String.valueOf(e.getMessage).take(80)}") }
-      finally graft.operators.Checkpoints.releaseAll()
     }
     spark.stop()
   }

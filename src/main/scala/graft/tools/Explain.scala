@@ -13,14 +13,10 @@ object Explain {
     val spark = graft.GraftSession("local[4]", "4")
     spark.sparkContext.setLogLevel("ERROR")
     // ALL, or comma-separated names
-    val qs = graft.SparkEntry.select(Some(name).filter(_ != "ALL"))
-    qs.toSeq.sortBy(_._1).foreach { case (n, fn) =>
+    graft.SparkEntry.select(Some(name).filter(_ != "ALL")).foreach { n =>
       println(s"\n===== $n =====")
-      try fn(spark, sfDir).explain("formatted")
+      try graft.SparkEntry.run(spark, n, sfDir)(_.explain("formatted"))
       catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
-      // queries that localCheckpoint intermediates materialize them EAGERLY
-      // at build time — release per query or an ALL sweep hoards storage
-      finally graft.operators.Checkpoints.releaseAll()
     }
     spark.stop()
   }

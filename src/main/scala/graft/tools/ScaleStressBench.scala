@@ -379,12 +379,9 @@ object ScaleStressBench {
 
     val selected = graft.SparkEntry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
     val names = (defaultQueries ++ profileQueries ++ tpchQueries).filter(selected.contains)
-    val qs = names.map(n => n -> selected(n))
 
-    def materialize(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                    dir: String): Unit =
-      try fn(spark, dir).write.format("noop").mode("overwrite").save()
-      finally graft.operators.Checkpoints.releaseAll()
+    def materialize(name: String, dir: String): Unit =
+      graft.SparkEntry.run(spark, name, dir)(_.write.format("noop").mode("overwrite").save())
 
     val perK = ks.map { k =>
       val dir = s"/tmp/graft-scale/k$k"
@@ -397,11 +394,11 @@ object ScaleStressBench {
       // aggregation with the build cost amortized into warm-up — identical
       // discipline to graft.Bench and to a solo run (which also warms up
       // first), so solo pins and in-suite rows stay comparable.
-      qs.foreach { case (n, fn) =>
-        try materialize(fn, dir)
+      names.foreach { n =>
+        try materialize(n, dir)
         catch { case e: Throwable => System.err.println(s"[stress] warm-up $n@k$k threw: ${e.getMessage}") }
       }
-      val times = qs.flatMap { case (n, fn) =>
+      val times = names.flatMap { n =>
         // r19 (judge item 3): a full GC between timed queries. Three rounds
         // running, the in-suite table manufactured 10-18x phantom ratios
         // (h_neardup_minhash 17.7x in-suite vs 3.0-3.4x solo) whose solo
@@ -412,7 +409,7 @@ object ScaleStressBench {
         // query the near-fresh-JVM heap its solo pin ran against.
         System.gc()
         val t0 = System.nanoTime()
-        try { materialize(fn, dir); Some(n -> (System.nanoTime() - t0) / 1e9) }
+        try { materialize(n, dir); Some(n -> (System.nanoTime() - t0) / 1e9) }
         catch { case e: Throwable => System.err.println(s"[stress] $n@k$k FAILED: ${e.getMessage}"); None }
       }.toMap
       // release the rung's shared tables (componentLabels:<dir>, ctfidf_ctf:

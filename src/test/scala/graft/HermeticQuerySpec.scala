@@ -7,17 +7,19 @@ import graft.operators.Checkpoints
 /** Queries reached through `SparkEntry.queries` are hermetic: each is built
   * in its own clone of the caller's session, so two queries sharing one
   * session (two threads, two scale dirs) cannot bind each other's temp
-  * views, while a shared table one query built still serves the next. */
+  * views or free each other's checkpoints, while a shared table one query
+  * built still serves the next. */
 class HermeticQuerySpec extends SparkSuite {
 
   private val sf001 = "/root/testdata/sf0.01"
 
   private def run(name: String, dir: String): DataFrame = SparkEntry.queries(name)(spark, dir)
 
+  private def rows(name: String, dir: String): Seq[Row] =
+    SparkEntry.run(spark, name, dir)(_.collect().toSeq)
+
   test("h_mmr_diversify at two scale dirs from two threads on one session gets the sequential results") {
-    def collect(dir: String): Seq[Row] =
-      try run("h_mmr_diversify", dir).collect().toSeq finally Checkpoints.releaseAll()
-    val expected = Seq(SparkSpec.sf0001, sf001).map(d => d -> collect(d)).toMap
+    val expected = Seq(SparkSpec.sf0001, sf001).map(d => d -> rows("h_mmr_diversify", d)).toMap
     assert(expected.values.forall(_.nonEmpty))
     assert(expected(SparkSpec.sf0001) != expected(sf001))
     for (round <- 1 to 3) {
@@ -27,16 +29,15 @@ class HermeticQuerySpec extends SparkSuite {
         val t = new Thread(() => {
           start.await()
           got.put(dir,
-            try Right(run("h_mmr_diversify", dir).collect().toSeq)
+            try Right(rows("h_mmr_diversify", dir))
             catch { case e: Throwable => Left(e) })
         })
         t.start(); t
       }
       start.countDown()
       threads.foreach(_.join())
-      Checkpoints.releaseAll()
-      expected.foreach { case (dir, rows) =>
-        assert(got.get(dir) == Right(rows), s"round $round, $dir")
+      expected.foreach { case (dir, want) =>
+        assert(got.get(dir) == Right(want), s"round $round, $dir")
       }
     }
   }
@@ -58,5 +59,14 @@ class HermeticQuerySpec extends SparkSuite {
     assert((s2 ne spark) && (s2 ne first.sparkSession))
     assert((s2.sparkContext eq spark.sparkContext) && (s2.sharedState eq spark.sharedState))
     assert(s2.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
+  test("a query run through SparkEntry.run leaves the checkpoints of a query built before it alone") {
+    val expected = rows("h_rank_convergence", SparkSpec.sf0001)
+    val first = run("h_rank_convergence", SparkSpec.sf0001)
+    try {
+      assert(rows("h_mmr_diversify", SparkSpec.sf0001).nonEmpty)
+      assert(first.collect().toSeq == expected)
+    } finally Checkpoints.releaseSession(first.sparkSession)
   }
 }

@@ -37,26 +37,28 @@ class EngineClusterSpec extends AnyFunSuite {
     "h_source_overlap", // collect_set partials + checkpointed pair table cross-process
     "h_ann_recall")     // broadcast query panel + centroid chain to remote executors
 
+  /** Each of `names` at sf0.001 on a fresh session on `master`, as row
+    * strings. A local-cluster master makes reliable checkpoints, `local[4]`
+    * local ones (`Checkpoints.materialize`). */
+  private def results(master: String, names: Seq[String]): Map[String, Seq[String]] = {
+    val spark = graft.GraftSession(master, "4", "spark.executor.memory" -> "768m")
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      names.map { name =>
+        name -> graft.SparkEntry.run(spark, name, graft.SparkSpec.sf0001)(
+          _.collect().map(_.toString).toSeq)
+      }.toMap
+    } finally {
+      Checkpoints.releaseShared()
+      spark.stop()
+    }
+  }
+
   test("declared queries return identical results under multi-process execution") {
     assume(new File("/opt/spark/jars").isDirectory, "needs a Spark distribution")
     sys.props("spark.test.home") = "/opt/spark"
-
-    def run(master: String): Map[String, Seq[String]] = {
-      val spark = graft.GraftSession(master, "4", "spark.executor.memory" -> "768m")
-      try {
-        spark.sparkContext.setLogLevel("WARN")
-        probes.map { name =>
-          val rows =
-            try graft.SparkEntry.queries(name)(spark, graft.SparkSpec.sf0001)
-              .collect().map(_.toString).toSeq
-            finally Checkpoints.releaseAll()
-          name -> rows
-        }.toMap
-      } finally spark.stop()
-    }
-
-    val clustered = run("local-cluster[2,1,1024]")
-    val local = run("local[4]")
+    val clustered = results("local-cluster[2,1,1024]", probes)
+    val local = results("local[4]", probes)
     probes.foreach { name =>
       assert(clustered(name) == local(name),
         s"$name diverged between local threads and separate executor JVMs")
@@ -66,9 +68,10 @@ class EngineClusterSpec extends AnyFunSuite {
 
   /** The ten heaviest declared shapes (by the round-18 sf0.1 bench) under
     * the RELIABLE materialization discipline on multi-process executors —
-    * the 100 TB deployment posture (round-18 verdict item 1). `local` mode
-    * pins executor-local, unreplicated blocks that a lost executor makes
-    * unrecoverable; `reliable` checkpoints to shared storage, so this test
+    * the 100 TB deployment posture (round-18 verdict item 1). A local
+    * checkpoint pins executor-local, unreplicated blocks that a lost
+    * executor makes unrecoverable; the local-cluster master makes reliable
+    * checkpoints to shared storage instead, so this test
     * proves every heavy pipeline (iterative label propagation, 8-superstep
     * rank loops, shared label/vocab tables, LSH shingle checkpoints)
     * produces identical results when its materialization points are
@@ -83,28 +86,8 @@ class EngineClusterSpec extends AnyFunSuite {
       "h_simjoin_prefix", "h_rank_convergence", "h_doc_repetition",
       "h_minhash_calibration", "h_dup_ngrams", "h_pq_recall",
       "h_split_leakage", "a_column_stats", "h_ivfpq_search", "h_dedup_spans")
-
-    def run(master: String, mode: Option[String]): Map[String, Seq[String]] = {
-      val spark = graft.GraftSession(master, "4", "spark.executor.memory" -> "768m")
-      Checkpoints.modeOverride = mode
-      try {
-        spark.sparkContext.setLogLevel("WARN")
-        heavies.map { name =>
-          val rows =
-            try graft.SparkEntry.queries(name)(spark, graft.SparkSpec.sf0001)
-              .collect().map(_.toString).toSeq
-            finally Checkpoints.releaseAll()
-          name -> rows
-        }.toMap
-      } finally {
-        Checkpoints.modeOverride = None
-        Checkpoints.releaseShared()
-        spark.stop()
-      }
-    }
-
-    val clustered = run("local-cluster[2,1,1024]", Some("reliable"))
-    val local = run("local[4]", None)
+    val clustered = results("local-cluster[2,1,1024]", heavies)
+    val local = results("local[4]", heavies)
     heavies.foreach { name =>
       assert(clustered(name) == local(name),
         s"$name diverged between reliable-checkpoint cluster execution and local threads")

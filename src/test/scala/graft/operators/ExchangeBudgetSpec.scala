@@ -26,13 +26,26 @@ class ExchangeBudgetSpec extends SparkSuite {
     finally src.close()
   }
 
+  /** The same walk checks checkpoint ownership: `SparkEntry.run` must
+    * leave behind only the shared tables a query newly built (one
+    * persistent RDD each, counted as `sharedBuildSeconds` keys whose
+    * cumulative build time grew), and `releaseShared` must take the
+    * session back to where the walk started. */
   test("every declared query stays within its shuffle-exchange budget") {
     val over = scala.collection.mutable.ArrayBuffer.empty[String]
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    val leftBehind = scala.collection.mutable.ArrayBuffer.empty[String]
+    def persistent = spark.sparkContext.getPersistentRDDs.size
+    Checkpoints.releaseShared()
+    val start = persistent
+    graft.SparkEntry.select(None).foreach { name =>
+      val (before, builds) = (persistent, Checkpoints.sharedBuildSeconds)
       val planned =
-        try Right(fn(spark, SparkSpec.sf0001).queryExecution.executedPlan.toString)
+        try Right(graft.SparkEntry.run(spark, name, SparkSpec.sf0001)(
+          _.queryExecution.executedPlan.toString))
         catch { case e: Throwable => Left(String.valueOf(e.getMessage).take(120)) }
-        finally Checkpoints.releaseAll()
+      val built = Checkpoints.sharedBuildSeconds.count { case (k, t) => t > builds.getOrElse(k, 0.0) }
+      if (persistent - before > built)
+        leftBehind += s"$name: ${persistent - before} persistent RDDs, $built shared tables built"
       planned match {
         case Left(err) => over += s"$name: planning failed: $err"
         case Right(plan) =>
@@ -44,6 +57,9 @@ class ExchangeBudgetSpec extends SparkSuite {
           }
       }
     }
+    Checkpoints.releaseShared()
     assert(over.isEmpty, s"shuffle regressions:\n${over.mkString("\n")}")
+    assert(leftBehind.isEmpty, s"queries left checkpoints behind:\n${leftBehind.mkString("\n")}")
+    assert(persistent == start, s"releaseShared left ${persistent - start} persistent RDDs")
   }
 }

@@ -12,45 +12,41 @@ import graft.SparkSuite
   * can lag unboundedly — and must be set before SparkContext creation,
   * which the library does not control). */
 class ReliableCheckpointCleanupSpec extends SparkSuite {
+  // the suite's session is local[4], which makes local checkpoints; these
+  // tests reach the reliable kind through `materialize(df, reliable = true)`
 
   private def dirOf(uri: String): java.io.File =
     new java.io.File(if (uri.startsWith("file:"))
       new java.net.URI(uri).getPath else uri)
 
   test("mat(reliable): checkpoint dirs exist while tracked, are deleted by releaseAll") {
-    Checkpoints.modeOverride = Some("reliable")
-    try {
-      val df = Checkpoints.track(Checkpoints.mat(spark.range(1000).toDF("id")))
-      assert(df.count() == 1000)
-      val files = Checkpoints.reliableFiles(df)
-      assert(files.nonEmpty,
-        "mat(reliable) left no reliable-checkpoint trace in the analyzed plan")
-      val dirs = files.map(dirOf)
-      dirs.foreach(d => assert(d.isDirectory, s"checkpoint dir $d missing while tracked"))
-      Checkpoints.releaseAll()
-      dirs.foreach(d => assert(!d.exists, s"checkpoint dir $d survived releaseAll"))
-    } finally Checkpoints.modeOverride = None
+    val df = Checkpoints.materialize(spark.range(1000).toDF("id"), reliable = true)
+    assert(df.count() == 1000)
+    val files = Checkpoints.reliableFiles(df)
+    assert(files.nonEmpty,
+      "materialize(reliable) left no reliable-checkpoint trace in the analyzed plan")
+    val dirs = files.map(dirOf)
+    dirs.foreach(d => assert(d.isDirectory, s"checkpoint dir $d missing while tracked"))
+    Checkpoints.releaseAll()
+    dirs.foreach(d => assert(!d.exists, s"checkpoint dir $d survived releaseAll"))
   }
 
   test("mat(reliable): releaseShared deletes a shared table's checkpoint dirs") {
-    Checkpoints.modeOverride = Some("reliable")
-    try {
-      val df = Checkpoints.sharedTable(spark, "reliable-cleanup-spec") {
-        Checkpoints.mat(spark.range(100).toDF("id"))
-      }
-      assert(df.count() == 100)
-      val dirs = Checkpoints.reliableFiles(df).map(dirOf)
-      assert(dirs.nonEmpty && dirs.forall(_.isDirectory))
-      // per-query releaseAll must NOT touch a shared entry's files
-      Checkpoints.releaseAll()
-      dirs.foreach(d => assert(d.isDirectory, s"releaseAll deleted shared dir $d"))
-      Checkpoints.releaseShared()
-      dirs.foreach(d => assert(!d.exists, s"shared dir $d survived releaseShared"))
-    } finally Checkpoints.modeOverride = None
+    val df = Checkpoints.sharedTable(spark, "reliable-cleanup-spec") {
+      Checkpoints.materialize(spark.range(100).toDF("id"), reliable = true)
+    }
+    assert(df.count() == 100)
+    val dirs = Checkpoints.reliableFiles(df).map(dirOf)
+    assert(dirs.nonEmpty && dirs.forall(_.isDirectory))
+    // releaseAll must NOT touch a shared entry's files
+    Checkpoints.releaseAll()
+    dirs.foreach(d => assert(d.isDirectory, s"releaseAll deleted shared dir $d"))
+    Checkpoints.releaseShared()
+    dirs.foreach(d => assert(!d.exists, s"shared dir $d survived releaseShared"))
   }
 
   test("mat(local): no reliable files to delete, release stays a pure unpersist") {
-    val df = Checkpoints.track(Checkpoints.mat(spark.range(10).toDF("id")))
+    val df = Checkpoints.materialize(spark.range(10).toDF("id"), reliable = false)
     assert(df.count() == 10)
     assert(Checkpoints.reliableFiles(df).isEmpty)
     Checkpoints.releaseAll()
