@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.Bridge
@@ -60,6 +62,7 @@ object Checkpoints {
       if (reliable) {
         val sc = df.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(DefaultReliableDir)
+        deleteDirAtEnd(sc)
         df.checkpoint()
       } else df.localCheckpoint()
     synchronized(owned.getOrElseUpdate(out.sparkSession, mutable.Set.empty) ++= backing(out))
@@ -68,6 +71,21 @@ object Checkpoints {
 
   /** Where reliable checkpoints go when `spark.checkpoint.dir` is unset. */
   private val DefaultReliableDir = "/tmp/graft-reliable-ckpt"
+
+  /** Contexts whose checkpoint dir goes at their end, if empty: each
+    * context's `setCheckpointDir` makes a `<dir>/<uuid>`, and [[free]]
+    * deletes only the `rdd-N` dirs under it. */
+  private val endListened = mutable.WeakHashMap.empty[SparkContext, Unit]
+
+  private def deleteDirAtEnd(sc: SparkContext): Unit = synchronized {
+    if (endListened.put(sc, ()).isEmpty) sc.addSparkListener(new SparkListener {
+      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+        sc.getCheckpointDir.map(new org.apache.hadoop.fs.Path(_)).foreach { p =>
+          val fs = p.getFileSystem(sc.hadoopConfiguration)
+          if (fs.exists(p) && fs.listStatus(p).isEmpty) fs.delete(p, false)
+        }
+    })
+  }
 
   /** `df.graftCheckpoint()` — every checkpoint site in the engine. */
   implicit class MatOps(private val df: DataFrame) extends AnyVal {
@@ -175,7 +193,7 @@ object Checkpoints {
     * Long-lived mains (Bench, Verify, StreamBench, ScaleStressBench) call
     * [[releaseShared]] before stopping; tests do the same in afterAll. */
   private val shared =
-    new java.util.HashMap[org.apache.spark.SparkContext, mutable.Map[String, DataFrame]]
+    new java.util.HashMap[SparkContext, mutable.Map[String, DataFrame]]
 
   /** Get-or-build a SHARED materialized table, cached per (context, key),
     * as a frame of the calling session `s`.

@@ -141,8 +141,9 @@ final class ShardConsumer(
     }
   }
 
-  /** Deliver up to `max` messages to epoch `epoch`'s reader, waiting at most
-    * `pollMs`. First settles older epochs: FIN those committed; REQ a
+  /** Deliver to epoch `epoch`'s reader what the shard already holds, up to
+    * `max` (≥ 1) messages, waiting at most `pollMs` for the first one and
+    * for none after it. First settles older epochs: FIN those committed; REQ a
     * previous attempt of THIS epoch (its rows died with the failed task, so
     * the broker must redeliver — acking them would lose data, the round-5
     * restart-race advice). */
@@ -152,26 +153,16 @@ final class ShardConsumer(
       finThrough(committed)
       pending.remove(epoch).foreach(_.foreach(id => client.requeue(id, 0)))
       takeThreads += Thread.currentThread().getName
-      val out = Vector.newBuilder[NsqMessage]
-      val ids = Vector.newBuilder[String]
-      val deadline = System.nanoTime() + pollMs * 1000000L
-      var n = 0
-      var waitNs = pollMs * 1000000L
-      while (n < max && waitNs > 0) {
-        val m = queue.poll(waitNs, TimeUnit.NANOSECONDS)
-        if (m == null) waitNs = 0
-        else {
-          out += m; ids += m.id; n += 1
-          waitNs = deadline - System.nanoTime()
-        }
-      }
-      val takenIds = ids.result()
-      if (takenIds.nonEmpty) {
-        pending(epoch) = takenIds
-        taken += takenIds.size
-      }
-      out.result()
+      val got = new java.util.ArrayList[NsqMessage]()
+      val first = queue.poll(pollMs, TimeUnit.MILLISECONDS)
+      if (first != null) { got.add(first); queue.drainTo(got, max - 1) }
+      val out = got.asScala.toVector
+      if (out.nonEmpty) { pending(epoch) = out.map(_.id); taken += out.size }
+      out
     }
+
+  /** Messages received and not yet taken (specs wait on it). */
+  private[nsq] def buffered: Int = queue.size
 
   def close(): Unit = client.close()
 }

@@ -33,9 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     owns a standing [[ShardConsumer]] (JVM-cached across batches, keyed
   *     by checkpoint+shard) whose connection consumes concurrently with
   *     every other shard — ingest parallelism = numShards before the first
-  *     shuffle, spread across the cluster. A shard's epoch takes everything
-  *     its consumer holds, bounded only by the connection's in-flight
-  *     window (RDY), the backpressure the reference uses (MaxInFlight,
+  *     shuffle, spread across the cluster. A shard's epoch takes what its
+  *     consumer already holds (an empty one waits up to `pollMs` for a first
+  *     message), bounded only by the connection's in-flight window (RDY),
+  *     the backpressure the reference uses (MaxInFlight,
   *     main.go:62); a caller-set `maxPerTrigger` instead caps each shard at
   *     `maxPerTrigger / numShards` rows per epoch. NSQ channel semantics
   *     load-balance a channel across connections, so shards (and extra
@@ -57,11 +58,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[NsqClient]]'s 10 s `msg_timeout` and 50 ms `output_buffer_timeout`.
   * RDY defaults to [[NsqSource.DefaultRdy]] (nsqd's default
   * `--max-rdy-count`), clamped to whatever `max_rdy_count` the broker
-  * grants in its IDENTIFY reply. With batches running back to back, a
-  * message is FINned about one batch after its delivery (its epoch's
-  * batch, then the next read), so about two epochs are in flight: the
-  * window sustains about
-  * `numShards × RDY / (2 × batch duration)` msgs/s, and an executor buffers
+  * grants in its IDENTIFY reply. `pollMs` (100 ms) bounds an empty shard's
+  * wait for a first message and how long a zero `/stats` answer is trusted.
+  * With batches running back to back, a message is FINned about one batch
+  * after its delivery (its epoch's batch, then the next read), so about two
+  * epochs are in flight: the window sustains about `numShards × RDY /
+  * (2 × batch duration)` msgs/s, and an executor buffers
   * at most `RDY × body size` per shard. Messages must be FINned within
   * the `msg_timeout` of delivery, or nsqd redelivers them. With
   * `maxPerTrigger` set, RDY is 3× a shard's epoch budget instead, so

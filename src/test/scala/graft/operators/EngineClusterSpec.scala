@@ -39,11 +39,13 @@ class EngineClusterSpec extends AnyFunSuite {
 
   /** Each of `names` at sf0.001 on a fresh session on `master`, as row
     * strings. A local-cluster master makes reliable checkpoints, `local[4]`
-    * local ones (`Checkpoints.materialize`). */
+    * local ones (`Checkpoints.materialize`); once the session stops, its
+    * context's reliable checkpoint dir must be gone. */
   private def results(master: String, names: Seq[String]): Map[String, Seq[String]] = {
     val spark = graft.GraftSession(master, "4", "spark.executor.memory" -> "768m")
-    try {
-      spark.sparkContext.setLogLevel("WARN")
+    val sc = spark.sparkContext
+    val out = try {
+      sc.setLogLevel("WARN")
       names.map { name =>
         name -> graft.SparkEntry.run(spark, name, graft.SparkSpec.sf0001)(
           _.collect().map(_.toString).toSeq)
@@ -52,6 +54,11 @@ class EngineClusterSpec extends AnyFunSuite {
       Checkpoints.releaseShared()
       spark.stop()
     }
+    if (!sc.isLocal) assert(sc.getCheckpointDir.nonEmpty, s"$master made no reliable checkpoint")
+    sc.getCheckpointDir.foreach { d =>
+      assert(!new File(new java.net.URI(d).getPath).exists, s"$master left its checkpoint dir $d")
+    }
+    out
   }
 
   test("declared queries return identical results under multi-process execution") {

@@ -10,7 +10,8 @@ class NsqSourceSpec extends SparkSuite {
 
   private def msgId(i: Int): String = f"$i%016d"
 
-  // the read window, and how long the source trusts a zero /stats answer
+  // how long a read of an empty shard waits for a first message, and how
+  // long the source trusts a zero /stats answer
   private val PollMs = 300L
 
   private def mkStream(server: NsqMiniServer, numShards: Int = 2,
@@ -40,11 +41,19 @@ class NsqSourceSpec extends SparkSuite {
   }
 
   /** Opens each shard's standing consumer ahead of a read and waits until
-    * the broker has `inFlight` messages out to them, so the read's single
-    * poll window finds them delivered even on a slow host. */
+    * the broker has `inFlight` messages out to them and the consumers hold
+    * all of them (none left on the socket): a read returns only what its
+    * consumer already holds, so even on a slow host it finds them all. */
   private def warm(server: NsqMiniServer, parts: Array[InputPartition], inFlight: Int): Unit = {
-    parts.foreach(p => NsqShardConsumers.getOrCreate(p.asInstanceOf[NsqShardPartition]))
+    val consumers = parts.map(p => NsqShardConsumers.getOrCreate(p.asInstanceOf[NsqShardPartition]))
     eventually() { assert(server.inFlightCount === inFlight) }
+    eventually() { assert(consumers.map(_.buffered).sum === inFlight) }
+  }
+
+  private def timedMs[T](body: => T): (T, Long) = {
+    val t0 = System.nanoTime()
+    val out = body
+    (out, (System.nanoTime() - t0) / 1000000L)
   }
 
   test("protocol codec round-trips messages") {
@@ -131,6 +140,32 @@ class NsqSourceSpec extends SparkSuite {
     } finally { stream.stop(); server.close() }
   }
 
+  test("a read returns what its shard already holds without waiting out pollMs") {
+    val server = new NsqMiniServer
+    val stream = mkStream(server, numShards = 1, extra = Map("pollMs" -> "5000"))
+    try {
+      (0 until 20).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
+      val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
+      val parts = stream.planInputPartitions(NsqOffset(0), o1)
+      warm(server, parts, 20)
+      val (ids, ms) = timedMs(readAll(stream, parts))
+      assert(ids.toSet === (0 until 20).map(msgId).toSet)
+      assert(ms < 1000, s"a read of 20 held messages took $ms ms of a 5000 ms pollMs")
+    } finally { stream.stop(); server.close() }
+  }
+
+  test("a read of an empty shard returns nothing after about pollMs") {
+    val server = new NsqMiniServer
+    val stream = mkStream(server, numShards = 1)
+    try {
+      val parts = stream.planInputPartitions(NsqOffset(0), NsqOffset(1))
+      warm(server, parts, 0)
+      val (ids, ms) = timedMs(readAll(stream, parts))
+      assert(ids.isEmpty)
+      assert(ms >= PollMs && ms < PollMs + 3000, s"an empty read took $ms ms for a $PollMs ms pollMs")
+    } finally { stream.stop(); server.close() }
+  }
+
   test("an explicit maxPerTrigger splits across shards with a 3x in-flight window") {
     val server = new NsqMiniServer
     val stream = mkStream(server, numShards = 2, extra = Map("maxPerTrigger" -> "100"))
@@ -196,7 +231,10 @@ class NsqSourceSpec extends SparkSuite {
       val attempt2 = readAll(stream, parts)
       eventually() { assert(server.requeued.size === attempt1.size) }
       val attempt3 = if (attempt2.size < 4) {
-        // redeliveries may land after attempt 2's poll window: drain once more
+        // redeliveries may land after attempt 2's read: once the consumer
+        // holds the rest, drain once more
+        val consumer = NsqShardConsumers.get(stream.sessionId, 0).get
+        eventually() { assert(consumer.buffered === 4 - attempt2.size) }
         readAll(stream, stream.planInputPartitions(o1, NsqOffset(o1.epoch + 1)))
       } else Seq.empty
       assert((attempt2 ++ attempt3).toSet === (0 until 4).map(msgId).toSet)
@@ -376,12 +414,15 @@ class NsqSourceSpec extends SparkSuite {
         kill(server)
         eventually() { assert(!consumer1.isAlive, name) }
         eventually() { assert(server.outstanding === 3, name) }
-        // the next epoch's read must rebuild the connection (round-6 advice:
+        // the next epoch's consumer lookup (the one its read makes, run
+        // ahead here by warm) must rebuild the connection (round-6 advice:
         // previously take() silently returned empty forever) and serve the
         // broker's redeliveries
         val o2 = stream.latestOffset().asInstanceOf[NsqOffset]
         assert(o2.epoch === o1.epoch + 1, s"$name: outstanding redeliveries must admit an epoch")
-        val ids2 = readAll(stream, stream.planInputPartitions(o1, o2))
+        val parts2 = stream.planInputPartitions(o1, o2)
+        warm(server, parts2, 3)
+        val ids2 = readAll(stream, parts2)
         val consumer2 = NsqShardConsumers.get(stream.sessionId, 0).get
         assert(consumer2 ne consumer1, s"$name: dead consumer must be replaced, not reused")
         assert(consumer2.isAlive, name)
@@ -392,7 +433,9 @@ class NsqSourceSpec extends SparkSuite {
 
   test("idle-TTL reaper closes orphaned consumers so the broker requeues promptly") {
     val server = new NsqMiniServer
-    val stream = mkStream(server, numShards = 1, extra = Map("idleTtlMs" -> "1"))
+    // the default TTL, so the JVM-wide background reaper (every 5 s) never
+    // fires during the test; the reap below runs on a clock past the TTL
+    val stream = mkStream(server, numShards = 1)
     try {
       (0 until 2).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
       val o1 = stream.latestOffset().asInstanceOf[NsqOffset]
@@ -400,13 +443,9 @@ class NsqSourceSpec extends SparkSuite {
       warm(server, parts, 2)
       val ids1 = readAll(stream, parts)
       assert(ids1.size === 2)
-      // NOTE: no isDefined assertion here — with a 1 ms TTL the JVM-wide
-      // background reaper (5 s cadence, shared across the whole suite) may
-      // legitimately reap before this line; the explicit reap() below just
-      // makes the timing deterministic, and every post-condition is
-      // identical whichever reaper fired
-      Thread.sleep(10) // > 1 ms TTL since the take
-      NsqShardConsumers.reap() // what the background thread runs every 5 s
+      assert(NsqShardConsumers.get(stream.sessionId, 0).isDefined)
+      val ttlMs = parts.head.asInstanceOf[NsqShardPartition].idleTtlMs
+      NsqShardConsumers.reap(System.nanoTime() + (ttlMs + 1) * 1000000L)
       // the orphan is gone from the registry and its socket close made the
       // broker requeue the un-FINned messages at once (round-6 advice: an
       // abandoned consumer must not blackhole messages until msg_timeout)
@@ -414,7 +453,9 @@ class NsqSourceSpec extends SparkSuite {
       eventually() { assert(server.outstanding === 2) }
       // a later epoch simply builds a fresh consumer and re-serves
       val o2 = stream.latestOffset().asInstanceOf[NsqOffset]
-      val ids2 = readAll(stream, stream.planInputPartitions(o1, o2))
+      val parts2 = stream.planInputPartitions(o1, o2)
+      warm(server, parts2, 2)
+      val ids2 = readAll(stream, parts2)
       assert(ids2.toSet === (0 until 2).map(msgId).toSet)
     } finally { stream.stop(); server.close() }
   }

@@ -92,8 +92,10 @@ class StreamPipelineSpec extends SparkSuite {
         }
       } finally q.stop()
     } finally sessionProvider.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+    // this query's stream only: the buffer is JVM-wide, and a query an
+    // earlier test stopped may still finish its last batch's tasks into it
     assert(InMemoryTransport.drain()
-      .map { case (_, e) => KplFunctions.deaggregate(e.data).size }.sum === 30)
+      .collect { case ("nofork", e) => KplFunctions.deaggregate(e.data).size }.sum === 30)
     val forks = ProcessStarts.forksOn(checkpoint, starts)
     assert(forks.isEmpty, s"${forks.size} forks, e.g. ${forks.take(3)}")
   }
