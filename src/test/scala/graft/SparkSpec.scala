@@ -29,6 +29,18 @@ object SparkSpec {
       }
     }, 20)
 
+  /** Runs `check` until it returns without throwing and returns its
+    * result; after `timeoutMs` the last failure is rethrown. */
+  def eventually[T](timeoutMs: Long, pollMs: Long = 100L)(check: => T): T = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    var last: Throwable = null
+    while (System.nanoTime() < deadline) {
+      try return check
+      catch { case t: Throwable => last = t; Thread.sleep(pollMs) }
+    }
+    throw last
+  }
+
   /** A new temp dir, deleted with everything in it when the JVM exits. */
   def tempDir(prefix: String): Path = {
     val d = Files.createTempDirectory(prefix)

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, SparkSuite}
-import graft.kernel.{Fnv64a, KplPacker, KplProtobuf}
+import graft.SparkSuite
+import graft.kernel.Fnv64a
 
 class GraftFunctionsSpec extends SparkSuite {
   import GraftFunctions._

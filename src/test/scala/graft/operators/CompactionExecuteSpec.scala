@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkSpec, SparkSuite}
+import graft.SparkSuite
 
 /** Proves `a_compaction_bins`' plan is EXECUTABLE (round-13 verdict item
   * 6): `executeCompactionMonth` rewrites one partition-month into

@@ -4,6 +4,8 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec.eventually
+
 /** Multi-JVM proof of the connector's cluster-mode contract (round-7
   * verdict task #4). Everything before this ran same-JVM, where
   * `closeSession` can reach every consumer and "executor" threads share
@@ -30,16 +32,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NsqClusterSpec extends AnyFunSuite {
 
-  private def eventually[T](timeoutMs: Long, pollMs: Long = 250)(body: => T): T = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var last: Throwable = null
-    while (System.nanoTime() < deadline) {
-      try return body
-      catch { case e: Throwable => last = e; Thread.sleep(pollMs) }
-    }
-    throw last
-  }
-
   test("local-cluster: distributed ingest, executor-kill migration without loss, cross-JVM orphan reap") {
     assume(new File("/opt/spark/jars").isDirectory, "needs a Spark distribution")
     val driverPid = ProcessHandle.current().pid()
@@ -65,7 +57,7 @@ class NsqClusterSpec extends AnyFunSuite {
             e: org.apache.spark.scheduler.SparkListenerExecutorAdded): Unit =
           execIds.add(e.executorId)
       })
-      eventually(90000) {
+      eventually(90000, pollMs = 250) {
         assert(sc.statusTracker.getExecutorInfos.length >= 3, "2 executors not up")
         assert(execIds.size >= 2, "executor ids not observed")
       }
@@ -89,7 +81,7 @@ class NsqClusterSpec extends AnyFunSuite {
         .start()
       try {
         // phase 1: half the corpus arrives across BOTH executor JVMs
-        eventually(90000) {
+        eventually(90000, pollMs = 250) {
           val n = spark.sql("SELECT count(DISTINCT payload) FROM nsq_cluster").head.getLong(0)
           assert(n >= 150L, s"only $n/150 distinct payloads before kill")
         }
@@ -109,7 +101,7 @@ class NsqClusterSpec extends AnyFunSuite {
         // single surviving 1-core executor can sit starved for minutes —
         // measured 188/300 at the 120 s deadline at loadavg ~3, complete
         // shortly after (quiesced runs finish in ~20 s)
-        eventually(240000) {
+        eventually(240000, pollMs = 250) {
           val n = spark.sql("SELECT count(DISTINCT payload) FROM nsq_cluster").head.getLong(0)
           assert(n == total.toLong, s"migration lost messages: $n/$total distinct")
         }
@@ -117,7 +109,7 @@ class NsqClusterSpec extends AnyFunSuite {
 
       // phase 3: the stopped query's executor-side consumers are orphans the
       // driver cannot reach; each executor's reaper must close them
-      eventually(30000) {
+      eventually(30000, pollMs = 250) {
         assert(srv.activeConns == 0,
           s"${srv.activeConns} orphaned consumer connections survived idleTtl+reaper")
       }

@@ -1,5 +1,6 @@
 package graft.sources.nsq
 
+import graft.SparkSpec.eventually
 import graft.streaming.{InMemoryTransport, StreamPipeline}
 import graft.functions.KplFunctions
 
@@ -23,7 +24,7 @@ object NsqDemo {
       StreamPipeline.Options(streamName = "demo", checkpoint = ckpt)).start()
     // publish first: consumers connect lazily once stats show depth
     (0 until 30).foreach(i => server.publish(f"$i%016d", s"msg-$i".getBytes))
-    server.awaitSubscribe()
+    eventually(10000)(assert(server.hasSubscriber, "no consumer subscribed"))
     (0 until 10).foreach(i => server.publish(f"${100+i}%016d", s"msg-$i".getBytes)) // redelivery dupes
     server.sendHeartbeat() // probe: heartbeat mid-stream
     (30 until 35).foreach(i => server.publish(f"$i%016d", s"msg-$i".getBytes))

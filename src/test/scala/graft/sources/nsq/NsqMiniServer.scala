@@ -168,7 +168,7 @@ final class NsqMiniServer(maxRdyCount: Option[Int] = None,
     try c.socket.close() catch { case _: Throwable => () }
   }
 
-  def awaitSubscribe(): Unit = subscribed.await()
+  def hasSubscriber: Boolean = subscribed.getCount == 0
 
   /** Chaos hook: kill every live consumer connection (nsqd's behavior on
     * client timeout/reset) — each connection's un-FINned in-flight

@@ -2,6 +2,7 @@ package graft.sources.nsq
 
 import org.apache.spark.sql.connector.read.InputPartition
 
+import graft.SparkSpec.eventually
 import graft.SparkSuite
 import graft.streaming.{InMemoryTransport, StreamPipeline}
 import graft.functions.KplFunctions
@@ -46,8 +47,8 @@ class NsqSourceSpec extends SparkSuite {
     * consumer already holds, so even on a slow host it finds them all. */
   private def warm(server: NsqMiniServer, parts: Array[InputPartition], inFlight: Int): Unit = {
     val consumers = parts.map(p => NsqShardConsumers.getOrCreate(p.asInstanceOf[NsqShardPartition]))
-    eventually() { assert(server.inFlightCount === inFlight) }
-    eventually() { assert(consumers.map(_.buffered).sum === inFlight) }
+    eventually(10000) { assert(server.inFlightCount === inFlight) }
+    eventually(10000) { assert(consumers.map(_.buffered).sum === inFlight) }
   }
 
   private def timedMs[T](body: => T): (T, Long) = {
@@ -71,15 +72,15 @@ class NsqSourceSpec extends SparkSuite {
     val client = new NsqClient("127.0.0.1", server.port, "t", "ch",
       maxInFlight = 100, onMessage = m => got.add(new String(m.body)))
     try {
-      server.awaitSubscribe()
+      eventually(10000)(assert(server.hasSubscriber, "no consumer subscribed"))
       assert(client.rdy === 100, "a plain OK to IDENTIFY keeps the requested window")
       (0 until 5).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
-      eventually() { assert(got.size === 5) }
+      eventually(10000) { assert(got.size === 5) }
       server.sendHeartbeat() // must be answered with NOP, not break the stream
       server.publish(msgId(5), "after-hb".getBytes)
-      eventually() { assert(got.size === 6) }
+      eventually(10000) { assert(got.size === 6) }
       client.fin(msgId(0))
-      eventually() { assert(server.finned.contains(msgId(0))) }
+      eventually(10000) { assert(server.finned.contains(msgId(0))) }
     } finally { client.close(); server.close() }
   }
 
@@ -90,15 +91,15 @@ class NsqSourceSpec extends SparkSuite {
     val client = new NsqClient("127.0.0.1", server.port, "t", "ch",
       maxInFlight = 2, onMessage = m => got.add(m.id))
     try {
-      server.awaitSubscribe()
+      eventually(10000)(assert(server.hasSubscriber, "no consumer subscribed"))
       (0 until 5).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
-      eventually() { assert(got.size === 2) } // cap reached
+      eventually(10000) { assert(got.size === 2) } // cap reached
       Thread.sleep(200)
       assert(got.size === 2, "delivery beyond the in-flight cap")
       client.fin(msgId(0)) // frees one slot -> one more delivery
-      eventually() { assert(got.size === 3) }
+      eventually(10000) { assert(got.size === 3) }
       client.fin(msgId(1)); client.fin(msgId(2))
-      eventually() { assert(got.size === 5) }
+      eventually(10000) { assert(got.size === 5) }
     } finally { client.close(); server.close() }
   }
 
@@ -208,7 +209,7 @@ class NsqSourceSpec extends SparkSuite {
       assert(o2.epoch === 2L)
       val ids2 = readAll(stream, stream.planInputPartitions(o1, o2))
       assert(ids2.isEmpty)
-      eventually() { assert(server.finned.size === 10, "post-commit read must FIN epoch 1") }
+      eventually(10000) { assert(server.finned.size === 10, "post-commit read must FIN epoch 1") }
 
       stream.commit(o2)
       val o3 = stream.latestOffset().asInstanceOf[NsqOffset]
@@ -229,12 +230,12 @@ class NsqSourceSpec extends SparkSuite {
       // must REQ attempt 1's messages (their rows died with the task) and
       // serve the redeliveries; committing afterwards must lose nothing
       val attempt2 = readAll(stream, parts)
-      eventually() { assert(server.requeued.size === attempt1.size) }
+      eventually(10000) { assert(server.requeued.size === attempt1.size) }
       val attempt3 = if (attempt2.size < 4) {
         // redeliveries may land after attempt 2's read: once the consumer
         // holds the rest, drain once more
         val consumer = NsqShardConsumers.get(stream.sessionId, 0).get
-        eventually() { assert(consumer.buffered === 4 - attempt2.size) }
+        eventually(10000) { assert(consumer.buffered === 4 - attempt2.size) }
         readAll(stream, stream.planInputPartitions(o1, NsqOffset(o1.epoch + 1)))
       } else Seq.empty
       assert((attempt2 ++ attempt3).toSet === (0 until 4).map(msgId).toSet)
@@ -412,8 +413,8 @@ class NsqSourceSpec extends SparkSuite {
         val consumer1 = NsqShardConsumers.get(stream.sessionId, 0).get
         assert(consumer1.isAlive, name)
         kill(server)
-        eventually() { assert(!consumer1.isAlive, name) }
-        eventually() { assert(server.outstanding === 3, name) }
+        eventually(10000) { assert(!consumer1.isAlive, name) }
+        eventually(10000) { assert(server.outstanding === 3, name) }
         // the next epoch's consumer lookup (the one its read makes, run
         // ahead here by warm) must rebuild the connection (round-6 advice:
         // previously take() silently returned empty forever) and serve the
@@ -450,7 +451,7 @@ class NsqSourceSpec extends SparkSuite {
       // broker requeue the un-FINned messages at once (round-6 advice: an
       // abandoned consumer must not blackhole messages until msg_timeout)
       assert(NsqShardConsumers.get(stream.sessionId, 0).isEmpty)
-      eventually() { assert(server.outstanding === 2) }
+      eventually(10000) { assert(server.outstanding === 2) }
       // a later epoch simply builds a fresh consumer and re-serves
       val o2 = stream.latestOffset().asInstanceOf[NsqOffset]
       val parts2 = stream.planInputPartitions(o1, o2)
@@ -483,14 +484,14 @@ class NsqSourceSpec extends SparkSuite {
       try {
         // both connections ready before publishing, so both get a share
         warm(server, stream.planInputPartitions(NsqOffset(0), NsqOffset(1)), 0)
-        eventually() { assert(server.readyCounts === Seq.fill(2)(NsqSource.DefaultRdy.toLong)) }
+        eventually(10000) { assert(server.readyCounts === Seq.fill(2)(NsqSource.DefaultRdy.toLong)) }
         (0 until 40).foreach(i => server.publish(msgId(i), s"m$i".getBytes))
-        eventually() { assert(server.inFlightCount === 40) }
+        eventually(10000) { assert(server.inFlightCount === 40) }
         assert(server.inFlightCounts.size === 2 && server.inFlightCounts.forall(_ > 0),
           s"round $round: in flight per connection: ${server.inFlightCounts}")
         val sent = server.delivered.get()
         NsqShardConsumers.closeSession(stream.sessionId)
-        eventually() { assert(server.activeConns === 0) }
+        eventually(10000) { assert(server.activeConns === 0) }
         assert(server.outstanding === 40, s"round $round: every in-flight message must be requeued")
         assert(server.delivered.get() === sent,
           s"round $round: a closing connection's requeues reached another of the session's connections")
@@ -510,12 +511,12 @@ class NsqSourceSpec extends SparkSuite {
     try {
       assert(client.maxMsgSize === 64L)
       assert(plainClient.maxMsgSize === NsqProtocol.DefaultMaxMsgSize, "a plain OK keeps nsqd's default")
-      server.awaitSubscribe()
+      eventually(10000)(assert(server.hasSubscriber, "no consumer subscribed"))
       server.publish(msgId(0), new Array[Byte](64))
-      eventually() { assert(got.size === 1) }
+      eventually(10000) { assert(got.size === 1) }
       server.publish(msgId(1), new Array[Byte](65))
-      eventually() { assert(!client.isAlive) }
-      eventually() { assert(server.outstanding === 2) } // the broker requeues on the drop
+      eventually(10000) { assert(!client.isAlive) }
+      eventually(10000) { assert(server.outstanding === 2) } // the broker requeues on the drop
       assert(got.size === 1)
     } finally { client.close(); plainClient.close(); server.close(); plain.close() }
   }
@@ -634,15 +635,5 @@ class NsqSourceSpec extends SparkSuite {
         .map(_.asInstanceOf[NsqShardPartition])
       assert(p1.map(_.preferredHost).toSeq === p2.map(_.preferredHost).toSeq)
     } finally { stream.stop(); server.close() }
-  }
-
-  private def eventually(timeoutMs: Long = 10000)(check: => Unit): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var last: Throwable = null
-    while (System.currentTimeMillis() < deadline) {
-      try { check; return }
-      catch { case t: Throwable => last = t; Thread.sleep(100) }
-    }
-    throw last
   }
 }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec.eventually
 import graft.functions.KplFunctions
 import graft.sources.nsq.NsqMiniServer
 
@@ -31,16 +32,6 @@ import graft.sources.nsq.NsqMiniServer
 class ChaosClusterSpec extends AnyFunSuite {
 
   private def msgId(i: Int): String = f"$i%016d"
-
-  private def eventually[T](timeoutMs: Long, pollMs: Long = 250)(body: => T): T = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    var last: Throwable = null
-    while (System.nanoTime() < deadline) {
-      try return body
-      catch { case e: Throwable => last = e; Thread.sleep(pollMs) }
-    }
-    throw last
-  }
 
   private def deagg(stored: Vector[(String, Array[Byte])]): Vector[String] =
     stored.flatMap { case (_, data) => KplFunctions.deaggregate(data).map(_.data) }
@@ -76,7 +67,7 @@ class ChaosClusterSpec extends AnyFunSuite {
             e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
           removed.add(e.executorId)
       })
-      eventually(90000) {
+      eventually(90000, pollMs = 250) {
         assert(sc.statusTracker.getExecutorInfos.length >= 3, "2 executors not up")
         assert(execIds.size >= 2, "executor ids not observed")
       }
@@ -107,7 +98,7 @@ class ChaosClusterSpec extends AnyFunSuite {
       try {
         // wave 1: both executor JVMs consuming under the standing storm
         (0 until 40).foreach(i => server.publish(msgId(i), s"cc-$i".getBytes("UTF-8")))
-        eventually(120000) { dump("w1"); assert(finnedIds.size >= 40) }
+        eventually(120000, pollMs = 250) { dump("w1"); assert(finnedIds.size >= 40) }
         val pids = server.identities.toArray(Array.empty[String]).toSet
           .map((s: String) => s.stripPrefix("graft-"))
         assert(!pids.contains(driverPid.toString),
@@ -118,16 +109,16 @@ class ChaosClusterSpec extends AnyFunSuite {
         // under fresh ids that dedup must drop), then one executor dies
         (40 until 200).foreach(i => server.publish(msgId(i), s"cc-$i".getBytes("UTF-8")))
         (0 until 20).foreach(i => server.publish(msgId(1000 + i), s"cc-$i".getBytes("UTF-8")))
-        eventually(60000) { assert(server.inFlightCount > 0, "no backlog in flight yet") }
+        eventually(60000, pollMs = 250) { assert(server.inFlightCount > 0, "no backlog in flight yet") }
         val victim = execIds.peek()
         assert(sc.killExecutors(Seq(victim)), s"kill request for executor $victim refused")
-        eventually(60000) { assert(removed.size >= 1, "executor removal not observed") }
+        eventually(60000, pollMs = 250) { assert(removed.size >= 1, "executor removal not observed") }
         dump("killed")
 
         // the survivor (plus any standalone replacement) must drain EVERYTHING:
         // the victim's un-FINned in-flight requeues and re-schedules
         val expectedIds = ((0 until 200).map(msgId) ++ (0 until 20).map(i => msgId(1000 + i))).toSet
-        eventually(300000) {
+        eventually(300000, pollMs = 250) {
           dump("drain")
           assert(finnedIds === expectedIds, s"missing FINs: ${(expectedIds -- finnedIds).size}")
           assert(server.outstanding === 0, "messages stayed pending or in flight")

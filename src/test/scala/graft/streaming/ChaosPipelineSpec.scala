@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import graft.SparkSpec.eventually
 import graft.SparkSuite
 import graft.functions.KplFunctions
 import graft.sources.nsq.NsqMiniServer
@@ -45,16 +46,6 @@ import graft.sources.nsq.NsqMiniServer
 class ChaosPipelineSpec extends SparkSuite {
 
   private def msgId(i: Int): String = f"$i%016d"
-
-  private def eventually(timeoutMs: Long = 30000)(check: => Unit): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var last: Throwable = null
-    while (System.currentTimeMillis() < deadline) {
-      try { check; return }
-      catch { case t: Throwable => last = t; Thread.sleep(100) }
-    }
-    throw last
-  }
 
   private def deagg(stored: Vector[(String, Array[Byte])]): Vector[String] =
     stored.flatMap { case (_, data) => KplFunctions.deaggregate(data).map(_.data) }

@@ -1,118 +1,34 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.io.nativeio.NativeIO
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSuite
+/** The crash-recovery contract: a twin's operational claim is a
+  * state-resident standing index, and that claim only holds if the index
+  * survives a restart. Each twin test here is the restart [[Arm]] of its
+  * [[TwinContracts]] row (stop after the first wave, start a new query
+  * from the same RocksDB checkpoint with the next wave pending, and end
+  * where the uninterrupted run ends); the StreamPipeline tests give the
+  * reference pipeline's own dedup the same contract. This is the
+  * Structured-Streaming analogue of the reference's crash posture: NSQ
+  * redelivers un-FINed messages after `MsgTimeout` (main.go:66) and the
+  * writer requeues on failure (kinesis_writer.go:114-127) — state that
+  * forgets across a restart would silently re-admit, re-emit, or
+  * under-count everything in flight at the crash. */
+class CheckpointRecoverySpec extends TwinSuite {
 
-/** The crash-recovery contract, per streaming twin (round-13 verdict's top
-  * item): every twin's operational claim is a STATE-RESIDENT standing index
-  * — and that claim only holds if the index survives a JVM restart. Each
-  * test here processes a first wave, `stop()`s the query, starts a NEW
-  * query from the SAME RocksDB `checkpointLocation`, processes a second
-  * wave, and asserts the combined output equals what a single uninterrupted
-  * run produces (the batch arm or closed-form arithmetic supplies truth).
-  * This is the Structured-Streaming analogue of the reference's crash
-  * posture: NSQ redelivers un-FINed messages after `MsgTimeout` (main.go:66)
-  * and the writer requeues on failure (kinesis_writer.go:114-127) — state
-  * that forgets across a restart would silently re-admit, re-emit, or
-  * under-count everything in flight at the crash.
-  *
-  * Mechanics shared by all the tests:
-  *  - ONE `MemoryStream` spans both query incarnations; the restarted query
-  *    reads the checkpointed offset log and resumes exactly after the last
-  *    committed batch (an uncommitted final batch re-runs under its original
-  *    batch id, which the foreachBatch capture map absorbs by overwrite).
-  *  - Output is captured via `foreachBatch` into a ConcurrentHashMap keyed
-  *    by batch id — memory-sink tables do NOT survive a query restart, so a
-  *    sink-table assertion would only see the second run.
-  *  - Post-restart assertions read batches with id strictly greater than
-  *    the last id seen before the stop: re-runs keep their original id, so
-  *    those are guaranteed-new data, where lost state would betray itself
-  *    (a replayed key re-emitted, a frontier reset, a sketch restarted).
-  */
-class CheckpointRecoverySpec extends SparkSuite {
+  private def msg(i: Int, body: String): Msg =
+    Msg(f"$i%016d", new Timestamp(1700000000000L + i), 1, body.getBytes("UTF-8"))
 
-  private def ckpt(tag: String): String =
-    graft.SparkSpec.tempDir(s"$tag-ckpt").toString
+  private def pipeline(build: DataFrame => DataFrame) =
+    new TwinRun[Msg, Row]("recover-pipeline", build, OutputMode.Append())(Encoders.product[Msg])
 
-  private def await(cond: () => Boolean, what: String, timeoutMs: Long = 60000L): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline && !cond()) Thread.sleep(200)
-    assert(cond(), s"timed out waiting for $what")
-  }
-
-  /** Let in-flight commits land before stopping (stop() between the state
-    * commit and the offset-log write is exactly the crash being simulated;
-    * the pause just keeps the HAPPY path deterministic). */
-  private def settle(): Unit = Thread.sleep(1200L)
-
-  private def capture[T](captured: ConcurrentHashMap[Long, Array[T]])(
-      df: Dataset[T], id: Long): Unit = {
-    val rows = df.collect()
-    if (rows.nonEmpty) captured.put(id, rows)
-    ()
-  }
-
-  private def latest[T](captured: ConcurrentHashMap[Long, Array[T]]): Option[Array[T]] =
-    captured.asScala.toSeq.sortBy(_._1).lastOption.map(_._2)
-
-  private def maxBatch[T](captured: ConcurrentHashMap[Long, Array[T]]): Long =
-    captured.asScala.keys.foldLeft(-1L)(math.max)
-
-  test("TwoGenDeduper: generation state survives restart — replayed keys stay suppressed") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Msg]
-    val wave1 = Seq(
-      Msg("0000000000000001", new Timestamp(1000000001L), 1, "a".getBytes("UTF-8")),
-      Msg("0000000000000002", new Timestamp(1000000002L), 1, "b".getBytes("UTF-8")))
-    val fresh = Msg("0000000000000003", new Timestamp(1000000003L), 1, "c".getBytes("UTF-8"))
-    val captured = new ConcurrentHashMap[Long, Array[TwoGenDeduper.DedupRow]]()
-    // 10-min rotation: the whole stop/restart sequence sits inside one
-    // generation, so suppression depends ONLY on the recovered state
-    val out = TwoGenDeduper(input.toDF(), rotationMs = 600000L)
-    val checkpoint = ckpt("recover-twogen")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(capture(captured) _)
-      .start()
-
-    val q1 = start()
-    val preRestartMax =
-      try {
-        input.addData(wave1)
-        await(() => captured.asScala.values.map(_.length).sum == 2, "first wave emitted")
-        settle()
-        maxBatch(captured)
-      } finally q1.stop()
-
-    val q2 = start()
-    try {
-      input.addData(wave1 :+ fresh) // replay the committed wave + one new key
-      await(() => captured.asScala.exists { case (id, rows) =>
-        id > preRestartMax && rows.exists(_.id == fresh.id) }, "fresh key emitted post-restart")
-      settle()
-      val postRestart = captured.asScala.collect {
-        case (id, rows) if id > preRestartMax => rows.map(_.id).toSeq
-      }.flatten.toSeq
-      assert(postRestart === Seq(fresh.id),
-        s"replayed keys must stay suppressed by the RECOVERED generation state, got $postRestart")
-      val all = captured.asScala.values.flatten.map(_.id).toSeq.sorted
-      assert(all === Seq("0000000000000001", "0000000000000002", "0000000000000003"),
-        "combined emitted set must equal the no-restart run")
-    } finally q2.stop()
-  }
+  private def ids(rows: Seq[Row]): Seq[String] = rows.map(_.getAs[String]("id"))
 
   test("StreamPipeline watermark dedup: dedup state survives restart — replayed bodies stay suppressed") {
     // operator O3 (the reference pipeline's own dedup, dropDuplicatesWithin
@@ -120,10 +36,10 @@ class CheckpointRecoverySpec extends SparkSuite {
     // NSQ crash posture redelivers un-FINed messages after MsgTimeout
     // (main.go:66), and those redeliveries can land AFTER a restart — a
     // forgotten dedup state would double-deliver everything in flight.
-    // q1 writes the checkpoint at 32 shuffle partitions and q2 restarts it
-    // from a session set to 4: the checkpoint's count must win, so a
-    // graft.Main checkpoint keeps the state-partition count it started with
-    // when the cluster's core count changes.
+    // The first query writes the checkpoint at 32 shuffle partitions and
+    // the second restarts it from a session set to 4: the checkpoint's
+    // count must win, so a graft.Main checkpoint keeps the state-partition
+    // count it started with when the cluster's core count changes.
     // It runs twice: a checkpoint written through Hadoop's stock LocalFs
     // restarts through NoForkLocalFs, and the other way round. ChecksumFs
     // verifies every .crc sidecar it reads, so a sidecar one filesystem
@@ -136,29 +52,12 @@ class CheckpointRecoverySpec extends SparkSuite {
   }
 
   private def pipelineRestart(q1Fs: String, q2Fs: String): Unit = {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Msg]
-    val wave1 = Seq(
-      Msg("0000000000000001", new Timestamp(1700000000001L), 1, "pa".getBytes("UTF-8")),
-      Msg("0000000000000002", new Timestamp(1700000000002L), 1, "pb".getBytes("UTF-8")))
-    val fresh = Msg("0000000000000003", new Timestamp(1700000000003L), 1, "pc".getBytes("UTF-8"))
-    val captured = new ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
-    val out = StreamPipeline.transform(input.toDF())
-    val checkpoint = ckpt("recover-pipeline")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val rows = df.collect()
-        if (rows.nonEmpty) captured.put(id, rows)
-        ()
-      }
-      .start()
+    val wave1 = Seq(msg(1, "pa"), msg(2, "pb"))
+    val fresh = msg(3, "pc")
+    val run = pipeline(StreamPipeline.transform)
 
-    def statePartitions(q: StreamingQuery): Seq[Int] =
-      q.recentProgress.toSeq.flatMap(_.stateOperators).map(_.numShufflePartitions.toInt)
+    def statePartitions: Seq[Int] =
+      run.progress.flatMap(_.stateOperators).map(_.numShufflePartitions.toInt)
     // the session's Hadoop conf, which the checkpoint's logs and the state
     // store tasks are built from, takes every session conf key verbatim
     val fileFs = "fs.AbstractFileSystem.file.impl"
@@ -166,7 +65,7 @@ class CheckpointRecoverySpec extends SparkSuite {
     // (a twin earlier in this suite leaves the session on RocksDB, whose
     // SST uploads use Hadoop's FileSystem API, not FileContext)
     def forks(starts: Seq[ProcessStarts.Start]): Seq[String] =
-      ProcessStarts.forksOn(s"$checkpoint/offsets", starts)
+      ProcessStarts.forksOn(s"${run.checkpoint}/offsets", starts)
     def checkFs(fs: String, starts: Seq[ProcessStarts.Start]): Unit =
       if (fs == classOf[NoForkLocalFs].getName) assert(forks(starts).isEmpty, s"$fs forked")
       else assert(NativeIO.isAvailable || forks(starts).nonEmpty, s"$fs did not run")
@@ -176,36 +75,28 @@ class CheckpointRecoverySpec extends SparkSuite {
       spark.conf.set(shufflePartitions, 32L)
       spark.conf.set(fileFs, q1Fs)
       val (preRestartMax, q1Starts) = ProcessStarts.during {
-        val q1 = start()
         try {
-          input.addData(wave1)
-          await(() => captured.asScala.values.map(_.length).sum == 2, "first wave emitted")
-          settle()
-          assert(statePartitions(q1).toSet === Set(32))
-          maxBatch(captured)
-        } finally q1.stop()
+          run.start().add(wave1)
+          assert(run.emitted.size === 2, "first wave emitted")
+          assert(statePartitions.toSet === Set(32))
+          run.marks.last
+        } finally run.stop()
       }
       checkFs(q1Fs, q1Starts)
 
       spark.conf.set(shufflePartitions, 4L)
       spark.conf.set(fileFs, q2Fs)
       val (_, q2Starts) = ProcessStarts.during {
-        val q2 = start()
         try {
-          input.addData(wave1 :+ fresh) // post-restart redelivery + one new body
-          await(() => captured.asScala.exists { case (id, rows) =>
-            id > preRestartMax && rows.exists(_.getAs[String]("id") == fresh.id) },
-            "fresh body emitted post-restart")
-          settle()
-          val postRestart = captured.asScala.collect {
-            case (id, rows) if id > preRestartMax => rows.map(_.getAs[String]("id")).toSeq
-          }.flatten.toSeq
+          // post-restart redelivery + one new body
+          run.start().add(wave1 :+ fresh)
+          val postRestart = ids(run.batchesAfter(preRestartMax))
           assert(postRestart === Seq(fresh.id),
             s"replayed bodies must stay suppressed by the RECOVERED dedup state, got $postRestart")
-          val restored = statePartitions(q2)
+          val restored = statePartitions
           assert(restored.nonEmpty && restored.forall(_ == 32),
             s"the restart must keep the checkpoint's 32 state partitions, got $restored")
-        } finally q2.stop()
+        } finally run.stop()
       }
       checkFs(q2Fs, q2Starts)
     } finally {
@@ -219,419 +110,27 @@ class CheckpointRecoverySpec extends SparkSuite {
     // null `key STRING` column through the dedup, and must restart on the
     // plan without it: the dedup state is keyed on body_hash alone, so the
     // column changes no state schema
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Msg]
-    val wave1 = Seq(
-      Msg("0000000000000001", new Timestamp(1700000000001L), 1, "ka".getBytes("UTF-8")),
-      Msg("0000000000000002", new Timestamp(1700000000002L), 1, "kb".getBytes("UTF-8")))
-    val fresh = Msg("0000000000000003", new Timestamp(1700000000003L), 1, "kc".getBytes("UTF-8"))
-    val captured = new ConcurrentHashMap[Long, Array[org.apache.spark.sql.Row]]()
-    val checkpoint = ckpt("recover-keycol")
-    def start(source: org.apache.spark.sql.DataFrame): StreamingQuery =
-      StreamPipeline.transform(source).writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.ProcessingTime(200L))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(capture(captured) _)
-        .start()
-    def ids(rows: Array[org.apache.spark.sql.Row]): Seq[String] = rows.map(_.getAs[String]("id")).toSeq
+    val wave1 = Seq(msg(1, "ka"), msg(2, "kb"))
+    val fresh = msg(3, "kc")
+    var keyed = true
+    val run = pipeline(in =>
+      StreamPipeline.transform(if (keyed) in.withColumn("key", lit(null).cast("string")) else in))
 
-    val keyed = input.toDF().withColumn("key", org.apache.spark.sql.functions.lit(null).cast("string"))
-    val q1 = start(keyed)
     val preRestartMax =
       try {
-        input.addData(wave1)
-        await(() => captured.asScala.values.map(_.length).sum == 2, "first wave emitted")
-        settle()
-        assert(captured.asScala.values.forall(_.head.schema.fieldNames.contains("key")))
-        maxBatch(captured)
-      } finally q1.stop()
+        run.start().add(wave1)
+        assert(run.emitted.size === 2, "first wave emitted")
+        assert(run.emitted.forall(_.schema.fieldNames.contains("key")))
+        run.marks.last
+      } finally run.stop()
 
-    val q2 = start(input.toDF())
+    keyed = false
     try {
-      input.addData(wave1 :+ fresh) // post-restart redelivery + one new body
-      await(() => captured.asScala.exists { case (id, rows) =>
-        id > preRestartMax && ids(rows).contains(fresh.id) }, "fresh body emitted post-restart")
-      settle()
-      val postRestart = captured.asScala.toSeq.collect {
-        case (id, rows) if id > preRestartMax => ids(rows)
-      }.flatten
+      // post-restart redelivery + one new body
+      run.start().add(wave1 :+ fresh)
+      val postRestart = ids(run.batchesAfter(preRestartMax))
       assert(postRestart === Seq(fresh.id),
         s"replayed bodies must stay suppressed by the key-column run's dedup state, got $postRestart")
-    } finally q2.stop()
-  }
-
-  test("StreamingNearDup: bucket residents survive restart — a post-restart probe still hits") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val text = "alpha beta gamma delta epsilon zeta"
-    val captured = new ConcurrentHashMap[Long, Array[StreamingNearDup.NearDupHit]]()
-    val out = StreamingNearDup(input.toDF().toDF("doc_id", "text"))
-    val checkpoint = ckpt("recover-neardup")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(capture(captured) _)
-      .start()
-
-    val q1 = start()
-    try {
-      input.addData(Seq((1L, text))) // doc 1 enrolls; no hits yet
-      settle()
-    } finally q1.stop()
-
-    val q2 = start()
-    try {
-      input.addData(Seq((2L, text))) // identical text -> all 16 bands match
-      await(() => captured.asScala.values.map(_.length).sum >= 16, "post-restart probe hits")
-      settle()
-      val hits = captured.asScala.values.flatten.map(h => (h.a_id, h.b_id)).toSeq
-      assert(hits.toSet === Set((1L, 2L)),
-        "the resident enrolled before the restart must still answer probes")
-      assert(hits.length === 16,
-        s"exactly one recovered resident copy -> 16 per-band hits, got ${hits.length}")
-    } finally q2.stop()
-  }
-
-  test("StreamingNovelty: the (lang, gram) seen-set survives restart — no second novel=true") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, String, String)]
-    val doc = (1L, "t1 t2 t3 t4 t5 t6 t7 t8", "en") // exactly one 8-gram
-    val captured = new ConcurrentHashMap[Long, Array[StreamingNovelty.GramVerdict]]()
-    val out = StreamingNovelty(input.toDF().toDF("doc_id", "text", "lang"))
-    val checkpoint = ckpt("recover-novelty")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(capture(captured) _)
-      .start()
-
-    val q1 = start()
-    val preRestartMax =
-      try {
-        input.addData(Seq(doc))
-        await(() => captured.asScala.values.map(_.length).sum == 1, "first verdict")
-        settle()
-        assert(captured.asScala.values.flatten.map(_.novel).toSeq === Seq(true))
-        maxBatch(captured)
-      } finally q1.stop()
-
-    val q2 = start()
-    try {
-      input.addData(Seq(doc)) // same gram after restart
-      await(() => captured.asScala.exists(_._1 > preRestartMax), "post-restart verdict")
-      settle()
-      val verdicts = captured.asScala.values.flatten.map(_.novel).toSeq
-      assert(verdicts.count(identity) === 1,
-        "novel=true must fire at most once per gram EVER, across restarts")
-      assert(verdicts.length === 2)
-    } finally q2.stop()
-  }
-
-  test("StreamingStratifiedSampler: bottom-k state survives restart — final sample equals the no-restart run") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val wave1 = Seq(
-      (1L, "doc one text", "en", "web", 12L),
-      (2L, "doc two text", "en", "web", 12L),
-      (3L, "doc three text", "en", "web", 14L))
-    val wave2 = Seq(
-      (4L, "doc four text", "en", "web", 13L),
-      (5L, "doc five text", "en", "web", 15L))
-
-    // control: ONE uninterrupted query over both waves supplies truth
-    def run(f: (MemoryStream[(Long, String, String, String, Long)],
-                ConcurrentHashMap[Long, Array[StreamingStratifiedSampler.StratumSample]],
-                () => StreamingQuery) => Unit): StreamingStratifiedSampler.StratumSample = {
-      val input = MemoryStream[(Long, String, String, String, Long)]
-      val captured = new ConcurrentHashMap[Long, Array[StreamingStratifiedSampler.StratumSample]]()
-      val out = StreamingStratifiedSampler(
-        input.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"), k = 2)
-      val checkpoint = ckpt("recover-sampler")
-      val start = () => out.writeStream
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.ProcessingTime(200L))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(capture(captured) _)
-        .start()
-      f(input, captured, start)
-      latest(captured).get.head
-    }
-
-    val control = run { (input, captured, start) =>
-      val q = start()
-      try {
-        input.addData(wave1 ++ wave2)
-        await(() => latest(captured).exists(_.exists(_.n_stratum == 5L)), "control run")
-      } finally q.stop()
-    }
-
-    val recovered = run { (input, captured, start) =>
-      val q1 = start()
-      try {
-        input.addData(wave1)
-        await(() => latest(captured).exists(_.exists(_.n_stratum == 3L)), "first wave")
-        settle()
-      } finally q1.stop()
-      val q2 = start()
-      try {
-        input.addData(wave2)
-        await(() => latest(captured).exists(_.exists(_.n_stratum == 5L)), "second wave")
-        settle()
-      } finally q2.stop()
-    }
-
-    assert(recovered === control,
-      "the recovered bottom-k sample must equal the uninterrupted run's")
-  }
-
-  test("StreamingTokenBudget: the admission ledger survives restart — final budget equals the no-restart run") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val wave1 = Seq(
-      (1L, "one two three four", "en"),
-      (2L, "five six seven eight nine", "en"),
-      (3L, "ten eleven twelve", "en"))
-    val wave2 = Seq(
-      (4L, "thirteen fourteen", "en"),
-      (5L, "fifteen sixteen seventeen", "en"))
-
-    def run(f: (MemoryStream[(Long, String, String)],
-                ConcurrentHashMap[Long, Array[StreamingTokenBudget.LangBudget]],
-                () => StreamingQuery) => Unit): StreamingTokenBudget.LangBudget = {
-      val input = MemoryStream[(Long, String, String)]
-      val captured = new ConcurrentHashMap[Long, Array[StreamingTokenBudget.LangBudget]]()
-      val out = StreamingTokenBudget(
-        input.toDF().toDF("doc_id", "text", "lang"), budgets = Map("en" -> 8L))
-      val checkpoint = ckpt("recover-budget")
-      val start = () => out.writeStream
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.ProcessingTime(200L))
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(capture(captured) _)
-        .start()
-      f(input, captured, start)
-      latest(captured).get.head
-    }
-
-    val control = run { (input, captured, start) =>
-      val q = start()
-      try {
-        input.addData(wave1 ++ wave2)
-        await(() => latest(captured).exists(_.exists(_.n_seen == 5L)), "control run")
-      } finally q.stop()
-    }
-
-    val recovered = run { (input, captured, start) =>
-      val q1 = start()
-      try {
-        input.addData(wave1)
-        await(() => latest(captured).exists(_.exists(_.n_seen == 3L)), "first wave")
-        settle()
-      } finally q1.stop()
-      val q2 = start()
-      try {
-        input.addData(wave2)
-        await(() => latest(captured).exists(_.exists(_.n_seen == 5L)), "second wave")
-        settle()
-      } finally q2.stop()
-    }
-
-    assert(recovered === control,
-      "the recovered admission ledger must equal the uninterrupted run's " +
-        "(a reset ledger would re-admit past the budget)")
-  }
-
-  test("StreamingBotScreen: the gap frontier survives restart — sums continue, not reset") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Long)]
-    // user 1 at t = 1..3 s before the restart, t = 4..5 s after
-    val wave1 = Seq((1L, 1L, 1000000L), (2L, 1L, 2000000L), (3L, 1L, 3000000L))
-    val wave2 = Seq((4L, 1L, 4000000L), (5L, 1L, 5000000L))
-    val captured = new ConcurrentHashMap[Long, Array[StreamingBotScreen.UserRegularity]]()
-    val out = StreamingBotScreen(input.toDF().toDF("event_id", "user_id", "tus"))
-    val checkpoint = ckpt("recover-botscreen")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(capture(captured) _)
-      .start()
-
-    val q1 = start()
-    try {
-      input.addData(wave1)
-      await(() => latest(captured).exists(_.exists(_.n_events == 3L)), "first wave")
-      settle()
-      val first = latest(captured).get.head
-      assert((first.n_gaps, first.sg, first.sg2) === ((2L, 2L, 2L)))
-    } finally q1.stop()
-
-    val q2 = start()
-    try {
-      input.addData(wave2)
-      await(() => latest(captured).exists(_.exists(_.n_events == 5L)), "second wave")
-      settle()
-      val rec = latest(captured).get.head
-      // a lost frontier would restart the run at t=4s: n_events=2, sg=1
-      assert((rec.n_events, rec.n_gaps, rec.sg, rec.sg2) === ((5L, 4L, 4L, 4L)),
-        "gap sums must CONTINUE from the recovered frontier, exactly as one run")
-    } finally q2.stop()
-  }
-
-  test("StreamingActiveUsers: day sketches survive restart — estimates equal batch over both waves") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val day = 20000L
-    def rows(users: Range): Seq[(Long, Long)] =
-      users.map(u => (u.toLong, day * 86400000000L + u * 1000L))
-    val wave1 = rows(1 to 100)
-    val wave2 = rows(50 to 150) // overlaps wave 1: union ndv 150, not 201
-    val captured = new ConcurrentHashMap[Long, Array[StreamingActiveUsers.ShardSketch]]()
-    val input = MemoryStream[(Long, Long)]
-    val out = StreamingActiveUsers(input.toDF().toDF("user_id", "tus"))
-    val checkpoint = ckpt("recover-activeusers")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(capture(captured) _)
-      .start()
-
-    // latest emission per (day, shard) across all batches AND both runs
-    def dayEstimate(): Option[Long] = {
-      val l = captured.asScala.toSeq.sortBy(_._1)
-        .flatMap { case (id, out) => out.map(s => (s.day, s.shard) -> s) }.toMap
-      if (l.isEmpty) None
-      else l.values.toSeq.toDF()
-        .groupBy($"day")
-        .agg(org.apache.spark.sql.functions.expr(
-          "hll_sketch_estimate(hll_union_agg(sketch))").as("est"))
-        .collect().headOption.map(_.getLong(1))
-    }
-    def batchEstimate(data: Seq[(Long, Long)]): Long = {
-      data.toDF("user_id", "tus").createOrReplaceTempView("ckpt_au_rows")
-      spark.sql(
-        """SELECT hll_sketch_estimate(hll_sketch_agg(user_id, 14)) AS est
-          |FROM ckpt_au_rows""".stripMargin).collect().head.getLong(0)
-    }
-
-    val q1 = start()
-    try {
-      input.addData(wave1)
-      await(() => dayEstimate().contains(batchEstimate(wave1)), "wave-1 estimate")
-      settle()
-    } finally q1.stop()
-
-    val q2 = start()
-    try {
-      input.addData(wave2)
-      // bit-compatibility: the recovered sketches unioned with wave-2 updates
-      // must equal a one-shot batch sketch over the union of both waves —
-      // lost state would estimate ~101 (wave 2 alone), not the union's 150
-      await(() => dayEstimate().contains(batchEstimate(wave1 ++ wave2)),
-        "post-restart estimate equals batch over both waves")
-    } finally q2.stop()
-  }
-
-  test("StreamingScd2: the open interval survives restart — closures continue version and valid_from") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val us = 1000000L
-    // wave 1 ends with an OPEN interval (version 2, 'b', valid_from 3s)
-    val wave1 = Seq((1L, 9L, 1L * us, "a"), (2L, 9L, 2L * us, "a"), (3L, 9L, 3L * us, "b"))
-    // wave 2: extend 'b', then switch to 'a' — closing version 2 with the
-    // PRE-restart valid_from and n_events spanning the restart, plus a
-    // replayed wave-1 row the recovered frontier must drop
-    val wave2 = Seq((2L, 9L, 2L * us, "a"), (4L, 9L, 4L * us, "b"), (5L, 9L, 5L * us, "a"))
-    val captured = new ConcurrentHashMap[Long, Array[StreamingScd2.ClosedInterval]]()
-    val input = MemoryStream[(Long, Long, Long, String)]
-    val out = StreamingScd2(input.toDF().toDF("event_id", "user_id", "tus", "event_type"))
-    val checkpoint = ckpt("recover-scd2")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(capture(captured) _)
-      .start()
-    def closures(): Seq[StreamingScd2.ClosedInterval] =
-      captured.asScala.toSeq.sortBy(_._1).flatMap(_._2)
-
-    val q1 = start()
-    var lastId = -1L
-    try {
-      input.addData(wave1)
-      await(() => closures().size == 1, "wave-1 closure")
-      assert(closures().head ==
-        StreamingScd2.ClosedInterval(9L, 1L, "a", 1L * us, 3L * us, 2L))
-      settle()
-      lastId = captured.asScala.keys.max
-    } finally q1.stop()
-
-    val q2 = start()
-    try {
-      input.addData(wave2)
-      await(() => closures().size == 2, "post-restart closure")
-      val post = captured.asScala.toSeq.filter(_._1 > lastId).flatMap(_._2)
-      // version 2 with valid_from 3 s and n_events 2 (the pre-restart 'b'
-      // plus the post-restart extension): lost state would emit version 1
-      // from valid_from 4 s with n_events 1 — and the replayed wave-1 row
-      // must not close anything
-      assert(post.toSeq == Seq(
-        StreamingScd2.ClosedInterval(9L, 2L, "b", 3L * us, 5L * us, 2L)),
-        s"post-restart closures wrong: $post")
-    } finally q2.stop()
-  }
-
-  test("StreamingSessionize: the open session survives restart — the closure spans both waves") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val us = 1000000L
-    // wave 1 ends with an OPEN session (sid 1, entry 'a', events at 1s, 2s)
-    val wave1 = Seq((1L, 9L, 1L * us, "a"), (2L, 9L, 2L * us, "b"))
-    // wave 2: a replayed wave-1 row the recovered frontier must drop, an
-    // in-gap extension at 3s, then a 30-min-plus jump that closes sid 1 —
-    // whose start (1s) and n_events (3) span the restart: lost state would
-    // close a session starting at 3s with n_events 1, or none at all
-    val wave2 = Seq((2L, 9L, 2L * us, "b"), (3L, 9L, 3L * us, "b"),
-      (4L, 9L, 4000L * us, "c"))
-    val captured = new ConcurrentHashMap[Long, Array[StreamingSessionize.ClosedSession]]()
-    val input = MemoryStream[(Long, Long, Long, String)]
-    val out = StreamingSessionize(input.toDF().toDF("event_id", "user_id", "tus", "event_type"))
-    val checkpoint = ckpt("recover-sessionize")
-    def start(): StreamingQuery = out.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(capture(captured) _)
-      .start()
-    def closures(): Seq[StreamingSessionize.ClosedSession] =
-      captured.asScala.toSeq.sortBy(_._1).flatMap(_._2)
-
-    val q1 = start()
-    var lastId = -1L
-    try {
-      input.addData(wave1)
-      // wave 1 closes nothing — wait for the batch to commit, then stop
-      settle()
-      assert(closures().isEmpty, "wave 1 must not close a session")
-      lastId = maxBatch(captured)
-    } finally q1.stop()
-
-    val q2 = start()
-    try {
-      input.addData(wave2)
-      await(() => closures().size == 1, "post-restart closure")
-      val post = captured.asScala.toSeq.filter(_._1 > lastId).flatMap(_._2)
-      assert(post.toSeq == Seq(
-        StreamingSessionize.ClosedSession(9L, 1L, "a", 1L * us, 3L * us, 3L)),
-        s"post-restart closures wrong: $post")
-    } finally q2.stop()
+    } finally run.stop()
   }
 }

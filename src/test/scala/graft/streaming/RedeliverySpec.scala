@@ -1,248 +1,8 @@
 package graft.streaming
 
-import java.sql.Timestamp
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
-
-import graft.SparkSuite
-
-/** The adversarial redelivery contract, per streaming twin (round-13
-  * verdict item): a source that replays an ALREADY-PROCESSED batch —
-  * at-least-once delivery, the failure mode checkpointed Kafka/file
-  * sources avoid but raw sockets, NSQ requeues, and manual backfills
-  * produce — must degrade each twin exactly the way its Scaladoc
-  * documents. The postures asserted here are the ones tabulated in
-  * COVERAGE.md's redelivery-contract table:
-  *
-  *  - TwoGenDeduper: emitted set EXACT (replays suppressed within the
-  *    two-generation window);
-  *  - StreamingNearDup: hit SET exact after the documented (a_id, b_id)
-  *    dedup — a replay re-emits hits but never enrolls a duplicate bucket
-  *    resident that would double every future comparison;
-  *  - StreamingNovelty: standing index exact/idempotent — `novel=true`
-  *    fires at most once per (lang, gram) ever, replays emit false (so a
-  *    replayed wave DEFLATES wave-level novelty_millis — lower bound);
-  *  - StreamingStratifiedSampler: sample fields exact (bottom-k merge is
-  *    idempotent), `n_stratum` counts deliveries — upper bound;
-  *  - StreamingTokenBudget: admission ledger exact (the re-cut dedups on
-  *    (draw, doc_id)), `n_seen` counts deliveries — upper bound;
-  *  - StreamingBotScreen: Σg/Σg² exact (each replayed row's gap clamps to
-  *    0 and the frontier is monotone), `n_events`/`n_gaps` count
-  *    deliveries — upper bounds — so `cv2_bucket` is UNDEFINED under
-  *    replay (its support/mean shift) and exact repair needs the batch
-  *    pass.
-  */
-class RedeliverySpec extends SparkSuite {
-
-  private def ckpt(tag: String): String =
-    graft.SparkSpec.tempDir(s"$tag-ckpt").toString
-
-  /** Poll until `cond` holds (the TimeMode.ProcessingTime engines never
-    * settle under processAllAvailable — see TwoGenDeduperSpec). */
-  private def await(cond: () => Boolean, what: String, timeoutMs: Long = 30000L): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline && !cond()) Thread.sleep(200)
-    assert(cond(), s"timed out waiting for $what")
-  }
-
-  /** Give the running query time to drain a wave that produces NO
-    * observable output (the silent phases below). */
-  private def drainPause(): Unit = Thread.sleep(1500L)
-
-  test("TwoGenDeduper: a replayed batch emits nothing (emitted set exact)") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Msg]
-    val wave = Seq(
-      Msg("0000000000000001", new Timestamp(1000000001L), 1, "a".getBytes("UTF-8")),
-      Msg("0000000000000002", new Timestamp(1000000002L), 1, "b".getBytes("UTF-8")))
-    val q = TwoGenDeduper(input.toDF(), rotationMs = 60000L).writeStream
-      .format("memory").queryName("redeliver_twogen")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", ckpt("redeliver-twogen"))
-      .start()
-    try {
-      input.addData(wave)
-      await(() => spark.table("redeliver_twogen").count() == 2L, "first wave")
-      input.addData(wave) // adversarial redelivery of the committed batch
-      drainPause()
-      assert(spark.table("redeliver_twogen").count() === 2L,
-        "replayed keys must be suppressed by the generation state")
-    } finally q.stop()
-  }
-
-  test("StreamingNearDup: a replayed doc never enrolls a second bucket resident") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val text = "alpha beta gamma delta epsilon zeta"
-    val q = StreamingNearDup(input.toDF().toDF("doc_id", "text")).writeStream
-      .format("memory").queryName("redeliver_neardup")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", ckpt("redeliver-neardup"))
-      .start()
-    try {
-      input.addData(Seq((1L, text)))
-      drainPause() // doc 1 enrolls, no hits yet
-      input.addData(Seq((1L, text))) // redelivery: must not enroll a copy
-      drainPause()
-      input.addData(Seq((2L, text))) // identical text -> all 16 bands match
-      await(() => spark.table("redeliver_neardup").count() >= 16L, "probe hits")
-      val hits = spark.table("redeliver_neardup")
-        .selectExpr("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(hits.toSet === Set((1L, 2L)), "only the (1,2) pair may surface")
-      // one resident copy -> exactly one hit per band; a duplicate enrollment
-      // would double this to 32
-      assert(hits.length === 16,
-        s"expected 16 per-band hits against ONE resident copy, got ${hits.length}")
-    } finally q.stop()
-  }
-
-  test("StreamingNovelty: a replayed wave re-emits only novel=false") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, String, String)]
-    // exactly 8 tokens -> exactly one 8-gram
-    val doc = (1L, "t1 t2 t3 t4 t5 t6 t7 t8", "en")
-    val q = StreamingNovelty(input.toDF().toDF("doc_id", "text", "lang")).writeStream
-      .format("memory").queryName("redeliver_novelty")
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", ckpt("redeliver-novelty"))
-      .start()
-    try {
-      input.addData(Seq(doc))
-      await(() => spark.table("redeliver_novelty").count() == 1L, "first verdict")
-      assert(spark.table("redeliver_novelty").selectExpr("novel")
-        .collect().map(_.getBoolean(0)).toSeq === Seq(true))
-      input.addData(Seq(doc)) // redelivery
-      await(() => spark.table("redeliver_novelty").count() == 2L, "replay verdict")
-      val verdicts = spark.table("redeliver_novelty")
-        .selectExpr("novel").collect().map(_.getBoolean(0))
-      assert(verdicts.count(identity) === 1,
-        "novel=true must fire at most once per gram, ever")
-    } finally q.stop()
-  }
-
-  /** foreachBatch capture keyed by micro-batch id: the latest batch's row
-    * for a key is the twin's current summary. */
-  private def captureLatest[T](rows: ConcurrentHashMap[Long, Array[T]]): Option[Array[T]] =
-    rows.asScala.toSeq.sortBy(_._1).lastOption.map(_._2)
-
-  test("StreamingStratifiedSampler: replay leaves the sample exact, n_stratum counts deliveries") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, String, String, String, Long)]
-    val wave = Seq(
-      (1L, "doc one text", "en", "web", 12L),
-      (2L, "doc two text", "en", "web", 12L),
-      (3L, "doc three text", "en", "web", 14L))
-    val captured = new ConcurrentHashMap[Long, Array[StreamingStratifiedSampler.StratumSample]]()
-    val q = StreamingStratifiedSampler(
-      input.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"), k = 2)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", ckpt("redeliver-sampler"))
-      .foreachBatch { (df: Dataset[StreamingStratifiedSampler.StratumSample], id: Long) =>
-        val rows = df.collect()
-        if (rows.nonEmpty) captured.put(id, rows)
-        ()
-      }
-      .start()
-    try {
-      input.addData(wave)
-      await(() => captureLatest(captured).exists(_.exists(_.n_stratum == 3L)), "first wave")
-      val first = captureLatest(captured).get.head
-      input.addData(wave) // redelivery
-      await(() => captureLatest(captured).exists(_.exists(_.n_stratum == 6L)), "replay wave")
-      val replay = captureLatest(captured).get.head
-      assert(replay.n_sampled === first.n_sampled)
-      assert(replay.sampled_id_sum === first.sampled_id_sum,
-        "bottom-k sample must be idempotent under redelivery")
-      assert(replay.sampled_chars === first.sampled_chars)
-      assert(replay.n_stratum === 2 * first.n_stratum,
-        "n_stratum documents delivery-count (upper-bound) semantics")
-    } finally q.stop()
-  }
-
-  test("StreamingTokenBudget: replay leaves the admitted ledger exact, n_seen counts deliveries") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, String, String)]
-    val wave = Seq(
-      (1L, "one two three four", "en"),
-      (2L, "five six seven eight nine", "en"),
-      (3L, "ten eleven twelve", "en"))
-    val captured = new ConcurrentHashMap[Long, Array[StreamingTokenBudget.LangBudget]]()
-    val q = StreamingTokenBudget(
-      input.toDF().toDF("doc_id", "text", "lang"), budgets = Map("en" -> 8L))
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", ckpt("redeliver-budget"))
-      .foreachBatch { (df: Dataset[StreamingTokenBudget.LangBudget], id: Long) =>
-        val rows = df.collect()
-        if (rows.nonEmpty) captured.put(id, rows)
-        ()
-      }
-      .start()
-    try {
-      input.addData(wave)
-      await(() => captureLatest(captured).exists(_.exists(_.n_seen == 3L)), "first wave")
-      val first = captureLatest(captured).get.head
-      input.addData(wave) // redelivery
-      await(() => captureLatest(captured).exists(_.exists(_.n_seen == 6L)), "replay wave")
-      val replay = captureLatest(captured).get.head
-      assert(replay.n_kept === first.n_kept,
-        "the admission re-cut must dedup replayed (draw, doc_id) entries")
-      assert(replay.kept_tokens === first.kept_tokens)
-      assert(replay.utilization_millis === first.utilization_millis)
-      assert(replay.n_seen === 2 * first.n_seen,
-        "n_seen documents delivery-count (upper-bound) semantics")
-    } finally q.stop()
-  }
-
-  test("StreamingBotScreen: replay keeps gap sums exact, counts inflate, bucket is undefined") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[(Long, Long, Long)]
-    // user 1 at t = 1 s, 2 s, 3 s -> n_events=3, n_gaps=2, sg=2, sg2=2
-    val wave = Seq((1L, 1L, 1000000L), (2L, 1L, 2000000L), (3L, 1L, 3000000L))
-    val captured = new ConcurrentHashMap[Long, Array[StreamingBotScreen.UserRegularity]]()
-    val q = StreamingBotScreen(input.toDF().toDF("event_id", "user_id", "tus"))
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation", ckpt("redeliver-botscreen"))
-      .foreachBatch { (df: Dataset[StreamingBotScreen.UserRegularity], id: Long) =>
-        val rows = df.collect()
-        if (rows.nonEmpty) captured.put(id, rows)
-        ()
-      }
-      .start()
-    try {
-      input.addData(wave)
-      await(() => captureLatest(captured).exists(_.exists(_.n_events == 3L)), "first wave")
-      val first = captureLatest(captured).get.head
-      assert((first.n_gaps, first.sg, first.sg2) === ((2L, 2L, 2L)))
-      input.addData(wave) // redelivery: every replayed row is at/behind the frontier
-      await(() => captureLatest(captured).exists(_.exists(_.n_events == 6L)), "replay wave")
-      val replay = captureLatest(captured).get.head
-      assert(replay.sg === first.sg,
-        "replayed rows clamp to zero gaps against the monotone frontier")
-      assert(replay.sg2 === first.sg2)
-      assert(replay.n_gaps === 5L, "gap COUNT inflates with deliveries (upper bound)")
-      // the bucket's support shifted -> documented as undefined under replay;
-      // nothing to assert beyond it still being a sane value
-      assert(replay.cv2_bucket >= -1L && replay.cv2_bucket <= 10L)
-    } finally q.stop()
-  }
-}
+/** The adversarial redelivery contract for the six oldest twins: a source
+  * that replays an already-processed batch (at-least-once delivery: raw
+  * sockets, NSQ requeues, manual backfills) must degrade each twin exactly
+  * as COVERAGE.md's redelivery table says. Each test is the replay [[Arm]]
+  * of its twin's [[TwinContracts]] row. */
+class RedeliverySpec extends TwinSuite

@@ -97,7 +97,6 @@ class SimJoinLemmaSpec extends SparkSuite {
   }
 
   test("formula parity: the spec's plen matches the streaming SQL expression for n = 3..500") {
-    import spark.implicits._
     val fromSql = spark.range(3, 501).toDF("n")
       .selectExpr("n", "n - ((3 * n + 4) DIV 5) + 1 AS plen")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

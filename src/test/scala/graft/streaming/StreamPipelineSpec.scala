@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, SparkSuite}
+import graft.SparkSuite
 import graft.functions.{GraftFunctions, KplFunctions}
 import graft.kernel.KplProtobuf
 

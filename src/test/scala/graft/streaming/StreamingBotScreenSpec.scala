@@ -1,19 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+/** The streaming bot screen, [[StreamingBotScreen]]: `foldRun` is associative
+  * over ordered concatenation, so batch boundaries are invisible. Its stream
+  * arms — per-user summaries that aggregate to exactly the batch
+  * `g_bot_regularity` census — are the `BotScreen` row of
+  * [[TwinContracts]]. */
+class StreamingBotScreenSpec extends TwinSuite {
 
-import graft.{SparkSpec, SparkSuite, Tables}
-import graft.operators.AnalyticsOps
-
-/** The streaming bot screen's contract: [[StreamingBotScreen.foldRun]]
-  * is associative over ordered concatenation (so batch boundaries are
-  * invisible), and after draining the event log in per-user event-time
-  * order the per-user summaries aggregate to EXACTLY the batch
-  * `g_bot_regularity` census. */
-class StreamingBotScreenSpec extends SparkSuite {
-
-  import StreamingBotScreen.{bucket, foldRun, EventRow, RunStats}
+  import StreamingBotScreen.{foldRun, EventRow, RunStats}
 
   test("foldRun: any consecutive chunking of a sorted run folds to the same stats") {
     def events(seed: Int): Vector[EventRow] = {
@@ -49,77 +43,5 @@ class StreamingBotScreenSpec extends SparkSuite {
       assert(chunked.foldLeft(Option.empty[RunStats])(foldRun) == whole,
         s"seed $seed: many-way chunking diverged")
     }
-  }
-
-  test("streaming census equals batch g_bot_regularity after draining in event-time order") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-
-    val events = Tables.eventsCanonical(spark, SparkSpec.sf0001)
-      .selectExpr("event_id", "user_id", "tus")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // global (tus, event_id) sort ⟹ per-user event-time order, the
-      // delivery the equivalence contract assumes
-      .sortBy(e => (e._3, e._1))
-    assert(events.length >= 1000)
-
-    val input = MemoryStream[(Long, Long, Long)]
-    val out = StreamingBotScreen(
-      input.toDF().toDF("event_id", "user_id", "tus"))
-    val q = out.writeStream
-      .format("memory").queryName("bot_screen")
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.ProcessingTime(200L))
-      .option("checkpointLocation",
-        graft.SparkSpec.tempDir("bot-ckpt").toString)
-      .start()
-
-    def latest(): Map[Long, (Long, Long, Long, Long, Long)] =
-      spark.sql(
-        """SELECT user_id, n_events, n_gaps, sg, sg2, cv2_bucket
-          |FROM bot_screen""".stripMargin).collect()
-        .groupBy(_.getLong(0))
-        .view.mapValues { rs =>
-          val r = rs.maxBy(_.getLong(1)) // n_events is strictly monotone
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
-        }.toMap
-
-    def awaitEvents(expected: Long, timeoutMs: Long = 60000L): Unit = {
-      val deadline = System.currentTimeMillis() + timeoutMs
-      while (System.currentTimeMillis() < deadline &&
-             latest().values.iterator.map(_._1).sum != expected)
-        Thread.sleep(250)
-      assert(latest().values.iterator.map(_._1).sum == expected,
-        "stream did not drain the event log in time")
-    }
-
-    try {
-      // three prefix chunks — batch boundaries land mid-user on purpose
-      val chunks = events.grouped(events.length / 3 + 1).toSeq
-      var fed = 0L
-      chunks.foreach { c =>
-        input.addData(c.toSeq)
-        fed += c.length
-        awaitEvents(fed)
-      }
-
-      // per-user emissions → (bucket → users, gaps) census, ≥5-gap support
-      val streamedCensus = latest().values
-        .filter(_._2 >= StreamingBotScreen.MinGaps)
-        .groupBy(v => bucket(v._2, v._3, v._4))
-        .view.mapValues(vs => (vs.size.toLong, vs.iterator.map(_._2).sum)).toMap
-
-      val batchCensus = AnalyticsOps.gBotRegularity(spark, SparkSpec.sf0001)
-        .collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-
-      assert(streamedCensus == batchCensus,
-        s"census diverged: streaming $streamedCensus vs batch $batchCensus")
-      // and the emitted buckets agree with the state they summarize
-      latest().values.filter(_._2 >= StreamingBotScreen.MinGaps).foreach { v =>
-        assert(v._5 == bucket(v._2, v._3, v._4))
-      }
-    } finally q.stop()
   }
 }
