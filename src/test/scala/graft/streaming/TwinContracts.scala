@@ -121,11 +121,11 @@ object TwinContracts {
     def referee(delivered: Seq[(Long, String, String)]) = grams(delivered).map(_ -> ((1, 0))).toMap
     override def agrees(got: V, want: V) = got.keySet == want.keySet && got.values.forall(_._1 == 1)
     override def exact(v: V) = v.map { case (k, (novel, _)) => k -> novel }
-    override def upper(control: V, got: V, delivered: Seq[(Long, String, String)]) = {
+    override def upper(control: V, got: V, replays: Int) = {
       val replayed = grams(waves.head)
-      Seq("each replayed gram gets exactly one more verdict, novel=false" ->
+      Seq("each replayed gram gets exactly one more verdict, novel=false, per replay" ->
         (got.keySet == control.keySet && got.forall { case (k, (novel, n)) =>
-          novel == control(k)._1 && n == control(k)._2 + (if (replayed(k)) 1 else 0)
+          novel == control(k)._1 && n == control(k)._2 + (if (replayed(k)) replays else 0)
         }))
     }
     override def batch(run: TwinRun[(Long, String, String), StreamingNovelty.GramVerdict]) = {
@@ -174,9 +174,11 @@ object TwinContracts {
         .map(r => (r.getString(0), r.getString(1)) ->
           (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap))
     override def exact(v: V) = v.map { case (k, s) => k -> (s._2, s._3, s._4) }
-    override def upper(control: V, got: V, delivered: Seq[(Long, String, String, String, Long)]) =
+    override def upper(control: V, got: V, replays: Int) = {
+      val delivered = fed(replays)
       Seq("n_stratum counts deliveries" -> (got.keySet == control.keySet &&
         got.forall { case (k, s) => s._1 == delivered.count(d => (d._3, d._4) == k) }))
+    }
   }
 
   object TokenBudget extends Twin[(Long, String, String), StreamingTokenBudget.LangBudget](
@@ -216,9 +218,11 @@ object TwinContracts {
     override def batch(run: TwinRun[(Long, String, String), StreamingTokenBudget.LangBudget]) =
       Seq(("h_token_budget_mix", exact(view(run)), batchRows))
     override def exact(v: V) = v.map { case (l, b) => l -> (b._2, b._3, b._4, b._5) }
-    override def upper(control: V, got: V, delivered: Seq[(Long, String, String)]) =
+    override def upper(control: V, got: V, replays: Int) = {
+      val delivered = fed(replays)
       Seq("n_seen counts deliveries" -> (got.keySet == control.keySet &&
         got.forall { case (l, b) => b._1 == delivered.count(_._3 == l) }))
+    }
   }
 
   object BotScreen extends Twin[(Long, Long, Long), StreamingBotScreen.UserRegularity](
@@ -246,12 +250,12 @@ object TwinContracts {
     override def exact(v: V) = v.map { case (u, r) => u -> (r._3, r._4) }
     // replayed rows clamp to zero gaps behind the frontier but count as
     // events and gaps; the bucket's support shifts, so it is undefined
-    override def upper(control: V, got: V, delivered: Seq[(Long, Long, Long)]) = {
-      val replays = waves.head.groupBy(_._2).map { case (u, es) => u -> es.size.toLong }
+    override def upper(control: V, got: V, replays: Int) = {
+      val replayed = waves.head.groupBy(_._2).map { case (u, es) => u -> es.size.toLong * replays }
       Seq(
         "n_events and n_gaps count deliveries" -> (got.keySet == control.keySet &&
           got.forall { case (u, r) =>
-            val extra = replays.getOrElse(u, 0L)
+            val extra = replayed.getOrElse(u, 0L)
             r._1 == control(u)._1 + extra && r._2 == control(u)._2 + extra
           }),
         "cv2_bucket stays in [-1, 10]" -> got.values.forall(r => r._5 >= -1L && r._5 <= 10L))
@@ -339,29 +343,65 @@ object TwinContracts {
       (filters, delivered.size.toLong, repeats(delivered))
     }
     override def exact(v: V) = v._1
-    override def upper(control: V, got: V, delivered: Seq[(Long, String)]) =
+    override def upper(control: V, got: V, replays: Int) = {
+      val delivered = fed(replays)
       Seq("n_probed and n_seen count deliveries" ->
         (got._2 == delivered.size.toLong && got._3 == repeats(delivered)))
+    }
   }
+
+  private type Event = (Long, Long, Long, String)
 
   /** Closed intervals / sessions / verdicts come from each user's fold
     * over the delivered prefix; the batch query checks the fold. */
-  private def perUser[E](rows: Seq[(Long, Long, Long, String)])(fold: (Long, Seq[(Long, Long, Long, String)]) => Seq[E]): Seq[E] =
+  private def perUser[E](rows: Seq[Event])(fold: (Long, Seq[Event]) => Seq[E]): Seq[E] =
     rows.groupBy(_._2).toSeq.flatMap { case (u, es) => fold(u, es) }
+
+  /** A user outside the corpus whose hand-built rows straddle the restart
+    * the restart arm makes after the first wave: at sf0.001 the cut has
+    * no session with events on both sides and no purchase past the
+    * lookback, and no replayed row. */
+  private val Planted = -9L
+  private val Sec = 1000000L
+
+  /** The first tus of the second wave: the restart point. */
+  private def restartTus(waves: Seq[Seq[Event]]): Long = waves(1).head._3
+
+  /** Adds [[Planted]]'s rows to the first two waves: `before` to the
+    * first, `after` to the second, each (event_id, seconds from
+    * [[restartTus]], event_type). */
+  private def plant(waves: Seq[Seq[Event]])(before: (Long, Long, String)*)(after: (Long, Long, String)*): Seq[Seq[Event]] = {
+    val t0 = restartTus(waves)
+    def rows(rs: Seq[(Long, Long, String)]) = rs.map { case (id, s, t) => (id, Planted, t0 + s * Sec, t) }
+    (waves.head ++ rows(before)) +: (waves(1) ++ rows(after)) +: waves.drop(2)
+  }
 
   object Scd2 extends Twin[(Long, Long, Long, String), StreamingScd2.ClosedInterval](
       "StreamingScd2", Append, "event_id", "user_id", "tus", "event_type") {
     import StreamingScd2.{foldRun, ClosedInterval, EventRow}
     type V = Seq[ClosedInterval]
-    lazy val waves = thirds(userEvents)
+    // planted: wave 1 leaves version 2 ('b' from -1 s) open; wave 2 brings
+    // a replayed wave-1 row, which the recovered frontier must drop, then
+    // extends 'b' and switches to 'a'
+    lazy val waves = plant(thirds(userEvents))((1L, -3L, "a"), (2L, -2L, "a"), (3L, -1L, "b"))(
+      (2L, -2L, "a"), (4L, 1L, "b"), (5L, 2L, "a"))
     def build(in: DataFrame) = StreamingScd2(in)
     def view(run: TwinRun[(Long, Long, Long, String), ClosedInterval]) =
       run.emitted.sortBy(c => (c.user_id, c.version))
     def referee(delivered: Seq[(Long, Long, Long, String)]) =
       perUser(delivered)((u, es) => foldRun(u, None, es.map(e => EventRow(e._1, e._2, e._3, e._4)))._1)
         .sortBy(c => (c.user_id, c.version))
+    // lost state would close version 1 from +1 s with one event
+    override def restartCases = {
+      val t0 = restartTus(waves)
+      def planted(rows: Seq[Event]) = referee(rows).filter(_.user_id == Planted)
+      Seq("the planted interval open at the stop, closed after it from its pre-restart valid_from" ->
+        (planted(waves.head) == Seq(ClosedInterval(Planted, 1L, "a", t0 - 3 * Sec, t0 - Sec, 2L)) &&
+          planted(waves.head ++ waves(1)) == planted(waves.head) :+
+            ClosedInterval(Planted, 2L, "b", t0 - Sec, t0 + 2 * Sec, 2L)))
+    }
     override def batch(run: TwinRun[(Long, Long, Long, String), ClosedInterval]) =
-      Seq(("g_scd2_state closed rows", view(run).toSet,
+      Seq(("g_scd2_state closed rows", view(run).filter(_.user_id != Planted).toSet,
         AnalyticsOps.gScd2State(spark, sf).filter("is_current = 0").collect()
           .map(r => ClosedInterval(r.getLong(0), r.getLong(1), r.getString(2),
             r.getLong(3), r.getLong(4), r.getLong(5))).toSet))
@@ -371,7 +411,10 @@ object TwinContracts {
       "StreamingSessionize", Append, "event_id", "user_id", "tus", "event_type") {
     import StreamingSessionize.{foldRun, ClosedSession, EventRow}
     type V = Seq[ClosedSession]
-    lazy val waves = thirds(userEvents)
+    // planted: wave 1 leaves session 1 open; wave 2 brings a replayed
+    // wave-1 row, an in-gap extension, then a jump past the gap
+    lazy val waves = plant(thirds(userEvents))((1L, -2L, "a"), (2L, -1L, "b"))(
+      (2L, -1L, "b"), (3L, 1L, "b"), (4L, 3998L, "c"))
     private def fold(u: Long, es: Seq[(Long, Long, Long, String)]) =
       foldRun(u, None, es.map(e => EventRow(e._1, e._2, e._3, e._4)))
     def build(in: DataFrame) = StreamingSessionize(in)
@@ -379,6 +422,14 @@ object TwinContracts {
       run.emitted.sortBy(c => (c.user_id, c.sid))
     def referee(delivered: Seq[(Long, Long, Long, String)]) =
       perUser(delivered)((u, es) => fold(u, es)._1).sortBy(c => (c.user_id, c.sid))
+    // lost state would close a session from +1 s with one event, or none
+    override def restartCases = {
+      val t0 = restartTus(waves)
+      def planted(rows: Seq[Event]) = referee(rows).filter(_.user_id == Planted)
+      Seq("the planted session open at the stop, closed after it with the events either side" ->
+        (planted(waves.head).isEmpty && planted(waves.head ++ waves(1)) ==
+          Seq(ClosedSession(Planted, 1L, "a", t0 - 2 * Sec, t0 + Sec, 3L))))
+    }
     override def batch(run: TwinRun[(Long, Long, Long, String), ClosedSession]) = {
       // batch gaps-and-islands: every session (user, sid) with the batch
       // query's own island algebra
@@ -404,10 +455,11 @@ object TwinContracts {
       val lastSid = refSessions.groupBy(_.user_id).map { case (u, ss) => u -> ss.map(_.sid).max }
       val (refOpen, refClosed) = refSessions.partition(c => lastSid(c.user_id) == c.sid)
       // the fold's open sessions are the state half of the equivalence
-      val foldOpen = perUser(waves.flatten)((u, es) => fold(u, es)._2.toSeq
+      val foldOpen = perUser(waves.flatten.filter(_._2 != Planted))((u, es) => fold(u, es)._2.toSeq
         .map(s => ClosedSession(u, s.sid, s.entry_type, s.start_tus, s.last_tus, s.n_events)))
+      val closed = view(run).filter(_.user_id != Planted)
       // closures + opens, rolled up by the census SQL
-      spark.createDataFrame(view(run) ++ foldOpen).createOrReplaceTempView("sess_all")
+      spark.createDataFrame(closed ++ foldOpen).createOrReplaceTempView("sess_all")
       val rolled = spark.sql(
         """SELECT entry_type,
           |  CAST(count(*) AS BIGINT) AS n_sessions,
@@ -421,7 +473,7 @@ object TwinContracts {
           |FROM sess_all GROUP BY entry_type
           |ORDER BY entry_type""".stripMargin).collect().map(_.toSeq).toSeq
       Seq(
-        ("batch islands' non-final sessions", view(run).toSet, refClosed.toSet),
+        ("batch islands' non-final sessions", closed.toSet, refClosed.toSet),
         ("the fold's open sessions vs the batch final islands", foldOpen.toSet, refOpen.toSet),
         ("closure + open rollup vs g_sessionize", rolled,
           AnalyticsOps.gSessionize(spark, sf).collect().map(_.toSeq).toSeq))
@@ -437,7 +489,11 @@ object TwinContracts {
       val events = userEvents.filter(e => e._4 == "click" || e._4 == "purchase")
         .sortBy(e => (e._3, if (e._4 == "click") 0 else 1, e._1))
       assert(events.length >= 300)
-      thirds(events)
+      // planted: a click and an attributed purchase before the restart;
+      // after it a replayed wave-1 purchase, one the carried click
+      // attributes and one past the lookback
+      plant(thirds(events))((1L, -3L, "click"), (2L, -2L, "purchase"))(
+        (2L, -2L, "purchase"), (3L, 1L, "purchase"), (4L, 2 * StreamingAttribution.LookbackUs / Sec, "purchase"))
     }
     def build(in: DataFrame) = StreamingAttribution(in)
     def view(run: TwinRun[(Long, Long, Long, String), Verdict]) =
@@ -445,6 +501,17 @@ object TwinContracts {
     def referee(delivered: Seq[(Long, Long, Long, String)]) =
       perUser(delivered)((_, es) => foldRun(None, es.map(e => TouchRow(e._1, e._2, e._3, e._4)))._1)
         .sortBy(a => (a.user_id, a.event_id))
+    override def restartCases = {
+      val click = restartTus(waves) - 3 * Sec
+      def planted(rows: Seq[Event]) = referee(rows).filter(_.user_id == Planted)
+      def verdict(id: Long, tus: Long, attributed: Boolean) =
+        Verdict(Planted, id, tus, tus / 86400000000L, attributed, click)
+      Seq("a planted purchase after the restart that only the carried click attributes, and one past the lookback" ->
+        (planted(waves.head) == Seq(verdict(2L, click + Sec, attributed = true)) &&
+          planted(waves.head ++ waves(1)) == Seq(verdict(2L, click + Sec, attributed = true),
+            verdict(3L, click + 4 * Sec, attributed = true),
+            verdict(4L, click + 3 * Sec + 2 * StreamingAttribution.LookbackUs, attributed = false))))
+    }
     override def batch(run: TwinRun[(Long, Long, Long, String), Verdict]) = {
       Tables.bind(spark, sf, "events")
       // per-purchase truth: the union-and-carry g_attribution rides
@@ -470,7 +537,8 @@ object TwinContracts {
           |FROM carried WHERE kind = 1""".stripMargin).collect()
         .map(r => Verdict(r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getBoolean(4), r.getLong(5))).toSet
-      spark.createDataFrame(view(run)).createOrReplaceTempView("attr_verdicts")
+      val corpus = view(run).filter(_.user_id != Planted)
+      spark.createDataFrame(corpus).createOrReplaceTempView("attr_verdicts")
       def daily(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       val rollup = daily(spark.sql(
         """SELECT day, count(*) AS n_purchases,
@@ -479,7 +547,7 @@ object TwinContracts {
           |    AS BIGINT) AS attribution_millis
           |FROM attr_verdicts GROUP BY day ORDER BY day""".stripMargin))
       Seq(
-        ("per-purchase verdicts vs the batch carry", view(run).toSet, verdicts),
+        ("per-purchase verdicts vs the batch carry", corpus.toSet, verdicts),
         ("daily rollup vs g_attribution", rollup, daily(AnalyticsOps.gAttribution(spark, sf))))
     }
   }
@@ -516,7 +584,7 @@ object TwinContracts {
     // a replayed doc re-probes, so pairs among replayed docs re-emit; it
     // never enrolls twice, so a pair with a doc the replay did not touch
     // keeps its hit count
-    override def upper(control: V, got: V, delivered: Seq[(Long, String)]) = {
+    override def upper(control: V, got: V, replays: Int) = {
       val replayed = waves.head.map(_._1).toSet
       Seq("a replayed doc re-emits but never re-enrolls" -> got.forall { case (k @ (a, b), (_, n)) =>
         if (replayed(a) && replayed(b)) n >= control(k)._2 else n == control(k)._2
@@ -548,7 +616,8 @@ object TwinContracts {
     }
     // counter adds are not idempotent: nothing is exact under a replay
     override def exact(v: V) = ()
-    override def upper(control: V, got: V, delivered: Seq[Long]) = {
+    override def upper(control: V, got: V, replays: Int) = {
+      val delivered = fed(replays)
       val cms = CountMinSketch.readFrom(new java.io.ByteArrayInputStream(got._1.toArray))
       Seq(
         "the sketch byte-equals the batch build over every delivered row, the replay included" ->
@@ -628,9 +697,11 @@ object TwinContracts {
       got.values.forall(g => g._1 >= g._2 && g._2 >= g._3 && g._3 >= g._4)
     // a replayed key is gated before any counter or ledger touch
     override def exact(v: V) = v.map { case (l, g) => l -> g.copy(_1 = 0L) }
-    override def upper(control: V, got: V, delivered: Seq[(Long, String, String)]) =
+    override def upper(control: V, got: V, replays: Int) = {
+      val delivered = fed(replays)
       Seq("n_seen counts deliveries" -> (got.keySet == control.keySet &&
         got.forall { case (l, g) => g._1 == delivered.count(_._3 == l) }))
+    }
   }
 
   /** md5-shuffled arrival, the corpus cut in half. */
@@ -762,86 +833,86 @@ object TwinContracts {
   /** Arms that took over a test written before this table run under that
     * test's suite and title, so its id stays in the suite's history;
     * TwinContractSpec runs every other arm of every row. */
-  final case class Home(suite: String, title: String, twin: Twin[_, _], arms: Arm*)
+  final case class Home(suite: Class[_ <: TwinSuite], title: String, twin: Twin[_, _], arms: Arm*)
 
   import Arm._
   lazy val homes: Seq[Home] = Seq(
-    Home("RedeliverySpec", "TwoGenDeduper: a replayed batch emits nothing (emitted set exact)", TwoGen, Replay),
-    Home("RedeliverySpec", "StreamingNearDup: a replayed doc never enrolls a second bucket resident", NearDup, Replay),
-    Home("RedeliverySpec", "StreamingNovelty: a replayed wave re-emits only novel=false", Novelty, Replay),
-    Home("RedeliverySpec",
+    Home(classOf[RedeliverySpec], "TwoGenDeduper: a replayed batch emits nothing (emitted set exact)", TwoGen, Replay),
+    Home(classOf[RedeliverySpec], "StreamingNearDup: a replayed doc never enrolls a second bucket resident", NearDup, Replay),
+    Home(classOf[RedeliverySpec], "StreamingNovelty: a replayed wave re-emits only novel=false", Novelty, Replay),
+    Home(classOf[RedeliverySpec],
       "StreamingStratifiedSampler: replay leaves the sample exact, n_stratum counts deliveries", Sampler, Replay),
-    Home("RedeliverySpec",
+    Home(classOf[RedeliverySpec],
       "StreamingTokenBudget: replay leaves the admitted ledger exact, n_seen counts deliveries", TokenBudget, Replay),
-    Home("RedeliverySpec",
+    Home(classOf[RedeliverySpec],
       "StreamingBotScreen: replay keeps gap sums exact, counts inflate, bucket is undefined", BotScreen, Replay),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "TwoGenDeduper: generation state survives restart — replayed keys stay suppressed", TwoGen, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingNearDup: bucket residents survive restart — a post-restart probe still hits", NearDup, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingNovelty: the (lang, gram) seen-set survives restart — no second novel=true", Novelty, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingStratifiedSampler: bottom-k state survives restart — final sample equals the no-restart run",
       Sampler, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingTokenBudget: the admission ledger survives restart — final budget equals the no-restart run",
       TokenBudget, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingBotScreen: the gap frontier survives restart — sums continue, not reset", BotScreen, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingActiveUsers: day sketches survive restart — estimates equal batch over both waves",
       ActiveUsers, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingScd2: the open interval survives restart — closures continue version and valid_from",
       Scd2, Restart),
-    Home("CheckpointRecoverySpec",
+    Home(classOf[CheckpointRecoverySpec],
       "StreamingSessionize: the open session survives restart — the closure spans both waves",
       Sessionize, Restart),
-    Home("StreamingActiveUsersSpec",
+    Home(classOf[StreamingActiveUsersSpec],
       "streaming day sketches equal batch hll_sketch_agg; report matches the batch arm; replay is a no-op",
       ActiveUsers, Parity, Replay),
-    Home("StreamingAttributionSpec",
+    Home(classOf[StreamingAttributionSpec],
       "drained verdicts equal the batch carry; rollup matches g_attribution; redelivery is a no-op",
       Attribution, Parity, Replay),
-    Home("StreamingAttributionSpec", "carried click survives a stop -> restart-from-checkpoint cycle",
+    Home(classOf[StreamingAttributionSpec], "carried click survives a stop -> restart-from-checkpoint cycle",
       Attribution, Restart),
-    Home("StreamingBloomGateSpec",
+    Home(classOf[StreamingBloomGateSpec],
       "stream filters byte-equal the batch aggregate; gate flags replays; restart continues the state",
       BloomGate, Parity, Replay, Restart),
-    Home("StreamingBotScreenSpec",
+    Home(classOf[StreamingBotScreenSpec],
       "streaming census equals batch g_bot_regularity after draining in event-time order", BotScreen, Parity),
-    Home("StreamingChaoSpec", "streaming chao equals the batch sample estimator across replay and restart",
+    Home(classOf[StreamingChaoSpec], "streaming chao equals the batch sample estimator across replay and restart",
       Chao, Parity, Replay, Restart),
-    Home("StreamingCurationSpec",
+    Home(classOf[StreamingCurationSpec],
       "composed gate equals the batch waterfall; replay only inflates n_seen; restart keeps all stages",
       Curation, Parity, Replay, Restart),
-    Home("StreamingDomainRollupSpec", "streaming rollup equals the batch domain table across replay and restart",
+    Home(classOf[StreamingDomainRollupSpec], "streaming rollup equals the batch domain table across replay and restart",
       DomainRollup, Parity, Replay, Restart),
-    Home("StreamingEncodingAuditSpec",
+    Home(classOf[StreamingEncodingAuditSpec],
       "streaming audit equals the batch detection table across replay and restart",
       EncodingAudit, Parity, Replay, Restart),
-    Home("StreamingHeavyHittersSpec",
+    Home(classOf[StreamingHeavyHittersSpec],
       "merged stream sketches byte-equal the batch aggregate; bounds hold; restart continues",
       HeavyHitters, Parity, Replay, Restart),
-    Home("StreamingNearDupSpec",
+    Home(classOf[StreamingNearDupSpec],
       "planted near-dups are flagged against already-ingested residents; unrelated docs are not", NearDup, Parity),
-    Home("StreamingNoveltySpec", "streaming novelty equals the batch incremental audit across micro-batch splits",
+    Home(classOf[StreamingNoveltySpec], "streaming novelty equals the batch incremental audit across micro-batch splits",
       Novelty, Parity),
-    Home("StreamingPiiCensusSpec", "streaming census equals the batch detection table across replay and restart",
+    Home(classOf[StreamingPiiCensusSpec], "streaming census equals the batch detection table across replay and restart",
       PiiCensus, Parity, Replay, Restart),
-    Home("StreamingScd2Spec", "drained closures equal batch g_scd2_state closed rows; redelivery emits nothing",
+    Home(classOf[StreamingScd2Spec], "drained closures equal batch g_scd2_state closed rows; redelivery emits nothing",
       Scd2, Parity, Replay),
-    Home("StreamingSessionizeSpec",
+    Home(classOf[StreamingSessionizeSpec],
       "drained closures equal the batch islands; rollup equals g_sessionize; redelivery emits nothing",
       Sessionize, Parity, Replay),
-    Home("StreamingSimJoinSpec", "streamed corpus emits exactly the batch pair set, across a mid-corpus restart",
+    Home(classOf[StreamingSimJoinSpec], "streamed corpus emits exactly the batch pair set, across a mid-corpus restart",
       SimJoin, Parity, Restart),
-    Home("StreamingSimJoinSpec", "at-least-once redelivery: replayed docs re-emit but never re-enroll",
+    Home(classOf[StreamingSimJoinSpec], "at-least-once redelivery: replayed docs re-emit but never re-enroll",
       SimJoin, Replay),
-    Home("StreamingStratifiedSamplerSpec",
+    Home(classOf[StreamingStratifiedSamplerSpec],
       "streaming sample equals the batch query over the same rows, across batch splits", Sampler, Parity),
-    Home("StreamingTokenBudgetSpec",
+    Home(classOf[StreamingTokenBudgetSpec],
       "streaming admission equals the batch prefix cut over the same rows, across batch splits",
       TokenBudget, Parity))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap}
+import java.util.concurrent.ConcurrentSkipListMap
 
 import scala.jdk.CollectionConverters._
 
@@ -153,12 +153,53 @@ abstract class Twin[In, Out](val name: String, val mode: OutputMode, val columns
   def exact(v: V): Any = v
 
   /** Checks on what a replay may move (the upper-bound fields): `control`
-    * is the answer without the replay, `delivered` every row fed, the
-    * replay included. */
-  def upper(control: V, got: V, delivered: Seq[In]): Seq[(String, Boolean)] = Nil
+    * is the answer without the replay, `replays` how many more times the
+    * first wave was delivered, each time in a batch of its own. */
+  def upper(control: V, got: V, replays: Int): Seq[(String, Boolean)] = Nil
+
+  /** Every row fed when the first wave comes `replays` more times. */
+  def fed(replays: Int): Seq[In] = Seq.fill(replays)(waves.head).flatten ++ waves.flatten
+
+  /** Checks that the first two waves hold what a restart between them
+    * must carry (an interval open at the stop, a click a later purchase
+    * needs); the restart arm fails on a vacuous split. */
+  def restartCases: Seq[(String, Boolean)] = Nil
 
   def run(sink: (Dataset[Out], Long) => Unit = (_: Dataset[Out], _: Long) => ()): TwinRun[In, Out] =
     new TwinRun[In, Out](name, build, mode, columns, sink = sink)
+
+  /** The uninterrupted run's final answer, made once per twin by whichever
+    * arm needs it first. Making it runs the parity checks, so an arm whose
+    * control is wrong fails with the parity arm's message. */
+  lazy val control: V = feed(restartAt = -1)
+
+  /** Feeds every wave (restarting with wave `restartAt` pending), checks
+    * the referee after each wave and the batch twin after the last, and
+    * returns the final answer. */
+  def feed(restartAt: Int): V = {
+    val run = this.run().start()
+    try {
+      var delivered = Vector.empty[In]
+      waves.zipWithIndex.foreach { case (w, i) =>
+        if (i == restartAt) run.restart(w) else run.add(w)
+        delivered ++= w
+        val (got, want) = (view(run), referee(delivered))
+        assert(agrees(got, want),
+          s"$name wave ${i + 1}: stream ${Twin.show(got)} disagrees with the batch rule ${Twin.show(want)}")
+      }
+      batch(run).foreach { case (what, stream, batch) =>
+        assert(stream == batch, s"$name: $what: stream ${Twin.show(stream)} != batch ${Twin.show(batch)}")
+      }
+      view(run)
+    } finally run.stop()
+  }
+}
+
+object Twin {
+  def show(v: Any): String = {
+    val s = String.valueOf(v)
+    if (s.length <= 400) s else s.take(400) + s"... (${s.length} chars)"
+  }
 }
 
 /** The three checks every twin goes through. */
@@ -169,29 +210,33 @@ sealed abstract class Arm(val title: String) {
 object Arm {
 
   /** Each wave is checked against the referee, then the stream against
-    * the batch operator; the result is the uninterrupted run. */
+    * the batch operator. */
   case object Parity extends Arm("stream equals the batch rule after each wave") {
-    def check[In, Out](t: Twin[In, Out]): Unit = { controls.put(t.name, feed(t, restartAt = -1)); () }
+    def check[In, Out](t: Twin[In, Out]): Unit = { t.control; () }
   }
 
-  /** The first wave is fed twice; the second delivery may move only what
-    * `upper` allows, before and after the remaining waves. */
+  /** The first wave is fed twice while the query runs, then a third time
+    * right after a restart from the checkpoint, as an at-least-once
+    * source redelivers what it sent before a crash; no delivery may move
+    * the exact outputs, and `upper` checks the rest after the last wave. */
   case object Replay extends Arm("a replayed committed wave leaves the exact outputs unchanged") {
     def check[In, Out](t: Twin[In, Out]): Unit = {
-      val control = uninterrupted(t)
+      val control = t.control
       val first = t.waves.head
       val run = t.run().start()
       try {
         run.add(first)
-        val before = t.view(run)
+        val before = t.exact(t.view(run))
         run.add(first)
-        assert(t.exact(t.view(run)) == t.exact(before),
-          s"${t.name}: the replayed wave moved an exact output")
+        assert(t.exact(t.view(run)) == before, s"${t.name}: the replayed wave moved an exact output")
+        run.restart(first)
+        assert(t.exact(t.view(run)) == before,
+          s"${t.name}: the wave replayed after a restart moved an exact output")
         t.waves.tail.foreach(run.add)
         val got = t.view(run)
         assert(t.exact(got) == t.exact(control),
-          s"${t.name}: after a replay the exact outputs differ from the uninterrupted run")
-        t.upper(control, got, first ++ t.waves.flatten).foreach { case (what, ok) =>
+          s"${t.name}: after the replays the exact outputs differ from the uninterrupted run")
+        t.upper(control, got, replays = 2).foreach { case (what, ok) =>
           assert(ok, s"${t.name} under replay: $what")
         }
       } finally run.stop()
@@ -203,53 +248,20 @@ object Arm {
     * holds and the end state equals the uninterrupted run's. */
   case object Restart extends Arm("state survives a restart with the next wave pending") {
     def check[In, Out](t: Twin[In, Out]): Unit = {
-      val control = uninterrupted(t)
-      val got = feed(t, restartAt = 1)
-      assert(got == control,
-        s"${t.name}: after a restart ${show(got)} != uninterrupted ${show(control)}")
+      t.restartCases.foreach { case (what, ok) => assert(ok, s"${t.name}: the restart never meets $what") }
+      val got = t.feed(restartAt = 1)
+      assert(got == t.control,
+        s"${t.name}: after a restart ${Twin.show(got)} != uninterrupted ${Twin.show(t.control)}")
     }
   }
 
   val all: Seq[Arm] = Seq(Parity, Replay, Restart)
-
-  private val controls = new ConcurrentHashMap[String, Any]()
-
-  /** The parity arm's final answer, run here when the parity arm has not
-    * run yet in this JVM. */
-  private def uninterrupted[In, Out](t: Twin[In, Out]): t.V =
-    controls.computeIfAbsent(t.name, _ => feed(t, restartAt = -1)).asInstanceOf[t.V]
-
-  /** Feeds every wave (restarting with wave `restartAt` pending), checks
-    * the referee after each wave and the batch twin after the last, and
-    * returns the final answer. */
-  private def feed[In, Out](t: Twin[In, Out], restartAt: Int): t.V = {
-    val run = t.run().start()
-    try {
-      var delivered = Vector.empty[In]
-      t.waves.zipWithIndex.foreach { case (w, i) =>
-        if (i == restartAt) run.restart(w) else run.add(w)
-        delivered ++= w
-        val (got, want) = (t.view(run), t.referee(delivered))
-        assert(t.agrees(got, want),
-          s"${t.name} wave ${i + 1}: stream ${show(got)} disagrees with the batch rule ${show(want)}")
-      }
-      t.batch(run).foreach { case (what, stream, batch) =>
-        assert(stream == batch, s"${t.name}: $what: stream ${show(stream)} != batch ${show(batch)}")
-      }
-      t.view(run)
-    } finally run.stop()
-  }
-
-  private def show(v: Any): String = {
-    val s = String.valueOf(v)
-    if (s.length <= 400) s else s.take(400) + s"... (${s.length} chars)"
-  }
 }
 
 /** A suite that runs, under its own name, the arms [[TwinContracts.homes]]
   * gives it; its other tests are what is particular to its twin. */
 abstract class TwinSuite extends SparkSuite {
-  TwinContracts.homes.filter(_.suite == getClass.getSimpleName).foreach { h =>
+  TwinContracts.homes.filter(_.suite == getClass).foreach { h =>
     test(h.title)(h.arms.foreach(_.check(h.twin)))
   }
 }
